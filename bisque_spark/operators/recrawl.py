@@ -11,9 +11,9 @@ the chain:
 - candidates flow into the SAME politeness window rank
   (operators/schedule.py) as discovered URLs;
 - re-opening a URL for refetch = delete it from the cuckoo seen
-  filter + exact set (operators/cuckoo.delete_from_shards) so the
+  filter + exact set (operators/seen.delete_from_shards) so the
   frontier accepts it again — the deletion capability is exactly why
-  the cuckoo variant exists.
+  the cuckoo kernel exists.
 
 Policy (pure Column expressions — JVM-side, no UDF, hash-partition
 friendly at 10^10 rows):
@@ -110,14 +110,14 @@ def reopen_for_refetch(
 ) -> tuple[DataFrame, DataFrame]:
     """Remove the due URLs from the seen state so the frontier accepts
     them again: cuckoo shards support deletion (Bloom does not — this
-    is the operation the cuckoo variant exists for), and the exact
+    is the operation the cuckoo kernel exists for), and the exact
     table drops the rows by anti-join. Returns (shards', seen_exact').
     """
-    from bisque_spark.operators.cuckoo import delete_from_shards
+    from bisque_spark.operators.seen import delete_from_shards
 
     keys = due.select("url_hash")
     return (
-        delete_from_shards(cuckoo_shards, keys, buckets=buckets),
+        delete_from_shards(cuckoo_shards, keys, n_buckets=buckets),
         seen_exact.join(keys, "url_hash", "left_anti"),
     )
 

@@ -4,11 +4,15 @@ The distributed re-expression of the scrape loop around the reference
 (SURVEY.md §3.4): each epoch is one Catalyst-planned batch
     frontier → robots ⋈ → politeness window-rank → fetch (Arrow UDF)
     → decode+parse+extract (Arrow UDF) → images sink append
-    → link explode → canonicalize → bloom+exact dedup → next frontier
-and every epoch commits its state tables (frontier, seen_exact, bloom
-shards, images, order log, lineage) to the checkpoint directory before
-advancing, so a killed driver resumes bit-identically from the last
-complete epoch (north_rule). Batch-iterative rather than Structured
+    → link explode → canonicalize → URL-seen dedup → next frontier
+and every epoch commits its state tables (frontier, seen delta, images,
+order log, lineage) to the checkpoint directory before advancing, so a
+killed driver resumes bit-identically from the last complete epoch
+(north_rule). URL-seen dedup is the exact ``dropDuplicates`` +
+``left_anti`` against the committed seen union (operators/seen.py
+``filter_unseen`` with no shards): a Bloom pre-filter would still have
+to confirm its maybes against that same union, and lost to the plain
+anti-join at every measured size. Batch-iterative rather than Structured
 Streaming because the frontier is feedback — epoch N's input is epoch
 N-1's output — which streaming cannot express without an external
 round-trip anyway (SURVEY.md §1.5).
@@ -24,17 +28,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
-from dataclasses import dataclass
-
-_TIMING = os.environ.get("BISQUE_CRAWL_TIMING") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    now = time.time()
-    if _TIMING:
-        print(f"    [crawl-timing] {label}: {now - t0:.2f}s", flush=True)
-    return now
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +43,7 @@ from bisque_spark.operators.schedule import (
     politeness_select,
     with_frontier_columns,
 )
-from bisque_spark.operators.seen import build_shards, filter_unseen
+from bisque_spark.operators.seen import filter_unseen
 from bisque_spark.synth import World
 
 FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority", "crawl_delay"]
@@ -65,7 +59,6 @@ _FRONTIER_SCHEMA = (
     "priority double, crawl_delay double"
 )
 _SEEN_SCHEMA = "url_hash bigint"
-_SHARDS_SCHEMA = "bucket int, bloom binary"
 
 # The per-epoch state junction: frontier / order log / seen delta /
 # images / lineage counters share one superset schema and are written
@@ -95,9 +88,6 @@ _JUNCTION_COLS = [
     ("fmt", "string"),
     ("caption", "string"),
     ("phash", "bigint"),
-    # bloom shard-delta slice
-    ("bucket", "int"),
-    ("bloom", "binary"),
     # link-graph slice: url_hash (src page) → dst_hash, raw extraction
     # output BEFORE robots/dedup — the input to link-authority ranking
     ("dst_hash", "bigint"),
@@ -129,7 +119,7 @@ def _junction_path(workdir: str, epoch: int, table: str) -> str:
 
 def _parquet_num_rows(path: str) -> int:
     """Row count from parquet footers — driver-local metadata read, no
-    Spark job (used for the frontier-empty check on committed epochs)."""
+    Spark job (the frontier-empty check)."""
     import glob
 
     import pyarrow.parquet as pq
@@ -138,14 +128,6 @@ def _parquet_num_rows(path: str) -> int:
     for f in glob.glob(os.path.join(path, "*.parquet")):
         total += pq.ParquetFile(f).metadata.num_rows
     return total
-
-
-@dataclass
-class CrawlState:
-    epoch: int
-    frontier: DataFrame | None
-    seen_exact: DataFrame | None
-    shards: DataFrame | None
 
 
 def _epoch_dir(workdir: str, epoch: int) -> str:
@@ -164,61 +146,26 @@ def _base_epoch(workdir: str, last: int, name: str) -> int | None:
     return None
 
 
-def _read_seen_union(spark: SparkSession, workdir: str, last: int) -> DataFrame:
-    """seen_exact = latest compaction base + per-epoch deltas since
-    (append-only: the seen set is written as O(new URLs) per epoch,
-    never rewritten — at 10^10 URLs a full rewrite per epoch would
-    dominate the job; periodic compaction bounds the union width)."""
+def _read_seen_union(spark: SparkSession, workdir: str, last: int) -> DataFrame | None:
+    """The seen set as of epoch ``last`` (None when nothing is
+    committed): the latest compaction base (``seen_base``, else the seed
+    frontier) + the per-epoch junction deltas since. Append-only — each
+    epoch writes O(new URLs), never rewrites the set (at 10^10 URLs a
+    full rewrite per epoch would dominate the job); periodic compaction
+    bounds the union width. Per-path reads unioned by name: the seed
+    file and the junction slices have different physical schemas
+    (narrow vs superset), so a single multi-path read would pick one
+    footer's schema arbitrarily."""
     base = _base_epoch(workdir, last, "seen_base")
-    if base is not None:
-        paths = [os.path.join(_epoch_dir(workdir, base), "seen_base")]
-        start = base + 1
+    if base is None:
+        paths, start = [os.path.join(workdir, "frontier_seed")], 0
     else:
-        paths = [os.path.join(workdir, "frontier_seed")]
-        start = 0
-    paths += [
-        _junction_path(workdir, e, "seen") for e in range(start, last + 1)
+        paths, start = [os.path.join(_epoch_dir(workdir, base), "seen_base")], base + 1
+    paths += [_junction_path(workdir, e, "seen") for e in range(start, last + 1)]
+    reads = [
+        spark.read.schema(_SEEN_SCHEMA).parquet(p) for p in paths if os.path.exists(p)
     ]
-    existing = [p for p in paths if os.path.exists(p)]
-    # per-path reads unioned by name: the seed file and the junction
-    # slices have different physical schemas (narrow vs superset), so a
-    # single multi-path read would pick one footer's schema arbitrarily
-    dfs = [
-        spark.read.schema(_SEEN_SCHEMA).parquet(p).select("url_hash")
-        for p in existing
-    ]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def _read_shard_union(spark: SparkSession, workdir: str, last: int) -> DataFrame:
-    """Bloom state = union of per-epoch shard DELTAS (buckets that saw
-    new hashes), OR-merged lazily inside mark_maybe_seen's cogroup.
-    Round 1 rewrote the full shard table every epoch — at the 10^10
-    geometry (4096 × 4 MiB) that is a 16 GB rewrite per epoch; deltas
-    are O(new buckets). Compact by rewriting ``shard_seed`` every K
-    epochs if the delta count ever matters (it is ≤ n_buckets rows per
-    epoch)."""
-    base = _base_epoch(workdir, last, "shards_base")
-    paths = []
-    start = 0
-    if base is not None:
-        paths.append(os.path.join(_epoch_dir(workdir, base), "shards_base"))
-        start = base + 1
-    paths += [
-        _junction_path(workdir, e, "shards") for e in range(start, last + 1)
-    ]
-    existing = [p for p in paths if os.path.exists(p)]
-    dfs = [
-        spark.read.schema(_SHARDS_SCHEMA).parquet(p).select("bucket", "bloom")
-        for p in existing
-    ]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
+    return reduce(DataFrame.unionByName, reads) if reads else None
 
 
 def latest_complete_epoch(workdir: str) -> int | None:
@@ -242,7 +189,6 @@ def run_crawl(
     workdir: str,
     max_epochs: int = 10,
     resume: bool = False,
-    n_buckets: int = 32,
     compact_every: int = 16,
     authority: DataFrame | None = None,
     authority_weight: float = 1.0,
@@ -288,8 +234,6 @@ def run_crawl(
 
     start_epoch = 0
     frontier: DataFrame | None = None
-    seen_exact: DataFrame | None = None
-    shards: DataFrame | None = None
 
     if resume:
         last = latest_complete_epoch(workdir)
@@ -302,20 +246,15 @@ def run_crawl(
                 if os.path.exists(frontier_path)
                 else None
             )
-            seen_exact = _read_seen_union(spark, workdir, last)
-            shards = _read_shard_union(spark, workdir, last)
             start_epoch = last + 1
     elif os.path.isdir(workdir):
         shutil.rmtree(workdir)
 
-    t_pre = time.time()
     frontier_on_disk: str | None = None
     if start_epoch == 0 and frontier is None:
         # ONE pre-loop write: the canonicalized, robots-filtered seed
-        # frontier. seen_exact is a column slice of the same file and
-        # the seed blooms are a LAZY plan over it (built inline by
-        # epoch 0's cogroup; epoch 0's shard_delta then persists
-        # seeds+new) — round 1 spent two extra jobs here.
+        # frontier. Epoch 0's seen set is a column slice of the same
+        # file (_read_seen_union) — round 1 spent two extra jobs here.
         raw = spark.createDataFrame(seeds, schema="url string, rank int")
         canon = with_canonical(raw).where(F.col("url").isNotNull())
         seed_urls_df = canon.select("url")
@@ -367,16 +306,9 @@ def run_crawl(
             .parquet(seed_path)
             .select(*FRONTIER_COLS)
         )
-        seen_exact = (
-            spark.read.schema(_SEEN_SCHEMA)
-            .parquet(seed_path)
-            .select("url_hash")
-        )
-        shards = build_shards(seen_exact, n_buckets=n_buckets)
     elif frontier is not None:
         frontier_on_disk = _junction_path(workdir, start_epoch - 1, "frontier")
 
-    _tick("seed writes (pre-loop)", t_pre)
     # deferred epoch finalizers (observational-slice join + _COMMIT):
     # at most one is ever pending — epoch N's is joined at the top of
     # epoch N+1's commit section or at loop exit
@@ -388,7 +320,6 @@ def run_crawl(
 
     epoch = start_epoch
     while epoch < max_epochs and frontier is not None:
-        t = time.time()
         # every frontier (seed included) is parquet-backed: emptiness
         # (and size) from parquet footers — a driver-local metadata
         # read, no Spark job. Fall back to isEmpty for a caller-supplied
@@ -400,7 +331,6 @@ def run_crawl(
                 break
         elif frontier.isEmpty():
             break
-        t = _tick("frontier-empty check", t)
         # the salted two-phase rank is skew armor for huge frontiers;
         # below ~200k rows the single exact window is result-identical
         # and one shuffle cheaper (footer count makes this free)
@@ -442,9 +372,6 @@ def run_crawl(
             "caption string, phash long",
         )
 
-        # links are deduped INSIDE the bloom cogroup (dedup_key): the
-        # bucket shuffle co-locates equal url_hashes anyway, so the
-        # old dropDuplicates(["url"]) shuffle stage is folded away
         links = extracted.select(F.explode("links").alias("url"))
         candidates = with_frontier_columns(
             links.withColumn("depth", F.lit(epoch + 1)), epoch=epoch + 1,
@@ -455,16 +382,12 @@ def run_crawl(
 
             candidates, _ = filter_traps(candidates, trap_guard)
         candidates = apply_robots(candidates, robots)
-        # persisted: the shard-delta job (the one other sink) reuses the
-        # cogroup+anti-join result after the junction job populates it
+
+        # URL-seen: exact anti-join against the committed seen union
+        seen_exact = _read_seen_union(spark, workdir, epoch - 1)
+        # persisted: two junction slices read it (frontier, seen delta)
         new_urls = (
-            filter_unseen(
-                candidates,
-                shards,
-                seen_exact,
-                n_buckets=n_buckets,
-                dedup_key="url_hash",
-            )
+            filter_unseen(candidates, None, seen_exact, dedup_key="url_hash")
             .select(*FRONTIER_COLS)
             .persist()
         )
@@ -486,19 +409,15 @@ def run_crawl(
         # r7 A/B probe, now the default: the dedicated warm count was
         # ~2 s/epoch of serial driver+action latency and the junction
         # job absorbs the same work for ~1 s — measured 14.7 → 13.0 s
-        # on the bench world). _FORCE_WARM restores the old two-action
-        # shape for A/B.
-        if globals().get("_FORCE_WARM"):
-            next_frontier.count()
-        t = _tick("fetch+extract+dedup (cache warm)", t)
+        # on the bench world).
 
         # ---- commit epoch state ------------------------------------------
         # Two write jobs per epoch (r8): the STATE slices the next
-        # epoch reads (frontier + seen delta + bloom shard delta +
-        # lineage counters) commit synchronously; the OBSERVATIONAL
-        # slices (order log + images + link graph) write to a per-epoch
-        # junction_tmp/ from a background driver thread (guide §2.6)
-        # whose join — and hence this epoch's _COMMIT marker — is
+        # epoch reads (frontier + seen delta + lineage counters) commit
+        # synchronously; the
+        # OBSERVATIONAL slices (order log + images + link graph) write
+        # to a per-epoch junction_tmp/ from a background driver thread
+        # (guide §2.6) whose join — and hence this epoch's _COMMIT marker — is
         # deferred until the NEXT epoch's commit section, so the images
         # synth+write overlaps the next epoch's frontier compute
         # instead of serializing behind it. At join the tmp table dirs
@@ -516,13 +435,6 @@ def run_crawl(
             F.count(F.lit(1)).alias("n_scheduled"),
             F.sum(F.col("error").isNull().cast("long")).alias("n_fetched"),
         ).withColumn("epoch", F.lit(epoch))
-        # bloom state is delta-only: buckets that saw new hashes. On the
-        # first epoch the delta also covers the seeds, so the union of
-        # committed deltas is always the full filter.
-        delta_hashes = new_hashes
-        if epoch == start_epoch and start_epoch == 0:
-            delta_hashes = new_hashes.unionByName(seen_exact.select("url_hash"))
-        shard_delta = build_shards(delta_hashes, n_buckets=n_buckets)
         # the state slices are O(frontier) rows of narrow columns — at
         # any parallelism they'd otherwise contribute ~5×cores tiny
         # tasks AND files per epoch (measured ~2 s/epoch of fixed
@@ -563,21 +475,19 @@ def run_crawl(
         obs_thread = InheritableThread(target=_write_obs)
         obs_thread.start()
 
-        junction_state = (
-            _junction_slice(next_frontier.coalesce(small), "frontier")
-            .unionByName(_junction_slice(new_hashes.coalesce(small), "seen"))
-            .unionByName(_junction_slice(shard_delta.coalesce(small), "shards"))
-            .unionByName(_junction_slice(lineage_row, "lineage"))
-        )
-        junction_state.write.mode("overwrite").partitionBy("table").parquet(
-            os.path.join(d, "junction")
-        )
-        t = _tick("junction state write (4 slices)", t)
+        state_slices = [
+            _junction_slice(next_frontier.coalesce(small), "frontier"),
+            _junction_slice(new_hashes.coalesce(small), "seen"),
+            _junction_slice(lineage_row, "lineage"),
+        ]
+        reduce(DataFrame.unionByName, state_slices).write.mode(
+            "overwrite"
+        ).partitionBy("table").parquet(os.path.join(d, "junction"))
 
         epoch_caches = [scheduled, extracted, new_urls, next_frontier]
 
         def _finalize(dd=d, tmp=obs_tmp, th=obs_thread, err=obs_err,
-                      caches=epoch_caches, ep=epoch):
+                      caches=epoch_caches):
             th.join()
             if err:
                 raise err[0]
@@ -592,27 +502,19 @@ def run_crawl(
                 f.write("ok")
             for c in caches:
                 c.unpersist()
-            _tick(f"obs join + _COMMIT (epoch {ep})", time.time())
 
         pending_finalize.append(_finalize)
 
-        # periodic state compaction: collapse the delta chains into one
-        # base so the read-side union width stays bounded (a 10^4-epoch
-        # crawl would otherwise union 10^4 delta paths per epoch).
-        # Written BEFORE _COMMIT, so a crash mid-compaction redoes the
-        # whole epoch — commit atomicity unchanged.
+        # periodic state compaction: collapse the seen delta chain into
+        # one base so the read-side union width stays bounded (a
+        # 10^4-epoch crawl would otherwise union 10^4 delta paths per
+        # epoch). Written BEFORE _COMMIT, so a crash mid-compaction
+        # redoes the whole epoch — commit atomicity unchanged.
         if compact_every and (epoch + 1) % compact_every == 0:
-            from bisque_spark.operators.seen import or_merge_shards
-
             _write(
                 _read_seen_union(spark, workdir, epoch),
                 os.path.join(d, "seen_base"),
             )
-            _write(
-                or_merge_shards(_read_shard_union(spark, workdir, epoch)),
-                os.path.join(d, "shards_base"),
-            )
-            t = _tick("state compaction (seen_base + shards_base)", t)
 
         # counters come from the lineage slice written above — a
         # one-row driver-local parquet read, not a Spark job
@@ -645,8 +547,6 @@ def run_crawl(
             if os.path.exists(frontier_on_disk)
             else None
         )
-        seen_exact = _read_seen_union(spark, workdir, epoch)
-        shards = _read_shard_union(spark, workdir, epoch)
         epoch += 1
 
     _join_pending()

@@ -118,13 +118,8 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def filter_unseen_plan(spark):
-    """Plan for the bloom membership stage: the shard blob must ride a
-    COGROUP (one blob per bucket group), never a per-row join column
-    (VERDICT r01 #4 done-criterion)."""
+def _seen_inputs(spark):
     import pyspark.sql.functions as F
-
-    from bisque_spark.operators.seen import build_shards, filter_unseen
 
     cand = spark.range(1000).select(
         F.concat(F.lit("http://h"), F.col("id")).alias("url"),
@@ -133,8 +128,27 @@ def filter_unseen_plan(spark):
     seen = spark.range(500).select(
         F.xxhash64((F.col("id") * 2).cast("string")).alias("url_hash")
     )
+    return cand, seen
+
+
+def filter_unseen_plan(spark):
+    """Plan for the bloom membership stage: the shard blob must ride a
+    COGROUP (one blob per bucket group), never a per-row join column
+    (VERDICT r01 #4 done-criterion)."""
+    from bisque_spark.operators.seen import build_shards, filter_unseen
+
+    cand, seen = _seen_inputs(spark)
     shards = build_shards(seen)
     return filter_unseen(cand, shards, seen, dedup_key="url_hash")
+
+
+def filter_unseen_exact_plan(spark):
+    """Plan for the crawl's URL-seen path (shards=None): a
+    dropDuplicates + left_anti join, with no Python worker at all."""
+    from bisque_spark.operators.seen import filter_unseen
+
+    cand, seen = _seen_inputs(spark)
+    return filter_unseen(cand, None, seen, dedup_key="url_hash")
 
 
 def diversity_sample_plan(spark):
@@ -172,11 +186,16 @@ def cuckoo_membership_plan(spark):
     the bloom shards — the filter blob never rides the row plan."""
     import pyspark.sql.functions as F
 
-    from bisque_spark.operators.cuckoo import build_shards, mark_maybe_seen
+    from bisque_spark.operators.seen import (
+        CUCKOO,
+        Cuckoo,
+        build_shards,
+        mark_maybe_seen,
+    )
 
     cand = spark.range(1000).select(F.xxhash64("id").alias("url_hash"))
-    shards = build_shards(cand, buckets=8, nb=1 << 9)
-    return mark_maybe_seen(cand, shards, buckets=8)
+    shards = build_shards(cand, n_buckets=8, kernel=Cuckoo(nb=1 << 9))
+    return mark_maybe_seen(cand, shards, n_buckets=8, kernel=CUCKOO)
 
 
 def linkrank_step_plan(spark):
@@ -514,6 +533,15 @@ EXTRA_CHECKS = {
             ("FlatMapCoGroupsInPandas", "blob ships once per bucket group"),
             ("!BroadcastHashJoin.*bloom", "no per-row bloom join"),
             (r"!bloom#\d+\]\s*$", "bloom column never in the output row plan"),
+        ],
+    ),
+    "filter_unseen (exact anti-join, default)": (
+        filter_unseen_exact_plan,
+        [
+            ("LeftAnti", "seen set answered by a left_anti join"),
+            ("!FlatMapCoGroupsInPandas", "no filter cogroup"),
+            ("!(ArrowEvalPython|BatchEvalPython|InPandas|PythonUDF)",
+             "no Python UDF node"),
         ],
     ),
     "diversity_sample (stratified)": (

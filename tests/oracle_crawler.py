@@ -1,16 +1,19 @@
 """Single-process oracle crawler — the reference semantics, sequentially.
 
 Implements the same crawl contract as bisque_spark.plans.crawl but as a
-plain Python loop with the *reference* bisque doing decode/parse/extract
-(imported from /root/reference/src). The Spark crawl must reproduce its
-ordering, final URL-seen set, captions (byte-equal), and image bytes
-(FIXTURES.md "Oracle fixtures").
+plain Python loop. The Spark crawl must reproduce its ordering, final
+URL-seen set, captions (byte-equal), and image bytes (FIXTURES.md
+"Oracle fixtures").
 
 Shared with the engine: the synthetic world (bisque_spark.synth), URL
 canonicalization (bisque_spark.functions.urlnorm — separately
 unit/property-tested), and the xxh64 twin (parity-pinned vs the JVM).
-Parse/extract/decode, the heart of the differential, come from the
-reference here and from bisque_spark.parse on the Spark side.
+Decode/parse/extract is injectable (``extract``): the *reference*
+bisque when it is importable, else the engine's own pure-Python
+``extract_page`` over ``decode_html``. Without the reference the
+differential still pins what the crawl adds — frontier scheduling,
+politeness, robots and dedup — while test_parse/test_extract pin the
+parse wherever the reference exists.
 """
 
 from __future__ import annotations
@@ -26,11 +29,12 @@ from bisque_spark.synth import (
     synth_image,
 )
 
-from ref_oracle import ref_soup  # noqa: E402  (injects /root/reference/src)
+from ref_oracle import ref_soup
 
 
 def oracle_extract(content: bytes, page_url: str) -> tuple[list[dict], list[str]]:
-    """Reference-bisque extraction with the engine's caption policy."""
+    """Reference-bisque extraction with the engine's caption policy
+    (skips the calling test when the reference is absent)."""
     soup = ref_soup(content)
     page_hash = xxhash64_str(page_url)
     images = []
@@ -64,6 +68,30 @@ def oracle_extract(content: bytes, page_url: str) -> tuple[list[dict], list[str]
     return images, links
 
 
+def engine_extract(content: bytes, page_url: str) -> tuple[list[dict], list[str]]:
+    """The engine's extraction, as its fetch+extract stage runs it: a
+    page that fails to decode or parse yields no images and no links."""
+    from bisque_spark.functions.encoding import decode_html
+    from bisque_spark.operators.extract import extract_page
+
+    try:
+        text, encoding, _ = decode_html(bytes(content))
+        if text is None:
+            return [], []
+        res = extract_page(text, page_url, original_encoding=encoding)
+    except Exception:  # noqa: BLE001 — the engine's row-level containment
+        return [], []
+    return res["images"], res["links"]
+
+
+def default_extract():
+    """The reference extraction when the reference is importable, else
+    the engine's."""
+    import importlib.util
+
+    return oracle_extract if importlib.util.find_spec("bisque") else engine_extract
+
+
 def _disallowed(url: str, disallow_by_host: dict) -> bool:
     host = url_host(url)
     path = url[len(f"http://{host}") :] if url.startswith("http://") else url
@@ -85,6 +113,7 @@ def crawl_oracle(
     authority_weight: float = 1.0,
     use_sitemaps: bool = False,
     trap_guard=None,
+    extract=None,
 ):
     """→ dict(order=[(epoch, host, host_rank, priority, url_hash, url)],
     seen=set[int], images=[dict], links=[(src_hash, dst_hash)]).
@@ -93,8 +122,12 @@ def crawl_oracle(
     weighted priority: -depth + weight·rank, same float association.
     ``trap_guard`` (operators/trapguard.TrapGuard) applies the same
     trap rules as the engine, via the shared Python twin, at both
-    frontier insertion points; raw link edges are still recorded."""
+    frontier insertion points; raw link edges are still recorded.
+    ``extract`` (content, page_url) → (images, links) defaults to
+    default_extract()."""
     from bisque_spark.operators.trapguard import trap_reason
+
+    extract = extract or default_extract()
 
     def _trapped(url: str) -> bool:
         return trap_guard is not None and trap_reason(url, trap_guard) is not None
@@ -176,7 +209,7 @@ def crawl_oracle(
             status, content = page_bytes(world, row["url"])
             if status != 200 or content is None:
                 continue
-            images, links = oracle_extract(content, row["url"])
+            images, links = extract(content, row["url"])
             pi = page_index(row["url"])
             if pi is not None and pi[1] == 0:
                 # protocol-level favicon fetch on a successful root page

@@ -3,65 +3,80 @@ engine's flat node-record shape, for differential tests.
 
 The reference is the per-document oracle mandated by BASELINE.json
 (north_rule: engine output must match bisque's parse/extract semantics).
-Only tests import this module; engine code never does.
+Only tests import this module; engine code never does. Importing it
+never needs the reference; calling into it skips the calling test when
+the reference is absent.
 """
 
 from __future__ import annotations
 
+import functools
 import sys
 import warnings
+from types import SimpleNamespace
+
+import pytest
 
 REFERENCE_SRC = "/root/reference/src"
 if REFERENCE_SRC not in sys.path:
     sys.path.insert(0, REFERENCE_SRC)
 
-with warnings.catch_warnings():
-    warnings.simplefilter("ignore")
-    from bisque import Bisque  # noqa: E402
-    from bisque.element import (  # noqa: E402
-        CData,
-        Comment,
-        Declaration,
-        Doctype,
-        NavigableString,
-        ProcessingInstruction,
-        Tag,
+
+@functools.cache
+def reference():
+    """The reference bisque's classes. The reference is optional: when
+    it is absent the calling differential test skips."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        pytest.importorskip("bisque", reason="reference absent")
+        from bisque import Bisque
+        from bisque.element import (
+            CData,
+            Comment,
+            Declaration,
+            Doctype,
+            NavigableString,
+            ProcessingInstruction,
+            Tag,
+        )
+        from bisque.element.tag_core.main import (
+            RubyParenthesisString,
+            RubyTextString,
+            Script,
+            Stylesheet,
+            TemplateString,
+            XMLProcessingInstruction,
+        )
+    kinds = [
+        (Doctype, "doctype"),
+        (CData, "cdata"),
+        (Comment, "comment"),
+        (XMLProcessingInstruction, "pi"),
+        (ProcessingInstruction, "pi"),
+        (Declaration, "decl"),
+        (Stylesheet, "stylesheet"),
+        (Script, "script"),
+        (TemplateString, "template"),
+        (RubyTextString, "rubytext"),
+        (RubyParenthesisString, "rubyparen"),
+    ]
+    return SimpleNamespace(
+        Bisque=Bisque, Tag=Tag, NavigableString=NavigableString, kinds=kinds
     )
-    from bisque.element.tag_core.main import (  # noqa: E402
-        RubyParenthesisString,
-        RubyTextString,
-        Script,
-        Stylesheet,
-        TemplateString,
-        XMLProcessingInstruction,
-    )
-
-_KIND_BY_TYPE = [
-    (Doctype, "doctype"),
-    (CData, "cdata"),
-    (Comment, "comment"),
-    (XMLProcessingInstruction, "pi"),
-    (ProcessingInstruction, "pi"),
-    (Declaration, "decl"),
-    (Stylesheet, "stylesheet"),
-    (Script, "script"),
-    (TemplateString, "template"),
-    (RubyTextString, "rubytext"),
-    (RubyParenthesisString, "rubyparen"),
-]
 
 
-def ref_soup(markup: str) -> Bisque:
-    return Bisque(markup, features="html.parser")
+def ref_soup(markup: str):
+    return reference().Bisque(markup, features="html.parser")
 
 
 def node_kind(el) -> str:
-    if isinstance(el, Tag):
+    ref = reference()
+    if isinstance(el, ref.Tag):
         return "tag"
-    for typ, kind in _KIND_BY_TYPE:
+    for typ, kind in ref.kinds:
         if type(el) is typ:
             return kind
-    assert isinstance(el, NavigableString), type(el)
+    assert isinstance(el, ref.NavigableString), type(el)
     return "text"
 
 

@@ -162,9 +162,10 @@ def test_compaction_equivalence(spark, tmp_path_factory, spark_result):
     a = {r["url_hash"] for r in read_seen(spark, res).collect()}
     b = {r["url_hash"] for r in read_seen(spark, spark_result).collect()}
     assert a == b
-    # base exists at the compaction epoch
+    # base exists at the compaction epoch; the crawl's URL-seen is the
+    # exact anti-join, so it keeps no Bloom state to compact
     assert os.path.exists(os.path.join(wd, "epoch=00001", "seen_base"))
-    assert os.path.exists(os.path.join(wd, "epoch=00001", "shards_base"))
+    assert not os.path.exists(os.path.join(wd, "epoch=00001", "shards_base"))
 
     # resume across the boundary: run 2 epochs, continue to MAX_EPOCHS
     wd2 = str(tmp_path_factory.mktemp("crawl_compact_resume"))
@@ -173,3 +174,49 @@ def test_compaction_equivalence(spark, tmp_path_factory, spark_result):
     res2 = run_crawl(spark, WORLD, seed_urls(WORLD), workdir=wd2,
                      max_epochs=MAX_EPOCHS, resume=True, compact_every=2)
     assert _order_tuples(spark, res2) == _order_tuples(spark, spark_result)
+
+
+def test_resume_across_compaction_matches_oracle(
+    spark, tmp_path, spark_result, oracle_result
+):
+    """Stop after epoch 0, resume for one epoch (which compacts the seen
+    set), then resume to the end: order, seen set and images equal the
+    oracle's and the uninterrupted run's, and the crawl commits no
+    filter state — URL-seen is the exact anti-join on every epoch."""
+    wd = str(tmp_path / "stepped")
+    for stop in (1, 2, MAX_EPOCHS):
+        res = run_crawl(
+            spark, WORLD, seed_urls(WORLD), workdir=wd, max_epochs=stop,
+            resume=stop > 1, compact_every=2,
+        )
+
+    def has(epoch, name):
+        return os.path.exists(os.path.join(wd, f"epoch={epoch:05d}", name))
+
+    assert has(1, "seen_base") and has(3, "seen_base")
+    assert not any(
+        has(e, "junction/table=shards") or has(e, "shards_base")
+        for e in range(MAX_EPOCHS)
+    )
+
+    order = _order_tuples(spark, res)
+    assert order == _order_tuples(spark, spark_result)
+    assert order == sorted(
+        (e, h, rk, float(p), uh, u) for (e, h, rk, p, uh, u) in oracle_result["order"]
+    )
+    seen = {r["url_hash"] for r in read_seen(spark, res).collect()}
+    assert seen == oracle_result["seen"]
+    assert seen == {r["url_hash"] for r in read_seen(spark, spark_result).collect()}
+
+    def images(result):
+        return sorted(
+            (r["image_id"], bytes(r["bytes"]), r["caption"], r["phash"])
+            for r in read_images(spark, result).collect()
+        )
+
+    got = images(res)
+    assert got == images(spark_result)
+    assert got == sorted(
+        (i["image_id"], i["bytes"], i["caption"], i["phash"])
+        for i in oracle_result["images"]
+    )

@@ -1,12 +1,14 @@
-"""Cuckoo-filter URL-seen shards (operators/cuckoo.py) — the
-deletable twin of the Bloom shards; north_star names 'Bloom/cuckoo'."""
+"""Cuckoo kernel of the URL-seen shards (operators/seen.py) — the
+deletable twin of the Bloom kernel; north_star names 'Bloom/cuckoo'."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bisque_spark.operators.cuckoo import (
+from bisque_spark.operators.seen import (
+    CUCKOO,
+    Cuckoo,
     _alt,
     _contains_many,
     _delete_many,
@@ -14,6 +16,7 @@ from bisque_spark.operators.cuckoo import (
     _insert_many,
     build_shards,
     delete_from_shards,
+    filter_unseen,
     mark_maybe_seen,
     merge_shards,
     nb_for,
@@ -88,42 +91,42 @@ def test_shard_build_lookup_merge_delete(spark):
     import pyspark.sql.functions as F
 
     df = spark.range(400).select(F.xxhash64("id").alias("url_hash"))
-    shards = build_shards(df, buckets=8, nb=1 << 9)
+    shards = build_shards(df, n_buckets=8, kernel=Cuckoo(nb=1 << 9))
     assert shards.count() == 8
 
-    marked = mark_maybe_seen(df, shards, buckets=8)
+    marked = mark_maybe_seen(df, shards, n_buckets=8, kernel=CUCKOO)
     assert marked.where("NOT maybe_seen").count() == 0  # no false negatives
 
     # merge: second wave of keys lands in the merged filter
     df2 = spark.range(400, 700).select(F.xxhash64("id").alias("url_hash"))
-    merged = merge_shards(shards, build_shards(df2, buckets=8, nb=1 << 9))
+    merged = merge_shards(
+        shards, build_shards(df2, n_buckets=8, kernel=Cuckoo(nb=1 << 9)), kernel=CUCKOO
+    )
     both = df.unionByName(df2)
-    m2 = mark_maybe_seen(both, merged, buckets=8)
+    m2 = mark_maybe_seen(both, merged, n_buckets=8, kernel=CUCKOO)
     assert m2.where("NOT maybe_seen").count() == 0
 
     # delete the first wave: those keys drop out, second wave stays
-    after = delete_from_shards(merged, df, buckets=8)
-    m3 = mark_maybe_seen(df2, after, buckets=8)
+    after = delete_from_shards(merged, df, n_buckets=8)
+    m3 = mark_maybe_seen(df2, after, n_buckets=8, kernel=CUCKOO)
     assert m3.where("NOT maybe_seen").count() == 0
-    dropped = mark_maybe_seen(df, after, buckets=8)
+    dropped = mark_maybe_seen(df, after, n_buckets=8, kernel=CUCKOO)
     # deleted keys are gone up to the residual fp rate
     assert dropped.where("maybe_seen").count() <= 4
 
 
 def test_filter_unseen_cuckoo_crawl_shaped_chain(spark):
-    """The cuckoo family drives the same epoch chain as the Bloom
-    default — pre-filter + exact-confirm anti-join — and agrees with
+    """The cuckoo kernel drives the same epoch chain as the Bloom
+    kernel — pre-filter + exact-confirm anti-join — and agrees with
     the ground truth: candidates minus the seen set, plus re-opened
     (deleted) URLs become schedulable again."""
     import pyspark.sql.functions as F
 
-    from bisque_spark.operators.cuckoo import filter_unseen_cuckoo
-
     seen = spark.range(300).select(F.xxhash64("id").alias("url_hash"))
-    shards = build_shards(seen, buckets=8, nb=1 << 9)
+    shards = build_shards(seen, n_buckets=8, kernel=Cuckoo(nb=1 << 9))
     cands = spark.range(200, 500).select(F.xxhash64("id").alias("url_hash"))
 
-    out = filter_unseen_cuckoo(cands, shards, seen, buckets=8)
+    out = filter_unseen(cands, shards, seen, n_buckets=8, kernel=CUCKOO)
     got = {r["url_hash"] for r in out.collect()}
     truth = {
         r["url_hash"]
@@ -136,9 +139,9 @@ def test_filter_unseen_cuckoo_crawl_shaped_chain(spark):
     # re-open 250..299 (delete from filter AND from the exact set):
     # they become schedulable again
     reopen = spark.range(250, 300).select(F.xxhash64("id").alias("url_hash"))
-    shards2 = delete_from_shards(shards, reopen, buckets=8)
+    shards2 = delete_from_shards(shards, reopen, n_buckets=8)
     seen2 = seen.join(reopen, "url_hash", "left_anti")
-    out2 = filter_unseen_cuckoo(cands, shards2, seen2, buckets=8)
+    out2 = filter_unseen(cands, shards2, seen2, n_buckets=8, kernel=CUCKOO)
     got2 = {r["url_hash"] for r in out2.collect()}
     truth2 = truth | {r["url_hash"] for r in reopen.collect()}
     assert got2 == truth2

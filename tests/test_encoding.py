@@ -1,14 +1,21 @@
-"""Differential decode tests vs the reference's UnicodeDammit."""
+"""Differential decode tests vs the reference's UnicodeDammit, plus
+engine-only decode pins (those run without the reference)."""
 
-import sys
-
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import ref_oracle  # noqa: F401  (puts the optional reference on sys.path)
 from bisque_spark.functions.encoding import decode_html, find_declared_encoding, strip_bom
 
-sys.path.insert(0, "/root/reference/src")
-from bisque.dammit import UnicodeDammit  # noqa: E402
+
+@pytest.fixture(scope="module")
+def UnicodeDammit():
+    """The reference's UnicodeDammit; differential tests skip without it."""
+    pytest.importorskip("bisque", reason="reference absent")
+    from bisque.dammit import UnicodeDammit
+
+    return UnicodeDammit
 
 DOCS = [
     "<html><body><p>plain ascii</p></body></html>",
@@ -30,7 +37,7 @@ def _variants(doc: str):
     yield b"\xff\xfe" + doc.encode("utf-16le")  # BOM utf-16le
 
 
-def test_differential_vs_unicode_dammit():
+def test_differential_vs_unicode_dammit(UnicodeDammit):
     for doc in DOCS:
         for data in _variants(doc):
             ref = UnicodeDammit(data, is_html=True)
@@ -41,7 +48,7 @@ def test_differential_vs_unicode_dammit():
 
 @settings(max_examples=150, deadline=None)
 @given(st.binary(min_size=0, max_size=300))
-def test_differential_random_bytes(data):
+def test_differential_random_bytes(UnicodeDammit, data):
     ref = UnicodeDammit(data, is_html=True)
     got_text, _, got_repl = decode_html(data, is_html=True)
     assert got_text == ref.unicode_markup
@@ -49,7 +56,7 @@ def test_differential_random_bytes(data):
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=0, max_size=200))
-def test_detwingle_differential(data):
+def test_detwingle_differential(UnicodeDammit, data):
     from bisque_spark.functions.encoding import detwingle
 
     assert detwingle(data) == UnicodeDammit.detwingle(data)
@@ -63,7 +70,7 @@ def test_detwingle_snowmen():
     assert fixed.decode("utf-8") == "☃☃☃“I like snowmen!“"
 
 
-def test_known_definite_and_exclude_params():
+def test_known_definite_and_exclude_params(UnicodeDammit):
     data = "caf\xe9".encode("windows-1252")
     # known-definite wins over everything
     ref = UnicodeDammit(data, known_definite_encodings=["windows-1252"], is_html=True)
@@ -102,15 +109,10 @@ def test_declared_encoding():
     assert find_declared_encoding(far, is_html=True) is None
 
 
-def test_smart_quotes_to_modes_match_reference():
+def test_smart_quotes_to_modes_match_reference(UnicodeDammit):
     """smart_quotes_to = ascii | xml | html | None byte-parity vs
     UnicodeDammit (detection.py:287,335-371), incl. the empty-hex Yuml
     quirk (&#x; in xml mode) and the undefined-cp1252-byte fallbacks."""
-    import sys
-
-    sys.path.insert(0, "/root/reference/src")
-    from bisque.dammit import UnicodeDammit
-
     from bisque_spark.functions.encoding import decode_html
 
     samples = [

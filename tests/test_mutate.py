@@ -2,6 +2,7 @@
 mutate → serialize must byte-equal bisque's mutate → decode."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from bisque_spark.operators.mutate import (
     decompose,
@@ -169,6 +170,7 @@ def test_clear_matches_reference():
     import sys
 
     sys.path.insert(0, "/root/reference/src")
+    pytest.importorskip("bisque", reason="reference absent")
     from bisque import Bisque
 
     from bisque_spark.operators.mutate import clear

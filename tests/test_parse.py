@@ -43,6 +43,7 @@ def _ref_docs():
     import sys
 
     sys.path.insert(0, "/root/reference/src")
+    pytest.importorskip("bisque", reason="reference absent")
     from bisque.tests import BAD_DOCUMENT
 
     docs.append(BAD_DOCUMENT)
@@ -197,6 +198,7 @@ def test_charref_windows1252_overwrite_matches_reference():
     import sys
 
     sys.path.insert(0, "/root/reference/src")
+    pytest.importorskip("bisque", reason="reference absent")
     from bisque import Bisque
 
     markup = b'<p>&#147;quoted&#148; &#128; &#160;</p>'

@@ -89,23 +89,25 @@ def test_due_for_refresh_matches_duckdb_oracle(spark):
 
 
 def test_reopen_flow_feeds_frontier_again(spark):
-    """due → cuckoo delete + exact-table drop → filter_unseen_cuckoo
-    re-admits exactly the re-opened URLs."""
-    from bisque_spark.operators.cuckoo import (
+    """due → cuckoo delete + exact-table drop → filter_unseen with the
+    cuckoo kernel re-admits exactly the re-opened URLs."""
+    from bisque_spark.operators.seen import (
+        CUCKOO,
+        Cuckoo,
         build_shards,
-        filter_unseen_cuckoo,
+        filter_unseen,
     )
 
     seen = _seen_df(spark, n=200)
     hashes = seen.select("url_hash")
-    shards = build_shards(hashes, buckets=8, nb=1 << 9)
+    shards = build_shards(hashes, n_buckets=8, kernel=Cuckoo(nb=1 << 9))
 
     due = due_for_refresh(seen, 9, policy_table(spark), limit_per_host=2)
     shards2, exact2 = reopen_for_refetch(due, shards, hashes, buckets=8)
 
     # the whole original URL set presented as candidates: exactly the
     # re-opened ones come out schedulable
-    out = filter_unseen_cuckoo(hashes, shards2, exact2, buckets=8)
+    out = filter_unseen(hashes, shards2, exact2, n_buckets=8, kernel=CUCKOO)
     got = {r["url_hash"] for r in out.collect()}
     want = {r["url_hash"] for r in due.collect()}
     assert got == want
