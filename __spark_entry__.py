@@ -403,14 +403,6 @@ def _q_doc_curation_pipeline(spark, sf_dir):
     return kept.select("doc_id", "n_tokens", "stopword_ratio", "lang_pred")
 
 
-def _q_doc_fingerprint(spark, sf_dir):
-    from bisque_spark.functions.text import fingerprint_udf
-
-    return _load(spark, sf_dir, "documents").select(
-        "doc_id", fingerprint_udf(F.col("text")).alias("fingerprint")
-    )
-
-
 def _q_extract_captions(spark, sf_dir):
     """bisque find_all/get_text semantics as a batch operator: wrap each
     document's text into figure/figcaption markup (deterministically)
@@ -590,28 +582,6 @@ def _q_audio_features(spark, sf_dir):
     )
 
 
-def _q_image_thumbnails(spark, sf_dir):
-    """Deterministic nearest-neighbor thumbnails (resize stage of the
-    multimodal pipeline); thumbnails hashed for a stable row shape.
-    Rows-only; pixel-level oracle in test_multimodal.py."""
-    from bisque_spark.operators.extract import materialize_images_batches
-    from bisque_spark.operators.multimodal import image_thumbnails
-
-    ids = spark.range(150).select(
-        F.concat(F.lit("img-th-"), F.col("id").cast("string")).alias("image_id"),
-        F.lit("").alias("caption"),
-    )
-    images = ids.mapInPandas(
-        materialize_images_batches,
-        schema="image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
-    th = image_thumbnails(images, target=8)
-    return th.select(
-        "image_id", "w", "h", F.md5(F.col("thumb")).alias("thumb_md5"), "error"
-    )
-
-
 def _q_image_features(spark, sf_dir):
     """Multimodal decode + feature + thumbnail plumbing over
     deterministic images (absorbs the former image_thumbnails entry —
@@ -668,31 +638,6 @@ def _q_validate_images(spark, sf_dir):
     return out.select(
         "image_id", "valid", F.size("errors").alias("n_errors")
     )
-
-
-def _q_nodes_find_all(spark, sf_dir):
-    """find_all over the exploded node table (SURVEY §2.2 axes as
-    DataFrame ops). Oracle = reference bisque (tests/test_nodes.py);
-    rows-only here."""
-    from bisque_spark.operators.nodes import explode_nodes, find_all, strainer
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://docs.test/d"), F.col("doc_id")).alias("url"),
-        F.concat(
-            F.lit('<html><body><p class="body  text">'),
-            F.substring("text", 1, 150),
-            F.lit('</p><ul><li><a href="/a.html" rel="next  page">x</a></li>'),
-            F.lit("</ul></body></html>"),
-        ).alias("html"),
-    )
-    nodes = explode_nodes(pages, html_col="html")
-    # string co-filter (soup_strainer.py:171-173): only <p> whose
-    # Tag.string contains "the" — exercises the tag_string_of semi-join
-    hits = find_all(
-        nodes, strainer("p", class_="text"), string=__import__("re").compile("the")
-    )
-    return hits.select("url", "pos", "name", "sibling_idx", "depth")
 
 
 def _q_parts_by_brand(spark, sf_dir):
@@ -1046,38 +991,6 @@ def _q_emb_dim_stats(spark, sf_dir):
     return emb.groupBy("label").agg(*cols)
 
 
-def _q_serialize_roundtrip(spark, sf_dir):
-    """Parse → serialize fixpoint over synthesized pages (the reference
-    harness's own round-trip invariant as a batch column). Oracle =
-    byte-equality tests vs the reference (tests/test_serialize.py);
-    rows-only here."""
-    import pandas as pd
-
-    from bisque_spark.parse import parse_nodes, serialize_nodes
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit('<div class="w  x"><p>'),
-            F.substring("text", 1, 100),
-            F.lit(" &amp; tail</p><br><pre> k </pre></div>"),
-        ).alias("html"),
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, fixpoint = [], []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                once = serialize_nodes(parse_nodes(html))
-                twice = serialize_nodes(parse_nodes(once))
-                ids.append(doc_id)
-                fixpoint.append(once == twice)
-            yield pd.DataFrame({"doc_id": ids, "fixpoint": fixpoint})
-
-    return pages.mapInPandas(run, schema="doc_id long, fixpoint boolean")
-
-
 def _q_events_asof_join(spark, sf_dir):
     """As-of join: each event of the first type gets the most recent
     prior-or-equal event value of the second type for the same user."""
@@ -1111,26 +1024,6 @@ def _q_events_asof_join(spark, sf_dir):
         "user_id",
         F.round("rv_right", 6).alias("prev_value"),
     )
-
-
-def _q_css_select(spark, sf_dir):
-    """CSS selector subset over synthesized pages (SURVEY §2.2 select).
-    Oracle = hand-derived corpus + find_all cross-check
-    (tests/test_css.py); rows-only here."""
-    from bisque_spark.functions.css import select_stage
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://docs.test/d"), F.col("doc_id")).alias("url"),
-        F.concat(
-            F.lit('<div class="outer"><p class="a">'),
-            F.substring("text", 1, 80),
-            F.lit('</p><p class="a b">x</p><ul><li><a href="/n.html" rel="next">n</a>'),
-            F.lit("</li></ul></div>"),
-        ).alias("html"),
-    )
-    hits = select_stage(pages, "div.outer > p.a.b, a[rel~=next]")
-    return hits.select("url", "pos", "name", "depth")
 
 
 def _q_parse_pipeline(spark, sf_dir):

@@ -171,7 +171,6 @@ def lsh_candidate_pairs(
     id_col: str,
     bands: int = 16,
     rows_per_band: int = 4,
-    attach_sigs: bool = True,
     dedup: bool = True,
 ) -> DataFrame:
     """Signature table → distinct candidate pairs (id_a < id_b).
@@ -182,9 +181,9 @@ def lsh_candidate_pairs(
     Shuffle shape (round 2): ONLY (id, band, band_hash) rides the
     banded self-join — round 1 carried the full 64-long signature on
     both sides of every exploded band row (~2·bands·|sig| shuffle
-    weight per doc; VERDICT r01 'What's wrong' #5). Signatures are
-    attached AFTER pair dedup by two id-equi-joins against ``sigs``
-    (callers persist sigs, so the join sides read the cache).
+    weight per doc; VERDICT r01 'What's wrong' #5). Callers join the
+    payload they verify on (signatures, n-grams) to the pairs
+    themselves.
     """
     banded = sigs.select(
         F.col(id_col),
@@ -212,11 +211,7 @@ def lsh_candidate_pairs(
     )
     if dedup:
         pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    if not attach_sigs:
-        return pairs
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    return pairs.join(sa, "id_a").join(sb, "id_b")
+    return pairs
 
 
 def minhash_similarity_col() -> F.Column:
@@ -406,9 +401,7 @@ def minhash_dedup_pairs(
         n_hashes = n_hashes or 64
         rows_per_band = n_hashes // bands
     sigs = pin(minhash_signatures(df, id_col, text_col, n_hashes=n_hashes))
-    cand = lsh_candidate_pairs(
-        sigs, id_col, bands, rows_per_band, attach_sigs=False, dedup=False
-    )
+    cand = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band, dedup=False)
     return _verify_pairs_grid(sigs, cand, id_col, threshold)
 
 
@@ -570,9 +563,7 @@ def ngram_jaccard_pairs(
     else:
         n_hashes, rows_per_band = 64, 64 // bands
     sigs = pin(minhash_signatures(df, id_col, text_col, n_hashes=n_hashes))
-    cand = lsh_candidate_pairs(
-        sigs, id_col, bands, rows_per_band, attach_sigs=False
-    )
+    cand = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     grams = df.select(F.col(id_col), ngrams_col(text_col, n).alias("grams"))
     ga = grams.select(F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"))
     gb = grams.select(F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"))

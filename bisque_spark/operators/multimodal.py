@@ -148,103 +148,6 @@ def _row_orientation(data) -> int:
     return o if isinstance(o, int) and 1 <= o <= 8 else 1
 
 
-def make_image_features_batches(orient: bool = False):
-    """Per-image channel means (the feature-extraction stand-in).
-
-    orient=True applies the EXIF tag-274 transform after decode so the
-    reported dims (and any pixel-order-dependent downstream) are
-    viewer-space — a tag-6 phone photo then features identically to
-    its upright re-encode. Channel means are orientation-invariant by
-    construction; w/h swap for orientations 5-8."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "image_id": [], "w": [], "h": [], "fmt": [],
-                "mean_r": [], "mean_g": [], "mean_b": [], "error": [],
-            }
-            for image_id, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                err = None
-                means = (None, None, None)
-                ow, oh = int(w), int(h)
-                try:
-                    arr = _decode(data, fmt, int(w), int(h))
-                    if orient:
-                        arr = oriented_pixels(arr, _row_orientation(data))
-                        oh, ow = arr.shape[0], arr.shape[1]
-                    means = tuple(
-                        float(arr[..., c].mean()) for c in range(3)
-                    )
-                except NotImplementedError:
-                    err = f"codec_unavailable:{fmt}"
-                except Exception as exc:  # noqa: BLE001
-                    err = f"decode_error:{type(exc).__name__}"
-                out["image_id"].append(image_id)
-                out["w"].append(ow)
-                out["h"].append(oh)
-                out["fmt"].append(fmt)
-                out["mean_r"].append(means[0])
-                out["mean_g"].append(means[1])
-                out["mean_b"].append(means[2])
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return run
-
-
-# module-level name kept: tests and the bench call it directly
-image_features_batches = make_image_features_batches(orient=False)
-
-
-def image_features(images: DataFrame, orient: bool = False) -> DataFrame:
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        make_image_features_batches(orient), schema=FEATURES_SCHEMA
-    )
-
-
-EXIF_SCHEMA = (
-    "image_id string, orientation int, make string, model string, "
-    "datetime_original string, has_exif boolean"
-)
-
-
-def image_exif_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Per-image EXIF provenance (functions/exif.py): orientation tag,
-    camera make/model, capture time. Marker-stream walk only — the
-    entropy payload is never decoded, so this costs parse-of-headers
-    per row, not a pixel pass. Non-JPEG / EXIF-less rows get NULLs
-    with has_exif = false (per-row honesty contract)."""
-    from bisque_spark.functions.exif import extract_exif
-
-    for pdf in batches:
-        out = {
-            "image_id": [], "orientation": [], "make": [], "model": [],
-            "datetime_original": [], "has_exif": [],
-        }
-        for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
-            try:
-                d = extract_exif(bytes(data)) if data is not None else {}
-            except Exception:  # noqa: BLE001 — hostile bytes never kill a task
-                d = {}
-            out["image_id"].append(image_id)
-            out["orientation"].append(d.get("orientation"))
-            out["make"].append(d.get("make"))
-            out["model"].append(d.get("model"))
-            out["datetime_original"].append(d.get("datetime_original"))
-            out["has_exif"].append(bool(d))
-        yield pd.DataFrame(out)
-
-
-def image_exif(images: DataFrame) -> DataFrame:
-    return images.select("image_id", "bytes").mapInPandas(
-        image_exif_batches, schema=EXIF_SCHEMA
-    )
-
-
 def oriented_pixels(arr: np.ndarray, orientation: int | None) -> np.ndarray:
     """Viewer-space pixels: apply the EXIF orientation before any
     pixel-space feature (phash/thumbnail/embedding) — without this,
@@ -257,40 +160,161 @@ def oriented_pixels(arr: np.ndarray, orientation: int | None) -> np.ndarray:
     return apply_orientation(arr, orientation or 1)
 
 
-def make_thumbnail_batches(target: int = 8):
-    def thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _per_row(
+    df: DataFrame,
+    cols: tuple[str, ...],
+    schema: str,
+    compute,
+    echo: tuple[str, ...],
+    label: str | None = "fmt",
+) -> DataFrame:
+    """The row loop every multimodal stage runs in: ``mapInPandas`` over
+    ``cols``, one output frame per Arrow batch.
+
+    Per row, the ``echo`` input columns pass through, then
+    ``compute(row)`` (row = {col: value}) yields dicts of computed
+    columns, each kept as soon as it is yielded. A failure keeps what
+    was already yielded and fills the ``error`` column (row-level
+    containment — hostile bytes never kill the task):
+    NotImplementedError → ``codec_unavailable:<row[label]>`` (the
+    exception text when ``label`` is None), anything else →
+    ``decode_error:<TypeName>``. Output columns nobody set are NULL.
+    """
+    out_cols = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "thumb": [], "error": []}
-            for image_id, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                err, blob, tw, th = None, None, None, None
+            out: dict[str, list] = {c: [] for c in out_cols}
+            for vals in zip(*(pdf[c] for c in cols)):
+                row = dict(zip(cols, vals))
+                got = {c: row[c] for c in echo}
                 try:
-                    arr = _decode(data, fmt, int(w), int(h))
-                    # nearest-neighbor subsample (deterministic resize)
-                    ys = np.linspace(0, int(h) - 1, min(target, int(h))).astype(int)
-                    xs = np.linspace(0, int(w) - 1, min(target, int(w))).astype(int)
-                    t = arr[np.ix_(ys, xs)]
-                    th, tw = t.shape[0], t.shape[1]
-                    blob = t.tobytes()
-                except NotImplementedError:
-                    err = f"codec_unavailable:{fmt}"
+                    for part in compute(row):
+                        got.update(part)
+                except NotImplementedError as exc:
+                    got["error"] = (
+                        f"codec_unavailable:{row[label] if label else exc}"
+                    )
                 except Exception as exc:  # noqa: BLE001
-                    err = f"decode_error:{type(exc).__name__}"
-                out["image_id"].append(image_id)
-                out["w"].append(tw)
-                out["h"].append(th)
-                out["thumb"].append(blob)
-                out["error"].append(err)
+                    got["error"] = f"decode_error:{type(exc).__name__}"
+                for c in out_cols:
+                    out[c].append(got.get(c))
             yield pd.DataFrame(out)
 
-    return thumbs
+    return df.select(*cols).mapInPandas(run, schema=schema)
+
+
+# ---- the decode-once image stage ------------------------------------------
+#
+# Every image operator is one decode per row (+ the EXIF orientation
+# when asked) followed by a list of per-array parts, each a function
+# (pixels, w, h) → computed columns. w/h are the row's declared dims,
+# or the oriented pixel dims under orient=True; the thumbnail and
+# vector grids index from them.
+
+_IMAGE_COLS = ("image_id", "bytes", "w", "h", "fmt")
+
+
+def _image_stage(
+    images: DataFrame,
+    schema: str,
+    parts: list,
+    echo: tuple[str, ...] = ("image_id",),
+    orient: bool = False,
+) -> DataFrame:
+    def compute(row):
+        w, h = int(row["w"]), int(row["h"])
+        arr = _decode(row["bytes"], row["fmt"], w, h)
+        if orient:
+            arr = oriented_pixels(arr, _row_orientation(row["bytes"]))
+            h, w = arr.shape[0], arr.shape[1]
+        for part in parts:
+            yield part(arr, w, h)
+
+    return _per_row(images, _IMAGE_COLS, schema, compute, echo)
+
+
+def _grid(n: int, k: int) -> np.ndarray:
+    """k nearest-neighbour sample positions over 0..n-1."""
+    return np.linspace(0, n - 1, k).astype(int)
+
+
+def _dims(arr: np.ndarray, w: int, h: int) -> dict:
+    return {"w": w, "h": h}
+
+
+def _means(arr: np.ndarray, w: int, h: int) -> dict:
+    """Per-channel means (the feature-extraction stand-in)."""
+    return {
+        f"mean_{c}": float(arr[..., i].mean()) for i, c in enumerate("rgb")
+    }
+
+
+def _thumbnail(target: int, own_dims: bool = False):
+    """Nearest-neighbour thumbnail on a min(target, dim) grid (a
+    deterministic resize; small images are not upsampled). own_dims
+    reports the thumbnail's w/h instead of the image's."""
+
+    def part(arr: np.ndarray, w: int, h: int) -> dict:
+        t = arr[np.ix_(_grid(h, min(target, h)), _grid(w, min(target, w)))]
+        got = {"thumb": t.tobytes()}
+        if own_dims:
+            got["h"], got["w"] = t.shape[0], t.shape[1]
+        return got
+
+    return part
+
+
+def image_features(images: DataFrame, orient: bool = False) -> DataFrame:
+    """Per-image channel means (the feature-extraction stand-in).
+
+    orient=True applies the EXIF tag-274 transform after decode so the
+    reported dims (and any pixel-order-dependent downstream) are
+    viewer-space — a tag-6 phone photo then features identically to
+    its upright re-encode. Channel means are orientation-invariant by
+    construction; w/h swap for orientations 5-8."""
+    return _image_stage(
+        images, FEATURES_SCHEMA, [_dims, _means],
+        echo=("image_id", "w", "h", "fmt"), orient=orient,
+    )
+
+
+EXIF_SCHEMA = (
+    "image_id string, orientation int, make string, model string, "
+    "datetime_original string, has_exif boolean"
+)
+
+
+def _exif_row(row):
+    from bisque_spark.functions.exif import extract_exif
+
+    yield {"has_exif": False}  # what a row whose parse fails keeps
+    d = extract_exif(bytes(row["bytes"]))
+    yield {
+        "orientation": d.get("orientation"),
+        "make": d.get("make"),
+        "model": d.get("model"),
+        "datetime_original": d.get("datetime_original"),
+        "has_exif": bool(d),
+    }
+
+
+def image_exif(images: DataFrame) -> DataFrame:
+    """Per-image EXIF provenance (functions/exif.py): orientation tag,
+    camera make/model, capture time. Marker-stream walk only — the
+    entropy payload is never decoded, so this costs parse-of-headers
+    per row, not a pixel pass. Non-JPEG / EXIF-less / unparseable rows
+    get NULLs with has_exif = false (per-row honesty contract; no
+    error column)."""
+    return _per_row(
+        images, ("image_id", "bytes"), EXIF_SCHEMA, _exif_row, echo=("image_id",)
+    )
 
 
 def image_thumbnails(images: DataFrame, target: int = 8) -> DataFrame:
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        make_thumbnail_batches(target), schema=THUMB_SCHEMA
-    )
+    """Nearest-neighbour thumbnails; w/h are the thumbnail's dims
+    (NULL on error)."""
+    return _image_stage(images, THUMB_SCHEMA, [_thumbnail(target, own_dims=True)])
 
 
 PIPELINE_SCHEMA = (
@@ -312,49 +336,9 @@ def image_pipeline(
     photo then thumbs byte-identically to its upright re-encode
     instead of hashing as a different image. The marker-walk EXIF
     extraction is header-only — no second pixel pass."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "image_id": [], "w": [], "h": [], "fmt": [], "mean_r": [],
-                "mean_g": [], "mean_b": [], "thumb": [], "error": [],
-            }
-            for image_id, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                err, blob = None, None
-                means = (None, None, None)
-                ow, oh = int(w), int(h)
-                try:
-                    arr = _decode(data, fmt, int(w), int(h))
-                    if orient:
-                        arr = oriented_pixels(arr, _row_orientation(data))
-                        oh, ow = arr.shape[0], arr.shape[1]
-                    means = tuple(float(arr[..., c].mean()) for c in range(3))
-                    ys = np.linspace(
-                        0, oh - 1, min(thumb_target, oh)
-                    ).astype(int)
-                    xs = np.linspace(
-                        0, ow - 1, min(thumb_target, ow)
-                    ).astype(int)
-                    blob = arr[np.ix_(ys, xs)].tobytes()
-                except NotImplementedError:
-                    err = f"codec_unavailable:{fmt}"
-                except Exception as exc:  # noqa: BLE001
-                    err = f"decode_error:{type(exc).__name__}"
-                out["image_id"].append(image_id)
-                out["w"].append(ow)
-                out["h"].append(oh)
-                out["fmt"].append(fmt)
-                out["mean_r"].append(means[0])
-                out["mean_g"].append(means[1])
-                out["mean_b"].append(means[2])
-                out["thumb"].append(blob)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, schema=PIPELINE_SCHEMA
+    return _image_stage(
+        images, PIPELINE_SCHEMA, [_dims, _means, _thumbnail(thumb_target)],
+        echo=("image_id", "w", "h", "fmt"), orient=orient,
     )
 
 
@@ -407,47 +391,36 @@ def colorfulness_of(arr: np.ndarray) -> float:
     )
 
 
-def image_quality_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Decode ONCE per image, emit the three no-reference quality
-    signals; undecodable rows route to the error column (row-level
-    containment, same contract as every multimodal stage)."""
-    for pdf in batches:
-        out: dict[str, list] = {
-            "image_id": [], "sharpness": [], "entropy": [],
-            "colorfulness": [], "error": [],
-        }
-        for image_id, data, w, h, fmt in zip(
-            pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-        ):
-            err = None
-            vals = (None, None, None)
-            try:
-                arr = _decode(data, fmt, int(w), int(h))
-                vals = (
-                    sharpness_of(arr), entropy_of(arr), colorfulness_of(arr)
-                )
-            except NotImplementedError:
-                err = f"codec_unavailable:{fmt}"
-            except Exception as exc:  # noqa: BLE001
-                err = f"decode_error:{type(exc).__name__}"
-            out["image_id"].append(image_id)
-            out["sharpness"].append(vals[0])
-            out["entropy"].append(vals[1])
-            out["colorfulness"].append(vals[2])
-            out["error"].append(err)
-        yield pd.DataFrame(out)
+def _quality(arr: np.ndarray, w: int, h: int) -> dict:
+    return {
+        "sharpness": sharpness_of(arr),
+        "entropy": entropy_of(arr),
+        "colorfulness": colorfulness_of(arr),
+    }
+
+
+def _luma_vec(target: int):
+    """FIXED-length grid (unlike the thumbnail's): tiny images upsample
+    by nearest neighbour so every vector is target² dims, as the IVF
+    centroid math requires. Luma scaled to [0,1]: a cheap, fully
+    in-sandbox stand-in for a learned embedding with the right
+    invariance (near-identical pixels → near-identical vectors) for
+    diversity sampling."""
+
+    def part(arr: np.ndarray, w: int, h: int) -> dict:
+        t = arr[np.ix_(_grid(h, target), _grid(w, target))]
+        return {"thumb_vec": (_gray(t).ravel() / 255.0).astype(np.float32)}
+
+    return part
 
 
 def image_quality(images: DataFrame) -> DataFrame:
     """No-reference quality signals for the curation funnel
     (plans/curate_images.py): blur cut by Laplacian variance, flat
     synthetic fills by histogram entropy, grayscale spam by
-    colorfulness."""
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        image_quality_batches, schema=QUALITY_SCHEMA
-    )
+    colorfulness. Decode once per image; undecodable rows route to the
+    error column."""
+    return _image_stage(images, QUALITY_SCHEMA, [_quality])
 
 
 SIGNALS_SCHEMA = (
@@ -456,65 +429,14 @@ SIGNALS_SCHEMA = (
 )
 
 
-def make_image_signals_batches(thumb_target: int = 8):
-    """Factory (lazy, picklable) for the fused curation-signals stage:
-    ONE decode per image feeding BOTH the quality formulas and the
-    thumbnail luma vector that the diversity sampler embeds on. At
-    100 TB the decode dominates — running image_quality and a
-    thumbnail pass separately pays it twice (same fusion rationale as
-    image_pipeline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "image_id": [], "sharpness": [], "entropy": [],
-                "colorfulness": [], "thumb_vec": [], "error": [],
-            }
-            for image_id, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                err, vec = None, None
-                vals = (None, None, None)
-                try:
-                    arr = _decode(data, fmt, int(w), int(h))
-                    vals = (
-                        sharpness_of(arr),
-                        entropy_of(arr),
-                        colorfulness_of(arr),
-                    )
-                    # FIXED-length grid (unlike image_pipeline's
-                    # thumbnails): tiny images upsample by nearest
-                    # neighbour so every vector is thumb_target² dims,
-                    # as the IVF centroid math requires
-                    ys = np.linspace(0, int(h) - 1, thumb_target).astype(int)
-                    xs = np.linspace(0, int(w) - 1, thumb_target).astype(int)
-                    # luma thumbnail, scaled to [0,1]: a cheap, fully
-                    # in-sandbox stand-in for a learned embedding with
-                    # the right invariance (near-identical pixels →
-                    # near-identical vectors) for diversity sampling
-                    vec = (
-                        _gray(arr[np.ix_(ys, xs)]).ravel() / 255.0
-                    ).astype(np.float32)
-                except NotImplementedError:
-                    err = f"codec_unavailable:{fmt}"
-                except Exception as exc:  # noqa: BLE001
-                    err = f"decode_error:{type(exc).__name__}"
-                out["image_id"].append(image_id)
-                out["sharpness"].append(vals[0])
-                out["entropy"].append(vals[1])
-                out["colorfulness"].append(vals[2])
-                out["thumb_vec"].append(vec)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return run
-
-
 def image_signals(images: DataFrame, thumb_target: int = 8) -> DataFrame:
-    """Fused quality + thumbnail-embedding stage for
-    plans/curate_images.run_image_curation (decode-once)."""
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        make_image_signals_batches(thumb_target), schema=SIGNALS_SCHEMA
+    """Fused curation-signals stage for
+    plans/curate_images.run_image_curation: ONE decode per image feeds
+    BOTH the quality formulas and the thumbnail luma vector that the
+    diversity sampler embeds on (running image_quality and a thumbnail
+    pass separately pays the decode twice)."""
+    return _image_stage(
+        images, SIGNALS_SCHEMA, [_quality, _luma_vec(thumb_target)]
     )
 
 
@@ -610,90 +532,57 @@ def encode_wav(wave: np.ndarray, rate: int) -> bytes:
     return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
 
 
-def audio_features_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "media_id": [], "fmt": [], "sample_rate": [],
-            "duration_s": [], "rms": [], "peak": [], "error": [],
-        }
-        for media_id, data, fmt, sr in zip(
-            pdf["media_id"], pdf["bytes"], pdf["fmt"], pdf["sample_rate"]
-        ):
-            err = None
-            dur = rms = peak = None
-            try:
-                if fmt == "pcm_s16le":
-                    wave = np.frombuffer(bytes(data), dtype=np.int16)
-                elif fmt == "wav":
-                    wave, sr = decode_wav(bytes(data))
-                else:
-                    raise NotImplementedError(fmt)
-                dur = float(len(wave) / int(sr))
-                f = wave.astype(np.float64)
-                rms = float(np.sqrt((f * f).mean())) if len(f) else 0.0
-                peak = float(np.abs(f).max()) if len(f) else 0.0
-            except NotImplementedError:
-                err = f"codec_unavailable:{fmt}"
-            except Exception as exc:  # noqa: BLE001
-                err = f"decode_error:{type(exc).__name__}"
-            out["media_id"].append(media_id)
-            out["fmt"].append(fmt)
-            # sr can be null/NaN when the decode above failed before
-            # normalizing it — emit the row with error set, don't let
-            # int(NaN) kill the whole Arrow batch
-            out["sample_rate"].append(
-                int(sr) if sr is not None and not pd.isna(sr) else None
-            )
-            out["duration_s"].append(dur)
-            out["rms"].append(rms)
-            out["peak"].append(peak)
-            out["error"].append(err)
-        yield pd.DataFrame(out)
+def _audio_row(row):
+    fmt, sr = row["fmt"], row["sample_rate"]
+    # the metadata rate passes through on error (NULL/NaN → None)
+    yield {"sample_rate": None if pd.isna(sr) else int(sr)}
+    if fmt == "pcm_s16le":
+        wave = np.frombuffer(bytes(row["bytes"]), dtype=np.int16)
+    elif fmt == "wav":
+        # the container's authoritative rate overrides the metadata
+        wave, sr = decode_wav(bytes(row["bytes"]))
+        yield {"sample_rate": sr}
+    else:
+        raise NotImplementedError(fmt)
+    sr = int(sr)
+    f = wave.astype(np.float64)
+    yield {
+        "sample_rate": sr,
+        "duration_s": float(len(wave) / sr),
+        "rms": float(np.sqrt((f * f).mean())) if len(f) else 0.0,
+        "peak": float(np.abs(f).max()) if len(f) else 0.0,
+    }
 
 
 def audio_features(media: DataFrame) -> DataFrame:
-    return media.select("media_id", "bytes", "fmt", "sample_rate").mapInPandas(
-        audio_features_batches, schema=AUDIO_FEATURES_SCHEMA
+    return _per_row(
+        media, ("media_id", "bytes", "fmt", "sample_rate"),
+        AUDIO_FEATURES_SCHEMA, _audio_row, echo=("media_id", "fmt"),
     )
 
 
 PDF_TEXT_SCHEMA = "doc_id string, text string, n_pages int, error string"
 
 
-def pdf_text_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Opaque PDF bytes → extracted text + page count (functions/
-    pdf.py). Per-row honesty: unsupported features (encryption,
-    LZW/DCT content streams, ToUnicode-less Type0 fonts) land in the
-    error column as codec_unavailable; damage as decode_error —
-    hostile bytes never kill the task."""
+def _pdf_row(row):
     from bisque_spark.functions.pdf import pdf_text
 
-    for pdf_batch in batches:
-        out = {"doc_id": [], "text": [], "n_pages": [], "error": []}
-        for doc_id, data in zip(pdf_batch["doc_id"], pdf_batch["bytes"]):
-            text = n_pages = None
-            err = None
-            try:
-                got = pdf_text(bytes(data))
-                text, n_pages = got["text"], got["n_pages"]
-            except NotImplementedError as exc:
-                err = f"codec_unavailable:{exc}"
-            except Exception as exc:  # noqa: BLE001
-                err = f"decode_error:{type(exc).__name__}"
-            out["doc_id"].append(doc_id)
-            out["text"].append(text)
-            out["n_pages"].append(n_pages)
-            out["error"].append(err)
-        yield pd.DataFrame(out)
+    got = pdf_text(bytes(row["bytes"]))
+    yield {"text": got["text"], "n_pages": got["n_pages"]}
 
 
 def pdf_text_extract(docs: DataFrame) -> DataFrame:
-    """PDF text extraction over (doc_id, bytes) rows — the documents-
-    pipeline entry point for the crawl's non-HTML text class. The
-    output text column feeds the existing curation gates (langid,
-    quality, token stats, dedup) unchanged."""
-    return docs.select("doc_id", "bytes").mapInPandas(
-        pdf_text_batches, schema=PDF_TEXT_SCHEMA
+    """PDF text extraction over (doc_id, bytes) rows (functions/pdf.py)
+    — the documents-pipeline entry point for the crawl's non-HTML text
+    class. The output text column feeds the existing curation gates
+    (langid, quality, token stats, dedup) unchanged. Per-row honesty:
+    unsupported features (encryption, LZW/DCT content streams,
+    ToUnicode-less Type0 fonts) land in the error column as
+    codec_unavailable:<what>; damage as decode_error — hostile bytes
+    never kill the task."""
+    return _per_row(
+        docs, ("doc_id", "bytes"), PDF_TEXT_SCHEMA, _pdf_row,
+        echo=("doc_id",), label=None,
     )
 
 
@@ -778,100 +667,64 @@ VIDEO_FRAMES_SCHEMA = (
 )
 
 
-def video_frame_sample_batches(
-    every_n: int,
-) -> "callable":
-    """Batch fn factory (lazy, session-safe — CLAUDE.md pandas_udf
-    rule). Decodes ONLY the sampled frame indices (the codec work
-    scales with the sample, not the clip) and emits each sampled frame
-    re-encoded as codec-free PPM so downstream image operators
-    (image_features, phash) consume them directly. ``motion`` = mean
-    absolute luma delta between consecutive sampled frames — the
-    cheap curation signal for static-clip filtering."""
+def _mp4_frame(meta: dict, i: int) -> np.ndarray:
+    from bisque_spark.functions.avi import ensure_dht
+    from bisque_spark.functions.jpeg import decode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bisque_spark.functions.avi import decode_frame, ensure_dht, parse_avi
-        from bisque_spark.functions.jpeg import decode_jpeg
+    if meta["codec"].lower() not in ("jpeg", "mjpa", "mjpb"):
+        raise NotImplementedError(meta["codec"])
+    return decode_jpeg(ensure_dht(bytes(meta["frames"][i])))
+
+
+def _video_row(every_n: int):
+    def compute(row):
+        from bisque_spark.functions.avi import decode_frame, parse_avi
         from bisque_spark.functions.mp4 import parse_mp4
 
-        def mp4_frame(meta: dict, i: int) -> np.ndarray:
-            if meta["codec"].lower() not in ("jpeg", "mjpa", "mjpb"):
-                raise NotImplementedError(meta["codec"])
-            return decode_jpeg(ensure_dht(bytes(meta["frames"][i])))
+        fmt = row["fmt"]
+        if fmt == "avi":
+            meta, frame_of = parse_avi(bytes(row["bytes"])), decode_frame
+        elif fmt == "mp4":
+            meta, frame_of = parse_mp4(bytes(row["bytes"])), _mp4_frame
+        else:
+            raise NotImplementedError(fmt)
+        idx = list(range(0, meta["n_frames"], every_n))
+        decoded = [frame_of(meta, i) for i in idx]
+        yield {k: meta[k] for k in ("codec", "w", "h", "fps", "n_frames")}
+        motion = 0.0
+        if len(decoded) > 1:
+            lumas = [fr.astype(np.float64).mean(axis=-1) for fr in decoded]
+            motion = float(
+                np.mean([np.abs(b - a).mean() for a, b in zip(lumas, lumas[1:])])
+            )
+        yield {
+            "sampled_idx": idx,
+            "frames": [encode_ppm(fr) for fr in decoded],
+            "motion": motion,
+        }
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "fmt": [], "codec": [], "w": [], "h": [],
-                "fps": [], "n_frames": [], "sampled_idx": [], "frames": [],
-                "motion": [], "error": [],
-            }
-            for media_id, data, fmt in zip(
-                pdf["media_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                codec = w = h = fps = n_frames = None
-                idx = frames = motion = err = None
-                try:
-                    if fmt == "avi":
-                        meta = parse_avi(bytes(data))
-                        frame_of = decode_frame
-                    elif fmt == "mp4":
-                        meta = parse_mp4(bytes(data))
-                        frame_of = mp4_frame
-                    else:
-                        raise NotImplementedError(fmt)
-                    idx = list(range(0, meta["n_frames"], every_n))
-                    decoded = [frame_of(meta, i) for i in idx]
-                    codec, w, h = meta["codec"], meta["w"], meta["h"]
-                    fps, n_frames = meta["fps"], meta["n_frames"]
-                    frames = [encode_ppm(fr) for fr in decoded]
-                    if len(decoded) > 1:
-                        lumas = [
-                            fr.astype(np.float64).mean(axis=-1)
-                            for fr in decoded
-                        ]
-                        motion = float(
-                            np.mean(
-                                [
-                                    np.abs(b - a).mean()
-                                    for a, b in zip(lumas, lumas[1:])
-                                ]
-                            )
-                        )
-                    else:
-                        motion = 0.0
-                except NotImplementedError as exc:
-                    err = f"codec_unavailable:{exc}"
-                    idx = frames = None
-                except Exception as exc:  # noqa: BLE001
-                    err = f"decode_error:{type(exc).__name__}"
-                    idx = frames = None
-                out["media_id"].append(media_id)
-                out["fmt"].append(fmt)
-                out["codec"].append(codec)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fps"].append(fps)
-                out["n_frames"].append(n_frames)
-                out["sampled_idx"].append(idx)
-                out["frames"].append(frames)
-                out["motion"].append(motion)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return run
+    return compute
 
 
 def video_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling over opaque ``binary`` clips. Real decode
-    for AVI containers carrying MJPG (per-frame baseline JPEG, incl.
-    DHT-less camera streams — Annex K.3 defaults injected) or
-    uncompressed DIB frames, and (r7) MP4/ISO-BMFF containers carrying
-    'jpeg' Motion-JPEG sample entries (functions/mp4.py); compressed
-    codecs (avc1/hvc1/...) stay honest per-row ``codec_unavailable``
-    errors (the r1-r5 stub contract, now the exception rather than
-    the rule)."""
-    return media.select("media_id", "bytes", "fmt").mapInPandas(
-        video_frame_sample_batches(every_n), schema=VIDEO_FRAMES_SCHEMA
+    """Video frame-sampling over opaque ``binary`` clips. Decodes ONLY
+    the sampled frame indices (the codec work scales with the sample,
+    not the clip) and emits each sampled frame re-encoded as codec-free
+    PPM so downstream image operators (image_features, phash) consume
+    them directly. ``motion`` = mean absolute luma delta between
+    consecutive sampled frames — the cheap curation signal for
+    static-clip filtering.
+
+    Real decode for AVI containers carrying MJPG (per-frame baseline
+    JPEG, incl. DHT-less camera streams — Annex K.3 defaults injected)
+    or uncompressed DIB frames, and (r7) MP4/ISO-BMFF containers
+    carrying 'jpeg' Motion-JPEG sample entries (functions/mp4.py);
+    compressed codecs (avc1/hvc1/...) stay honest per-row
+    ``codec_unavailable:<codec>`` errors with every computed column
+    NULL."""
+    return _per_row(
+        media, ("media_id", "bytes", "fmt"), VIDEO_FRAMES_SCHEMA,
+        _video_row(every_n), echo=("media_id", "fmt"), label=None,
     )
 
 

@@ -90,58 +90,6 @@ def knn_join_bruteforce(
     )
 
 
-def make_multitable_bucket_udf(
-    dim: int, n_tables: int, n_bits: int, seed: int = 42
-):
-    """Pandas UDF factory: embedding → array of ``n_tables`` bucket keys.
-
-    All ``n_tables × n_bits`` hyperplanes are applied in ONE numpy
-    matmul per Arrow batch; key ``t`` encodes its table index in the
-    high bits (``t << n_bits | bucket``) so the candidate join is a
-    single equi-join on one long column — table t's buckets can never
-    collide with table u's.
-    """
-    planes = np.random.RandomState(seed).normal(size=(dim, n_tables * n_bits))
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
-    table_tag = np.arange(n_tables, dtype=np.int64) << n_bits
-
-    @F.pandas_udf("array<long>")
-    def buckets(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype="object")
-        mat = np.stack(embs.to_numpy())  # (n, dim) — one matmul per batch
-        bits = (mat @ planes > 0).reshape(len(mat), n_tables, n_bits)
-        keys = (bits @ weights) | table_tag[None, :]
-        return pd.Series(keys.tolist())
-
-    return buckets
-
-
-def make_hyperplane_udf(dim: int, n_bits: int = 16, seed: int = 42):
-    planes = np.random.RandomState(seed).normal(size=(dim, n_bits))
-    weights = (1 << np.arange(n_bits, dtype=np.int64))
-
-    @F.pandas_udf("long")
-    def bucket(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.stack(embs.to_numpy())  # (n, dim) — one matmul per batch
-        bits = mat @ planes > 0
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return bucket
-
-
-def lsh_bucket(
-    df: DataFrame, vec_col: str, dim: int, n_bits: int = 16, seed: int = 42
-) -> DataFrame:
-    from bisque_spark.util import spread
-
-    return spread(df).withColumn(
-        "bucket", make_hyperplane_udf(dim, n_bits, seed)(F.col(vec_col))
-    )
-
-
 def _make_assign_udf(cmat):
     @F.pandas_udf("int")
     def assign(embs: pd.Series) -> pd.Series:
@@ -398,6 +346,8 @@ def lsh_near_pairs(
         n_tables = n_tables if n_tables is not None else auto_tables
     planes = np.random.RandomState(seed).normal(size=(dim, n_tables * n_bits))
     weights = 1 << np.arange(n_bits, dtype=np.int64)
+    # key = t << n_bits | bucket: table t's buckets never collide with
+    # table u's, so one group-by over one long column covers all tables
     table_tag = np.arange(n_tables, dtype=np.int64) << n_bits
     id_type = src.schema[id_col].dataType.simpleString()
     thresh = float(min_cosine)
@@ -405,9 +355,9 @@ def lsh_near_pairs(
 
     def keyed_units(batches):
         # (id, vec) → one row per (tkey, id, unit vector): the bucket
-        # keys use the SAME dtype path as make_multitable_bucket_udf
-        # (raw stack, no astype — float32 inputs promote inside the
-        # matmul), so keys are bit-identical to every prior round.
+        # keys come from the raw stack (no astype — float32 inputs
+        # promote inside the matmul), so keys are bit-identical to
+        # every prior round.
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -320,21 +320,16 @@ def run_crawl(
 
     epoch = start_epoch
     while epoch < max_epochs and frontier is not None:
-        # every frontier (seed included) is parquet-backed: emptiness
-        # (and size) from parquet footers — a driver-local metadata
-        # read, no Spark job. Fall back to isEmpty for a caller-supplied
-        # live plan.
-        frontier_rows = None
-        if frontier_on_disk is not None:
-            frontier_rows = _parquet_num_rows(frontier_on_disk)
-            if frontier_rows == 0:
-                break
-        elif frontier.isEmpty():
+        # every frontier (seed, resume read, committed junction) is
+        # parquet-backed: emptiness (and size) from parquet footers — a
+        # driver-local metadata read, no Spark job
+        frontier_rows = _parquet_num_rows(frontier_on_disk)
+        if frontier_rows == 0:
             break
         # the salted two-phase rank is skew armor for huge frontiers;
         # below ~200k rows the single exact window is result-identical
         # and one shuffle cheaper (footer count makes this free)
-        two_phase = frontier_rows is None or frontier_rows > 200_000
+        two_phase = frontier_rows > 200_000
         scheduled, deferred = politeness_select(
             frontier, world.host_budget_base, two_phase=two_phase
         )

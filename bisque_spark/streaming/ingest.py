@@ -198,88 +198,6 @@ def dedup_urls_stream(
     )
 
 
-def dedup_urls_stream_v2(
-    urls: DataFrame, n_buckets: int = 16, max_runs: int = 8
-) -> DataFrame:
-    """URL-seen dedup on Spark 4's transformWithStateInPandas.
-
-    The v1 operator (dedup_urls_stream) holds one delta-encoded blob
-    per bucket in applyInPandasWithState — a VALUE-replacement API, so
-    the state store still rewrites the whole blob per touched bucket.
-    Here each sorted run is its own ListState ROW and a micro-batch
-    does ``appendList`` of only its new run: with the RocksDB state
-    store provider (required by transformWithState) the append is an
-    O(new) state write — the true LSM shape. Reads stay O(seen) per
-    touched bucket (searchsorted per run); when the run count exceeds
-    ``max_runs`` the list is rewritten as one merged run (amortized).
-
-    Requires
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` on the session, and the
-    transformWithState Python driver worker needs ``google.protobuf``
-    (its state-server protocol) — absent in this sandbox, so the e2e
-    test skips with that reason and the processor's logic is pinned by
-    a stub-state unit test instead (the same pattern as the Iceberg
-    catalog's parquet fallback: real code, environmental gap).
-    Output and semantics are identical to dedup_urls_stream: each
-    canonical URL emitted exactly once across the stream's lifetime.
-    """
-    keyed = urls.select(
-        "url",
-        F.xxhash64("url").alias("url_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    ).groupBy("bucket")
-    return keyed.transformWithStateInPandas(
-        make_dedup_processor(max_runs)(),
-        outputStructType="url string, url_hash long",
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def make_dedup_processor(max_runs: int = 8):
-    """StatefulProcessor class for dedup_urls_stream_v2 (factory so the
-    merge/append logic is unit-testable against a stub ListState)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Dedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._runs = handle.getListState("runs", "run binary")
-
-        def handleInputRows(self, key, rows, timer_values):
-            runs = [
-                np.frombuffer(t[0], dtype=np.int64) for t in self._runs.get()
-            ] if self._runs.exists() else []
-            n_old = len(runs)
-            out_urls, out_hashes = [], []
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                urls_k, hashes_k, new_run = _filter_new_rows(pdf, runs)
-                out_urls.extend(urls_k)
-                out_hashes.extend(hashes_k)
-                if new_run is not None:
-                    runs.append(new_run)
-            if len(runs) > max_runs:
-                merged = np.unique(np.concatenate(runs))
-                self._runs.put([(merged.tobytes(),)])  # amortized rewrite
-            elif len(runs) > n_old:
-                self._runs.appendList(  # O(new): only this batch's runs
-                    [(r.tobytes(),) for r in runs[n_old:]]
-                )
-            yield pd.DataFrame({"url": out_urls, "url_hash": out_hashes})
-
-        def close(self) -> None:
-            pass
-
-    return Dedup
-
-
 def host_throughput_stream(pages: DataFrame, window: str = "1 minute") -> DataFrame:
     """Watermarked windowed aggregation: fetched pages per host per
     window (late rows beyond 2 minutes dropped)."""

@@ -4,10 +4,6 @@ oracle-backed key BEFORE the rows-only ones (the driver grades the
 first 50 keys), oracle keys ⊆ query keys, and entry() returns a
 stable-schema DataFrame."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 
@@ -27,6 +23,22 @@ def test_queries_oracle_contract():
     ]
     assert n_oracle >= 39  # round-4 floor: never regress the hash gate
     assert all(callable(f) for f in entrymod.queries().values())
+
+
+def test_every_query_body_is_registered():
+    """No dead query bodies: every module-level ``_q_*`` function is a
+    value of queries() (a body dropped from the dict is deleted, not
+    left behind)."""
+    import inspect
+
+    registered = set(entrymod.queries().values())
+    bodies = {
+        name: fn
+        for name, fn in vars(entrymod).items()
+        if name.startswith("_q_") and inspect.isfunction(fn)
+    }
+    assert bodies, "no _q_* query bodies found"
+    assert [n for n, fn in bodies.items() if fn not in registered] == []
 
 
 def test_entry_runs_with_stable_schema(spark):

@@ -443,3 +443,149 @@ def test_orient_tag6_row_equals_upright_reencode(spark):
     )
     [r] = image_pipeline(bad, orient=True).collect()
     assert r["error"] is not None
+
+
+# ---- row-level containment, all nine stages ------------------------------
+#
+# Each stage gets an unknown-format row and a garbage-bytes row of a
+# supported format; every error row must come back whole: the exact
+# error label, the pass-through columns echoed, computed columns NULL.
+
+_IMG_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
+_IMG_ROWS = [
+    ("unk", bytearray(b"\x00\x01"), 3, 2, "avif"),
+    ("bad", bytearray(b"\x89PNG garbage"), 3, 2, "png"),
+]
+_IMG_ERR = {"unk": "codec_unavailable:avif", "bad": "decode_error:ValueError"}
+_IMG_FMT = {"unk": "avif", "bad": "png"}
+
+
+def _encrypted_pdf() -> bytes:
+    from bisque_spark.functions.pdf import encode_pdf
+
+    data = encode_pdf(["locked"], compress=False)
+    return data.replace(b"/Root 1 0 R >>", b"/Root 1 0 R /Encrypt 1 0 R >>")
+
+
+def _image_case(op, computed, echo=True):
+    """echo: the stage passes the row's w/h/fmt through on error."""
+
+    def expect(iid):
+        row = {"image_id": iid, "error": _IMG_ERR[iid], **dict.fromkeys(computed)}
+        if echo:
+            row.update(w=3, h=2, fmt=_IMG_FMT[iid])
+        return row
+
+    return (op, _IMG_SCHEMA, _IMG_ROWS, "image_id", {i: expect(i) for i in _IMG_ERR})
+
+
+def _containment_cases():
+    from bisque_spark.operators import multimodal as mm
+
+    means = ["mean_r", "mean_g", "mean_b"]
+    quality = ["sharpness", "entropy", "colorfulness"]
+    return {
+        "image_features": _image_case(mm.image_features, means),
+        "image_features_orient": _image_case(
+            lambda df: mm.image_features(df, orient=True), means
+        ),
+        "image_thumbnails": _image_case(
+            mm.image_thumbnails, ["w", "h", "thumb"], echo=False
+        ),
+        "image_pipeline": _image_case(
+            lambda df: mm.image_pipeline(df, orient=True), means + ["thumb"]
+        ),
+        "image_quality": _image_case(mm.image_quality, quality, echo=False),
+        "image_signals": _image_case(
+            mm.image_signals, quality + ["thumb_vec"], echo=False
+        ),
+        "image_exif": (
+            mm.image_exif, _IMG_SCHEMA, _IMG_ROWS, "image_id",
+            {
+                iid: {
+                    "image_id": iid, "orientation": None, "make": None,
+                    "model": None, "datetime_original": None,
+                    "has_exif": False,
+                }
+                for iid in _IMG_ERR
+            },
+        ),
+        "audio_features": (
+            mm.audio_features,
+            "media_id string, bytes binary, fmt string, sample_rate int",
+            [
+                ("unk", bytearray(b"\x00\x01"), "mp3", 44100),
+                ("bad", bytearray(b"RIFF junk"), "wav", 8000),
+                ("nul", bytearray(b"RIFF junk"), "wav", None),
+            ],
+            "media_id",
+            {
+                mid: {
+                    "media_id": mid, "fmt": fmt, "sample_rate": sr,
+                    "duration_s": None, "rms": None, "peak": None,
+                    "error": err,
+                }
+                for mid, fmt, sr, err in (
+                    ("unk", "mp3", 44100, "codec_unavailable:mp3"),
+                    ("bad", "wav", 8000, "decode_error:ValueError"),
+                    ("nul", "wav", None, "decode_error:ValueError"),
+                )
+            },
+        ),
+        "pdf_text_extract": (
+            mm.pdf_text_extract,
+            "doc_id string, bytes binary",
+            [
+                ("enc", bytearray(_encrypted_pdf())),
+                ("bad", bytearray(b"%PDF-1.4 garbage")),
+            ],
+            "doc_id",
+            {
+                did: {"doc_id": did, "text": None, "n_pages": None, "error": err}
+                for did, err in (
+                    ("enc", "codec_unavailable:encrypted PDF"),
+                    ("bad", "decode_error:ValueError"),
+                )
+            },
+        ),
+        "video_frame_sample": (
+            mm.video_frame_sample,
+            "media_id string, bytes binary, fmt string",
+            [
+                ("unk", bytearray(b"\x00"), "h264"),
+                ("bad", bytearray(b"RIFF junk"), "avi"),
+                ("badm", bytearray(b"\x00\x00\x00\x08ftyp"), "mp4"),
+            ],
+            "media_id",
+            {
+                mid: {
+                    "media_id": mid, "fmt": fmt, "codec": None, "w": None,
+                    "h": None, "fps": None, "n_frames": None,
+                    "sampled_idx": None, "frames": None, "motion": None,
+                    "error": err,
+                }
+                for mid, fmt, err in (
+                    ("unk", "h264", "codec_unavailable:h264"),
+                    ("bad", "avi", "decode_error:ValueError"),
+                    ("badm", "mp4", "decode_error:ValueError"),
+                )
+            },
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        "image_features", "image_features_orient", "image_thumbnails",
+        "image_pipeline", "image_quality", "image_signals", "image_exif",
+        "audio_features", "pdf_text_extract", "video_frame_sample",
+    ],
+)
+def test_stage_contains_bad_rows(spark, stage):
+    """Unknown-format and garbage-bytes rows never fail the task: each
+    stage emits them with its exact error label (fmt for image/audio,
+    the exception text for pdf/video) and pass-through columns."""
+    op, schema, rows, key, expected = _containment_cases()[stage]
+    got = {r[key]: r.asDict() for r in op(spark.createDataFrame(rows, schema)).collect()}
+    assert got == expected

@@ -147,130 +147,6 @@ def test_stateful_url_dedup(spark, tmp_path):
     assert len(urls) == 4
 
 
-def test_dedup_v2_processor_appends_only_new_runs():
-    """dedup_urls_stream_v2's StatefulProcessor against a stub
-    ListState: exactly-once emission, O(new) appendList per batch,
-    merge-to-one-run via put once max_runs is exceeded. (The e2e
-    streaming form needs google.protobuf for the transformWithState
-    driver worker — absent in the sandbox; see the skipped test.)"""
-    import numpy as np
-    import pandas as pd
-
-    from bisque_spark.streaming.ingest import make_dedup_processor
-
-    class StubListState:
-        def __init__(self):
-            self.rows = []
-            self.append_calls = []
-            self.put_calls = 0
-
-        def exists(self):
-            return bool(self.rows)
-
-        def get(self):
-            return iter(self.rows)
-
-        def appendList(self, new_rows):
-            self.append_calls.append(len(new_rows))
-            self.rows.extend(new_rows)
-
-        def put(self, new_rows):
-            self.put_calls += 1
-            self.rows = list(new_rows)
-
-    class StubHandle:
-        def __init__(self, state):
-            self._state = state
-
-        def getListState(self, name, schema):
-            return self._state
-
-    state = StubListState()
-    proc = make_dedup_processor(max_runs=2)()
-    proc.init(StubHandle(state))
-
-    def batch(hashes):
-        pdf = pd.DataFrame({"url": [f"u{h}" for h in hashes], "url_hash": hashes})
-        out = list(proc.handleInputRows((0,), iter([pdf]), None))[0]
-        return list(out["url_hash"])
-
-    assert batch([5, 3, 5, 9]) == [5, 3, 9]
-    assert state.append_calls == [1]  # one new run appended, nothing else
-    assert batch([9, 11]) == [11]
-    assert state.append_calls == [1, 1]
-    assert batch([3, 11]) == []  # all seen: NO state write at all
-    assert state.append_calls == [1, 1] and state.put_calls == 0
-    assert batch([42]) == [42]  # 3rd run > max_runs=2 → merged rewrite
-    assert state.put_calls == 1 and len(state.rows) == 1
-    merged = np.frombuffer(state.rows[0][0], dtype=np.int64)
-    assert sorted(merged) == [3, 5, 9, 11, 42]
-    assert batch([42, 3, 50]) == [50]  # merged state still dedups
-
-
-def test_stateful_url_dedup_v2_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas + ListState variant (RocksDB state
-    store): same exactly-once-URL semantics as v1, with O(new)
-    list-append state writes. Needs google.protobuf for the
-    transformWithState driver worker — absent in this sandbox."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState driver worker needs protobuf "
-        "(environmental, like the Iceberg runtime jar)",
-    )
-    from bisque_spark.streaming.ingest import dedup_urls_stream_v2
-
-    src = str(tmp_path / "urls")
-    sink = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-
-        def write_batch(urls):
-            spark.createDataFrame([(u,) for u in urls], "url string").write.mode(
-                "append"
-            ).parquet(src)
-
-        def drain():
-            stream = spark.readStream.schema("url string").parquet(src)
-            q = (
-                dedup_urls_stream_v2(stream, max_runs=2)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        write_batch(["http://a.test/1", "http://a.test/2", "http://b.test/1"])
-        drain()
-        write_batch(["http://a.test/1", "http://c.test/9"])
-        drain()
-        # third batch exceeds max_runs on a.test's bucket → merge path
-        write_batch(["http://a.test/2", "http://a.test/3", "http://d.test/4"])
-        drain()
-        urls = [r["url"] for r in spark.read.parquet(sink).collect()]
-        assert sorted(urls) == sorted(set(urls))  # exactly-once forever
-        assert set(urls) == {
-            "http://a.test/1", "http://a.test/2", "http://b.test/1",
-            "http://c.test/9", "http://a.test/3", "http://d.test/4",
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_dedup_state_grows_by_delta_only():
     """Delta-encoding probe (VERDICT r02 Next-round #6): each
     micro-batch appends ONE sorted run of only its new hashes — the
