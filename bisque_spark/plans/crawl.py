@@ -5,9 +5,10 @@ The distributed re-expression of the scrape loop around the reference
     frontier → robots ⋈ → politeness window-rank → fetch (Arrow UDF)
     → decode+parse+extract (Arrow UDF) → images sink append
     → link explode → canonicalize → URL-seen dedup → next frontier
-and every epoch commits its state tables (frontier, seen delta, images,
-order log, lineage) to the checkpoint directory before advancing, so a
-killed driver resumes bit-identically from the last complete epoch
+and every epoch commits its tables (frontier, seen delta, lineage
+counters, order log, images, link graph) to the checkpoint directory in
+one partitioned write, then its ``_COMMIT`` marker, before advancing,
+so a killed driver resumes bit-identically from the last complete epoch
 (north_rule). URL-seen dedup is the exact ``dropDuplicates`` +
 ``left_anti`` against the committed seen union (operators/seen.py
 ``filter_unseen`` with no shards): a Bloom pre-filter would still have
@@ -53,15 +54,25 @@ FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority", "crawl_delay"]
 # each, and the state unions read base + one delta per epoch, so the
 # inference cost grows with crawl depth. With .schema(...) the read is
 # pure plan-building (columns are pruned by name from the superset
-# junction schema).
+# junction schema), and a read of zero paths (the output readers on a
+# crawl that committed no epoch) is an empty frame, not an error.
 _FRONTIER_SCHEMA = (
     "url string, url_hash bigint, host string, depth int, "
     "priority double, crawl_delay double"
 )
 _SEEN_SCHEMA = "url_hash bigint"
+_ORDER_SCHEMA = (
+    "epoch int, host string, host_rank int, priority double, "
+    "url_hash bigint, url string"
+)
+_IMAGES_SCHEMA = (
+    "image_id string, bytes binary, w int, h int, fmt string, "
+    "caption string, phash bigint"
+)
+_LINKS_SCHEMA = "url_hash bigint, dst_hash bigint"
 
-# The per-epoch state junction: frontier / order log / seen delta /
-# images / lineage counters share one superset schema and are written
+# The per-epoch junction: frontier / order log / seen delta / images /
+# link graph / lineage counters share one superset schema and are written
 # as ONE partitioned parquet table (junction/table=<slice>). Round 1
 # wrote five separate tables plus a counters job — six job submissions
 # of fixed cost per epoch that dominated small epochs (BENCH/BASELINE.md
@@ -117,6 +128,13 @@ def _junction_path(workdir: str, epoch: int, table: str) -> str:
     return os.path.join(_epoch_dir(workdir, epoch), "junction", f"table={table}")
 
 
+def _slice_paths(workdir: str, epochs: int, table: str) -> list[str]:
+    """Every committed epoch's ``table`` slice that holds rows (the
+    partitioned write creates no directory for an empty slice)."""
+    paths = (_junction_path(workdir, e, table) for e in range(epochs))
+    return [p for p in paths if os.path.exists(p)]
+
+
 def _parquet_num_rows(path: str) -> int:
     """Row count from parquet footers — driver-local metadata read, no
     Spark job (the frontier-empty check)."""
@@ -146,12 +164,12 @@ def _base_epoch(workdir: str, last: int, name: str) -> int | None:
     return None
 
 
-def _read_seen_union(spark: SparkSession, workdir: str, last: int) -> DataFrame | None:
-    """The seen set as of epoch ``last`` (None when nothing is
-    committed): the latest compaction base (``seen_base``, else the seed
-    frontier) + the per-epoch junction deltas since. Append-only — each
-    epoch writes O(new URLs), never rewrites the set (at 10^10 URLs a
-    full rewrite per epoch would dominate the job); periodic compaction
+def _read_seen_union(spark: SparkSession, workdir: str, last: int) -> DataFrame:
+    """The seen set as of epoch ``last`` (``-1``: before epoch 0): the
+    latest compaction base (``seen_base``, else the seed frontier) +
+    the per-epoch junction deltas since. Append-only — each epoch
+    writes O(new URLs), never rewrites the set (at 10^10 URLs a full
+    rewrite per epoch would dominate the job); periodic compaction
     bounds the union width. Per-path reads unioned by name: the seed
     file and the junction slices have different physical schemas
     (narrow vs superset), so a single multi-path read would pick one
@@ -165,7 +183,7 @@ def _read_seen_union(spark: SparkSession, workdir: str, last: int) -> DataFrame 
     reads = [
         spark.read.schema(_SEEN_SCHEMA).parquet(p) for p in paths if os.path.exists(p)
     ]
-    return reduce(DataFrame.unionByName, reads) if reads else None
+    return reduce(DataFrame.unionByName, reads)
 
 
 def latest_complete_epoch(workdir: str) -> int | None:
@@ -233,25 +251,16 @@ def run_crawl(
     robots = fetch_robots(hosts, world).persist()
 
     start_epoch = 0
-    frontier: DataFrame | None = None
-
     if resume:
         last = latest_complete_epoch(workdir)
         if last is not None:
-            frontier_path = _junction_path(workdir, last, "frontier")
-            frontier = (
-                spark.read.schema(_FRONTIER_SCHEMA)
-                .parquet(frontier_path)
-                .select(*FRONTIER_COLS)
-                if os.path.exists(frontier_path)
-                else None
-            )
             start_epoch = last + 1
     elif os.path.isdir(workdir):
         shutil.rmtree(workdir)
 
-    frontier_on_disk: str | None = None
-    if start_epoch == 0 and frontier is None:
+    if start_epoch > 0:
+        frontier_path = _junction_path(workdir, start_epoch - 1, "frontier")
+    else:
         # ONE pre-loop write: the canonicalized, robots-filtered seed
         # frontier. Epoch 0's seen set is a column slice of the same
         # file (_read_seen_union) — round 1 spent two extra jobs here.
@@ -284,7 +293,7 @@ def run_crawl(
 
             seeded, _ = filter_traps(seeded, trap_guard)
         seeded = apply_robots(seeded, robots)
-        seed_path = os.path.join(workdir, "frontier_seed")
+        frontier_path = os.path.join(workdir, "frontier_seed")
         # the seed write keeps its natural parallelism: it happens ONCE
         # per crawl (not per epoch), so its file count is not a
         # small-file concern, and both alternatives measured worse —
@@ -292,7 +301,7 @@ def run_crawl(
         # fetch + canonicalize UDF to a handful of tasks (2x slower),
         # repartition(small) adds an exchange to the pre-loop critical
         # path (r6 A/B)
-        _write(seeded.select(*FRONTIER_COLS), seed_path)
+        _write(seeded.select(*FRONTIER_COLS), frontier_path)
         if use_sitemaps:
             # the seed write is the terminal action over the pinned
             # sitemap doc table (util.pin contract) — release it so the
@@ -300,32 +309,18 @@ def run_crawl(
             from bisque_spark.util import release_caches
 
             release_caches()
-        frontier_on_disk = seed_path
-        frontier = (
-            spark.read.schema(_FRONTIER_SCHEMA)
-            .parquet(seed_path)
-            .select(*FRONTIER_COLS)
-        )
-    elif frontier is not None:
-        frontier_on_disk = _junction_path(workdir, start_epoch - 1, "frontier")
-
-    # deferred epoch finalizers (observational-slice join + _COMMIT):
-    # at most one is ever pending — epoch N's is joined at the top of
-    # epoch N+1's commit section or at loop exit
-    pending_finalize: list = []
-
-    def _join_pending() -> None:
-        while pending_finalize:
-            pending_finalize.pop(0)()
 
     epoch = start_epoch
-    while epoch < max_epochs and frontier is not None:
-        # every frontier (seed, resume read, committed junction) is
-        # parquet-backed: emptiness (and size) from parquet footers — a
-        # driver-local metadata read, no Spark job
-        frontier_rows = _parquet_num_rows(frontier_on_disk)
+    while epoch < max_epochs:
+        # every frontier (seed, resume, committed junction) is read from
+        # parquet: emptiness (and size) from the footers — a driver-local
+        # metadata read, no Spark job; a path the write left out (no
+        # rows) reads as 0. Reading the committed state back cuts lineage
+        # growth across the loop and makes resume = continue exactly.
+        frontier_rows = _parquet_num_rows(frontier_path)
         if frontier_rows == 0:
             break
+        frontier = spark.read.schema(_FRONTIER_SCHEMA).parquet(frontier_path)
         # the salted two-phase rank is skew armor for huge frontiers;
         # below ~200k rows the single exact window is result-identical
         # and one shuffle cheaper (footer count makes this free)
@@ -344,9 +339,9 @@ def run_crawl(
         )
 
         # fused fetch+decode+parse+extract: one Arrow stage per epoch.
-        # Persisted because four junction slices consume it (images,
-        # links→frontier, seen, lineage); the warm-up count below
-        # populates the cache before the write job reads it four ways.
+        # Persisted because five junction slices consume it (images,
+        # links, links→frontier, seen, lineage); the junction write job
+        # populates the cache and reads it five ways.
         # (A repartition-exchange above the UDF would be reusable in
         # principle, but Catalyst pushes each slice's column pruning
         # BELOW the exchange, making the four exchanges non-identical —
@@ -362,9 +357,7 @@ def run_crawl(
             F.explode("images").alias("img")
         ).select("img.image_id", "img.caption")
         images = images_flat.mapInPandas(
-            materialize_images_batches,
-            schema="image_id string, bytes binary, w int, h int, fmt string, "
-            "caption string, phash long",
+            materialize_images_batches, schema=_IMAGES_SCHEMA
         )
 
         links = extracted.select(F.explode("links").alias("url"))
@@ -407,36 +400,22 @@ def run_crawl(
         # on the bench world).
 
         # ---- commit epoch state ------------------------------------------
-        # Two write jobs per epoch (r8): the STATE slices the next
-        # epoch reads (frontier + seen delta + lineage counters) commit
-        # synchronously; the
-        # OBSERVATIONAL slices (order log + images + link graph) write
-        # to a per-epoch junction_tmp/ from a background driver thread
-        # (guide §2.6) whose join — and hence this epoch's _COMMIT marker — is
-        # deferred until the NEXT epoch's commit section, so the images
-        # synth+write overlaps the next epoch's frontier compute
-        # instead of serializing behind it. At join the tmp table dirs
-        # are renamed into junction/ (driver-local os.replace), keeping
-        # the committed layout byte-identical to the one-job form.
-        # Crash-atomicity is unchanged: _COMMIT is only ever written
-        # after BOTH jobs of its epoch are durable, and a crash with a
-        # deferred join resumes from the previous marker and redoes the
-        # whole epoch with overwrite semantics.
-        # join the previous epoch's observational write first — it has
-        # had a full epoch of overlap; never two background jobs at once
-        _join_pending()
+        # ONE write job per epoch: all six slices go to junction/ as one
+        # partitioned table, then lineage.json, then _COMMIT — written
+        # last, so a crash anywhere before it resumes from the previous
+        # marker and redoes the whole epoch with overwrite semantics.
         d = _epoch_dir(workdir, epoch)
         lineage_row = extracted.agg(
             F.count(F.lit(1)).alias("n_scheduled"),
             F.sum(F.col("error").isNull().cast("long")).alias("n_fetched"),
         ).withColumn("epoch", F.lit(epoch))
-        # the state slices are O(frontier) rows of narrow columns — at
-        # any parallelism they'd otherwise contribute ~5×cores tiny
-        # tasks AND files per epoch (measured ~2 s/epoch of fixed
-        # scheduling+commit cost at local[8]; at cluster scale, small-
-        # file metadata pressure on the object store). Coalesce each to
-        # a core-proportional handful; images keeps full parallelism
-        # (it carries the bytes and the materialize UDF).
+        # the narrow slices are O(frontier) rows — at any parallelism
+        # they'd otherwise contribute ~5×cores tiny tasks AND files per
+        # epoch (measured ~2 s/epoch of fixed scheduling+commit cost at
+        # local[8]; at cluster scale, small-file metadata pressure on
+        # the object store). Coalesce each to a core-proportional
+        # handful; images keeps full parallelism (it carries the bytes
+        # and the materialize UDF).
         small = max(4, spark.sparkContext.defaultParallelism // 4)
         # link-graph slice: (src url_hash → dst_hash) straight off the
         # cached fetch+extract output — the raw observed graph (before
@@ -449,56 +428,17 @@ def run_crawl(
             .withColumn("dst_hash", F.xxhash64("__dst"))
             .select("url_hash", "dst_hash")
         )
-        junction_obs = (
-            _junction_slice(order_log.coalesce(small), "order")
-            .unionByName(_junction_slice(images, "images"))
-            .unionByName(_junction_slice(edges.coalesce(small), "links"))
-        )
-        obs_tmp = os.path.join(d, "junction_tmp")
-        obs_err: list[BaseException] = []
-
-        def _write_obs():
-            try:
-                junction_obs.write.mode("overwrite").partitionBy(
-                    "table"
-                ).parquet(obs_tmp)
-            except BaseException as exc:  # noqa: BLE001 — re-raised at join
-                obs_err.append(exc)
-
-        from pyspark import InheritableThread
-
-        obs_thread = InheritableThread(target=_write_obs)
-        obs_thread.start()
-
-        state_slices = [
+        slices = [
             _junction_slice(next_frontier.coalesce(small), "frontier"),
             _junction_slice(new_hashes.coalesce(small), "seen"),
             _junction_slice(lineage_row, "lineage"),
+            _junction_slice(order_log.coalesce(small), "order"),
+            _junction_slice(images, "images"),
+            _junction_slice(edges.coalesce(small), "links"),
         ]
-        reduce(DataFrame.unionByName, state_slices).write.mode(
+        reduce(DataFrame.unionByName, slices).write.mode(
             "overwrite"
         ).partitionBy("table").parquet(os.path.join(d, "junction"))
-
-        epoch_caches = [scheduled, extracted, new_urls, next_frontier]
-
-        def _finalize(dd=d, tmp=obs_tmp, th=obs_thread, err=obs_err,
-                      caches=epoch_caches):
-            th.join()
-            if err:
-                raise err[0]
-            for tname in ("order", "images", "links"):
-                src = os.path.join(tmp, f"table={tname}")
-                if os.path.exists(src):
-                    os.replace(
-                        src, os.path.join(dd, "junction", f"table={tname}")
-                    )
-            shutil.rmtree(tmp, ignore_errors=True)
-            with open(os.path.join(dd, "_COMMIT"), "w") as f:
-                f.write("ok")
-            for c in caches:
-                c.unpersist()
-
-        pending_finalize.append(_finalize)
 
         # periodic state compaction: collapse the seen delta chain into
         # one base so the read-side union width stays bounded (a
@@ -530,67 +470,38 @@ def run_crawl(
         }
         with open(os.path.join(d, "lineage.json"), "w") as f:
             json.dump(lineage, f)
-        # _COMMIT + cache release happen in _finalize (deferred above)
-
-        # read the committed state back: cuts lineage growth across the
-        # iterative loop and makes resume = continue exactly
-        frontier_on_disk = _junction_path(workdir, epoch, "frontier")
-        frontier = (
-            spark.read.schema(_FRONTIER_SCHEMA)
-            .parquet(frontier_on_disk)
-            .select(*FRONTIER_COLS)
-            if os.path.exists(frontier_on_disk)
-            else None
-        )
+        with open(os.path.join(d, "_COMMIT"), "w") as f:
+            f.write("ok")
+        for c in (scheduled, extracted, new_urls, next_frontier):
+            c.unpersist()
+        frontier_path = _junction_path(workdir, epoch, "frontier")
         epoch += 1
 
-    _join_pending()
     robots.unpersist()
     return {
         "workdir": workdir,
         "epochs": epoch,
-        "order_paths": [
-            _junction_path(workdir, e, "order")
-            for e in range(epoch)
-            if os.path.exists(_junction_path(workdir, e, "order"))
-        ],
-        "images_paths": [
-            _junction_path(workdir, e, "images")
-            for e in range(epoch)
-            if os.path.exists(_junction_path(workdir, e, "images"))
-        ],
-        "links_paths": [
-            _junction_path(workdir, e, "links")
-            for e in range(epoch)
-            if os.path.exists(_junction_path(workdir, e, "links"))
-        ],
+        **{
+            f"{table}_paths": _slice_paths(workdir, epoch, table)
+            for table in ("order", "images", "links")
+        },
     }
 
 
 def read_order(spark: SparkSession, result: dict) -> DataFrame:
-    return spark.read.parquet(*result["order_paths"])
+    return spark.read.schema(_ORDER_SCHEMA).parquet(*result["order_paths"])
 
 
 def read_images(spark: SparkSession, result: dict) -> DataFrame:
-    return spark.read.parquet(*result["images_paths"]).select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-    )
+    return spark.read.schema(_IMAGES_SCHEMA).parquet(*result["images_paths"])
 
 
 def read_seen(spark: SparkSession, result: dict) -> DataFrame:
     last = latest_complete_epoch(result["workdir"])
-    return _read_seen_union(spark, result["workdir"], last)
+    return _read_seen_union(spark, result["workdir"], -1 if last is None else last)
 
 
 def read_links(spark: SparkSession, result: dict) -> DataFrame:
     """The crawl's committed link graph: (url_hash src → dst_hash)
-    across all epochs — the edge table linkrank.link_rank consumes.
-    A crawl that observed no links yields an empty edge table, not an
-    empty-path read error."""
-    if not result["links_paths"]:
-        return spark.createDataFrame(
-            [], "url_hash bigint, dst_hash bigint"
-        )
-    return spark.read.parquet(*result["links_paths"]).select(
-        "url_hash", "dst_hash"
-    )
+    across all epochs — the edge table linkrank.link_rank consumes."""
+    return spark.read.schema(_LINKS_SCHEMA).parquet(*result["links_paths"])

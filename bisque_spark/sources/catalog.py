@@ -1,13 +1,14 @@
-"""Table catalog shim: Iceberg when the runtime is present, partitioned
-parquet + file-manifest snapshots otherwise (SURVEY.md §7.0).
+"""Table catalog: partitioned parquet + file-manifest snapshots with
+Iceberg-shaped operations (SURVEY.md §7.0).
 
-BASELINE.json's input_hint names Iceberg tables; the sandbox ships no
-Iceberg runtime jar, so this layer keeps the *SQL surface and call
-sites* identical (create/append/merge/read/time-travel/expire) and
-swaps the physical backing. Flipping to real Iceberg is configuration
-only: ``spark.sql.catalog.<name>`` plus ``USE_ICEBERG=1``.
+BASELINE.json's input_hint names Iceberg tables; no Iceberg runtime jar
+is available, so this layer offers the same operations
+(create/append/merge/read/time-travel/expire) over plain parquet.
+Moving to real Iceberg means replacing these calls with a configured
+``spark.sql.catalog.<name>`` and its SQL (``MERGE INTO`` etc.); there
+is no switch for it here.
 
-Parquet fallback follows Iceberg's actual design: the MANIFEST lists
+The parquet layout follows Iceberg's actual design: the MANIFEST lists
 the data files of every snapshot, and commits are an atomic manifest
 pointer swap (os.replace). Concretely:
 
@@ -35,14 +36,6 @@ import uuid
 
 import pyspark.sql.functions as F  # noqa: F401  (re-exported for callers)
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        return True
-    except Exception:  # noqa: BLE001
-        return False
 
 
 class ParquetCatalog:
@@ -694,13 +687,3 @@ class ParquetCatalog:
             self._write_manifest(name, m)
             return deleted
 
-
-def get_catalog(spark: SparkSession, root: str):
-    """Iceberg catalog when available (config-only flip), else parquet."""
-    if os.environ.get("USE_ICEBERG") == "1" and iceberg_available(spark):
-        raise NotImplementedError(
-            "Iceberg runtime detected but the sandbox ships no catalog "
-            "config; wire spark.sql.catalog.* and use spark.sql('MERGE "
-            "INTO ...') directly."
-        )
-    return ParquetCatalog(spark, root)

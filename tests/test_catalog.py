@@ -4,7 +4,7 @@ operations on the parquet fallback)."""
 import pyspark.sql.functions as F
 import pytest
 
-from bisque_spark.sources.catalog import ParquetCatalog, get_catalog
+from bisque_spark.sources.catalog import ParquetCatalog
 
 
 @pytest.fixture()
@@ -57,11 +57,6 @@ def test_partitioned_table(spark, cat):
     # partition pruning: a bucket filter scans one partition directory
     plan = got.where(F.col("bucket") == 1)._jdf.queryExecution().executedPlan().toString()
     assert "bucket" in plan
-
-
-def test_get_catalog_fallback(spark, tmp_path):
-    c = get_catalog(spark, str(tmp_path / "w2"))
-    assert isinstance(c, ParquetCatalog)
 
 
 def test_time_travel_and_expire(spark, cat):

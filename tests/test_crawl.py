@@ -9,7 +9,13 @@ import os
 
 import pytest
 
-from bisque_spark.plans.crawl import read_images, read_order, read_seen, run_crawl
+from bisque_spark.plans.crawl import (
+    read_images,
+    read_links,
+    read_order,
+    read_seen,
+    run_crawl,
+)
 from bisque_spark.synth import World, seed_urls
 from oracle_crawler import crawl_oracle
 
@@ -36,6 +42,13 @@ def _order_tuples(spark, res):
     return sorted(
         (r["epoch"], r["host"], r["host_rank"], float(r["priority"]), r["url_hash"], r["url"])
         for r in rows
+    )
+
+
+def _image_tuples(spark, res):
+    return sorted(
+        (r["image_id"], bytes(r["bytes"]), r["w"], r["h"], r["fmt"], r["caption"], r["phash"])
+        for r in read_images(spark, res).collect()
     )
 
 
@@ -96,7 +109,6 @@ def test_lineage_written(spark_result):
     assert os.path.exists(os.path.join(d, "_COMMIT"))
 
 
-@pytest.mark.slow
 def test_resume_after_partial_epoch_crash(spark, tmp_path_factory, spark_result):
     """Crash mid-commit: an epoch directory with data files but no
     _COMMIT marker must be redone on resume, bit-identically."""
@@ -121,6 +133,20 @@ def test_resume_after_partial_epoch_crash(spark, tmp_path_factory, spark_result)
     a = {r["url_hash"] for r in read_seen(spark, res).collect()}
     b = {r["url_hash"] for r in read_seen(spark, spark_result).collect()}
     assert a == b
+    assert _image_tuples(spark, res) == _image_tuples(spark, spark_result)
+
+
+def test_readers_on_crawl_without_epochs(spark, tmp_path):
+    """A crawl that commits no epoch still has readable outputs: empty
+    order/images/links and the seed frontier as its seen set."""
+    seeds = seed_urls(WORLD)
+    res = run_crawl(spark, WORLD, seeds, workdir=str(tmp_path / "c"), max_epochs=0)
+    assert res["epochs"] == 0
+    assert read_order(spark, res).count() == 0
+    assert _image_tuples(spark, res) == []
+    assert read_links(spark, res).count() == 0
+    seen = {r["url_hash"] for r in read_seen(spark, res).collect()}
+    assert seen == crawl_oracle(WORLD, seeds, max_epochs=0)["seen"]
 
 
 def test_lineage_counters_consistent(spark, spark_result):
