@@ -593,18 +593,17 @@ def _q_image_features(spark, sf_dir):
     carry APP1 with orientations 1-8 — are featured in VIEWER space,
     so the graded hash now pins the orientation transform end-to-end
     (dims swap for 5-8, thumbnails are of the rotated pixels)."""
+    from bisque_spark.operators.extract import (
+        IMAGES_SCHEMA,
+        materialize_images_batches,
+    )
     from bisque_spark.operators.multimodal import image_pipeline
-    from bisque_spark.operators.extract import materialize_images_batches
 
     ids = spark.range(200).select(
         F.concat(F.lit("img-bench-"), F.col("id")).alias("image_id"),
         F.lit("").alias("caption"),
     )
-    images = ids.mapInPandas(
-        materialize_images_batches,
-        schema="image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
+    images = ids.mapInPandas(materialize_images_batches, schema=IMAGES_SCHEMA)
     out = image_pipeline(images, thumb_target=8, orient=True)
     return out.select(
         "image_id", "w", "h", "fmt",

@@ -26,18 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from bisque_spark.functions.jpeg import (
-    _AC_CHROMA_BITS,
-    _AC_CHROMA_VALS,
-    _AC_LUMA_BITS,
-    _AC_LUMA_VALS,
-    _DC_CHROMA_BITS,
-    _DC_CHROMA_VALS,
-    _DC_LUMA_BITS,
-    _DC_LUMA_VALS,
-    decode_jpeg,
-    encode_jpeg,
-)
+from bisque_spark.functions.jpeg import _dht, decode_jpeg, encode_jpeg
 
 # ---- RIFF plumbing -------------------------------------------------------
 
@@ -217,16 +206,7 @@ def ensure_dht(jpeg: bytes) -> bytes:
         i += 2 + int.from_bytes(jpeg[i + 2 : i + 4], "big")
     if sos_at is None:
         return jpeg
-    dht = b""
-    for tc_th, bits, vals in (
-        (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
-        (0x01, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
-        (0x11, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
-    ):
-        payload = bytes([tc_th]) + bytes(bits) + bytes(vals)
-        dht += b"\xff\xc4" + (len(payload) + 2).to_bytes(2, "big") + payload
-    return jpeg[:sos_at] + dht + jpeg[sos_at:]
+    return jpeg[:sos_at] + _dht(2) + jpeg[sos_at:]
 
 
 def _decode_dib(raw: bytes, w: int, h: int) -> np.ndarray:

@@ -31,6 +31,13 @@ The DCT is the orthonormal matrix form (D @ block @ D.T == the T.81
 FDCT definition), fully vectorized over blocks with einsum; only the
 entropy coding loops per block, which is bounded by image size.
 
+Layout: the three encoders share one front end (_front_end) and one
+header writer (_header/_dht/_sos); every encoder and decoder scan loop
+takes its block order from _mcu_walk (T.81 A.2.3) or _raster (A.2.2);
+sequential files of any scan layout decode through
+_decode_sequential, progressive ones through _decode_progressive, and
+both hand their coefficients to _reconstruct.
+
 No reference analogue (bisque never decodes images) — this implements
 the BASELINE.json input_hint's "decoded pixels allclose (PSNR >= 40 dB
 for lossy formats)" invariant.
@@ -158,6 +165,48 @@ def _canonical_codes(bits, vals):
     return out
 
 
+def _code_list(bits, vals, size):
+    """Symbol-indexed (code, length) list (a list index beats a dict
+    lookup in the encoder's hot loop); unused symbols are (0, 0)."""
+    out = [(0, 0)] * size
+    for sym, cl in _canonical_codes(bits, vals).items():
+        out[sym] = cl
+    return out
+
+
+# The encoders' Annex K.3 tables, built once. Table id 0 = luminance,
+# 1 = chrominance: (Tc<<4 | Th, bits, vals) DHT specs in the order every
+# encoder writes them, and per id the symbol-indexed code lists (plus
+# their numpy columns for the vectorized scan coder).
+_DHT_SPECS = (
+    (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
+    (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
+    (0x01, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
+    (0x11, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
+)
+_DC_CODES = (
+    _code_list(_DC_LUMA_BITS, _DC_LUMA_VALS, 16),
+    _code_list(_DC_CHROMA_BITS, _DC_CHROMA_VALS, 16),
+)
+_AC_CODES = (
+    _code_list(_AC_LUMA_BITS, _AC_LUMA_VALS, 256),
+    _code_list(_AC_CHROMA_BITS, _AC_CHROMA_VALS, 256),
+)
+_DC_ARRAYS = tuple(np.array(t, dtype=np.int64).T for t in _DC_CODES)
+_AC_ARRAYS = tuple(np.array(t, dtype=np.int64).T for t in _AC_CODES)
+
+_FACTORS = {
+    "444": [(1, 1)] * 3,
+    "420": [(2, 2), (1, 1), (1, 1)],
+    "422": [(2, 1), (1, 1), (1, 1)],
+}
+_JFIF = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+
+# declared-size bound, shared with decode_png/decode_tiff/decode_webp:
+# checked at SOF, before any coefficient storage is sized from it
+_MAX_PIXELS = 64_000_000
+
+
 def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling (public libjpeg formula)."""
     quality = min(100, max(1, quality))
@@ -165,19 +214,56 @@ def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
     return np.clip((table * scale + 50) // 100, 1, 255).astype(np.int32)
 
 
-def _blockify(chan: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """H×W plane → (n_blocks, 8, 8) with edge-replicate padding."""
-    h, w = chan.shape
-    ph, pw = -h % 8, -w % 8
-    if ph or pw:
-        chan = np.pad(chan, ((0, ph), (0, pw)), mode="edge")
-    hh, ww = chan.shape
-    blocks = (
-        chan.reshape(hh // 8, 8, ww // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-    )
-    return blocks, hh // 8, ww // 8
+# ---- block order (T.81 A.2) -------------------------------------------------
+
+
+def _geometry(w: int, h: int, factors) -> tuple:
+    """Image size + per-component (h, v) sampling → (hmax, vmax, mcux,
+    mcuy, grids) with grids[k] = (pwb, phb, cwb, chb): component k's
+    MCU-padded block grid (storage, A.2.3) and its un-padded grid
+    (non-interleaved scan order, A.2.2)."""
+    hmax = max(hi for hi, _ in factors)
+    vmax = max(vi for _, vi in factors)
+    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    grids = [
+        (
+            mcux * hi,
+            mcuy * vi,
+            -(-(-(-w * hi // hmax)) // 8),
+            -(-(-(-h * vi // vmax)) // 8),
+        )
+        for hi, vi in factors
+    ]
+    return hmax, vmax, mcux, mcuy, grids
+
+
+def _mcu_walk(factors, mcux: int, mcuy: int):
+    """Interleaved scan order (A.2.3): yields one list per MCU of
+    (k, block) data units — component k contributes its h×v blocks left
+    to right, top to bottom, indexed in its MCU-padded grid (mcux·h
+    per row). Lazy, so a decoder never materializes the order of a
+    declared size its data cannot fill."""
+    for my in range(mcuy):
+        for mx in range(mcux):
+            units = []
+            for k, (hi, vi) in enumerate(factors):
+                for by in range(vi):
+                    base = (my * vi + by) * mcux * hi + mx * hi
+                    for bx in range(hi):
+                        units.append((k, base + bx))
+            yield units
+
+
+def _raster(grid):
+    """Non-interleaved scan order (A.2.2): yields one component's
+    un-padded block grid in raster order, indexed in its MCU-padded
+    grid."""
+    pwb, _phb, cwb, chb = grid
+    for row in range(chb):
+        yield from range(row * pwb, row * pwb + cwb)
+
+
+# ---- encoder ----------------------------------------------------------------
 
 
 class _SymbolSink:
@@ -228,6 +314,137 @@ class _SymbolSink:
         if len(stuffed_at):  # byte stuffing: 0xFF → 0xFF 0x00
             packed = np.insert(packed, stuffed_at + 1, 0)
         return packed.tobytes()
+
+
+def _planes(pixels, subsampling: str, precision: int) -> tuple:
+    """Validate the colour encoders' options; H×W×3 RGB → Y/Cb/Cr
+    planes (or the one H×W gray plane), with each component's sampling
+    factors and table id."""
+    if subsampling not in _FACTORS:
+        raise ValueError(f"unsupported subsampling {subsampling!r}")
+    if precision not in (8, 12):
+        raise ValueError(f"unsupported precision {precision}")
+    px = np.asarray(pixels).astype(np.float64)
+    if px.ndim == 2:
+        return [px], [(1, 1)], [0]
+    center = float(1 << (precision - 1))
+    planes = _ycc(px[..., 0], px[..., 1], px[..., 2], center)
+    return planes, _FACTORS[subsampling], [0, 1, 1]
+
+
+def _ycc(r, g, b, center: float) -> list:
+    """RGB → YCbCr (JFIF matrix), chroma centred on ``center``."""
+    return [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        -0.168736 * r - 0.331264 * g + 0.5 * b + center,
+        0.5 * r - 0.418688 * g - 0.081312 * b + center,
+    ]
+
+
+def _front_end(planes, factors, tsel, quality: int, precision: int):
+    """The encoder front end shared by every encoder: IJG-scaled Annex K
+    tables (one per table id; ×16 for 12-bit, Pq=1), then per plane:
+    edge-pad to the MCU-aligned grid (box-averaged when subsampled),
+    level shift, vectorized FDCT, quantize, zigzag → (qts, quantized
+    zigzag rows per component, geometry)."""
+    h, w = planes[0].shape
+    geom = _geometry(w, h, factors)
+    hmax, vmax, mcux, mcuy, _grids = geom
+    center = float(1 << (precision - 1))
+    qts = [_quality_scale(_QT_LUMA, quality)]
+    if len(planes) > 1:
+        qts.append(_quality_scale(_QT_CHROMA, quality))
+    if precision == 12:
+        # 12-bit: samples in [0, 4095]; tables ×16 keep quantized
+        # magnitudes (and the Annex K.3 Huffman ranges) as at 8-bit
+        qts = [q * 16 for q in qts]
+    quantized = []
+    for plane, (hi, vi), t in zip(planes, factors, tsel):
+        if (hi, vi) != (hmax, vmax):
+            # subsample: pad to the full-res MCU grid, then box-average
+            fy, fx = vmax // vi, hmax // hi
+            full = _pad_to(plane, mcuy * 8 * vmax, mcux * 8 * hmax)
+            ph, pw = full.shape
+            plane = full.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
+        else:
+            plane = _pad_to(plane, mcuy * 8 * vi, mcux * 8 * hi)
+        ph, pw = plane.shape
+        blocks = (
+            (plane - center)
+            .reshape(ph // 8, 8, pw // 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(-1, 8, 8)
+        )
+        coefs = np.einsum("ij,bjk,lk->bil", _D, blocks, _D)
+        qz = np.round(coefs / qts[t].reshape(8, 8)).astype(np.int32)
+        qz = qz.reshape(-1, 64)[:, _ZZ]
+        if precision == 12 and (
+            np.abs(qz[:, 1:]).max() >= 1024
+            or int(qz[:, 0].max()) - int(qz[:, 0].min()) >= 2048
+            or int(np.abs(qz[:, 0]).max()) >= 2048
+        ):
+            # the standard K.3 tables stop at AC SSSS=10 and DC
+            # SSSS=11 (|diff| < 2048); the ×16 scaling keeps
+            # coefficients in range up to ~q90, and the DC range check
+            # covers every coding order — refuse rather than emit
+            # symbols the tables can't express (r6 ADVICE)
+            raise ValueError("quality too high for the 12-bit encoder")
+        quantized.append(qz)
+    return qts, quantized, geom
+
+
+def _pad_to(plane: np.ndarray, th: int, tw: int) -> np.ndarray:
+    h, w = plane.shape
+    if h == th and w == tw:
+        return plane
+    return np.pad(plane, ((0, th - h), (0, tw - w)), mode="edge")
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
+
+
+def _dht(n_tables: int) -> bytes:
+    """DHT segments for the Annex K.3 tables: luminance only (1) or
+    luminance and chrominance (2)."""
+    return b"".join(
+        _seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
+        for tc_th, bits, vals in _DHT_SPECS[: 2 * n_tables]
+    )
+
+
+def _header(app: bytes, qts, precision: int, sof: int, h: int, w: int,
+            comps) -> bytearray:
+    """SOI + ``app`` segments + DQT (Pq=1 16-bit entries at 12-bit) +
+    SOFn + one K.3 DHT pair per quantization table. ``comps`` lists each
+    frame component's (h, v, table id); component ids are 1..n."""
+    out = bytearray(b"\xff\xd8") + app
+    for ti, qt in enumerate(qts):
+        if precision == 12:
+            out += _seg(
+                0xDB, bytes([0x10 | ti]) + qt[_ZZ].astype(">u2").tobytes()
+            )
+        else:
+            out += _seg(0xDB, bytes([ti]) + bytes(qt[_ZZ].astype(np.uint8)))
+    frame = (
+        bytes([precision])
+        + h.to_bytes(2, "big")
+        + w.to_bytes(2, "big")
+        + bytes([len(comps)])
+    )
+    for ci, (hi, vi, t) in enumerate(comps):
+        frame += bytes([ci + 1, (hi << 4) | vi, t])
+    out += _seg(sof, frame)
+    return out + _dht(len(qts))
+
+
+def _sos(comps, ss: int = 0, se: int = 63, ahal: int = 0) -> bytes:
+    """SOS segment; ``comps`` lists the scan's (component index, table
+    id) pairs (DC and AC table share the id)."""
+    body = bytes([len(comps)])
+    for ci, t in comps:
+        body += bytes([ci + 1, (t << 4) | t])
+    return _seg(0xDA, body + bytes([ss, se, ahal]))
 
 
 def _encode_block(bw, coefs, dc_codes, ac_codes, prev_dc):
@@ -284,17 +501,17 @@ def _encode_block(bw, coefs, dc_codes, ac_codes, prev_dc):
     return dc
 
 
-def _encode_scan_vec(quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs):
-    """Vectorized symbol generation for ONE interleaved no-restart
-    scan — bit-identical to the per-block _encode_block walk (pinned
-    by test_jpeg's A/B), but every token class (DC symbol/bits, ZRL,
-    AC symbol/bits, EOB) is computed as numpy arrays over ALL blocks
-    and ordered by a (global block sequence, intra-block) sort key.
+def _encode_scan_vec(mcus, quantized, tables) -> _SymbolSink:
+    """Vectorized symbol generation for ONE sequential scan without
+    restarts — bit-identical to the per-block _encode_block walk
+    (pinned by test_jpeg's A/B), but every token class (DC symbol/bits,
+    ZRL, AC symbol/bits, EOB) is computed as numpy arrays over ALL
+    blocks and ordered by a (data-unit sequence, intra-block) sort key.
     The per-coefficient Python loop was ~65%% of synth_image's cost at
     crawl bench scale (~3000 images/epoch under 32-way contention)."""
-    n_comp = len(quantized)
-    bpm = sum(h * v for h, v in factors)
-    offs = np.cumsum([0] + [h * v for h, v in factors[:-1]])
+    units = np.array(
+        [u for mcu in mcus for u in mcu], dtype=np.int64
+    ).reshape(-1, 2)
     all_codes = []
     all_lens = []
     all_keys = []
@@ -305,24 +522,12 @@ def _encode_scan_vec(quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs):
     def bitlen(a):
         return np.ceil(np.log2(a.astype(np.float64) + 1.0)).astype(np.int64)
 
-    for ci in range(n_comp):
-        hi, vi = factors[ci]
-        t = min(ci, 1)
-        dc_code = np.array([c for c, _ in dc_tabs[t]], dtype=np.int64)
-        dc_len = np.array([l for _, l in dc_tabs[t]], dtype=np.int64)
-        ac_code = np.array([c for c, _ in ac_tabs[t]], dtype=np.int64)
-        ac_len = np.array([l for _, l in ac_tabs[t]], dtype=np.int64)
-        # visit order: per MCU, hi x vi tiles left-to-right top-to-bottom
-        row_tiles = bw_mcu * hi
-        my, mx, by, bx = np.meshgrid(
-            np.arange(bh_mcu), np.arange(bw_mcu),
-            np.arange(vi), np.arange(hi), indexing="ij",
-        )
-        seq_tiles = ((my * vi + by) * row_tiles + (mx * hi + bx)).reshape(-1)
-        cpm = hi * vi  # blocks this component contributes per MCU
-        tvis = np.arange(len(seq_tiles))
-        g_block = (tvis // cpm) * bpm + offs[ci] + (tvis % cpm)
-        qz = quantized[ci][seq_tiles].astype(np.int64)
+    for k, qzk in enumerate(quantized):
+        t = tables[k]
+        dc_code, dc_len = _DC_ARRAYS[t]
+        ac_code, ac_len = _AC_ARRAYS[t]
+        g_block = np.flatnonzero(units[:, 0] == k)  # data-unit sequence
+        qz = qzk[units[g_block, 1]].astype(np.int64)
         # ---- DC tokens ----
         d = np.diff(qz[:, 0], prepend=0)
         s = np.where(d == 0, 0, bitlen(np.abs(d)))
@@ -361,9 +566,8 @@ def _encode_scan_vec(quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs):
                 zrl_pos = np.repeat(pos, nzrl)
                 csum = np.cumsum(nzrl) - nzrl
                 sub = np.arange(tot) - np.repeat(csum, nzrl)
-                zc, zl = ac_tabs[t][0xF0]
-                all_codes.append(np.full(tot, zc, dtype=np.int64))
-                all_lens.append(np.full(tot, zl, dtype=np.int64))
+                all_codes.append(np.full(tot, ac_code[0xF0], dtype=np.int64))
+                all_lens.append(np.full(tot, ac_len[0xF0], dtype=np.int64))
                 all_keys.append(zrl_gb * KEYMAX + (zrl_pos + 1) * 8 + sub)
             all_codes.append(ac_code[sym])
             all_lens.append(ac_len[sym])
@@ -372,12 +576,10 @@ def _encode_scan_vec(quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs):
             all_lens.append(sv)
             all_keys.append(gb * KEYMAX + (pos + 1) * 8 + 6)
         # ---- EOB where the last AC (pos 62) is zero ----
-        needs_eob = ~mask[:, 62]
-        eob_gb = g_block[np.flatnonzero(needs_eob)]
+        eob_gb = g_block[np.flatnonzero(~mask[:, 62])]
         if len(eob_gb):
-            ec, el = ac_tabs[t][0x00]
-            all_codes.append(np.full(len(eob_gb), ec, dtype=np.int64))
-            all_lens.append(np.full(len(eob_gb), el, dtype=np.int64))
+            all_codes.append(np.full(len(eob_gb), ac_code[0], dtype=np.int64))
+            all_lens.append(np.full(len(eob_gb), ac_len[0], dtype=np.int64))
             all_keys.append(eob_gb * KEYMAX + 64 * 8)
     codes = np.concatenate(all_codes)
     lens = np.concatenate(all_lens)
@@ -390,15 +592,31 @@ def _encode_scan_vec(quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs):
     return bw
 
 
-def _seg(marker: int, payload: bytes) -> bytes:
-    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-
-def _pad_to(plane: np.ndarray, th: int, tw: int) -> np.ndarray:
-    h, w = plane.shape
-    if h == th and w == tw:
-        return plane
-    return np.pad(plane, ((0, th - h), (0, tw - w)), mode="edge")
+def _encode_scan(mcus, quantized, tables, restart_interval: int) -> bytes:
+    """Entropy-code one sequential scan: ``mcus`` is its data-unit
+    order (_mcu_walk, or one unit per MCU from _raster), unit (k, block)
+    indexing ``quantized[k]`` coded with table id ``tables[k]``. Without
+    restarts the symbols come from _encode_scan_vec; with them, the
+    block walk emits an RSTn (byte-aligned, DC predictors reset — T.81
+    F.1.2.2.4) before every ``restart_interval``-th MCU."""
+    if not restart_interval:
+        return _encode_scan_vec(mcus, quantized, tables).pack()
+    pieces = []
+    bw = _SymbolSink()
+    prev = [0] * len(quantized)
+    for m, units in enumerate(mcus):
+        if m and m % restart_interval == 0:
+            pieces.append(bw.pack())
+            pieces.append(bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8]))
+            bw = _SymbolSink()
+            prev = [0] * len(quantized)
+        for k, blk in units:
+            t = tables[k]
+            prev[k] = _encode_block(
+                bw, quantized[k][blk], _DC_CODES[t], _AC_CODES[t], prev[k]
+            )
+    pieces.append(bw.pack())
+    return b"".join(pieces)
 
 
 def encode_jpeg(
@@ -425,222 +643,33 @@ def encode_jpeg(
     wrong); each scan walks the component's own un-padded block grid
     (A.2.2; one data unit == one MCU for restart purposes). Same
     quantized coefficients ⇒ same decoded pixels as the interleaved
-    form."""
-    if subsampling not in ("444", "420", "422"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if precision not in (8, 12):
-        raise ValueError(f"unsupported precision {precision}")
-    # 12-bit: SOF1 extended sequential, samples in [0, 4095], Pq=1
-    # 16-bit quant tables scaled ×16 so quantized magnitudes (and the
-    # Annex K.3 Huffman ranges) match the 8-bit case
-    center = float(1 << (precision - 1))
-    pixels = np.asarray(pixels)
-    gray = pixels.ndim == 2
-    h, w = pixels.shape[:2]
-    px = pixels.astype(np.float64)
-    if gray:
-        planes = [px]
-        factors = [(1, 1)]
-    else:
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + center
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + center
-        planes = [y, cb, cr]
-        factors = {
-            "420": [(2, 2), (1, 1), (1, 1)],
-            "422": [(2, 1), (1, 1), (1, 1)],
-            "444": [(1, 1)] * 3,
-        }[subsampling]
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    bw_mcu = -(-w // (8 * hmax))
-    bh_mcu = -(-h // (8 * vmax))
+    form.
 
-    qts = [_quality_scale(_QT_LUMA, quality)]
-    if not gray:
-        qts.append(_quality_scale(_QT_CHROMA, quality))
-    if precision == 12:
-        qts = [q * 16 for q in qts]
-
-    # pad/downsample each plane to its MCU-aligned tile grid, then
-    # vectorized FDCT + quantization
-    quantized = []
-    for ci, plane in enumerate(planes):
-        hi, vi = factors[ci]
-        if (hi, vi) != (hmax, vmax):
-            # subsample: pad to full-res MCU grid, then box-average
-            fy, fx = vmax // vi, hmax // hi
-            full = _pad_to(plane, bh_mcu * 8 * vmax, bw_mcu * 8 * hmax)
-            ph, pw = full.shape
-            plane = full.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        else:
-            plane = _pad_to(plane, bh_mcu * 8 * vi, bw_mcu * 8 * hi)
-        qt = qts[min(ci, len(qts) - 1)].reshape(8, 8)
-        blocks, _, _ = _blockify(plane - center)
-        coefs = np.einsum("ij,bjk,lk->bil", _D, blocks, _D)
-        q = np.round(coefs / qt).astype(np.int32)
-        qz = q.reshape(-1, 64)[:, _ZZ]
-        if precision == 12 and np.abs(qz[:, 1:]).max(initial=0) >= 1024:
-            # the standard K.3 AC tables stop at SSSS=10; the ×16 table
-            # scaling keeps coefficients in range up to ~q90 — refuse
-            # rather than emit symbols the tables can't express
-            raise ValueError("quality too high for the 12-bit encoder")
-        if precision == 12 and qz.size and (
-            int(qz[:, 0].max()) - int(qz[:, 0].min()) >= 2048
-            or int(np.abs(qz[:, 0]).max()) >= 2048
-        ):
-            # K.3 DC tables stop at SSSS=11 (|diff| < 2048); the range
-            # check covers every coding order, so no DC diff can need
-            # the missing SSSS=12 symbol (r6 ADVICE)
-            raise ValueError("quality too high for the 12-bit encoder")
-        quantized.append(qz)
-
-    def as_list(d, size):  # symbol-indexed list beats dict in the hot loop
-        out = [(0, 0)] * size
-        for sym, cl in d.items():
-            out[sym] = cl
-        return out
-
-    dc_tabs = [as_list(_canonical_codes(_DC_LUMA_BITS, _DC_LUMA_VALS), 16)]
-    ac_tabs = [as_list(_canonical_codes(_AC_LUMA_BITS, _AC_LUMA_VALS), 256)]
-    if not gray:
-        dc_tabs.append(
-            as_list(_canonical_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS), 16)
-        )
-        ac_tabs.append(
-            as_list(_canonical_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS), 256)
-        )
-
-    def pack_segments(segments: list[bytes]) -> bytes:
-        pieces = []
-        for si, seg in enumerate(segments):
-            if si:
-                pieces.append(bytes([0xFF, 0xD0 + ((si - 1) % 8)]))
-            pieces.append(seg)
-        return b"".join(pieces)
-
-    scans_out: list[tuple[bytes, bytes]] = []  # (sos payload, entropy)
-    if multi_scan:
-        # one non-interleaved scan per component over its un-padded grid
-        for ci in range(len(planes)):
-            hi, vi = factors[ci]
-            t = min(ci, 1)
-            row_tiles = bw_mcu * hi
-            cwb = -(-(-(-w * hi // hmax)) // 8)
-            chb = -(-(-(-h * vi // vmax)) // 8)
-            bw = _SymbolSink()
-            segments: list[bytes] = []
-            prev_dc = 0
-            m = 0
-            for row in range(chb):
-                for col in range(cwb):
-                    if restart_interval and m and m % restart_interval == 0:
-                        segments.append(bw.pack())
-                        bw = _SymbolSink()
-                        prev_dc = 0
-                    m += 1
-                    prev_dc = _encode_block(
-                        bw,
-                        quantized[ci][row * row_tiles + col],
-                        dc_tabs[t],
-                        ac_tabs[t],
-                        prev_dc,
-                    )
-            segments.append(bw.pack())
-            sos = bytes([1, ci + 1, (t << 4) | t, 0, 63, 0])
-            scans_out.append((sos, pack_segments(segments)))
-    elif not restart_interval:
-        # fast path (r7): the whole interleaved scan's symbols are
-        # computed vectorized — bit-identical to the MCU walk below
-        # (A/B-pinned by test_jpeg), which remains for restart scans
-        segments = [
-            _encode_scan_vec(
-                quantized, factors, bw_mcu, bh_mcu, dc_tabs, ac_tabs
-            ).pack()
-        ]
-        sos = bytes([len(planes)])
-        for ci in range(len(planes)):
-            t = min(ci, 1)
-            sos += bytes([ci + 1, (t << 4) | t])
-        sos += bytes([0, 63, 0])
-        scans_out.append((sos, pack_segments(segments)))
-    else:
-        bw = _SymbolSink()
-        prev = [0] * len(planes)
-        segments = []
-        # interleaved MCU walk (T.81 A.2.3): per MCU, component ci
-        # contributes hi×vi blocks, left-to-right top-to-bottom
-        m = 0
-        for my in range(bh_mcu):
-            for mx in range(bw_mcu):
-                if restart_interval and m and m % restart_interval == 0:
-                    # byte-align, emit the segment, reset DC predictors
-                    segments.append(bw.pack())
-                    bw = _SymbolSink()
-                    prev = [0] * len(planes)
-                m += 1
-                for ci in range(len(planes)):
-                    hi, vi = factors[ci]
-                    t = min(ci, 1)
-                    row_tiles = bw_mcu * hi
-                    for by in range(vi):
-                        for bx in range(hi):
-                            tile = (my * vi + by) * row_tiles + (mx * hi + bx)
-                            prev[ci] = _encode_block(
-                                bw,
-                                quantized[ci][tile],
-                                dc_tabs[t],
-                                ac_tabs[t],
-                                prev[ci],
-                            )
-        segments.append(bw.pack())
-        sos = bytes([len(planes)])
-        for ci in range(len(planes)):
-            t = min(ci, 1)
-            sos += bytes([ci + 1, (t << 4) | t])
-        sos += bytes([0, 63, 0])
-        scans_out.append((sos, pack_segments(segments)))
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for ti, qt in enumerate(qts):
-        if precision == 12:  # Pq=1: 16-bit big-endian entries
-            out += _seg(
-                0xDB, bytes([0x10 | ti]) + qt[_ZZ].astype(">u2").tobytes()
-            )
-        else:
-            out += _seg(0xDB, bytes([ti]) + bytes(qt[_ZZ].astype(np.uint8)))
-    ncomp = 1 if gray else 3
-    sof = (
-        bytes([precision])
-        + h.to_bytes(2, "big")
-        + w.to_bytes(2, "big")
-        + bytes([ncomp])
+    ``precision=12`` writes SOF1 extended sequential with Pq=1 tables
+    (samples in [0, 4095])."""
+    planes, factors, tsel = _planes(pixels, subsampling, precision)
+    qts, quantized, (_, _, mcux, mcuy, grids) = _front_end(
+        planes, factors, tsel, quality, precision
     )
-    for ci in range(ncomp):
-        hi, vi = factors[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, min(ci, 1)])
+    h, w = planes[0].shape
     # 12-bit must not claim baseline: SOF1 extended sequential
-    out += _seg(0xC0 if precision == 8 else 0xC1, sof)
-    specs = [
-        (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
-    ]
-    if not gray:
-        specs += [
-            (0x01, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
-            (0x11, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
-        ]
-    for tc_th, bits, vals in specs:
-        out += _seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
+    out = _header(
+        _seg(0xE0, _JFIF), qts, precision, 0xC0 if precision == 8 else 0xC1,
+        h, w, [(hi, vi, t) for (hi, vi), t in zip(factors, tsel)],
+    )
     if restart_interval:
         out += _seg(0xDD, restart_interval.to_bytes(2, "big"))
-    for sos, entropy in scans_out:
-        out += _seg(0xDA, sos)
-        out += entropy
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    if multi_scan:
+        for ci, t in enumerate(tsel):
+            mcus = [[(0, blk)] for blk in _raster(grids[ci])]
+            out += _sos([(ci, t)])
+            out += _encode_scan(mcus, [quantized[ci]], [t], restart_interval)
+    else:
+        out += _sos(list(enumerate(tsel)))
+        out += _encode_scan(
+            _mcu_walk(factors, mcux, mcuy), quantized, tsel, restart_interval
+        )
+    return bytes(out + b"\xff\xd9")
 
 
 def encode_jpeg_cmyk(
@@ -666,78 +695,29 @@ def encode_jpeg_cmyk(
     cmyk = np.asarray(cmyk)
     if cmyk.ndim != 3 or cmyk.shape[2] != 4:
         raise ValueError("expected H×W×4 CMYK")
-    h, w = cmyk.shape[:2]
     px = cmyk.astype(np.float64)
     stored = (255.0 - px) if adobe else px
     if transform == 2:
         # encoder feeds 255−stored (= actual ink) into the YCbCr matrix
-        r, g, b = (255.0 - stored[..., i] for i in range(3))
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        planes = [y, cb, cr, stored[..., 3]]
+        planes = _ycc(*(255.0 - stored[..., i] for i in range(3)), 128.0)
+        planes.append(stored[..., 3])
         tsel = [0, 1, 1, 0]  # Y and K on luma tables, Cb/Cr on chroma
     else:
         planes = [stored[..., i] for i in range(4)]
         tsel = [0, 0, 0, 0]
-    qts = [_quality_scale(_QT_LUMA, quality),
-           _quality_scale(_QT_CHROMA, quality)]
-    bh_, bw_ = -(-h // 8), -(-w // 8)
-    quantized = []
-    for ci, plane in enumerate(planes):
-        qt = qts[tsel[ci]].reshape(8, 8)
-        blocks, _, _ = _blockify(_pad_to(plane, bh_ * 8, bw_ * 8) - 128.0)
-        coefs = np.einsum("ij,bjk,lk->bil", _D, blocks, _D)
-        quantized.append(
-            np.round(coefs / qt).astype(np.int32).reshape(-1, 64)[:, _ZZ]
-        )
-
-    def as_list(d, size):
-        out = [(0, 0)] * size
-        for sym, cl in d.items():
-            out[sym] = cl
-        return out
-
-    dc_tabs = [as_list(_canonical_codes(_DC_LUMA_BITS, _DC_LUMA_VALS), 16),
-               as_list(_canonical_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS), 16)]
-    ac_tabs = [as_list(_canonical_codes(_AC_LUMA_BITS, _AC_LUMA_VALS), 256),
-               as_list(_canonical_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS), 256)]
-    bw = _SymbolSink()
-    prev = [0, 0, 0, 0]
-    for m in range(bh_ * bw_):
-        for ci in range(4):
-            t = tsel[ci]
-            prev[ci] = _encode_block(
-                bw, quantized[ci][m], dc_tabs[t], ac_tabs[t], prev[ci]
-            )
-    out = bytearray(b"\xff\xd8")
-    if adobe:
-        out += _seg(
-            0xEE,
-            b"Adobe" + bytes([0, 100, 0, 0, 0, 0, transform]),
-        )
-    for ti, qt in enumerate(qts):
-        out += _seg(0xDB, bytes([ti]) + bytes(qt[_ZZ].astype(np.uint8)))
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([4])
-    for ci in range(4):
-        sof += bytes([ci + 1, 0x11, tsel[ci]])
-    out += _seg(0xC0, sof)
-    for tc_th, bits, vals in (
-        (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
-        (0x01, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
-        (0x11, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
-    ):
-        out += _seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
-    sos = bytes([4])
-    for ci in range(4):
-        t = tsel[ci]
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += bytes([0, 63, 0])
-    out += _seg(0xDA, sos)
-    out += bw.pack()
-    out += b"\xff\xd9"
-    return bytes(out)
+    factors = [(1, 1)] * 4
+    qts, quantized, (_, _, mcux, mcuy, _) = _front_end(
+        planes, factors, tsel, quality, 8
+    )
+    h, w = planes[0].shape
+    app = b"Adobe" + bytes([0, 100, 0, 0, 0, 0, transform])
+    out = _header(
+        _seg(0xEE, app) if adobe else b"", qts, 8, 0xC0, h, w,
+        [(1, 1, t) for t in tsel],
+    )
+    out += _sos(list(enumerate(tsel)))
+    out += _encode_scan(_mcu_walk(factors, mcux, mcuy), quantized, tsel, 0)
+    return bytes(out + b"\xff\xd9")
 
 
 def cmyk_to_rgb(cmyk: np.ndarray) -> np.ndarray:
@@ -750,6 +730,187 @@ def cmyk_to_rgb(cmyk: np.ndarray) -> np.ndarray:
     ) / 255.0
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
+
+def psnr(a: np.ndarray, b: np.ndarray) -> float:
+    """Peak signal-to-noise ratio in dB between two uint8 images."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    mse = np.mean((a - b) ** 2)
+    if mse == 0:
+        return float("inf")
+    return float(10.0 * np.log10(255.0 * 255.0 / mse))
+
+
+# ---- progressive encoder (SOF2): spectral selection + successive approx ----
+#
+# DC scan first, then per-component AC band scans (T.81 G.1: spectral
+# selection); with successive=True all first passes run at Al=1
+# followed by Ah=1→Al=0 DC/AC refinement scans (G.1.2.2/G.1.2.3).
+# EOB is emitted per block (EOBRUN r=0) so the standard baseline
+# Huffman tables suffice; the DECODER handles general EOBRUN (r up to
+# 14) and arbitrary conforming Ah/Al chains for files from other
+# encoders. Interleaved DC scans walk the MCU grid (A.2.3), AC scans
+# the component's own un-padded block grid (A.2.2).
+
+_AC_BANDS = ((1, 5), (6, 63))
+
+
+def encode_jpeg_progressive(
+    pixels: np.ndarray,
+    quality: int = 90,
+    successive: bool = False,
+    subsampling: str = "444",
+    precision: int = 8,
+) -> bytes:
+    """H×W×3 RGB (or grayscale) → progressive (SOF2) JFIF bytes,
+    spectral selection: one interleaved DC scan, then per-component AC
+    band scans. ``successive=True`` adds successive approximation
+    (T.81 G.1.2.2/G.1.2.3): every first pass sends coefficients at
+    Al=1 precision, followed by Ah=1→Al=0 refinement scans carrying
+    the final magnitude bit — the dominant real-web progressive
+    layout. ``subsampling`` accepts '444'/'422'/'420' like the
+    baseline encoder: the interleaved DC scans walk the MCU grid
+    (hi×vi blocks per component) and the non-interleaved AC scans walk
+    each component's OWN un-padded block grid (T.81 A.2.2). The same
+    front end as the baseline encoder ⇒ identical quantized
+    coefficients and decoded pixels for every layout."""
+    planes, factors, tsel = _planes(pixels, subsampling, precision)
+    qts, quantized, (_, _, mcux, mcuy, grids) = _front_end(
+        planes, factors, tsel, quality, precision
+    )
+    h, w = planes[0].shape
+    out = _header(
+        _seg(0xE0, _JFIF), qts, precision, 0xC2, h, w,
+        [(hi, vi, t) for (hi, vi), t in zip(factors, tsel)],
+    )
+    ncomp = len(planes)
+    # one list conversion per component, shared by every scan
+    rows = [qz.tolist() for qz in quantized]
+    al0 = 1 if successive else 0  # first-pass point transform
+    walk = [u for mcu in _mcu_walk(factors, mcux, mcuy) for u in mcu]
+    rasters = [list(_raster(g)) for g in grids]
+    all_comps = list(enumerate(tsel))
+
+    # scan 1: interleaved DC first pass (Ss=Se=0, Ah=0, Al=al0) —
+    # DPCM runs in the >>Al domain (arithmetic shift, G.1.2.1)
+    bw = _SymbolSink()
+    prev = [0] * ncomp
+    for ci, blk in walk:
+        dc = rows[ci][blk][0] >> al0
+        diff = dc - prev[ci]
+        prev[ci] = dc
+        if diff == 0:
+            s, vbits = 0, 0
+        else:
+            a = diff if diff > 0 else -diff
+            s = a.bit_length()
+            vbits = diff if diff > 0 else diff + (1 << s) - 1
+        code, length = _DC_CODES[tsel[ci]][s]
+        bw.write(code, length)
+        bw.write(vbits, s)
+    out += _sos(all_comps, 0, 0, al0)
+    out += bw.pack()
+
+    # AC band first passes: non-interleaved, one component per scan,
+    # values sent at Al=al0 precision (sign·(|v|>>Al), G.1.2.2)
+    for ci, t in all_comps:
+        ac_codes = _AC_CODES[t]
+        for ss, se in _AC_BANDS:
+            bw = _SymbolSink()
+            comp_rows = rows[ci]
+            for blk in rasters[ci]:
+                co = comp_rows[blk]
+                if al0:
+                    band = [
+                        (v >> al0) if v >= 0 else -((-v) >> al0)
+                        for v in co[ss : se + 1]
+                    ]
+                else:
+                    band = co[ss : se + 1]
+                last_nz = se - ss
+                while last_nz >= 0 and band[last_nz] == 0:
+                    last_nz -= 1
+                run = 0
+                for k in range(last_nz + 1):
+                    v = band[k]
+                    if v == 0:
+                        run += 1
+                        continue
+                    while run >= 16:
+                        bw.write(*ac_codes[0xF0])
+                        run -= 16
+                    a = v if v > 0 else -v
+                    s = a.bit_length()
+                    vbits = v if v > 0 else v + (1 << s) - 1
+                    bw.write(*ac_codes[(run << 4) | s])
+                    bw.write(vbits, s)
+                    run = 0
+                if last_nz < se - ss:
+                    bw.write(*ac_codes[0x00])  # EOB (EOBRUN=1)
+            out += _sos([(ci, t)], ss, se, al0)
+            out += bw.pack()
+
+    if successive:
+        # DC refinement (Ah=1, Al=0): one raw magnitude bit per block,
+        # interleaved MCU order — no Huffman coding (G.1.2.1)
+        bw = _SymbolSink()
+        for ci, blk in walk:
+            bw.write(rows[ci][blk][0] & 1, 1)
+        out += _sos(all_comps, 0, 0, 1 << 4)
+        out += bw.pack()
+
+        # AC refinement scans (Ah=1, Al=0): the run/correction-bit
+        # procedure of G.1.2.3 (per-block EOB so the baseline Huffman
+        # tables suffice, matching the first-pass encoder's contract)
+        for ci, t in all_comps:
+            ac_codes = _AC_CODES[t]
+            for ss, se in _AC_BANDS:
+                bw = _SymbolSink()
+                comp_rows = rows[ci]
+                for blk in rasters[ci]:
+                    co = comp_rows[blk]
+                    # eobpos: last newly-nonzero position (|v| == 1 —
+                    # invisible at Al=1, appears in this pass)
+                    eobpos = ss - 1
+                    for k in range(ss, se + 1):
+                        v = co[k]
+                        if v == 1 or v == -1:
+                            eobpos = k
+                    run = 0
+                    corr: list[int] = []  # buffered correction bits
+                    for k in range(ss, se + 1):
+                        v = co[k]
+                        a = v if v >= 0 else -v
+                        if a == 0:
+                            run += 1
+                            continue
+                        while run > 15 and k <= eobpos:
+                            bw.write(*ac_codes[0xF0])  # ZRL
+                            run -= 16
+                            for bit in corr:
+                                bw.write(bit, 1)
+                            corr = []
+                        if a > 1:  # nonzero-history: correction bit
+                            corr.append(a & 1)
+                            continue
+                        # newly nonzero (|v| == 1)
+                        bw.write(*ac_codes[(run << 4) | 1])
+                        bw.write(1 if v > 0 else 0, 1)
+                        for bit in corr:
+                            bw.write(bit, 1)
+                        corr = []
+                        run = 0
+                    if run > 0 or corr:
+                        bw.write(*ac_codes[0x00])  # EOB (run=1)
+                        for bit in corr:
+                            bw.write(bit, 1)
+                out += _sos([(ci, t)], ss, se, 1 << 4)
+                out += bw.pack()
+
+    return bytes(out + b"\xff\xd9")
+
+
+# ---- decoder ----------------------------------------------------------------
 
 _LUT_CACHE: dict = {}
 
@@ -829,21 +990,21 @@ def _color_convert(planes: list, adobe_transform: int | None) -> np.ndarray:
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline JFIF bytes → H×W×3 uint8 RGB (grayscale replicated;
-    Adobe APP14 CMYK/YCCK composited — see :func:`_color_convert`).
-    Raises NotImplementedError for non-baseline profiles."""
+    """JFIF/JPEG bytes (baseline, extended sequential, progressive) →
+    H×W×3 uint8 RGB (grayscale replicated; Adobe APP14 CMYK/YCCK
+    composited — see :func:`_color_convert`). Raises ValueError for
+    damaged files (including a declared size above 64M pixels) and
+    NotImplementedError for unsupported profiles."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qt: dict[int, np.ndarray] = {}
-    dc_tabs: dict[int, dict] = {}
-    ac_tabs: dict[int, dict] = {}
+    dc_tabs: dict[int, tuple] = {}
+    ac_tabs: dict[int, tuple] = {}
     frame = None
-    scan = None
-    entropy = None
     dri = 0
     progressive = False
-    prog_scans = []
-    seq_scans = []
+    prog_scans: list = []
+    seq_scans: list = []
     adobe_transform = None
     i = 2
     while i < len(data) - 1:
@@ -862,8 +1023,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if marker == 0xDB:  # DQT
             p = 0
             while p < len(seg):
-                if p >= len(seg):
-                    raise ValueError("truncated DQT")
                 pq, tq = seg[p] >> 4, seg[p] & 0x0F
                 if pq > 1:
                     raise ValueError("bad DQT precision")
@@ -907,10 +1066,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             nc = seg[5]
             if fh == 0 or fw == 0 or nc == 0 or len(seg) < 6 + 3 * nc:
                 raise ValueError("bad SOF geometry")
+            if fh * fw > _MAX_PIXELS:
+                raise ValueError(f"declared size {fw}x{fh} out of bounds")
             comps = []
             for c in range(nc):
                 cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
                 hi, vi = samp >> 4, samp & 0x0F
+                # factors 1 or 2 only, so every hmax/hi ratio is whole
                 if hi not in (1, 2) or vi not in (1, 2):
                     raise NotImplementedError(
                         f"sampling factors {hi}x{vi} (beyond 4:2:0)"
@@ -961,119 +1123,99 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 prog_scans.append(
                     ((scan, ss_, se_, ahal >> 4, ahal & 0x0F), entropy[0])
                 )
-                scan = None
-                entropy = None
             else:
-                # sequential: a legal baseline file MAY split its
-                # components over several scans (T.81 B.2.1) —
-                # accumulate; a single scan keeps the inlined hot loop
+                # a legal sequential file MAY split its components
+                # over several scans (T.81 B.2.1) — accumulate
                 seq_scans.append((scan, entropy, dri))
             continue
         i += ln
-    if progressive:
-        if frame is None or not prog_scans:
-            raise ValueError("missing SOF2/scan data")
-        return _decode_progressive(
-            frame, prog_scans, qt, dc_tabs, ac_tabs, adobe_transform
-        )
-    if frame is None or not seq_scans:
+    if frame is None or not (prog_scans if progressive else seq_scans):
         raise ValueError("missing SOF/SOS/entropy data")
-    if len(seq_scans) > 1 or len(seq_scans[0][0]) != len(frame[2]):
-        # several scans, or one scan covering only SOME components:
-        # the general path (its coverage check rejects partial files —
-        # the hot loop below would decode them silently wrong)
-        return _decode_multiscan_sequential(
-            frame, seq_scans, qt, dc_tabs, ac_tabs, adobe_transform
-        )
-    scan, entropy, dri = seq_scans[0]
+    if progressive:
+        coefs = _decode_progressive(frame, prog_scans, dc_tabs, ac_tabs)
+    else:
+        coefs = _decode_sequential(frame, seq_scans, qt, dc_tabs, ac_tabs)
+    return _reconstruct(frame, coefs, qt, adobe_transform)
 
-    fh, fw, comps, prec = frame
-    comp_info = {cid: (tq, hi, vi) for cid, tq, hi, vi in comps}
-    for cid, td, ta in scan:
-        if cid not in comp_info:
-            raise ValueError("scan references unknown component")
-        if td not in dc_tabs or ta not in ac_tabs:
-            raise ValueError("scan references missing huffman table")
-        if comp_info[cid][0] not in qt:
-            raise ValueError("component references missing quant table")
-    hmax = max(hi for _, _, hi, _ in comps)
-    vmax = max(vi for _, _, _, vi in comps)
-    bh, bw_ = -(-fh // (8 * vmax)), -(-fw // (8 * hmax))
-    n_mcu = bh * bw_
-    # per-MCU block layout: component ci contributes hi×vi blocks
-    # (T.81 A.2.3); precompute each scan unit's (cid, tile-index fn)
-    units = []  # (cid, td, ta, vi, hi, row_tiles)
-    for cid, td, ta in scan:
-        _tq, hi, vi = comp_info[cid]
-        units.append((cid, td, ta, hi, vi, bw_ * hi))
-    # flat Python coefficient lists per component (filled by index) —
-    # per-element numpy row writes in the hot loop are ~10× slower
-    coef_lists = {
-        cid: [0] * (n_mcu * comp_info[cid][1] * comp_info[cid][2] * 64)
-        for cid, _, _ in scan
-    }
-    prev = {cid: 0 for cid, _, _ in scan}
-    # local-variable bit reader: ONE refill per coefficient covers the
-    # Huffman code (≤16 bits) plus its value bits (≤11) — measured ~4×
-    # over per-call reader methods on the same stream
-    expected_segs = -(-n_mcu // dri) if dri else 1
-    if len(entropy) != expected_segs:
-        raise ValueError(
-            f"restart segment count {len(entropy)} != expected "
-            f"{expected_segs} (DRI={dri})"
-        )
-    seg_i = 0
-    ent = entropy[0]
-    limit = len(ent)
-    pos = acc = n = pad = 0
-    # refill floors: huffman code (≤16 bits) + value bits (DC ≤ prec-1
-    # +4=11/15, AC ≤ 10/14 per T.81 F.1.2.1.1 for 8-/12-bit samples)
-    need_dc = 27 if prec == 8 else 31
-    need_ac = 26 if prec == 8 else 30
-    for m in range(n_mcu):
-        if dri and m and m % dri == 0:
-            # restart: byte-aligned next segment, DC predictors reset
-            seg_i += 1
-            ent = entropy[seg_i]
-            limit = len(ent)
-            pos = acc = n = pad = 0
-            for _cid in prev:
-                prev[_cid] = 0
-        my, mx = divmod(m, bw_)
-        for cid, td, ta, hi, vi, row_tiles in units:
-          for by in range(vi):
-           for bx in range(hi):
-            base = ((my * vi + by) * row_tiles + (mx * hi + bx)) * 64
-            out = coef_lists[cid]
-            dsym, dlen = dc_tabs[td]
-            asym, alen = ac_tabs[ta]
-            while n < need_dc:
-                if pos < limit:
-                    acc = (acc << 8) | ent[pos]
-                    pos += 1
-                else:
-                    pad += 1
-                    if pad > 6:
-                        raise ValueError("truncated entropy data")
-                    acc = (acc << 8) | 0xFF
-                n += 8
-            idx = (acc >> (n - 16)) & 0xFFFF
-            hl = dlen[idx]
-            if hl == 0:
-                raise ValueError("invalid huffman code")
-            s = dsym[idx]
-            if s:
-                v = (acc >> (n - hl - s)) & ((1 << s) - 1)
-                diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-            else:
-                diff = 0
-            n -= hl + s
-            acc &= (1 << n) - 1
-            prev[cid] += diff
-            out[base] = prev[cid]
-            k = 1
-            while k < 64:
-                while n < need_ac:
+
+def _frame_geom(frame) -> tuple:
+    """Frame → :func:`_geometry` of its components, plus a component id
+    → frame index map."""
+    fh, fw, comps = frame[:3]
+    index = {cid: k for k, (cid, *_rest) in enumerate(comps)}
+    return _geometry(fw, fh, [(hi, vi) for _, _, hi, vi in comps]), index
+
+
+def _caps(prec: int) -> tuple[int, int]:
+    """T.81 F.1.2.1.1 / F.1.2.2.1 magnitude-category caps (DC, AC) for
+    the frame's sample precision."""
+    return (11, 10) if prec == 8 else (15, 14)
+
+
+def _decode_sequential(frame, scans, qt, dc_luts, ac_luts) -> list:
+    """Entropy-decode every scan of a sequential (SOF0/SOF1) file →
+    zigzag coefficients per frame component, (blocks, 64) int32 over
+    its MCU-padded grid. One scan may carry every component or only a
+    subset (T.81 B.2.1): an interleaved scan walks the MCU grid
+    (A.2.3), a single-component scan its component's un-padded grid,
+    one data unit per MCU (A.2.2). DRI restarts reset the scan's DC
+    predictors every ``dri`` MCUs.
+
+    The bit reader is hand-inlined local state: ONE refill per
+    coefficient covers the Huffman code (≤16 bits) plus its value bits
+    — measured ~4× over per-call reader methods on the same stream —
+    and the coefficients are filled into flat Python lists by index
+    (per-element numpy writes are ~10× slower)."""
+    comps, prec = frame[2], frame[3]
+    (_, _, mcux, mcuy, grids), index = _frame_geom(frame)
+    coefs = [[0] * (pwb * phb * 64) for pwb, phb, _, _ in grids]
+    covered = set()
+    dc_cap, ac_cap = _caps(prec)
+    # refill floors: Huffman code (≤16 bits) + value bits (≤ the cap)
+    need_dc, need_ac = 16 + dc_cap, 16 + ac_cap
+    for scan, entropy, dri in scans:
+        tabs = []
+        for cid, td, ta in scan:
+            if cid not in index:
+                raise ValueError("scan references unknown component")
+            if td not in dc_luts or ta not in ac_luts:
+                raise ValueError("scan references missing huffman table")
+            k = index[cid]
+            if comps[k][1] not in qt:
+                raise ValueError("component references missing quant table")
+            covered.add(k)
+            tabs.append((coefs[k], *dc_luts[td], *ac_luts[ta]))
+        if len(scan) > 1:
+            factors = [comps[index[cid]][2:] for cid, _, _ in scan]
+            mcus = _mcu_walk(factors, mcux, mcuy)
+            n_mcu = mcux * mcuy
+        else:
+            grid = grids[index[scan[0][0]]]
+            mcus = ([(0, blk)] for blk in _raster(grid))
+            n_mcu = grid[2] * grid[3]
+        expected_segs = -(-n_mcu // dri) if dri else 1
+        if len(entropy) != expected_segs:
+            raise ValueError(
+                f"restart segment count {len(entropy)} != expected "
+                f"{expected_segs} (DRI={dri})"
+            )
+        seg_i = 0
+        ent = entropy[0]
+        limit = len(ent)
+        pos = acc = n = pad = 0
+        prev = [0] * len(scan)
+        for m, units in enumerate(mcus):
+            if dri and m and m % dri == 0:
+                # restart: byte-aligned next segment, DC predictors reset
+                seg_i += 1
+                ent = entropy[seg_i]
+                limit = len(ent)
+                pos = acc = n = pad = 0
+                prev = [0] * len(scan)
+            for k, blk in units:
+                out, dsym, dlen, asym, alen = tabs[k]
+                base = blk * 64
+                while n < need_dc:
                     if pos < limit:
                         acc = (acc << 8) | ent[pos]
                         pos += 1
@@ -1084,50 +1226,85 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                         acc = (acc << 8) | 0xFF
                     n += 8
                 idx = (acc >> (n - 16)) & 0xFFFF
-                hl = alen[idx]
+                hl = dlen[idx]
                 if hl == 0:
                     raise ValueError("invalid huffman code")
-                rs = asym[idx]
-                if rs == 0x00:  # EOB
-                    n -= hl
-                    acc &= (1 << n) - 1
-                    break
-                run = rs >> 4
-                size = rs & 0x0F
-                if size == 0:
-                    if run != 15:
-                        raise ValueError("bad AC symbol")
-                    n -= hl
-                    acc &= (1 << n) - 1
-                    k += 16  # ZRL
-                    continue
-                k += run
-                if k > 63:
-                    raise ValueError("AC index overflow")
-                v = (acc >> (n - hl - size)) & ((1 << size) - 1)
-                out[base + k] = (
-                    v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-                )
-                n -= hl + size
+                s = dsym[idx]
+                if s > dc_cap:
+                    raise ValueError("bad DC size")
+                if s:
+                    v = (acc >> (n - hl - s)) & ((1 << s) - 1)
+                    diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+                else:
+                    diff = 0
+                n -= hl + s
                 acc &= (1 << n) - 1
-                k += 1
+                dc = prev[k] + diff
+                if not -(1 << 30) < dc < (1 << 30):
+                    raise ValueError("DC accumulator overflow")
+                prev[k] = out[base] = dc
+                kk = 1
+                while kk < 64:
+                    while n < need_ac:
+                        if pos < limit:
+                            acc = (acc << 8) | ent[pos]
+                            pos += 1
+                        else:
+                            pad += 1
+                            if pad > 6:
+                                raise ValueError("truncated entropy data")
+                            acc = (acc << 8) | 0xFF
+                        n += 8
+                    idx = (acc >> (n - 16)) & 0xFFFF
+                    hl = alen[idx]
+                    if hl == 0:
+                        raise ValueError("invalid huffman code")
+                    rs = asym[idx]
+                    if rs == 0x00:  # EOB
+                        n -= hl
+                        acc &= (1 << n) - 1
+                        break
+                    size = rs & 0x0F
+                    if size == 0:
+                        if rs != 0xF0:
+                            raise ValueError("bad AC symbol")
+                        n -= hl
+                        acc &= (1 << n) - 1
+                        kk += 16  # ZRL
+                        continue
+                    if size > ac_cap:
+                        raise ValueError("bad AC size")
+                    kk += rs >> 4
+                    if kk > 63:
+                        raise ValueError("AC index overflow")
+                    v = (acc >> (n - hl - size)) & ((1 << size) - 1)
+                    out[base + kk] = (
+                        v if v >= (1 << (size - 1)) else v - (1 << size) + 1
+                    )
+                    n -= hl + size
+                    acc &= (1 << n) - 1
+                    kk += 1
+    if len(covered) != len(comps):
+        raise ValueError("scans do not cover every frame component")
+    return [np.asarray(c, dtype=np.int32).reshape(-1, 64) for c in coefs]
+
+
+def _reconstruct(frame, coefs, qt, adobe_transform=None) -> np.ndarray:
+    """Shared decoder tail: dequant + IDCT per component over its padded
+    block grid, nearest-neighbor chroma upsample, crop, color-convert."""
+    fh, fw, comps, prec = frame
+    (hmax, vmax, _, _, grids), _ = _frame_geom(frame)
     planes = []
-    for cid, _td, _ta in scan:
-        tq, hi, vi = comp_info[cid]
-        ty, tx = bh * vi, bw_ * hi  # component tile grid
+    for (_cid, tq, hi, vi), (pwb, phb, _, _), zz in zip(comps, grids, coefs):
+        if tq not in qt:
+            raise ValueError("component references missing quant table")
         q = qt[tq].astype(np.float64)
-        zz = (
-            np.asarray(coef_lists[cid], dtype=np.int32)
-            .reshape(-1, 64)[:, _UNZZ]
-            .reshape(-1, 8, 8)
-            .astype(np.float64)
-        )
-        deq = zz * q
-        blocks = np.einsum("ji,bjk,kl->bil", _D, deq, _D)  # D.T @ B @ D
+        zz = zz[:, _UNZZ].reshape(-1, 8, 8).astype(np.float64)
+        blocks = np.einsum("ji,bjk,kl->bil", _D, zz * q, _D)  # D.T @ B @ D
         plane = (
-            blocks.reshape(ty, tx, 8, 8)
+            blocks.reshape(phb, pwb, 8, 8)
             .transpose(0, 2, 1, 3)
-            .reshape(ty * 8, tx * 8)
+            .reshape(phb * 8, pwb * 8)
         )
         fy, fx = vmax // vi, hmax // hi
         if fy > 1 or fx > 1:  # nearest-neighbor chroma upsample
@@ -1138,38 +1315,12 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             # map linearly onto [0,255] (documented downscale)
             plane *= 255.0 / 4095.0
         planes.append(plane)
-
     return _color_convert(planes, adobe_transform)
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB between two uint8 images."""
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    mse = np.mean((a - b) ** 2)
-    if mse == 0:
-        return float("inf")
-    return float(10.0 * np.log10(255.0 * 255.0 / mse))
-
-
-# ---- progressive (SOF2): spectral selection + successive approx ----------
-#
-# Encoder: DC scan first, then per-component AC band scans (T.81 G.1:
-# spectral selection); with successive=True all first passes run at
-# Al=1 followed by Ah=1→Al=0 DC/AC refinement scans (G.1.2.2/G.1.2.3).
-# EOB is emitted per block (EOBRUN r=0) so the standard baseline
-# Huffman tables suffice; the DECODER handles general EOBRUN (r up to
-# 14) and arbitrary conforming Ah/Al chains for files from other
-# encoders, and subsampled (4:2:0/4:2:2) frames: interleaved DC scans
-# walk the MCU grid, non-interleaved scans walk the component's own
-# un-padded block grid (T.81 A.2.2).
-
-_AC_BANDS = ((1, 5), (6, 63))
-
-
 class _ScanReader:
-    """Compact bit reader for progressive scans (one per scan; the
-    baseline MCU loop keeps its hand-inlined fast path)."""
+    """Compact bit reader for progressive scans (the sequential loop
+    keeps its hand-inlined fast path)."""
 
     __slots__ = ("data", "pos", "acc", "n", "pad")
 
@@ -1213,403 +1364,76 @@ class _ScanReader:
         return sym_lut[idx]
 
 
-def encode_jpeg_progressive(
-    pixels: np.ndarray,
-    quality: int = 90,
-    successive: bool = False,
-    subsampling: str = "444",
-    precision: int = 8,
-) -> bytes:
-    """H×W×3 RGB (or grayscale) → progressive (SOF2) JFIF bytes,
-    spectral selection: one interleaved DC scan, then per-component AC
-    band scans. ``successive=True`` adds successive approximation
-    (T.81 G.1.2.2/G.1.2.3): every first pass sends coefficients at
-    Al=1 precision, followed by Ah=1→Al=0 refinement scans carrying
-    the final magnitude bit — the dominant real-web progressive
-    layout. ``subsampling`` accepts '444'/'422'/'420' like the
-    baseline encoder: the interleaved DC scans walk the MCU grid
-    (hi×vi blocks per component) and the non-interleaved AC scans walk
-    each component's OWN un-padded block grid (T.81 A.2.2). Identical
-    quantized coefficients to the baseline encoder at the same quality
-    and subsampling ⇒ identical decoded pixels for every layout."""
-    if subsampling not in ("444", "420", "422"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if precision not in (8, 12):
-        raise ValueError(f"unsupported precision {precision}")
-    center = float(1 << (precision - 1))
-    pixels = np.asarray(pixels)
-    gray = pixels.ndim == 2
-    h, w = pixels.shape[:2]
-    px = pixels.astype(np.float64)
-    if gray:
-        planes = [px]
-        factors = [(1, 1)]
-    else:
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + center,
-            0.5 * r - 0.418688 * g - 0.081312 * b + center,
-        ]
-        factors = {
-            "420": [(2, 2), (1, 1), (1, 1)],
-            "422": [(2, 1), (1, 1), (1, 1)],
-            "444": [(1, 1)] * 3,
-        }[subsampling]
-    ncomp = len(planes)
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    qts = [_quality_scale(_QT_LUMA, quality)]
-    if not gray:
-        qts.append(_quality_scale(_QT_CHROMA, quality))
-    if precision == 12:
-        qts = [q * 16 for q in qts]
-    # pad/downsample each plane to its MCU-aligned tile grid, then
-    # vectorized FDCT + quantization (same prep as the baseline
-    # encoder — identical quantized coefficients by construction)
-    quantized = []
-    for ci, plane in enumerate(planes):
-        hi, vi = factors[ci]
-        if (hi, vi) != (hmax, vmax):
-            fy, fx = vmax // vi, hmax // hi
-            full = _pad_to(plane, mcuy * 8 * vmax, mcux * 8 * hmax)
-            ph, pw = full.shape
-            plane = full.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        else:
-            plane = _pad_to(plane, mcuy * 8 * vi, mcux * 8 * hi)
-        qt = qts[min(ci, len(qts) - 1)].reshape(8, 8)
-        blocks, _, _ = _blockify(plane - center)
-        coefs = np.einsum("ij,bjk,lk->bil", _D, blocks, _D)
-        qz = np.round(coefs / qt).astype(np.int32).reshape(-1, 64)[:, _ZZ]
-        if precision == 12 and np.abs(qz[:, 1:]).max(initial=0) >= 1024:
-            raise ValueError("quality too high for the 12-bit encoder")
-        if precision == 12 and qz.size and (
-            int(qz[:, 0].max()) - int(qz[:, 0].min()) >= 2048
-            or int(np.abs(qz[:, 0]).max()) >= 2048
-        ):
-            # K.3 DC tables stop at SSSS=11 — see baseline encoder note
-            raise ValueError("quality too high for the 12-bit encoder")
-        quantized.append(qz)
-
-    def as_list(d, size):
-        out = [(0, 0)] * size
-        for sym, cl in d.items():
-            out[sym] = cl
-        return out
-
-    dc_tabs = [as_list(_canonical_codes(_DC_LUMA_BITS, _DC_LUMA_VALS), 16)]
-    ac_tabs = [as_list(_canonical_codes(_AC_LUMA_BITS, _AC_LUMA_VALS), 256)]
-    if not gray:
-        dc_tabs.append(
-            as_list(_canonical_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS), 16)
-        )
-        ac_tabs.append(
-            as_list(_canonical_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS), 256)
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for ti, qt in enumerate(qts):
-        if precision == 12:  # Pq=1: 16-bit big-endian entries
-            out += _seg(
-                0xDB, bytes([0x10 | ti]) + qt[_ZZ].astype(">u2").tobytes()
-            )
-        else:
-            out += _seg(0xDB, bytes([ti]) + bytes(qt[_ZZ].astype(np.uint8)))
-    sof = (
-        bytes([precision])
-        + h.to_bytes(2, "big")
-        + w.to_bytes(2, "big")
-        + bytes([ncomp])
-    )
-    for ci in range(ncomp):
-        hi, vi = factors[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, min(ci, 1)])
-    out += _seg(0xC2, sof)  # SOF2: progressive
-    specs = [
-        (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
+def _decode_progressive(frame, scans, dc_luts, ac_luts) -> list:
+    """Progressive (SOF2) entropy decode: apply each scan's coefficients
+    into per-component zigzag arrays over the MCU-padded grid. Handles
+    spectral selection, successive approximation (T.81 G.1.2.2/G.1.2.3:
+    first passes store values << Al; refinement passes add the next
+    magnitude bit via the run/correction-bit walk), general EOBRUN, AND
+    subsampled frames: interleaved DC scans walk the MCU grid (A.2.3);
+    non-interleaved scans (all AC scans, and DC scans listing one
+    component) walk the component's own un-padded grid (A.2.2)."""
+    comps, prec = frame[2], frame[3]
+    (_, _, mcux, mcuy, grids), index = _frame_geom(frame)
+    coefs = [
+        np.zeros((pwb * phb, 64), dtype=np.int32) for pwb, phb, _, _ in grids
     ]
-    if not gray:
-        specs += [
-            (0x01, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
-            (0x11, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
-        ]
-    for tc_th, bits, vals in specs:
-        out += _seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
-
-    # one list conversion per component, shared by every scan
-    rows = [qz.tolist() for qz in quantized]
-    al0 = 1 if successive else 0  # first-pass point transform
-
-    # per-component non-interleaved block order (the AC scan order):
-    # raster over the component's own un-padded grid, mapped into the
-    # MCU-padded tile stride
-    ni_pos = []
-    for ci in range(ncomp):
-        hi, vi = factors[ci]
-        row_tiles = mcux * hi
-        cwb = -(-(-(-w * hi // hmax)) // 8)
-        chb = -(-(-(-h * vi // vmax)) // 8)
-        ni_pos.append(
-            [row * row_tiles + col for row in range(chb) for col in range(cwb)]
-        )
-
-    def interleaved_blocks():
-        """MCU walk: yields (ci, tile index) in T.81 A.2.3 order."""
-        for m in range(mcux * mcuy):
-            my, mx = divmod(m, mcux)
-            for ci in range(ncomp):
-                hi, vi = factors[ci]
-                row_tiles = mcux * hi
-                for by in range(vi):
-                    for bx in range(hi):
-                        yield ci, (my * vi + by) * row_tiles + (mx * hi + bx)
-
-    # scan 1: interleaved DC first pass (Ss=Se=0, Ah=0, Al=al0) —
-    # DPCM runs in the >>Al domain (arithmetic shift, G.1.2.1)
-    bw = _SymbolSink()
-    prev = [0] * ncomp
-    for ci, tile in interleaved_blocks():
-        t = min(ci, 1)
-        dc = rows[ci][tile][0] >> al0
-        diff = dc - prev[ci]
-        prev[ci] = dc
-        if diff == 0:
-            s, vbits = 0, 0
-        else:
-            a = diff if diff > 0 else -diff
-            s = a.bit_length()
-            vbits = diff if diff > 0 else diff + (1 << s) - 1
-        code, length = dc_tabs[t][s]
-        bw.write(code, length)
-        bw.write(vbits, s)
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        t = min(ci, 1)
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += bytes([0, 0, al0])  # Ss=0 Se=0 Ah=0 Al=al0
-    out += _seg(0xDA, sos)
-    out += bw.pack()
-
-    # AC band first passes: non-interleaved, one component per scan,
-    # values sent at Al=al0 precision (sign·(|v|>>Al), G.1.2.2)
-    for ci in range(ncomp):
-        t = min(ci, 1)
-        for ss, se in _AC_BANDS:
-            bw = _SymbolSink()
-            comp_rows = rows[ci]
-            for tile in ni_pos[ci]:
-                co = comp_rows[tile]
-                if al0:
-                    band = [
-                        (v >> al0) if v >= 0 else -((-v) >> al0)
-                        for v in co[ss : se + 1]
-                    ]
-                else:
-                    band = co[ss : se + 1]
-                last_nz = se - ss
-                while last_nz >= 0 and band[last_nz] == 0:
-                    last_nz -= 1
-                run = 0
-                for k in range(last_nz + 1):
-                    v = band[k]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run >= 16:
-                        code, length = ac_tabs[t][0xF0]
-                        bw.write(code, length)
-                        run -= 16
-                    a = v if v > 0 else -v
-                    s = a.bit_length()
-                    vbits = v if v > 0 else v + (1 << s) - 1
-                    code, length = ac_tabs[t][(run << 4) | s]
-                    bw.write(code, length)
-                    bw.write(vbits, s)
-                    run = 0
-                if last_nz < se - ss:
-                    code, length = ac_tabs[t][0x00]  # EOB (EOBRUN=1)
-                    bw.write(code, length)
-            sos = bytes([1, ci + 1, (t << 4) | t, ss, se, al0])
-            out += _seg(0xDA, sos)
-            out += bw.pack()
-
-    if successive:
-        # DC refinement (Ah=1, Al=0): one raw magnitude bit per block,
-        # interleaved MCU order — no Huffman coding (G.1.2.1)
-        bw = _SymbolSink()
-        for ci, tile in interleaved_blocks():
-            bw.write(rows[ci][tile][0] & 1, 1)
-        sos = bytes([ncomp])
-        for ci in range(ncomp):
-            t = min(ci, 1)
-            sos += bytes([ci + 1, (t << 4) | t])
-        sos += bytes([0, 0, (1 << 4) | 0])  # Ah=1 Al=0
-        out += _seg(0xDA, sos)
-        out += bw.pack()
-
-        # AC refinement scans (Ah=1, Al=0): the run/correction-bit
-        # procedure of G.1.2.3 (per-block EOB so the baseline Huffman
-        # tables suffice, matching the first-pass encoder's contract)
-        for ci in range(ncomp):
-            t = min(ci, 1)
-            for ss, se in _AC_BANDS:
-                bw = _SymbolSink()
-                comp_rows = rows[ci]
-                for tile in ni_pos[ci]:
-                    co = comp_rows[tile]
-                    # eobpos: last newly-nonzero position (|v| == 1 —
-                    # invisible at Al=1, appears in this pass)
-                    eobpos = ss - 1
-                    for k in range(ss, se + 1):
-                        v = co[k]
-                        if v == 1 or v == -1:
-                            eobpos = k
-                    run = 0
-                    corr: list[int] = []  # buffered correction bits
-                    for k in range(ss, se + 1):
-                        v = co[k]
-                        a = v if v >= 0 else -v
-                        if a == 0:
-                            run += 1
-                            continue
-                        while run > 15 and k <= eobpos:
-                            code, length = ac_tabs[t][0xF0]  # ZRL
-                            bw.write(code, length)
-                            run -= 16
-                            for bit in corr:
-                                bw.write(bit, 1)
-                            corr = []
-                        if a > 1:  # nonzero-history: correction bit
-                            corr.append(a & 1)
-                            continue
-                        # newly nonzero (|v| == 1)
-                        code, length = ac_tabs[t][(run << 4) | 1]
-                        bw.write(code, length)
-                        bw.write(1 if v > 0 else 0, 1)
-                        for bit in corr:
-                            bw.write(bit, 1)
-                        corr = []
-                        run = 0
-                    if run > 0 or corr:
-                        code, length = ac_tabs[t][0x00]  # EOB (run=1)
-                        bw.write(code, length)
-                        for bit in corr:
-                            bw.write(bit, 1)
-                sos = bytes([1, ci + 1, (t << 4) | t, ss, se, (1 << 4) | 0])
-                out += _seg(0xDA, sos)
-                out += bw.pack()
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _decode_progressive(frame, scans, qt, dc_luts, ac_luts,
-                        adobe_transform=None):
-    """Progressive reconstruction: apply each scan's coefficients into
-    per-component zigzag arrays, then the shared dequant + IDCT +
-    upsample + color path. Handles spectral selection, successive
-    approximation (T.81 G.1.2.2/G.1.2.3: first passes store values
-    << Al; refinement passes add the next magnitude bit via the
-    run/correction-bit walk), general EOBRUN, AND subsampled frames
-    (4:2:0/4:2:2): interleaved DC scans walk the MCU grid with hi×vi
-    blocks per component; non-interleaved scans (all AC scans, and DC
-    scans listing one component) walk the component's OWN un-padded
-    block grid (T.81 A.2.2), mapped into the MCU-padded storage.
-    """
-    fh, fw, comps = frame[:3]
-    comp_info = {cid: (tq, hi, vi) for cid, tq, hi, vi in comps}
-    hmax, vmax, mcux, mcuy, geom = _frame_geom(frame)
-    coefs = {
-        cid: np.zeros((geom[cid][0] * geom[cid][1], 64), dtype=np.int32)
-        for cid, *_ in comps
-    }
-
-    def ni_positions(cid):
-        return _ni_positions(geom, cid)
+    dc_cap, ac_cap = _caps(prec)
 
     for (scan, ss, se, ah, al), entropy in scans:
         for cid, _td, _ta in scan:
-            if cid not in coefs:
+            if cid not in index:
                 raise ValueError("scan references unknown component")
+        ks = [index[cid] for cid, _, _ in scan]
         br = _ScanReader(entropy)
         if ss == 0:  # DC scan
             if se != 0:
                 raise ValueError("DC scan with Se != 0")
-            interleaved = len(scan) > 1
+            if len(scan) > 1:
+                factors = [comps[k][2:] for k in ks]
+                units = (u for mcu in _mcu_walk(factors, mcux, mcuy)
+                         for u in mcu)
+            else:
+                units = ((0, blk) for blk in _raster(grids[ks[0]]))
             if ah == 0:  # first pass: DPCM in the >>Al domain
                 for _cid, td, _ta in scan:
                     if td not in dc_luts:
                         raise ValueError("scan references missing DC table")
-                prev = {cid: 0 for cid, _, _ in scan}
-
-                def dc_first(cid, td, pos):
-                    s = br.decode(dc_luts[td])
-                    if s > 11:  # 8-bit DC magnitude cap (F.1.2.1.1)
+                prev = [0] * len(scan)
+                for j, blk in units:
+                    s = br.decode(dc_luts[scan[j][1]])
+                    if s > dc_cap:
                         raise ValueError("bad DC size")
                     v = br.bits(s)
                     if s and v < (1 << (s - 1)):
                         v -= (1 << s) - 1
-                    prev[cid] += v
-                    if not (-(1 << 30) < prev[cid] < (1 << 30)):
+                    prev[j] += v
+                    dc = prev[j] << al
+                    if not -(1 << 30) < dc < (1 << 30):
                         raise ValueError("DC accumulator overflow")
-                    coefs[cid][pos, 0] = prev[cid] << al
-
-                if interleaved:
-                    for m in range(mcux * mcuy):
-                        my, mx = divmod(m, mcux)
-                        for cid, td, _ta in scan:
-                            _tq, hi, vi = comp_info[cid]
-                            pwb = geom[cid][0]
-                            for by in range(vi):
-                                for bx in range(hi):
-                                    dc_first(
-                                        cid, td,
-                                        (my * vi + by) * pwb + (mx * hi + bx),
-                                    )
-                else:
-                    cid, td, _ta = scan[0]
-                    for pos in ni_positions(cid):
-                        dc_first(cid, td, pos)
+                    coefs[ks[j]][blk, 0] = dc
             else:  # refinement: one raw bit per block per component
                 p1 = 1 << al
-                if interleaved:
-                    for m in range(mcux * mcuy):
-                        my, mx = divmod(m, mcux)
-                        for cid, _td, _ta in scan:
-                            _tq, hi, vi = comp_info[cid]
-                            pwb = geom[cid][0]
-                            for by in range(vi):
-                                for bx in range(hi):
-                                    if br.bits(1):
-                                        coefs[cid][
-                                            (my * vi + by) * pwb
-                                            + (mx * hi + bx),
-                                            0,
-                                        ] |= p1
-                else:
-                    cid = scan[0][0]
-                    for pos in ni_positions(cid):
-                        if br.bits(1):
-                            coefs[cid][pos, 0] |= p1
+                for j, blk in units:
+                    if br.bits(1):
+                        coefs[ks[j]][blk, 0] |= p1
         else:  # AC band scan: exactly one component, non-interleaved
             if len(scan) != 1:
                 raise ValueError("interleaved AC scan in progressive")
             if not (0 < ss <= se <= 63):
                 raise ValueError("bad spectral band")
-            cid, _td, ta = scan[0]
+            ta = scan[0][2]
             if ta not in ac_luts:
                 raise ValueError("scan references missing AC table")
             luts = ac_luts[ta]
+            comp = coefs[ks[0]]
             eobrun = 0
             if ah == 0:  # first pass for this band (values stored << Al)
-                for pos in ni_positions(cid):
+                for blk in _raster(grids[ks[0]]):
                     if eobrun > 0:
                         eobrun -= 1
                         continue
-                    block = coefs[cid][pos]
+                    block = comp[blk]
                     k = ss
                     while k <= se:
                         rs = br.decode(luts)
@@ -1620,6 +1444,8 @@ def _decode_progressive(frame, scans, qt, dc_luts, ac_luts,
                                 continue
                             eobrun = (1 << r) - 1 + br.bits(r)
                             break
+                        if s > ac_cap:
+                            raise ValueError("bad AC size")
                         k += r
                         if k > se:
                             raise ValueError("AC band overflow")
@@ -1631,8 +1457,8 @@ def _decode_progressive(frame, scans, qt, dc_luts, ac_luts,
             else:  # refinement pass (G.1.2.3): run/correction-bit walk
                 p1 = 1 << al
                 m1 = -p1
-                for pos in ni_positions(cid):
-                    block = coefs[cid][pos]
+                for blk in _raster(grids[ks[0]]):
+                    block = comp[blk]
                     k = ss
                     if eobrun == 0:
                         while k <= se:
@@ -1680,169 +1506,4 @@ def _decode_progressive(frame, scans, qt, dc_luts, ac_luts,
                                     block[k] += p1 if block[k] >= 0 else m1
                             k += 1
                         eobrun -= 1
-
-    return _reconstruct(frame, coefs, qt, geom, hmax, vmax,
-                        adobe_transform)
-
-
-def _frame_geom(frame):
-    """Frame → (hmax, vmax, mcux, mcuy, geom) with per-component
-    geom[cid] = (pwb, phb, cwb, chb): MCU-padded block grid for
-    storage, un-padded grid for non-interleaved scan order."""
-    fh, fw, comps = frame[:3]
-    hmax = max(hi for _, _, hi, _ in comps)
-    vmax = max(vi for _, _, _, vi in comps)
-    for _, _, hi, vi in comps:
-        if hmax % hi or vmax % vi:
-            raise NotImplementedError("fractional sampling ratios")
-    mcux, mcuy = -(-fw // (8 * hmax)), -(-fh // (8 * vmax))
-    geom = {}
-    for cid, _tq, hi, vi in comps:
-        pwb, phb = mcux * hi, mcuy * vi
-        cwb = -(-(-(-fw * hi // hmax)) // 8)
-        chb = -(-(-(-fh * vi // vmax)) // 8)
-        geom[cid] = (pwb, phb, cwb, chb)
-    return hmax, vmax, mcux, mcuy, geom
-
-
-def _ni_positions(geom, cid):
-    """Non-interleaved block order: raster over the component's own
-    (chb × cwb) grid, mapped into the padded row stride (T.81 A.2.2)."""
-    pwb, _phb, cwb, chb = geom[cid]
-    for row in range(chb):
-        base = row * pwb
-        for col in range(cwb):
-            yield base + col
-
-
-def _reconstruct(frame, coefs, qt, geom, hmax, vmax,
-                 adobe_transform=None):
-    """Shared tail: dequant + IDCT per component over the padded block
-    grid, nearest-neighbor chroma upsample, crop, color-convert."""
-    fh, fw, comps, prec = frame
-    planes = []
-    for cid, tq, hi, vi in comps:
-        if tq not in qt:
-            raise ValueError("component references missing quant table")
-        pwb, phb, _cwb, _chb = geom[cid]
-        q = qt[tq].astype(np.float64)
-        zz = coefs[cid][:, _UNZZ].reshape(-1, 8, 8).astype(np.float64)
-        blocks = np.einsum("ji,bjk,kl->bil", _D, zz * q, _D)
-        plane = (
-            blocks.reshape(phb, pwb, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(phb * 8, pwb * 8)
-        )
-        fy, fx = vmax // vi, hmax // hi
-        if fy > 1 or fx > 1:  # nearest-neighbor chroma upsample
-            plane = np.repeat(np.repeat(plane, fy, axis=0), fx, axis=1)
-        plane = plane[:fh, :fw] + float(1 << (prec - 1))
-        if prec == 12:
-            # 8-bit RGB contract: linear downscale (see decode_jpeg)
-            plane *= 255.0 / 4095.0
-        planes.append(plane)
-    return _color_convert(planes, adobe_transform)
-
-
-def _decode_multiscan_sequential(frame, scans, qt, dc_luts, ac_luts,
-                                 adobe_transform=None):
-    """Baseline-sequential file whose components arrive over SEVERAL
-    scans (T.81 B.2.1): each scan carries complete (DC+AC) blocks for
-    its component subset — interleaved subsets walk the MCU grid,
-    single-component scans walk the component's own un-padded grid.
-    DRI restarts reset the scan's DC predictors every ``dri`` MCUs
-    (one data unit == one MCU in a non-interleaved scan, A.2.4). The
-    single-scan common case keeps decode_jpeg's hand-inlined hot loop;
-    this path trades speed for completeness on a rare legal layout."""
-    fh, fw, comps = frame[:3]
-    comp_info = {cid: (tq, hi, vi) for cid, tq, hi, vi in comps}
-    hmax, vmax, mcux, mcuy, geom = _frame_geom(frame)
-    coefs = {
-        cid: np.zeros((geom[cid][0] * geom[cid][1], 64), dtype=np.int32)
-        for cid, *_ in comps
-    }
-    covered: set = set()
-    for scan, entropy, dri in scans:
-        for cid, td, ta in scan:
-            if cid not in comp_info:
-                raise ValueError("scan references unknown component")
-            if td not in dc_luts or ta not in ac_luts:
-                raise ValueError("scan references missing huffman table")
-            if comp_info[cid][0] not in qt:
-                raise ValueError(
-                    "component references missing quant table"
-                )
-            covered.add(cid)
-        # mcus[m] = list of (cid, td, ta, pos) data units of MCU m
-        if len(scan) > 1:  # interleaved subset: MCU walk
-            mcus = []
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                units = []
-                for cid, td, ta in scan:
-                    _tq, hi, vi = comp_info[cid]
-                    pwb = geom[cid][0]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            units.append(
-                                (cid, td, ta,
-                                 (my * vi + by) * pwb + (mx * hi + bx))
-                            )
-                mcus.append(units)
-        else:  # non-interleaved: one data unit per MCU, un-padded grid
-            cid, td, ta = scan[0]
-            mcus = [
-                [(cid, td, ta, pos)] for pos in _ni_positions(geom, cid)
-            ]
-        expected = -(-len(mcus) // dri) if dri else 1
-        if len(entropy) != expected:
-            raise ValueError(
-                f"restart segment count {len(entropy)} != expected "
-                f"{expected} (DRI={dri})"
-            )
-        br = _ScanReader(entropy[0])
-        seg_i = 0
-        prev = {cid: 0 for cid, _, _ in scan}
-        for m, units in enumerate(mcus):
-            if dri and m and m % dri == 0:
-                seg_i += 1
-                br = _ScanReader(entropy[seg_i])
-                for c in prev:
-                    prev[c] = 0
-            for cid, td, ta, pos in units:
-                block = coefs[cid][pos]
-                s = br.decode(dc_luts[td])
-                if s > 11:  # 8-bit DC magnitude category cap (F.1.2.1.1)
-                    raise ValueError("bad DC size")
-                v = br.bits(s)
-                if s and v < (1 << (s - 1)):
-                    v -= (1 << s) - 1
-                prev[cid] += v
-                if not (-(1 << 30) < prev[cid] < (1 << 30)):
-                    raise ValueError("DC accumulator overflow")
-                block[0] = prev[cid]
-                k = 1
-                while k < 64:
-                    rs = br.decode(ac_luts[ta])
-                    r, sz = rs >> 4, rs & 0x0F
-                    if sz == 0:
-                        if rs == 0x00:  # EOB
-                            break
-                        if r != 15:
-                            raise ValueError("bad AC symbol")
-                        k += 16  # ZRL
-                        continue
-                    if sz > 10:  # 8-bit AC magnitude cap (F.1.2.2.1)
-                        raise ValueError("bad AC size")
-                    k += r
-                    if k > 63:
-                        raise ValueError("AC index overflow")
-                    v = br.bits(sz)
-                    if v < (1 << (sz - 1)):
-                        v -= (1 << sz) - 1
-                    block[k] = v
-                    k += 1
-    if covered != set(comp_info):
-        raise ValueError("scans do not cover every frame component")
-    return _reconstruct(frame, coefs, qt, geom, hmax, vmax,
-                        adobe_transform)
+    return coefs

@@ -140,38 +140,44 @@ def _filter_rows(
 
     strategy: a fixed filter type 0-4, or 'adaptive' (libpng MSAD
     heuristic: per row, the filter minimizing the sum of absolute
-    signed-byte residuals).
+    signed-byte residuals; ties go to the lower type). Encode-side
+    filters read only raw bytes, so every row is filtered at once.
     """
     n_rows, stride = grid.shape
-    out = bytearray()
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(n_rows):
-        line = grid[y]
-        left = np.zeros(stride, dtype=np.uint8)
-        left[bpp:] = line[:-bpp] if bpp < stride else 0
-        ul = np.zeros(stride, dtype=np.uint8)
-        ul[bpp:] = prev[:-bpp] if bpp < stride else 0
-        cands = {
-            0: line,
-            1: line - left,
-            2: line - prev,
-            3: line
-            - ((left.astype(np.uint16) + prev) >> 1).astype(np.uint8),
-            4: line - _paeth_vec(left, prev, ul),
-        }
-        if strategy == "adaptive":
-            ft = min(
-                cands,
-                key=lambda t: int(
-                    np.abs(cands[t].astype(np.int8).astype(np.int16)).sum()
-                ),
+    prev = np.zeros_like(grid)
+    prev[1:] = grid[:-1]
+    left = np.zeros_like(grid)
+    left[:, bpp:] = grid[:, :-bpp]
+    ul = np.zeros_like(grid)
+    ul[:, bpp:] = prev[:, :-bpp]
+
+    def filtered(ft: int) -> np.ndarray:
+        if ft == 0:
+            return grid
+        if ft == 1:
+            return grid - left
+        if ft == 2:
+            return grid - prev
+        if ft == 3:
+            return grid - ((left.astype(np.uint16) + prev) >> 1).astype(
+                np.uint8
             )
-        else:
-            ft = int(strategy)
-        out.append(ft)
-        out += cands[ft].tobytes()
-        prev = line
-    return bytes(out)
+        if ft == 4:
+            return grid - _paeth_vec(left, prev, ul)
+        raise ValueError(f"bad filter strategy {ft}")
+
+    if strategy == "adaptive":
+        cands = np.stack([filtered(ft) for ft in range(5)])
+        cost = np.abs(cands.astype(np.int8).astype(np.int16)).sum(axis=2)
+        types = np.argmin(cost, axis=0)
+        rows = cands[types, np.arange(n_rows)]
+    else:
+        types = int(strategy)
+        rows = filtered(types)
+    out = np.empty((n_rows, stride + 1), dtype=np.uint8)
+    out[:, 0] = types
+    out[:, 1:] = rows
+    return out.tobytes()
 
 
 # ---- sample packing -------------------------------------------------------

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bisque_spark.operators.extract import (
     EXTRACT_SCHEMA,
+    IMAGES_SCHEMA,
     make_fetch_extract_batches,
     materialize_images_batches,
 )
@@ -64,10 +65,6 @@ _SEEN_SCHEMA = "url_hash bigint"
 _ORDER_SCHEMA = (
     "epoch int, host string, host_rank int, priority double, "
     "url_hash bigint, url string"
-)
-_IMAGES_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash bigint"
 )
 _LINKS_SCHEMA = "url_hash bigint, dst_hash bigint"
 
@@ -357,7 +354,7 @@ def run_crawl(
             F.explode("images").alias("img")
         ).select("img.image_id", "img.caption")
         images = images_flat.mapInPandas(
-            materialize_images_batches, schema=_IMAGES_SCHEMA
+            materialize_images_batches, schema=IMAGES_SCHEMA
         )
 
         links = extracted.select(F.explode("links").alias("url"))
@@ -493,7 +490,7 @@ def read_order(spark: SparkSession, result: dict) -> DataFrame:
 
 
 def read_images(spark: SparkSession, result: dict) -> DataFrame:
-    return spark.read.schema(_IMAGES_SCHEMA).parquet(*result["images_paths"])
+    return spark.read.schema(IMAGES_SCHEMA).parquet(*result["images_paths"])
 
 
 def read_seen(spark: SparkSession, result: dict) -> DataFrame:

@@ -17,15 +17,13 @@ World properties (FIXTURES.md §3, SURVEY.md §7.1 step 2):
   undeclared windows-1252 with smart-quote bytes (invalid utf-8 → the
   dammit fallback chain is exercised deterministically).
 - Image bytes: deterministic RGB grids; fmt 'raw' (uncompressed),
-  'png' (zlib, pure-stdlib encoder) — losslessly decodable for the
+  'png' (functions/png.py, filter type 0) — losslessly decodable for the
   PSNR gate. phash = xxhash64 of the raw pixel buffer.
 """
 
 from __future__ import annotations
 
 import re
-import struct
-import zlib
 from dataclasses import dataclass
 from functools import lru_cache
 
@@ -119,50 +117,6 @@ def image_pixels(image_id: str, w: int, h: int) -> bytes:
     return words.view(np.uint8)[:n].tobytes()
 
 
-def encode_png(pixels: bytes, w: int, h: int) -> bytes:
-    """Minimal deterministic RGB8 PNG (zlib level fixed)."""
-
-    def chunk(typ: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload))
-            + typ
-            + payload
-            + struct.pack(">I", zlib.crc32(typ + payload) & 0xFFFFFFFF)
-        )
-
-    raw = b"".join(
-        b"\x00" + pixels[y * w * 3 : (y + 1) * w * 3] for y in range(h)
-    )
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_png(data: bytes) -> tuple[bytes, int, int]:
-    """Decode the minimal PNG produced above → (pixels, w, h)."""
-    assert data[:8] == b"\x89PNG\r\n\x1a\n"
-    pos = 8
-    w = h = 0
-    idat = b""
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        typ = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        if typ == b"IHDR":
-            w, h = struct.unpack(">II", payload[:8])
-        elif typ == b"IDAT":
-            idat += payload
-        pos += 12 + length
-    raw = zlib.decompress(idat)
-    stride = w * 3 + 1
-    pixels = b"".join(raw[y * stride + 1 : (y + 1) * stride] for y in range(h))
-    return pixels, w, h
-
-
 def posterize64(pixels: bytes) -> bytes:
     """2 bits/channel (levels 0/85/170/255) → ≤64 distinct colors: the
     deterministic palette reduction for GIF rows (encode_gif is exact,
@@ -230,7 +184,14 @@ def synth_image(image_id: str) -> dict:
     if fmt == "raw":
         data = pixels
     elif fmt == "png":
-        data = encode_png(pixels, w, h)
+        import numpy as np
+
+        from bisque_spark.functions.png import encode_png
+
+        data = encode_png(
+            np.frombuffer(pixels, np.uint8).reshape(h, w, 3),
+            filter_strategy=0,
+        )
     elif fmt == "webp":
         import numpy as np
 
@@ -335,11 +296,9 @@ def decode_image(row_bytes: bytes, fmt: str) -> bytes:
     if fmt == "raw":
         return row_bytes
     if fmt == "png":
-        # full real-web decoder (all color types/depths/filters/Adam7)
-        # — a strict superset of the minimal layout encode_png emits
-        from bisque_spark.functions.png import decode_png as full_png
+        from bisque_spark.functions.png import decode_png
 
-        return full_png(bytes(row_bytes)).tobytes()
+        return decode_png(bytes(row_bytes)).tobytes()
     if fmt == "jpeg":
         from bisque_spark.functions.jpeg import decode_jpeg
 

@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pyspark.sql.functions as F
 
@@ -605,7 +607,7 @@ def main():
             out.append(f"- {'PASS' if ok else 'MISS'}: {why} (`{pat}`)")
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
         print(name, "checked")
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
 

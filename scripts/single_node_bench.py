@@ -10,10 +10,12 @@ Spark parallelism multiplies it.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, "/root/reference/src")
 
 import warnings
@@ -75,7 +77,7 @@ def bench_rdoc(n: int = 20000) -> dict:
 def bench_pages(n_pages: int = 300) -> dict:
     """Full per-page stage (decode+parse+extract) vs bisque doing the
     equivalent work on the same synthetic pages."""
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(REPO, "tests"))
     from oracle_crawler import oracle_extract
 
     from bisque_spark.operators.extract import extract_page
@@ -114,7 +116,7 @@ if __name__ == "__main__":
     r1 = bench_rdoc()
     r2 = bench_pages()
     print(json.dumps({"rdoc": r1, "pages": r2}))
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
         f.write(
             f"\n## Single-node throughput vs the reference (diagnose.py-style)\n\n"
             f"| workload | reference | engine | speedup |\n|---|---|---|---|\n"

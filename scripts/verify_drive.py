@@ -1,9 +1,10 @@
-import sys
-
-sys.path.insert(0, "/root/repo")
 import json
 import os
+import sys
 import tempfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bisque_spark.plans.crawl import read_images, read_order, run_crawl
 from bisque_spark.session import get_spark
@@ -48,7 +49,7 @@ except Exception as ex:
 # authority; crawl B re-ordered with the FULL stack on (authority +
 # sitemap seeding + trap guard), matched against the single-process
 # oracle crawler; then a sitemap-annotated refresh schedule off B.
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 import pyspark.sql.functions as F  # noqa: E402
 
 from bisque_spark.operators.linkrank import authority_from_crawl  # noqa: E402

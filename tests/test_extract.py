@@ -7,7 +7,6 @@ from bisque_spark.operators.extract import extract_page
 from bisque_spark.synth import (
     World,
     decode_image,
-    encode_png,
     image_pixels,
     page_bytes,
     page_url,
@@ -88,11 +87,11 @@ def test_image_roundtrip_lossless():
     # PNG path decodes to identical pixels (PSNR = ∞ ≥ 40dB gate)
     raw = image_pixels("img-test-1", img["w"], img["h"])
     assert pixels == raw
-    png = encode_png(raw, img["w"], img["h"])
-    from bisque_spark.synth import decode_png
+    from bisque_spark.functions.png import decode_png
 
-    dec, w, h = decode_png(png)
-    assert (dec, w, h) == (raw, img["w"], img["h"])
+    dec = decode_png(bytes(img["bytes"]))
+    assert dec.shape == (img["h"], img["w"], 3)
+    assert dec.tobytes() == raw
 
 
 def test_world_plants_all_six_formats_and_all_roundtrip():

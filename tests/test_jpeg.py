@@ -645,7 +645,7 @@ def test_vectorized_scan_matches_block_walk():
     """r7 fast path: the vectorized whole-scan symbol generation must
     be bit-identical to the per-block MCU walk (forced via a DRI the
     image never reaches), across sizes, qualities, gray, subsampling,
-    and 12-bit precision."""
+    multi-scan and 12-bit precision."""
     rng = np.random.default_rng(20260818)
     cases = []
     for _ in range(12):
@@ -657,6 +657,8 @@ def test_vectorized_scan_matches_block_walk():
                   dict(subsampling="420")))
     cases.append((rng.integers(0, 256, (17, 23, 3), dtype=np.uint8),
                   dict(subsampling="422")))
+    cases.append((rng.integers(0, 256, (21, 19, 3), dtype=np.uint8),
+                  dict(subsampling="420", multi_scan=True)))
     yy, xx = np.mgrid[0:16, 0:24]
     tw12 = (np.stack([yy * 37 + xx * 11, yy * 5 + xx * 29,
                       yy * 17 + xx * 3], -1) % 4096).astype(np.uint16)
@@ -667,3 +669,154 @@ def test_vectorized_scan_matches_block_walk():
         i = walk.find(b"\xff\xdd")
         assert i >= 0
         assert fast == walk[:i] + walk[i + 6:], kw
+
+
+# ---- byte-exact encoder pins -----------------------------------------------
+
+
+def _golden_calls():
+    """name → (encoder, pixels, kwargs) over the encoders' layout matrix:
+    subsampling × restart × multi-scan, progressive with and without
+    successive approximation, gray, 12-bit, and CMYK transform 0/2 with
+    and without the Adobe tag."""
+    from bisque_spark.functions.jpeg import (
+        encode_jpeg_cmyk,
+        encode_jpeg_progressive,
+    )
+
+    rgb = _gradient(19, 27)
+    gray = rgb[..., 1]
+    rgb12 = _smooth12()
+    cmyk = _cmyk_gradients(21, 18)
+    calls = {}
+    for sub in ("444", "420", "422"):
+        for ri in (0, 2):
+            for ms in (False, True):
+                calls[f"seq-{sub}-ri{ri}-ms{int(ms)}"] = (
+                    encode_jpeg, rgb,
+                    dict(quality=85, subsampling=sub, restart_interval=ri,
+                         multi_scan=ms),
+                )
+        for sa in (False, True):
+            calls[f"prog-{sub}-sa{int(sa)}"] = (
+                encode_jpeg_progressive, rgb,
+                dict(quality=85, subsampling=sub, successive=sa),
+            )
+    for ri in (0, 3):
+        for ms in (False, True):
+            calls[f"seq-gray-ri{ri}-ms{int(ms)}"] = (
+                encode_jpeg, gray,
+                dict(quality=90, restart_interval=ri, multi_scan=ms),
+            )
+    for sa in (False, True):
+        calls[f"prog-gray-sa{int(sa)}"] = (
+            encode_jpeg_progressive, gray, dict(quality=90, successive=sa)
+        )
+    for sub in ("444", "420"):
+        for kw in (dict(), dict(multi_scan=True), dict(restart_interval=3)):
+            name = "-".join(f"{k}{int(v)}" for k, v in kw.items())
+            calls[f"seq12-{sub}-{name}"] = (
+                encode_jpeg, rgb12,
+                dict(quality=92, precision=12, subsampling=sub, **kw),
+            )
+        calls[f"prog12-{sub}-sa1"] = (
+            encode_jpeg_progressive, rgb12,
+            dict(quality=92, precision=12, subsampling=sub, successive=True),
+        )
+    calls["seq12-gray"] = (
+        encode_jpeg, rgb12[..., 0], dict(quality=92, precision=12)
+    )
+    for transform, adobe in ((2, True), (0, True), (0, False)):
+        calls[f"cmyk-t{transform}-adobe{int(adobe)}"] = (
+            encode_jpeg_cmyk, cmyk,
+            dict(quality=90, transform=transform, adobe=adobe),
+        )
+    return calls
+
+
+def _golden_digests():
+    import hashlib
+
+    return {
+        name: hashlib.blake2b(fn(px, **kw), digest_size=16).hexdigest()
+        for name, (fn, px, kw) in _golden_calls().items()
+    }
+
+
+# blake2b-128 of each _golden_calls() output, recorded before the
+# encoders shared one front end, header writer and block walk: any
+# byte change in any layout fails here
+_GOLDEN = {
+    "seq-444-ri0-ms0": "14620e15ff763e9ce24d3deb14dfc839",
+    "seq-444-ri0-ms1": "93a0a9830f973886d47c8e49916dd4af",
+    "seq-444-ri2-ms0": "e3ce1e5438f95e43e5c5088e0b88d010",
+    "seq-444-ri2-ms1": "689f5cc2850dc365ad4fdd55d2d9ef92",
+    "prog-444-sa0": "23b80b22271db03606d1552c48aa152c",
+    "prog-444-sa1": "57b22238c170f3ce45123d6f2a7107b9",
+    "seq-420-ri0-ms0": "b6c9dba144e20d2034c02b6ee34c445d",
+    "seq-420-ri0-ms1": "492fe942bbdfb54de37e49e1a0e81232",
+    "seq-420-ri2-ms0": "9216ef94aca047d0f238f6d85a58ec13",
+    "seq-420-ri2-ms1": "616665a00e4c951d051a1e457b10ed79",
+    "prog-420-sa0": "a991c9fa1a6ce570aa1c6d40282b051e",
+    "prog-420-sa1": "3b22c8c7ae799baa8f76e47fba86ff82",
+    "seq-422-ri0-ms0": "5c66f4a34c2bfc03caef3214495a73c6",
+    "seq-422-ri0-ms1": "c0fd8c540f4ad9ac8795c3598d3efd0a",
+    "seq-422-ri2-ms0": "2c32006988ba933bb8b8b2bb9f55cfee",
+    "seq-422-ri2-ms1": "43512956bb869336b3e3065243e49d0a",
+    "prog-422-sa0": "2f1fa4a4c37965ca1f4aed0650f6f955",
+    "prog-422-sa1": "bb1dd166833014a3af4d48a38a25bf57",
+    "seq-gray-ri0-ms0": "c484e1938b33df853ffa79a10402df58",
+    "seq-gray-ri0-ms1": "c484e1938b33df853ffa79a10402df58",
+    "seq-gray-ri3-ms0": "2e2ef1b45c3240a50e325fb17cea669a",
+    "seq-gray-ri3-ms1": "2e2ef1b45c3240a50e325fb17cea669a",
+    "prog-gray-sa0": "8b0859677b226a8a1a3970da5b6a4598",
+    "prog-gray-sa1": "79a074d22c5ea0089f964963d80136a8",
+    "seq12-444-": "f1caec2417b39b6ec723f78f862483f1",
+    "seq12-444-multi_scan1": "3409faa6a96573433fbbe1e9949f0dfa",
+    "seq12-444-restart_interval3": "5481b1aab7bd7d110742fca0f11124ff",
+    "prog12-444-sa1": "e88b65835abd6441755b675dca197e6e",
+    "seq12-420-": "f8136af2fb23c6f36d47b41591219484",
+    "seq12-420-multi_scan1": "5d13ca67710284fbe1a7039e09798da3",
+    "seq12-420-restart_interval3": "7c2d83701ce4ef325c92e588f0f3b8fd",
+    "prog12-420-sa1": "ee63e23c3ec996fe0fc1b07f0191eed1",
+    "seq12-gray": "d01436ee585afd22082bfab2d7c6994d",
+    "cmyk-t2-adobe1": "1f5ff61e089d384ebd0281c4afd8427d",
+    "cmyk-t0-adobe1": "3e1fb272c0415eb78d6017a52f0b24e8",
+    "cmyk-t0-adobe0": "4b607021c28a3c0522b4f91697098a7e",
+}
+
+
+def test_encoder_outputs_match_golden_digests():
+    got = _golden_digests()
+    assert got.keys() == _GOLDEN.keys()
+    bad = sorted(k for k in got if got[k] != _GOLDEN[k])
+    assert not bad, bad
+
+
+def test_declared_size_bound_rejects_before_allocating():
+    """A valid small file whose SOF claims 65535×65535 is refused at
+    the header (the 64M-pixel bound decode_png/decode_tiff/decode_webp
+    use) — not by sizing coefficient storage from it first."""
+    import time
+
+    data = bytearray(encode_jpeg(_gradient(8, 8), quality=90))
+    sof = data.find(b"\xff\xc0")
+    data[sof + 5 : sof + 9] = (65535).to_bytes(2, "big") * 2
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="out of bounds"):
+        decode_jpeg(bytes(data))
+    assert time.perf_counter() - t0 < 1.0
+
+
+def test_single_scan_ac_size_cap():
+    """T.81 F.1.2.2.1: 8-bit AC magnitude categories stop at 10. A
+    single-scan file whose DHT maps the commonest AC code to size 11
+    (symbol 0x01 → 0x0B) is rejected like the multi-scan form."""
+    data = bytearray(encode_jpeg(_gradient(16, 16), quality=90))
+    dht = data.find(b"\xff\xc4\x00\xb5\x10")  # luma AC table
+    assert dht >= 0
+    vals = dht + 5 + 16
+    assert data[vals] == 0x01
+    data[vals] = 0x0B
+    with pytest.raises(ValueError, match="bad AC size"):
+        decode_jpeg(bytes(data))

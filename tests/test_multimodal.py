@@ -396,7 +396,8 @@ def test_orient_tag6_row_equals_upright_reencode(spark):
     from bisque_spark.functions.exif import apply_orientation, build_exif_app1
     from bisque_spark.functions.jpeg import _seg, decode_jpeg, encode_jpeg
     from bisque_spark.operators.multimodal import image_pipeline
-    from bisque_spark.synth import encode_png, image_pixels
+    from bisque_spark.functions.png import encode_png
+    from bisque_spark.synth import image_pixels
 
     w, h = 24, 16  # non-square: orientation 6 must swap dims
     sensor = np.frombuffer(image_pixels("orient-t", w, h), np.uint8).reshape(
@@ -405,10 +406,7 @@ def test_orient_tag6_row_equals_upright_reencode(spark):
     j = encode_jpeg(sensor, quality=98)
     rotated_row = j[:2] + _seg(0xE1, build_exif_app1(orientation=6)) + j[2:]
     upright_pixels = apply_orientation(decode_jpeg(j), 6)  # viewer space
-    upright_row = encode_png(
-        upright_pixels.tobytes(), upright_pixels.shape[1],
-        upright_pixels.shape[0],
-    )
+    upright_row = encode_png(upright_pixels, filter_strategy=0)
     df = spark.createDataFrame(
         [
             ("tag6", bytearray(rotated_row), w, h, "jpeg"),

@@ -10,11 +10,8 @@ audit. Explain only: nothing heavy executes.
 
 import contextlib
 import io
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 

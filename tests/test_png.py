@@ -116,6 +116,52 @@ def test_every_filter_strategy_roundtrips(strategy):
     assert (decode_png(data) == img.astype(np.uint8)).all()
 
 
+def _filter_rows_loop(grid, bpp, strategy):
+    """Per-row reference for the whole-grid _filter_rows: spec 9.2
+    filters on one scanline at a time, MSAD choice per row."""
+    from bisque_spark.functions.png import _paeth_vec
+
+    out = bytearray()
+    prev = np.zeros(grid.shape[1], dtype=np.uint8)
+    for line in grid:
+        left = np.zeros_like(line)
+        left[bpp:] = line[:-bpp] if bpp < len(line) else 0
+        ul = np.zeros_like(line)
+        ul[bpp:] = prev[:-bpp] if bpp < len(line) else 0
+        cands = [
+            line,
+            line - left,
+            line - prev,
+            line - ((left.astype(np.uint16) + prev) >> 1).astype(np.uint8),
+            line - _paeth_vec(left, prev, ul),
+        ]
+        if strategy == "adaptive":
+            costs = [
+                int(np.abs(c.astype(np.int8).astype(np.int16)).sum())
+                for c in cands
+            ]
+            ft = costs.index(min(costs))
+        else:
+            ft = strategy
+        out.append(ft)
+        out += cands[ft].tobytes()
+        prev = line
+    return bytes(out)
+
+
+@pytest.mark.parametrize("strategy", [0, 1, 2, 3, 4, "adaptive"])
+def test_filter_rows_matches_row_loop(strategy):
+    rng = np.random.default_rng(11)
+    for bpp in (1, 2, 3, 4, 6, 8):
+        for rows, stride in ((1, 1), (3, bpp), (7, 2 * bpp + 1), (12, 40)):
+            grid = rng.integers(0, 256, (rows, stride), dtype=np.uint8)
+            if rows > 3:  # smooth rows so every filter wins somewhere
+                grid = np.cumsum(grid // 32, axis=1).astype(np.uint8)
+            assert _filter_rows(grid, bpp, strategy) == _filter_rows_loop(
+                grid, bpp, strategy
+            ), (bpp, rows, stride)
+
+
 def test_adaptive_heuristic_mixes_filters():
     # a natural gradient rewards Sub/Up/Paeth over None on some rows
     yy, xx = np.mgrid[0:24, 0:24]
@@ -179,13 +225,23 @@ def test_handbuilt_bytelevel_fixture():
 
 
 def test_minimal_synth_png_differential():
-    from bisque_spark.synth import decode_png as minimal_decode
-    from bisque_spark.synth import encode_png as minimal_encode
+    """The synthetic world's png rows are this codec's filter-type-0
+    output and decode back to the exact pixel grid."""
+    from bisque_spark.synth import image_pixels, synth_image
 
-    px = RNG.integers(0, 256, (11, 7, 3), dtype=np.uint8)
-    data = minimal_encode(px.tobytes(), 7, 11)
-    assert decode_png(data).tobytes() == minimal_decode(data)[0]
-    assert (decode_png(data) == px).all()
+    found = 0
+    for i in range(40):
+        iid = f"png-hunt-{i}"
+        meta = synth_image(iid)
+        if meta["fmt"] != "png":
+            continue
+        found += 1
+        px = np.frombuffer(
+            image_pixels(iid, meta["w"], meta["h"]), dtype=np.uint8
+        ).reshape(meta["h"], meta["w"], 3)
+        assert meta["bytes"] == encode_png(px, filter_strategy=0)
+        assert (decode_png(meta["bytes"]) == px).all()
+    assert found >= 5
 
 
 def test_16bit_container_of_8bit_content_is_lossless():
