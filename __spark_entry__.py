@@ -34,7 +34,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf0.001 — exercises JVM text operators, Arrow UDFs, joins."""
     from bisque_spark.functions.text import (
         fingerprint_udf,
-        langid_udf,
+        langid_col,
         quality_cols,
     )
 
@@ -46,7 +46,7 @@ def entry(spark: SparkSession) -> DataFrame:
         q["n_tokens"].alias("n_tokens"),
         F.round(q["punct_ratio"], 6).alias("punct_ratio"),
         F.round(q["stopword_ratio"], 6).alias("stopword_ratio"),
-        langid_udf(F.col("text")).alias("lang_pred"),
+        langid_col("text").alias("lang_pred"),
         fingerprint_udf(F.col("text")).alias("fingerprint"),
     )
     return enriched.orderBy("doc_id")
@@ -268,11 +268,11 @@ def _q_lsh_embedding_pairs(spark, sf_dir):
 
 
 def _q_doc_langid(spark, sf_dir):
-    from bisque_spark.functions.text import langid_udf
+    from bisque_spark.functions.text import langid_col
 
     return (
         _load(spark, sf_dir, "documents")
-        .select("doc_id", langid_udf(F.col("text")).alias("lang_pred"))
+        .select("doc_id", langid_col("text").alias("lang_pred"))
     )
 
 
@@ -467,8 +467,8 @@ def _q_crawl_refresh_schedule(spark, sf_dir):
 
 
 def _q_crawl_epoch(spark, sf_dir):
-    """One frontier epoch — robots broadcast-⋈ (exists/startswith
-    prefix match) → two-phase salted politeness window rank — the
+    """One frontier epoch — robots broadcast-⋈ (RFC 9309 longest-match
+    rules) → two-phase salted politeness window rank — the
     north-star operator chain, re-shaped over the events parquet so the
     WHOLE chain is DuckDB hash-verified (VERDICT r02 Next-round #2a;
     round 2 built the frontier from synth, invisible to the oracle).
@@ -477,10 +477,11 @@ def _q_crawl_epoch(spark, sf_dir):
     globally unique (-event_id), so politeness_select's url_hash
     tie-break never fires and the oracle can rank by priority alone —
     the scheduled set and every host_rank are tie-free. Robots dim:
-    every 7th host disallows the '/p1' path prefix; crawl_delay cycles
+    every 7th host's robots.txt says ``Disallow: /p1``; crawl_delay cycles
     1–4 s, so per-host budgets exercise all of {8,4,2,2}. The synth-web
     variant of this chain stays pinned by tests/test_crawl.py's
     single-process oracle crawler."""
+    from bisque_spark.functions.robots import parse_robots_txt
     from bisque_spark.operators.schedule import apply_robots, politeness_select
 
     ev = _load(spark, sf_dir, "events")
@@ -500,12 +501,16 @@ def _q_crawl_epoch(spark, sf_dir):
     ).withColumn("url_hash", F.xxhash64("url"))
     hosts = frontier.select("host").distinct()
     hnum = F.substring("host", 2, 3).cast("int")
+    [p1] = parse_robots_txt("User-agent: *\nDisallow: /p1\n")["rules"]
     robots = hosts.select(
         "host",
         (F.lit(1.0) + (hnum % 4)).alias("crawl_delay"),
-        F.when(hnum % 7 == 0, F.array(F.lit("/p1")))
-        .otherwise(F.array().cast("array<string>"))
-        .alias("disallow"),
+        F.when(
+            hnum % 7 == 0,
+            F.array(F.struct(*(F.lit(v).alias(k) for k, v in p1.items()))),
+        )
+        .otherwise(F.array().cast("array<struct<re:string,len:int,allow:int>>"))
+        .alias("rules"),
     )
     frontier = apply_robots(frontier, robots)
     scheduled, _ = politeness_select(frontier, budget_base=8)

@@ -1131,6 +1131,19 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         i += ln
     if frame is None or not (prog_scans if progressive else seq_scans):
         raise ValueError("missing SOF/SOS/entropy data")
+    # the first scan to cover a data unit spends at least one Huffman
+    # bit on it, so the entropy bytes bound the units the scans can
+    # fill — checked before any coefficient store is sized from the SOF
+    (*_, grids), _ = _frame_geom(frame)
+    units = sum(cwb * chb for _, _, cwb, chb in grids)
+    if progressive:
+        n_bytes = sum(len(ent) for _, ent in prog_scans)
+    else:
+        n_bytes = sum(len(e) for _, ents, _ in seq_scans for e in ents)
+    if units > 8 * n_bytes:
+        raise ValueError(
+            f"{units} data units but only {n_bytes} entropy-coded bytes"
+        )
     if progressive:
         coefs = _decode_progressive(frame, prog_scans, dc_tabs, ac_tabs)
     else:

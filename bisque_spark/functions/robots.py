@@ -1,92 +1,31 @@
 """robots.txt parsing → the per-host politeness rule table.
 
 North-star: "crawl-delay from robots.txt". The reference has no robots
-handling; semantics here follow the de-facto standard (RFC 9309 +
-common Crawl-delay extension): user-agent groups, most-specific agent
-match (exact product token beats ``*``), ``Disallow`` path prefixes
-(empty Disallow = allow all), ``Crawl-delay`` seconds.
+handling; semantics follow RFC 9309 plus the common Crawl-delay
+extension: user-agent groups, most-specific agent match (exact product
+token beats ``*``), ``Allow``/``Disallow`` rules with ``*`` wildcards
+and the ``$`` end anchor (empty Disallow = allow all), longest match
+wins with allow breaking ties (§2.2.2), ``Crawl-delay`` seconds, and
+the global ``Sitemap:`` lines.
 
 ``fetch_robots`` is the Arrow-batched stage turning a host list into
-the robots table consumed by ``operators/schedule.apply_robots`` —
-in the sandbox the robots.txt body comes from the deterministic synth
-(``synth_robots_txt``), which is generated so it parses back to exactly
+the robots table consumed by ``operators/schedule.apply_robots`` (the
+one matcher) and ``functions/sitemap.sitemap_seed_locs`` — in the
+sandbox the robots.txt body comes from the deterministic synth
+(``synth_robots_txt``), whose verdicts equal the prefix rules of
 ``synth.robots_rows`` (pinned by tests).
 """
 
 from __future__ import annotations
 
+import re as _re
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from bisque_spark.hashing import xxh64
-from bisque_spark.synth import World, robots_rows
-
-
-def parse_robots_txt(text: str, user_agent: str = "bisque") -> dict:
-    """→ {"crawl_delay": float, "disallow": [path-prefixes]}."""
-    groups: list[tuple[list[str], dict]] = []
-    agents: list[str] = []
-    current: dict | None = None
-    for raw_line in text.splitlines():
-        line = raw_line.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        key = key.strip().lower()
-        value = value.strip()
-        if key == "user-agent":
-            if current is not None and current["_rules_seen"]:
-                groups.append((agents, current))
-                agents = []
-                current = None
-            if current is None:
-                current = {"crawl_delay": None, "disallow": [], "_rules_seen": False}
-            agents.append(value.lower())
-        elif current is not None:
-            if key == "disallow":
-                current["_rules_seen"] = True
-                if value:
-                    current["disallow"].append(value)
-            elif key == "crawl-delay":
-                current["_rules_seen"] = True
-                try:
-                    current["crawl_delay"] = float(value)
-                except ValueError:
-                    pass
-            elif key == "allow":
-                current["_rules_seen"] = True  # recognized, not modeled
-    if current is not None:
-        groups.append((agents, current))
-
-    ua = user_agent.lower()
-    chosen = None
-    for agent_list, rules in groups:
-        if any(a != "*" and a in ua for a in agent_list):
-            chosen = rules
-            break
-    if chosen is None:
-        for agent_list, rules in groups:
-            if "*" in agent_list:
-                chosen = rules
-                break
-    if chosen is None:
-        return {"crawl_delay": 1.0, "disallow": []}
-    return {
-        "crawl_delay": chosen["crawl_delay"] if chosen["crawl_delay"] is not None else 1.0,
-        "disallow": list(chosen["disallow"]),
-    }
-
-
-# ---- full RFC 9309 rule matching (allow + wildcards + $, longest wins) -------
-#
-# The crawl loop keeps the simpler prefix-disallow contract (pinned by
-# the oracle crawler); this is the full-fidelity variant for real
-# robots.txt files: Allow lines, '*' wildcards, '$' end anchor,
-# longest-rule-wins with allow breaking ties (RFC 9309 §2.2.2).
-
-import re as _re
+from bisque_spark.synth import World
 
 
 def _compile_rule_re(path: str) -> str:
@@ -98,15 +37,20 @@ def _compile_rule_re(path: str) -> str:
     return pat + "$" if anchored else pat
 
 
-def parse_robots_rules(text: str, user_agent: str = "bisque") -> dict:
-    """→ {"crawl_delay": float, "rules": [{"re", "len", "allow"}]}.
+def parse_robots_txt(text: str, user_agent: str = "bisque") -> dict:
+    """→ {"crawl_delay": float, "rules": [{"re", "len", "allow"}],
+    "sitemaps": [urls]}.
 
-    Same user-agent group selection as parse_robots_txt; rules keep
-    BOTH Allow and Disallow lines with their specificity (octet length
-    of the pattern, the RFC's longest-match key)."""
+    ``rules`` keeps both Allow and Disallow lines of the chosen group
+    with their specificity (octet length of the pattern, the RFC's
+    longest-match key). ``sitemaps`` are the global `Sitemap:` lines
+    (RFC 9309 §2.3 "other records", the sitemaps.org extension), not
+    scoped to a group, in file order; the caller applies its own
+    location policy (functions/sitemap.py rejects cross-host ones)."""
     groups: list[tuple[list[str], dict]] = []
     agents: list[str] = []
     current: dict | None = None
+    sitemaps: list[str] = []
     for raw_line in text.splitlines():
         line = raw_line.split("#", 1)[0].strip()
         if not line or ":" not in line:
@@ -114,7 +58,10 @@ def parse_robots_rules(text: str, user_agent: str = "bisque") -> dict:
         key, _, value = line.partition(":")
         key = key.strip().lower()
         value = value.strip()
-        if key == "user-agent":
+        if key == "sitemap":
+            if value:
+                sitemaps.append(value)
+        elif key == "user-agent":
             if current is not None and current["_rules_seen"]:
                 groups.append((agents, current))
                 agents = []
@@ -125,7 +72,7 @@ def parse_robots_rules(text: str, user_agent: str = "bisque") -> dict:
         elif current is not None:
             if key in ("disallow", "allow"):
                 current["_rules_seen"] = True
-                if value:
+                if value:  # empty Disallow = allow all
                     current["rules"].append(
                         {
                             "re": _compile_rule_re(value),
@@ -154,19 +101,20 @@ def parse_robots_rules(text: str, user_agent: str = "bisque") -> dict:
                 chosen = rules
                 break
     if chosen is None:
-        return {"crawl_delay": 1.0, "rules": []}
+        return {"crawl_delay": 1.0, "rules": [], "sitemaps": sitemaps}
     return {
         "crawl_delay": chosen["crawl_delay"]
         if chosen["crawl_delay"] is not None
         else 1.0,
         "rules": list(chosen["rules"]),
+        "sitemaps": sitemaps,
     }
 
 
 def robots_allowed_py(rules: list[dict], path: str) -> bool:
-    """Python twin of the JVM matcher (oracle for tests): longest
-    matching rule wins; at equal length allow beats disallow; no match
-    → allowed."""
+    """Python twin of the JVM matcher ``operators/schedule.apply_robots``
+    (oracle for tests): longest matching rule wins; at equal length
+    allow beats disallow; no match → allowed."""
     best = None  # (len, allow)
     for r in rules:
         if _re.match(r["re"], path):
@@ -176,68 +124,15 @@ def robots_allowed_py(rules: list[dict], path: str) -> bool:
     return best is None or best[1] == 1
 
 
-def apply_robots_rules(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """Full-RFC allow/disallow evaluation, entirely JVM-side: the
-    per-host rule array is tiny, so the longest-match argmax is one
-    ``array_max`` over structs (len, allow) — lexicographic struct
-    ordering makes allow win length ties for free. No Python in the
-    plan; robots broadcast like apply_robots.
-
-    robots schema: host, crawl_delay, rules array<struct<re:string,
-    len:int, allow:int>>.
-    """
-    import pyspark.sql.functions as F
-
-    path = F.parse_url(F.col("url"), F.lit("PATH"))
-    joined = frontier.join(F.broadcast(robots), on="host", how="left")
-    matches = F.filter(
-        F.transform(
-            F.col("rules"),
-            lambda r: F.when(
-                F.regexp_like(path, r["re"]),  # rlike() only takes a
-                # literal pattern; regexp_like accepts a Column
-                F.struct(r["len"].alias("len"), r["allow"].alias("allow")),
-            ),
-        ),
-        lambda s: s.isNotNull(),
-    )
-    best = F.array_max(matches)
-    allowed = (
-        F.col("rules").isNull()
-        | best.isNull()
-        | (best.getField("allow") == 1)
-    )
-    return joined.where(allowed).withColumn(
-        "crawl_delay", F.coalesce(F.col("crawl_delay"), F.lit(1.0))
-    ).drop("rules")
-
-
-def parse_robots_sitemaps(text: str) -> list[str]:
-    """`Sitemap:` directives (RFC 9309 §2.3 "other records" / the
-    sitemaps.org robots.txt extension): GLOBAL lines, not scoped to a
-    user-agent group, absolute URLs, any number of them. Returned in
-    file order; the caller applies its own location policy (the engine
-    rejects cross-host advertisements conservatively —
-    functions/sitemap.py)."""
-    out = []
-    for raw_line in text.splitlines():
-        line = raw_line.split("#", 1)[0].strip()
-        if ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        if key.strip().lower() == "sitemap" and value.strip():
-            out.append(value.strip())
-    return out
-
-
 def synth_robots_txt(world: World, host: str) -> str:
-    """Deterministic robots.txt body whose parse equals the
-    ``robots_rows`` entry for this host (same hash-derived rules).
+    """Deterministic robots.txt body whose parse matches the
+    ``robots_rows`` entry for this host (same hash-derived crawl delay,
+    one Disallow rule per disallowed prefix).
     Sitemap hosts advertise their sitemap via the `Sitemap:` line
     (how real crawlers discover them); a deterministic third of hosts
     ALSO advertise a cross-host sitemap the engine's same-host policy
-    must reject (group parsers ignore the global `Sitemap:` key, so
-    crawl_delay/disallow round-trips are unchanged)."""
+    must reject (`Sitemap:` is a global line, so it leaves the group's
+    crawl delay and rules unchanged)."""
     from bisque_spark.synth import host_has_sitemap
 
     h = xxh64(("robots:" + host).encode())
@@ -258,19 +153,23 @@ def synth_robots_txt(world: World, host: str) -> str:
 
 
 def fetch_robots(hosts: DataFrame, world: World) -> DataFrame:
-    """host rows → robots table (host, crawl_delay, disallow) by
-    fetching+parsing robots.txt per Arrow batch."""
+    """host rows → robots table (host, crawl_delay, rules, sitemaps) by
+    fetching+parsing robots.txt per Arrow batch — the crawl's one
+    robots.txt fetch."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"host": [], "crawl_delay": [], "disallow": []}
-            for host in pdf["host"]:
-                rules = parse_robots_txt(synth_robots_txt(world, host))
-                out["host"].append(host)
-                out["crawl_delay"].append(rules["crawl_delay"])
-                out["disallow"].append(rules["disallow"])
-            yield pd.DataFrame(out)
+            rows = [
+                {"host": h, **parse_robots_txt(synth_robots_txt(world, h))}
+                for h in pdf["host"]
+            ]
+            yield pd.DataFrame(
+                rows, columns=["host", "crawl_delay", "rules", "sitemaps"]
+            )
 
     return hosts.select("host").distinct().mapInPandas(
-        run, schema="host string, crawl_delay double, disallow array<string>"
+        run,
+        schema="host string, crawl_delay double, "
+        "rules array<struct<re:string, len:int, allow:int>>, "
+        "sitemaps array<string>",
     )

@@ -278,54 +278,29 @@ def fetch_sitemap_docs(urls: DataFrame, world) -> DataFrame:
     )
 
 
-def discover_sitemap_urls(hosts: DataFrame, world) -> DataFrame:
-    """hosts(host) → (host, url): sitemap locations advertised by each
-    host's robots.txt `Sitemap:` lines (the discovery mechanism real
-    crawlers use — sitemaps.org's robots.txt extension), CROSS-HOST
-    advertisements dropped (conservative policy: the spec's
-    cross-submission escape hatch is not honored, so a host can never
-    inject another host's sitemap into the frontier). One Arrow fetch
-    batch per partition; on a real cluster the robots body would come
-    from the same cache the politeness stage fills."""
-    from bisque_spark.functions.robots import (
-        parse_robots_sitemaps,
-        synth_robots_txt,
-    )
-    from bisque_spark.functions.urlnorm import host_col
+def sitemap_seed_locs(robots: DataFrame, world) -> DataFrame:
+    """robots table (host, sitemaps — functions/robots.fetch_robots) →
+    (host, loc, lastmod, changefreq, priority): every urlset entry
+    across each host's sitemap tree, discovered via its robots.txt
+    `Sitemap:` lines (the discovery mechanism real crawlers use —
+    sitemaps.org's robots.txt extension) without fetching robots.txt a
+    second time. CROSS-HOST advertisements are dropped (conservative
+    policy: the spec's cross-submission escape hatch is not honored,
+    so a host can never inject another host's sitemap into the
+    frontier). Index docs are expanded exactly one level (the spec's
+    layout); child sitemap locs obey the same-host rule before they
+    are fetched. Raw locs — the caller canonicalizes and re-applies
+    same-host on the canonical form.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {"host": [], "url": []}
-            for host in pdf["host"]:
-                for u in parse_robots_sitemaps(synth_robots_txt(world, host)):
-                    out["host"].append(host)
-                    out["url"].append(u)
-            yield pd.DataFrame(out)
-
-    raw = hosts.select("host").distinct().mapInPandas(
-        run, schema="host string, url string"
-    )
-    return raw.where(host_col("url") == F.col("host"))
-
-
-def sitemap_seed_locs(hosts: DataFrame, world) -> DataFrame:
-    """hosts(host) → (host, loc, lastmod): every urlset entry across
-    each host's sitemap tree, discovered via robots.txt `Sitemap:`
-    lines (:func:`discover_sitemap_urls`). Index docs are expanded
-    exactly one level (the spec's layout); child sitemap locs obey the
-    same-host rule before they are fetched. Raw locs — the caller
-    canonicalizes and re-applies same-host on the canonical form.
-
-    Scale shape: three Arrow fetch stages (robots discovery,
-    top-level, children) and a JVM-only parse; the doc table is pinned
-    because the index/urlset split consumes it twice (exchange-reuse
-    gotcha in CLAUDE.md)."""
+    Scale shape: two Arrow fetch stages (top-level, children) and a
+    JVM-only parse; the doc table is pinned because the index/urlset
+    split consumes it twice (exchange-reuse gotcha in CLAUDE.md)."""
     from bisque_spark.functions.urlnorm import host_col
     from bisque_spark.util import pin
 
-    top = discover_sitemap_urls(hosts, world)
+    top = robots.select("host", F.explode("sitemaps").alias("url")).where(
+        host_col("url") == F.col("host")
+    )
     docs = pin(fetch_sitemap_docs(top, world).where(F.col("body").isNotNull()))
     is_idx = sitemap_is_index_col(F.col("body"))
     child_urls = (

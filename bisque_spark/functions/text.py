@@ -147,11 +147,6 @@ def langid_col(text: str | Column) -> Column:
     return out.otherwise(F.lit("und"))
 
 
-def langid_udf(col):
-    """Back-compat alias: language ID is now a pure Column expression."""
-    return langid_col(col)
-
-
 # ---- fingerprint / simhash (Arrow-batched) -----------------------------------
 
 

@@ -13,7 +13,8 @@ Deterministic contract shared with the oracle:
   a window rank, SURVEY.md §7.3 hard-part 2)
 - selection order inside a host: priority desc, url_hash asc
 - URLs beyond the budget stay in the frontier for the next epoch
-- disallowed paths (prefix match on robots.disallow) are dropped
+- paths robots.txt disallows (RFC 9309 longest match over robots.rules)
+  are dropped
 
 Skew design: ranking partitions by ``host``; a Zipf head host would
 funnel its whole frontier slice through one task. The two-phase rank
@@ -83,28 +84,39 @@ def with_frontier_columns(
 def apply_robots(
     frontier: DataFrame, robots: DataFrame, broadcast: bool = True
 ) -> DataFrame:
-    """Drop URLs whose path is under a disallowed prefix for the host.
+    """Drop URLs whose path robots.txt disallows for the host.
 
-    robots(host, crawl_delay, disallow array<string>) is usually a
-    small dim table → broadcast hash join; the prefix match is a
-    JVM-side ``exists(startswith)`` over the (tiny) disallow array —
-    no Python. At web scale (10^8 hosts the robots table no longer
-    fits an executor) pass ``broadcast=False``: the join becomes a
+    robots(host, crawl_delay, rules array<struct<re:string, len:int,
+    allow:int>>) — functions/robots.parse_robots_txt's rules — is
+    usually a small dim table → broadcast hash join. RFC 9309 §2.2.2
+    entirely JVM-side: the per-host rule array is tiny, so the
+    longest-match argmax is one ``array_max`` over structs (len,
+    allow) — lexicographic struct ordering makes allow win length ties
+    for free; no matching rule (or no robots row, or a NULL path) →
+    allowed. At web scale (10^8 hosts the robots table no longer fits
+    an executor) pass ``broadcast=False``: the join becomes a
     host-keyed shuffle co-partitioned with the politeness rank's own
     host shuffle, so the extra exchange is shared, not added.
     """
     path = F.parse_url(F.col("url"), F.lit("PATH"))
-    rb = F.broadcast(robots) if broadcast else robots
-    joined = frontier.join(rb, on="host", how="left")
-    allowed = joined.where(
-        F.col("disallow").isNull()
-        | ~F.exists(
-            F.col("disallow"), lambda p: path.startswith(p)
-        )
+    rb = robots.select("host", "crawl_delay", "rules")
+    joined = frontier.join(F.broadcast(rb) if broadcast else rb, "host", "left")
+    matches = F.filter(
+        F.transform(
+            F.col("rules"),
+            lambda r: F.when(
+                F.regexp_like(path, r["re"]),  # rlike() only takes a
+                # literal pattern; regexp_like accepts a Column
+                F.struct(r["len"].alias("len"), r["allow"].alias("allow")),
+            ),
+        ),
+        lambda s: s.isNotNull(),
     )
+    best = F.array_max(matches)
+    allowed = joined.where(best.isNull() | (best.getField("allow") == 1))
     return allowed.withColumn(
         "crawl_delay", F.coalesce(F.col("crawl_delay"), F.lit(1.0))
-    ).drop("disallow")
+    ).drop("rules")
 
 
 def politeness_select(

@@ -239,9 +239,10 @@ def run_crawl(
     from bisque_spark.functions.robots import fetch_robots
     from bisque_spark.functions.urlnorm import with_canonical
 
-    # robots table via the fetch+parse stage (functions/robots.py);
-    # round-trips to exactly robots_rows(world) — pinned by
-    # tests/test_robots.py — so the oracle contract is unchanged
+    # robots table via the one fetch+parse stage (functions/robots.py);
+    # its verdicts equal robots_rows(world)'s prefix rules — pinned by
+    # tests/test_robots.py — so the oracle contract is unchanged, and
+    # its sitemaps column seeds the frontier (no second robots fetch)
     hosts = spark.createDataFrame(
         [(world.host(i),) for i in range(world.n_hosts)], "host string"
     )
@@ -275,7 +276,7 @@ def run_crawl(
             from bisque_spark.functions.sitemap import sitemap_seed_locs
             from bisque_spark.functions.urlnorm import host_col
 
-            sm = sitemap_seed_locs(hosts, world)
+            sm = sitemap_seed_locs(robots, world)
             smc = with_canonical(sm, url_col="loc", out_col="url").where(
                 F.col("url").isNotNull()
                 & (host_col("url") == F.col("host"))
@@ -463,7 +464,6 @@ def run_crawl(
             "rows_scheduled": rows_scheduled,
             "rows_fetched": rows_fetched,
             "rows_failed": rows_scheduled - rows_fetched,
-            "bloom_version": epoch + 1,
         }
         with open(os.path.join(d, "lineage.json"), "w") as f:
             json.dump(lineage, f)

@@ -59,6 +59,7 @@ CHECKS = {
     "crawl_epoch_schedule": [
         ("BroadcastHashJoin", "robots join broadcast"),
         ("Window", "politeness rank windows"),
+        ("!EvalPython", "RFC 9309 robots matcher is JVM-only (no Python)"),
     ],
     "doc_bpe_tokens": [
         ("!EvalPython", "BPE-ish token count is a JVM regex expression"),

@@ -99,12 +99,13 @@ seen_t = (
             F.col("epoch").cast("int").alias("fetched_epoch"))
     .dropDuplicates(["url_hash"])
 )
+from bisque_spark.functions.robots import fetch_robots  # noqa: E402
 from bisque_spark.functions.sitemap import sitemap_seed_locs  # noqa: E402
 
 hosts_df = spark.createDataFrame(
     [(world.host(i),) for i in range(world.n_hosts)], "host string"
 )
-entries = sitemap_seed_locs(hosts_df, world)
+entries = sitemap_seed_locs(fetch_robots(hosts_df, world), world)
 ann = annotate_seen_from_sitemap(seen_t, entries, "2026-08-17")
 due1 = sorted(map(tuple, due_for_refresh(
     ann, 9, policy_table(spark), limit_per_host=3).collect()))

@@ -808,6 +808,34 @@ def test_declared_size_bound_rejects_before_allocating():
     assert time.perf_counter() - t0 < 1.0
 
 
+@pytest.mark.parametrize("gray", [True, False])
+def test_entropy_bytes_bound_rejects_before_allocating(gray):
+    """A small file whose SOF declares 8000×8000 — inside the 64M-pixel
+    bound — is refused before any coefficient store is sized from the
+    header: each data unit costs at least one Huffman bit in the first
+    scan that covers it, so a few hundred entropy bytes cannot fill
+    10^6 units (3·10^6 for the 3-component variant)."""
+    import time
+    import tracemalloc
+
+    img = _gradient(8, 8)
+    data = bytearray(encode_jpeg(img[..., 0] if gray else img, quality=90))
+    sof = data.find(b"\xff\xc0")
+    data[sof + 5 : sof + 9] = (8000).to_bytes(2, "big") * 2
+    assert len(data) < 800
+    tracemalloc.start()
+    t0 = time.perf_counter()
+    try:
+        with pytest.raises(ValueError, match="entropy-coded bytes"):
+            decode_jpeg(bytes(data))
+        elapsed = time.perf_counter() - t0
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert elapsed < 1.0
+    assert peak < 4 * 2**20, peak
+
+
 def test_single_scan_ac_size_cap():
     """T.81 F.1.2.2.1: 8-bit AC magnitude categories stop at 10. A
     single-scan file whose DHT maps the commonest AC code to size 11

@@ -155,6 +155,7 @@ def test_sitemap_refresh_composition_matches_oracle(spark):
     schedule by SQL with the boost folded into priority."""
     from datetime import date, datetime
 
+    from bisque_spark.functions.robots import fetch_robots
     from bisque_spark.functions.sitemap import sitemap_seed_locs
     from bisque_spark.functions.urlnorm import canonicalize_url
     from bisque_spark.hashing import xxhash64_str
@@ -168,7 +169,7 @@ def test_sitemap_refresh_composition_matches_oracle(spark):
     )
     ent_rows = [
         (r["host"], r["loc"], r["lastmod"], r["changefreq"], r["priority"])
-        for r in sitemap_seed_locs(hosts, world).collect()
+        for r in sitemap_seed_locs(fetch_robots(hosts, world), world).collect()
     ]
     release_caches()
     entries = spark.createDataFrame(

@@ -102,8 +102,11 @@ def test_apply_robots_shuffle_join_equals_broadcast(spark):
         F.concat(F.lit("h"), F.col("id").cast("string"),
                  F.lit(".test")).alias("host"),
         (1.0 + (F.col("id") % 3)).alias("crawl_delay"),
-        F.when(F.col("id") % 2 == 0, F.array(F.lit("/p1")))
-        .otherwise(F.array().cast("array<string>")).alias("disallow"),
+        F.when(F.col("id") % 2 == 0, F.array(F.struct(
+            F.lit("^/p1").alias("re"), F.lit(3).alias("len"),
+            F.lit(0).alias("allow"))))
+        .otherwise(F.array().cast("array<struct<re:string,len:int,allow:int>>"))
+        .alias("rules"),
     )
     a = sorted(r["url"] for r in apply_robots(fr, robots).collect())
     b = sorted(

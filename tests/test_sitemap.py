@@ -199,11 +199,17 @@ def test_malformed_priority_try_cast_null(spark):
     assert (b["changefreq"], b["priority"]) == (None, 0.7)
 
 
-def test_seed_locs_operator_same_host_and_totals(spark):
+def _robots(spark):
+    from bisque_spark.functions.robots import fetch_robots
+
     hosts = spark.createDataFrame(
         [(WORLD.host(i),) for i in range(WORLD.n_hosts)], "host string"
     )
-    got = sitemap_seed_locs(hosts, WORLD).collect()
+    return fetch_robots(hosts, WORLD)
+
+
+def test_seed_locs_operator_same_host_and_totals(spark):
+    got = sitemap_seed_locs(_robots(spark), WORLD).collect()
     from bisque_spark.util import release_caches
 
     release_caches()
@@ -257,7 +263,7 @@ def test_crawl_with_sitemaps_matches_oracle(spark, tmp_path):
 
 
 def test_parse_robots_sitemaps():
-    from bisque_spark.functions.robots import parse_robots_sitemaps
+    from bisque_spark.functions.robots import parse_robots_txt
 
     txt = (
         "User-agent: *\nDisallow:\n"
@@ -266,41 +272,38 @@ def test_parse_robots_sitemaps():
         "SITEMAP: http://b.test/s.xml  # trailing comment\n"
         "Sitemap:\n"
     )
-    assert parse_robots_sitemaps(txt) == [
+    assert parse_robots_txt(txt)["sitemaps"] == [
         "http://a.test/sitemap.xml",
         "http://b.test/s.xml",
     ]
-    assert parse_robots_sitemaps("User-agent: *\nDisallow: /x\n") == []
+    assert parse_robots_txt("User-agent: *\nDisallow: /x\n")["sitemaps"] == []
 
 
 def test_discovery_via_robots_rejects_cross_host(spark):
-    from bisque_spark.functions.robots import (
-        parse_robots_sitemaps,
-        synth_robots_txt,
-    )
-    from bisque_spark.functions.sitemap import discover_sitemap_urls
+    """Sitemap discovery reads the robots table's `Sitemap:` column:
+    same-host adverts are followed, cross-host ones never are."""
+    from bisque_spark.util import release_caches
 
-    hosts = spark.createDataFrame(
-        [(WORLD.host(i),) for i in range(WORLD.n_hosts)], "host string"
-    )
-    got = {(r["host"], r["url"]) for r in discover_sitemap_urls(hosts, WORLD).collect()}
-    want = {
-        (h, f"http://{h}/sitemap.xml")
-        for h in (WORLD.host(i) for i in range(WORLD.n_hosts))
-        if host_has_sitemap(WORLD, h)
+    robots = _robots(spark)
+    adverts = {r["host"]: list(r["sitemaps"]) for r in robots.collect()}
+    own = {
+        h: [f"http://{h}/sitemap.xml"] if host_has_sitemap(WORLD, h) else []
+        for h in adverts
     }
-    assert got == want
-    # the synth robots MUST contain at least one cross-host advert so
-    # the policy above is actually exercised
-    adverts = [
-        u
-        for i in range(WORLD.n_hosts)
-        for u in parse_robots_sitemaps(
-            synth_robots_txt(WORLD, WORLD.host(i))
-        )
-        if not u.startswith(f"http://{WORLD.host(i)}/")
+    assert {h: [u for u in us if u.startswith(f"http://{h}/")]
+            for h, us in adverts.items()} == own
+    # the synth robots MUST advertise at least one OTHER host's existing
+    # sitemap, so honoring cross-host adverts would change the result
+    foreign = [
+        (h, u) for h, us in adverts.items() for u in us
+        if not u.startswith(f"http://{h}/")
+        and host_has_sitemap(WORLD, u.split("/")[2])
     ]
-    assert adverts
+    assert foreign
+    got = {(r["host"], r["loc"])
+           for r in sitemap_seed_locs(robots, WORLD).collect()}
+    release_caches()
+    assert got == {(h, loc) for h in adverts for loc in sitemap_locs(WORLD, h)}
 
 
 def test_change_hint_from_lastmod(spark):
