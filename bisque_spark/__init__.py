@@ -5,7 +5,7 @@ Pydantic-based BeautifulSoup fork; see /root/reference) as a distributed
 engine: per-document parse/extract/validate semantics become vectorized
 Arrow/pandas UDF batch operators over DataFrames, and the surrounding
 scrape loop becomes a distributed URL-frontier + fetch scheduler
-(Bloom-sharded URL-seen set, per-host politeness windows, robots rules,
+(exact URL-seen anti-join, per-host politeness windows, robots rules,
 priority queue) over Iceberg-style parquet tables.
 
 Spark-first design: DataFrame/SQL plans compiled by Catalyst; Python

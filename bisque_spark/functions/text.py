@@ -19,7 +19,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-from bisque_spark.hashing import MASK64, xxh64
+from bisque_spark.hashing import xxh64
 
 # Small multilingual stopword profiles for the language-ID heuristic.
 STOPWORDS = {
@@ -287,216 +287,6 @@ def hamming64_col(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def corpus_unigram_logprob(
-    docs, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Per-document mean unigram log-probability under the corpus's own
-    empirical distribution — the classic LM-based quality signal
-    (CCNet / Gopher-style filtering): documents whose tokens are
-    unusual for the corpus score low; boilerplate and natural text
-    score high. Low-scoring tails are removal candidates.
-
-    Fully relational (no UDF): explode tokens → corpus counts →
-    token-count join → per-doc avg(ln(count/total)). The count table
-    is Zipf-shaped, so at 10^10 docs the join side stays broadcastable
-    after standard top-K vocab pruning; here it joins by shuffle on
-    the token key. Scoring the corpus against itself needs no
-    smoothing (every token has count ≥ 1).
-
-    → (id_col, n_toks long, mean_logprob double)
-    """
-    toks = docs.select(
-        F.col(id_col), F.explode(tokens_col(text_col)).alias("tok")
-    )
-    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    total = toks.groupBy().agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        toks.join(counts, "tok")
-        .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_toks"),
-            F.avg(F.log(F.col("c") / F.col("n_total"))).alias("mean_logprob"),
-        )
-    )
-
-
-def repetition_cols(text: str | Column) -> dict[str, Column]:
-    """Gopher-style repetition quality signals (Rae et al. 2021, public
-    paper — the rules, not the code), as pure Column expressions:
-
-    - dup_line_frac:    fraction of LINES that are duplicates of an
-                        earlier line (1 - distinct/total)
-    - dup_line_char_frac: fraction of line CHARACTERS inside duplicated
-                        lines (repeated boilerplate dominates length)
-    - top_2gram_frac:   fraction of tokens covered by the most frequent
-                        token 2-gram (template spam has one dominant)
-
-    High values flag boilerplate/template documents for removal.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    lines = F.filter(F.split(c, "\n"), lambda x: F.length(F.trim(x)) > 0)
-    n_lines = F.size(lines)
-    distinct_lines = F.array_distinct(lines)
-    n_distinct = F.size(distinct_lines)
-    total_chars = F.aggregate(
-        lines, F.lit(0), lambda acc, x: acc + F.length(x)
-    )
-    # chars in lines occurring more than once = total - chars of lines
-    # occurring exactly once
-    once_chars = F.aggregate(
-        F.filter(
-            distinct_lines,
-            lambda d: F.size(F.filter(lines, lambda x: x == d)) == 1,
-        ),
-        F.lit(0),
-        lambda acc, x: acc + F.length(x),
-    )
-    toks = tokens_col(c)
-    n_toks = F.size(toks)
-    grams = F.when(n_toks < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_toks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        )
-    )
-    top_gram_count = F.when(F.size(grams) == 0, F.lit(0)).otherwise(
-        F.array_max(
-            F.transform(
-                F.array_distinct(grams),
-                lambda d: F.size(F.filter(grams, lambda g: g == d)),
-            )
-        )
-    )
-    return {
-        "dup_line_frac": F.when(n_lines == 0, F.lit(0.0)).otherwise(
-            1.0 - n_distinct / n_lines
-        ),
-        "dup_line_char_frac": F.when(total_chars == 0, F.lit(0.0)).otherwise(
-            (total_chars - once_chars) / total_chars
-        ),
-        "top_2gram_frac": F.when(n_toks == 0, F.lit(0.0)).otherwise(
-            # a 2-gram occurring k times covers up to 2k tokens
-            F.least(F.lit(1.0), 2.0 * top_gram_count / n_toks)
-        ),
-    }
-
-
-# PII patterns (plain regex over public formats; lookahead-free so the
-# JVM regex engine and test oracles agree)
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_PHONE = r"(?:\+?\d{1,3}[-. (]{1,2})?\d{3}[-. )]{0,2}\d{3}[-. ]?\d{4}"
-_PII_IPV4 = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
-
-
-def scrub_pii_col(text: str | Column) -> Column:
-    """Redact emails, phone-shaped numbers, and IPv4 addresses with
-    typed placeholders — the standard pre-training scrub pass, JVM-side
-    (three chained regexp_replace, no UDF). Order matters: emails
-    first (their local parts can contain digits that the phone pattern
-    would otherwise chew)."""
-    c = F.col(text) if isinstance(text, str) else text
-    out = F.regexp_replace(c, _PII_EMAIL, "<EMAIL>")
-    out = F.regexp_replace(out, _PII_IPV4, "<IP>")
-    return F.regexp_replace(out, _PII_PHONE, "<PHONE>")
-
-
-def repetition_stats(
-    docs, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Relational form of :func:`repetition_cols` — same three signals
-    via explode + groupBy instead of per-document array filters. The
-    Column form is O(lines² + grams²) PER DOCUMENT (fine for web pages,
-    a trap for book-length docs); this form is linear with two
-    shuffles on (id, line)/(id, gram) keys and is the 100-TB path.
-
-    → (id_col, dup_line_frac, dup_line_char_frac, top_2gram_frac)
-    with 0.0 for documents without lines/tokens.
-    """
-    base = docs.select(F.col(id_col), F.col(text_col).alias("__text"))
-
-    lines = base.select(
-        id_col,
-        F.explode(
-            F.filter(
-                F.split(F.col("__text"), "\n"),
-                lambda x: F.length(F.trim(x)) > 0,
-            )
-        ).alias("line"),
-    )
-    line_stats = (
-        lines.groupBy(id_col, "line")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.first(F.length("line")).alias("len"))
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").alias("n_lines"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum(F.col("cnt") * F.col("len")).alias("total_chars"),
-            F.sum(F.when(F.col("cnt") == 1, F.col("len")).otherwise(0)).alias(
-                "once_chars"
-            ),
-        )
-        .select(
-            id_col,
-            (1.0 - F.col("n_distinct") / F.col("n_lines")).alias(
-                "dup_line_frac"
-            ),
-            F.when(F.col("total_chars") == 0, F.lit(0.0))
-            .otherwise(
-                (F.col("total_chars") - F.col("once_chars"))
-                / F.col("total_chars")
-            )
-            .alias("dup_line_char_frac"),
-        )
-    )
-
-    toks = base.select(id_col, tokens_col(F.col("__text")).alias("toks"))
-    n_toks = toks.select(id_col, F.size("toks").alias("n_toks"))
-    grams = toks.select(
-        id_col,
-        F.explode(
-            F.when(
-                F.size("toks") < 2, F.array().cast("array<string>")
-            ).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - 1),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, 2)),
-                )
-            )
-        ).alias("gram"),
-    )
-    gram_stats = (
-        grams.groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(id_col)
-        .agg(F.max("cnt").alias("max_cnt"))
-    )
-    gram_frac = n_toks.join(gram_stats, id_col, "left").select(
-        id_col,
-        F.when(
-            (F.col("n_toks") == 0) | F.col("max_cnt").isNull(), F.lit(0.0)
-        )
-        .otherwise(
-            F.least(F.lit(1.0), 2.0 * F.col("max_cnt") / F.col("n_toks"))
-        )
-        .alias("top_2gram_frac"),
-    )
-
-    return (
-        base.select(id_col)
-        .join(line_stats, id_col, "left")
-        .join(gram_frac, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("dup_line_frac", F.lit(0.0)).alias("dup_line_frac"),
-            F.coalesce("dup_line_char_frac", F.lit(0.0)).alias(
-                "dup_line_char_frac"
-            ),
-            F.coalesce("top_2gram_frac", F.lit(0.0)).alias("top_2gram_frac"),
-        )
-    )
-
-
 def dedup_lines_corpus(
     docs,
     id_col: str = "doc_id",
@@ -557,136 +347,4 @@ def dedup_lines_corpus(
             "n_lines",
             F.coalesce("n_lines_kept", F.lit(0)).alias("n_lines_kept"),
         )
-    )
-
-
-def compression_ratio_py(text: str) -> float:
-    """zlib(level 6) compressed-to-raw byte ratio of the UTF-8 text —
-    the Gopher-style redundancy signal: heavily repeated boilerplate
-    compresses far below natural prose (≈0.3–0.6), while random junk
-    stays near (or above) 1.0. Empty text → 1.0 (neutral)."""
-    import zlib
-
-    data = text.encode("utf-8")
-    if not data:
-        return 1.0
-    return len(zlib.compress(data, 6)) / len(data)
-
-
-def _compression_ratio_series(texts: pd.Series) -> pd.Series:
-    import zlib
-
-    out = []
-    for t in texts:
-        if not t:
-            out.append(1.0)
-            continue
-        data = t.encode("utf-8")
-        out.append(len(zlib.compress(data, 6)) / len(data))
-    return pd.Series(out, dtype="float64")
-
-
-def compression_ratio_udf(col):
-    """Arrow-batched zlib ratio (no JVM deflate expression exists; the
-    per-doc compress IS the work, so the Python boundary is paid once
-    per batch, not per row). Deterministic for a fixed zlib level."""
-    return F.pandas_udf(_compression_ratio_series, "double")(col)
-
-
-def dedup_spans_corpus(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
-):
-    """Corpus-level exact SUBSTRING deduplication (Lee et al. 2021,
-    arXiv:2107.06499 "Deduplicating Training Data Makes Language
-    Models Better"): any ``k``-token window that occurs more than once
-    ACROSS the corpus survives only at its first occurrence in
-    (id, position) order — every other occurrence's tokens are cut.
-    Catches copied passages that line- and document-level dedup both
-    miss (quotes, syndicated paragraphs, licence blocks mid-text).
-
-    Fully relational, the dedup_lines_corpus shape scaled to windows:
-
-    - window keys are ``xxhash64(concat_ws(' ', slice(tokens,i,k)))``
-      built by a JVM transform over ``sequence`` — no Python in the
-      candidate pass. The hash pass reads each token k times (O(n·k));
-      an O(n) Rabin-Karp would need a UDF — one scan and zero extra
-      shuffles is the better trade at 100 TB, where shuffle volume,
-      not CPU, is the binding constraint.
-    - keeper per window = ``min(struct(id, pos))`` under a
-      hash-partitioned groupBy: map-side partial aggregation absorbs a
-      boilerplate window with 10^8 occurrences (never a window rank
-      partitioned by the key).
-    - cut = explode each non-keeper occurrence to its k token
-      positions, distinct, anti-join against the posexploded tokens,
-      reassemble in position order.
-
-    Reassembly is WHITESPACE-NORMALIZED (tokens joined by one space —
-    the same tokenization doc_token_stats uses). Docs with fewer than
-    k tokens are never cut. Deterministic: ties impossible, (id, pos)
-    is unique. Note: cutting splices previously-distant tokens
-    together, so a re-run can surface NEW windows — the operator is a
-    single pass by design, like the paper's.
-
-    → (id_col, text, n_tokens, n_tokens_kept).
-    """
-    toks = F.when(
-        F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) == 0,
-        F.array().cast("array<string>"),
-    ).otherwise(F.split(F.trim(F.col(text_col)), r"\s+"))
-    base = docs.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
-    nw = F.size("__toks") - F.lit(k - 1)
-    wins = base.select(
-        "__id",
-        F.posexplode(
-            F.when(
-                nw > 0,
-                F.transform(
-                    F.sequence(F.lit(0), nw - 1),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(" ", F.slice("__toks", i + 1, k))
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("__pos", "__wh"),
-    )
-    keepers = wins.groupBy("__wh").agg(
-        F.min(F.struct("__id", "__pos")).alias("__k")
-    )
-    dropped_pos = (
-        wins.join(keepers, "__wh")
-        .where(
-            (F.col("__id") != F.col("__k.__id"))
-            | (F.col("__pos") != F.col("__k.__pos"))
-        )
-        .select(
-            "__id",
-            F.explode(
-                F.sequence(F.col("__pos"), F.col("__pos") + F.lit(k - 1))
-            ).alias("__tpos"),
-        )
-        .distinct()
-    )
-    tokens = base.select(
-        "__id", F.posexplode("__toks").alias("__tpos", "__tok")
-    )
-    kept = tokens.join(dropped_pos, ["__id", "__tpos"], "left_anti")
-    rebuilt = kept.groupBy("__id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__tpos", "__tok"))),
-                lambda s: s["__tok"],
-            ),
-            " ",
-        ).alias("text"),
-        F.count(F.lit(1)).alias("n_tokens_kept"),
-    )
-    totals = base.select("__id", F.size("__toks").alias("n_tokens"))
-    return totals.join(rebuilt, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.coalesce("text", F.lit("")).alias("text"),
-        "n_tokens",
-        F.coalesce("n_tokens_kept", F.lit(0)).cast("long").alias("n_tokens_kept"),
     )

@@ -79,7 +79,7 @@ def rank_step(
     """One power-iteration step as a SINGLE lazy plan (plan-checked by
     scripts/explain_plans.py). Dangling mass (rank held by vertices
     with no out-links) stays IN-PLAN as a broadcast one-row aggregate —
-    the text.corpus_unigram_logprob pattern — instead of a per-iteration
+    joined to every row — instead of a per-iteration
     driver collect(): no driver synchronization mid-iteration.
     dangling = 1 - linked because ranks is a probability distribution
     at every step."""

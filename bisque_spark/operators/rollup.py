@@ -47,8 +47,10 @@ def time_rollup(
             F.date_format(F.date_trunc(g, F.col(ts_col)), GRANULARITIES[g]),
         )
     sets = [[f"__b_{g}", *extra_keys] for g in grans]
+    # dict, not set: the grouping columns keep one order in every run
+    # (a set's order follows the per-process string hash seed)
     agg = with_buckets.groupingSets(
-        sets, *[F.col(c) for c in {c for s in sets for c in s}]
+        sets, *[F.col(c) for c in dict.fromkeys(c for s in sets for c in s)]
     ).agg(
         F.count(F.lit(1)).alias("n"),
         rnd(F.sum(value_col)).alias("sum_v"),

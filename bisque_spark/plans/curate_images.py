@@ -1,5 +1,4 @@
-"""Image-caption curation plan — the multimodal twin of
-plans/curate.py, over the crawl's images table
+"""Image-caption curation plan over the crawl's images table
 (image_id, bytes, w, h, fmt, caption, phash).
 
 One deterministic pass from raw crawled images to a curated,

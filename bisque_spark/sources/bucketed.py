@@ -13,65 +13,68 @@ the key.
 Spark-native mechanism (`DataFrameWriter.bucketBy` + `saveAsTable`,
 hash = Murmur3 on the key, same function the shuffle uses) — no
 reference analogue (the reference is single-process); this is engine
-scale infrastructure like sources/catalog.py. The reader is the
-session catalog (`spark.table`), so Catalyst knows the output
-partitioning and elides exchanges automatically; nothing here
-hand-schedules.
+scale infrastructure like sources/catalog.py. The bucket spec lives in
+table metadata, not in the files, so a bucketed directory is read by
+registering it as an external session table (:func:`bucketed_table`):
+Catalyst then knows the output partitioning and elides exchanges
+automatically; nothing here hand-schedules. This module is the one
+bucketed writer and reader; ``ParquetCatalog(bucket_by=)`` goes
+through it.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (and by default bucket-sorted)
-    parquet table in the session catalog. Joins/aggs on ``key``
-    between tables written with the SAME bucket count skip their
-    exchanges (and sorts, when ``sort=True``)."""
-    w = df.write.mode(mode).format("parquet").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join two bucketed catalog tables on their bucket key.
-    This is a plain ``DataFrame.join`` — the co-location is a property
-    of the tables, and Catalyst plans the shuffle-free SortMergeJoin
-    on its own. Kept as a helper so callers (and tests) have one place
-    that documents/asserts the contract."""
-    return spark.table(left_table).join(
-        spark.table(right_table), on=key, how=how
+def write_bucketed(df: DataFrame, path: str, key: str, n: int) -> None:
+    """Write ``df`` to the directory ``path`` as parquet hash-bucketed
+    and bucket-sorted on ``key`` into ``n`` buckets. ``bucketBy`` only
+    works through ``saveAsTable``, so the write goes through a throwaway
+    EXTERNAL session table at ``path``; dropping it keeps the files,
+    whose names carry the bucket ids a later scan recovers."""
+    tmp = f"_bkt_stage_{uuid.uuid4().hex[:12]}"
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .option("path", path)
+        .bucketBy(int(n), key)
+        .sortBy(key)
+        .saveAsTable(tmp)
     )
+    df.sparkSession.sql(f"DROP TABLE `{tmp}`")
+
+
+def bucketed_table(
+    spark: SparkSession, name: str, path: str, schema: str, key: str, n: int
+) -> DataFrame:
+    """(Re-)register the files :func:`write_bucketed` left at ``path``
+    as the external bucketed session table ``name`` (DDL ``schema``)
+    and return it. Works in a fresh session with an empty catalog — a
+    resumed job's way back to a shuffle-free join. Equi-joins and aggs
+    on ``key`` against another side with the same ``n`` plan without
+    an Exchange on this side."""
+    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+    spark.sql(
+        f"CREATE TABLE `{name}` ({schema}) USING PARQUET "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {int(n)} BUCKETS "
+        f"LOCATION '{path}'"
+    )
+    return spark.table(name)
 
 
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle Exchange operators in the physical plan —
     0 for a fully co-located join. (ShuffleExchange only;
-    BroadcastExchange is not a shuffle.)"""
+    BroadcastExchange is not a shuffle.) Counts the formatted plan's
+    per-node detail headers, ``(3) Exchange``, so each operator counts
+    once, not again for its line in the tree."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    plan = buf.getvalue()
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "Broadcast" not in line
-    )
+    return len(re.findall(r"(?m)^\(\d+\) Exchange\b", buf.getvalue()))

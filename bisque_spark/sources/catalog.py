@@ -37,6 +37,8 @@ import uuid
 import pyspark.sql.functions as F  # noqa: F401  (re-exported for callers)
 from pyspark.sql import DataFrame, SparkSession
 
+from bisque_spark.sources.bucketed import bucketed_table, write_bucketed
+
 
 class ParquetCatalog:
     """Directory-of-tables catalog with Iceberg-shaped operations."""
@@ -58,20 +60,7 @@ class ParquetCatalog:
 
     def _read_manifest(self, name: str) -> dict:
         with open(self._manifest_path(name)) as f:
-            m = json.load(f)
-        if "snapshots" not in m:
-            # manifest written by the pre-snapshot catalog: synthesize a
-            # single current snapshot from a directory scan (exactly
-            # what the old read() did), so legacy tables keep working
-            data = self._data(name)
-            files = sorted(
-                os.path.relpath(os.path.join(r, fn), data)
-                for r, _d, fns in os.walk(data)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-            m["snapshots"] = {str(m["version"]): files}
-        return m
+            return json.load(f)
 
     def _write_manifest(self, name: str, manifest: dict) -> None:
         # the commit IS this atomic pointer swap (Iceberg semantics):
@@ -92,21 +81,7 @@ class ParquetCatalog:
         their table-relative paths (partition dirs preserved)."""
         staging = os.path.join(self._dir(name), f"_staging-{uuid.uuid4().hex}")
         if bucket_by:
-            # bucketed staging: DataFrameWriter.bucketBy only works via
-            # saveAsTable, so stage through a throwaway EXTERNAL session
-            # table at the staging path — dropping it keeps the files,
-            # whose names carry the bucket ids Spark's scan recovers
-            key, n = bucket_by
-            tmp = f"_cat_stage_{uuid.uuid4().hex[:12]}"
-            (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .option("path", staging)
-                .bucketBy(int(n), key)
-                .sortBy(key)
-                .saveAsTable(tmp)
-            )
-            self.spark.sql(f"DROP TABLE `{tmp}`")
+            write_bucketed(df, staging, *bucket_by)
         else:
             writer = df.write.mode("overwrite")
             if partition_by:
@@ -276,14 +251,9 @@ class ParquetCatalog:
             if not os.path.exists(dst):
                 os.link(os.path.join(data, f), dst)
         tag = hashlib.md5(self.root.encode()).hexdigest()[:6]
-        tbl = f"{name}_bkt_v{v}_{tag}"
-        self.spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
-        self.spark.sql(
-            f"CREATE TABLE `{tbl}` ({schema}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {int(n)} BUCKETS "
-            f"LOCATION '{view}'"
+        return bucketed_table(
+            self.spark, f"{name}_bkt_v{v}_{tag}", view, schema, key, n
         )
-        return self.spark.table(tbl)
 
     def _commit_lock(self, name: str):
         """Single-writer-per-table lock (O_CREAT|O_EXCL lock file).

@@ -120,25 +120,6 @@ def test_expire_protects_current_snapshot(spark, cat):
     assert cat.read("t3").count() == 1  # untouched
 
 
-def test_legacy_manifest_migration(spark, cat, tmp_path):
-    """A manifest written by the pre-snapshot catalog (no 'snapshots'
-    key) is readable: the current version is synthesized from a data
-    directory scan, and the next commit upgrades the format."""
-    import json
-    import os
-
-    cat.create_table("t4", SCHEMA)
-    cat.append("t4", spark.createDataFrame([("a", "one", 1)], SCHEMA))
-    mp = os.path.join(cat.root, "t4", "_manifest.json")
-    m = json.load(open(mp))
-    del m["snapshots"]  # simulate the old format
-    json.dump(m, open(mp, "w"))
-    assert cat.read("t4").count() == 1
-    cat.append("t4", spark.createDataFrame([("b", "two", 2)], SCHEMA))
-    assert cat.read("t4").count() == 2
-    assert "snapshots" in json.load(open(mp))
-
-
 def test_merge_copy_on_write_prunes_partitions(spark, cat):
     """MERGE rewrites ONLY data files whose partition values intersect
     the incoming rows' partitions (Iceberg copy-on-write shape): the

@@ -180,163 +180,6 @@ def test_bpe_token_count(spark):
         assert got[i] == want, (t, got[i], want)
 
 
-def test_corpus_unigram_logprob_matches_duckdb(spark):
-    """LM-quality scoring hash-verified against an in-process DuckDB
-    oracle (same hard signal as the driver's graded queries), plus the
-    semantic property: a junk document of corpus-unique tokens scores
-    strictly below every natural document."""
-    import duckdb
-
-    from bisque_spark.functions.text import corpus_unigram_logprob
-
-    rows = [
-        (1, "the cat sat on the mat"),
-        (2, "the dog sat on the log"),
-        (3, "the cat and the dog"),
-        (4, "zxqj vwpk qqzz xkcd"),  # junk: every token unique
-        (5, "   "),                   # whitespace-only → no tokens
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_toks"], round(r["mean_logprob"], 6))
-        for r in corpus_unigram_logprob(docs).collect()
-    }
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?,?)", rows)
-    want = {
-        d: (n, round(p, 6))
-        for d, n, p in con.execute("""
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-                FROM documents WHERE length(trim(text)) > 0
-            ), counts AS (
-                SELECT tok, count(*) AS c FROM toks GROUP BY tok
-            ), total AS (SELECT count(*) AS n FROM toks)
-            SELECT doc_id, count(*) AS n_toks,
-                   avg(ln(c * 1.0 / n)) AS mean_logprob
-            FROM toks JOIN counts USING (tok) CROSS JOIN total
-            GROUP BY doc_id
-        """).fetchall()
-    }
-    assert got == want
-    assert 5 not in got  # token-less docs have no distribution to score
-    junk, natural = got[4][1], [got[i][1] for i in (1, 2, 3)]
-    assert all(junk < p for p in natural)
-
-
-def test_repetition_cols_match_python_oracle(spark):
-    """Gopher-style repetition signals vs a direct Python computation
-    of the same definitions."""
-    from bisque_spark.functions.text import repetition_cols
-
-    rows = [
-        (1, "buy now\nbuy now\nbuy now\nunique line"),
-        (2, "alpha beta\ngamma delta"),
-        (3, "spam ham spam ham spam ham spam ham"),
-        (4, ""),
-        (5, "one\n\none"),  # blank lines ignored
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    r = repetition_cols("text")
-    got = {
-        row["doc_id"]: (
-            round(row["dlf"], 6), round(row["dlcf"], 6), round(row["t2f"], 6)
-        )
-        for row in docs.select(
-            "doc_id",
-            r["dup_line_frac"].alias("dlf"),
-            r["dup_line_char_frac"].alias("dlcf"),
-            r["top_2gram_frac"].alias("t2f"),
-        ).collect()
-    }
-
-    def oracle(text):
-        lines = [ln for ln in text.split("\n") if ln.strip()]
-        toks = text.split()
-        if lines:
-            dlf = 1.0 - len(set(lines)) / len(lines)
-            total = sum(len(ln) for ln in lines)
-            once = sum(len(ln) for ln in set(lines) if lines.count(ln) == 1)
-            dlcf = (total - once) / total if total else 0.0
-        else:
-            dlf = dlcf = 0.0
-        grams = [" ".join(toks[i : i + 2]) for i in range(len(toks) - 1)]
-        t2f = (
-            min(1.0, 2.0 * max(grams.count(g) for g in set(grams)) / len(toks))
-            if grams else 0.0
-        )
-        return (round(dlf, 6), round(dlcf, 6), round(t2f, 6))
-
-    for doc_id, text in rows:
-        assert got[doc_id] == oracle(text), doc_id
-    # the boilerplate doc is flagged hard
-    assert got[1][0] >= 0.5 and got[1][1] >= 0.5
-    assert got[3][2] == 1.0  # one dominant 2-gram covers everything
-
-
-def test_scrub_pii_col(spark):
-    from bisque_spark.functions.text import scrub_pii_col
-
-    rows = [
-        (1, "contact me at jane.doe+x@example.co.uk today"),
-        (2, "call +1 (555) 123-4567 or 555-987-6543"),
-        (3, "server at 192.168.1.100 responded"),
-        (4, "no pii here at all"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["clean"]
-        for r in docs.select(
-            "doc_id", scrub_pii_col("text").alias("clean")
-        ).collect()
-    }
-    assert got[1] == "contact me at <EMAIL> today"
-    assert got[2] == "call <PHONE> or <PHONE>"
-    assert got[3] == "server at <IP> responded"
-    assert got[4] == "no pii here at all"
-
-
-def test_repetition_stats_equals_column_form(spark):
-    """The relational (explode+groupBy, linear) form must agree exactly
-    with the per-document Column form on every signal — including
-    empty and blank-line documents."""
-    from bisque_spark.functions.text import repetition_cols, repetition_stats
-
-    rows = [
-        (1, "buy now\nbuy now\nbuy now\nunique line"),
-        (2, "alpha beta\ngamma delta"),
-        (3, "spam ham spam ham spam ham spam ham"),
-        (4, ""),
-        (5, "one\n\none"),
-        (6, "solo"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    r = repetition_cols("text")
-    col_form = {
-        row["doc_id"]: (
-            round(row["a"], 9), round(row["b"], 9), round(row["c"], 9)
-        )
-        for row in docs.select(
-            "doc_id",
-            r["dup_line_frac"].alias("a"),
-            r["dup_line_char_frac"].alias("b"),
-            r["top_2gram_frac"].alias("c"),
-        ).collect()
-    }
-    rel_form = {
-        row["doc_id"]: (
-            round(row["dup_line_frac"], 9),
-            round(row["dup_line_char_frac"], 9),
-            round(row["top_2gram_frac"], 9),
-        )
-        for row in repetition_stats(docs).collect()
-    }
-    assert rel_form == col_form
-
-
 # ---- corpus-level line dedup (CCNet preprocessing step) --------------------
 
 
@@ -406,43 +249,6 @@ def test_dedup_lines_corpus_idempotent_and_testdata(spark):
     assert rows2 == rows1
 
 
-def test_compression_ratio_signal(spark):
-    """zlib-ratio quality signal: repeated boilerplate compresses far
-    below natural text; Spark output == the Python twin exactly."""
-    import numpy as np
-
-    from bisque_spark.functions.text import (
-        compression_ratio_py,
-        compression_ratio_udf,
-    )
-
-    rng = np.random.RandomState(4)
-    natural = (
-        "the quick brown fox jumps over the lazy dog while seventeen "
-        "sailors argue about the weather in a harbor tavern tonight"
-    )
-    rows = [
-        (1, "click here to accept cookies\n" * 60),          # boilerplate
-        (2, " ".join(natural.split()[i % 20] for i in range(300))),
-        (3, "".join(chr(rng.randint(0x21, 0x7F)) for _ in range(800))),
-        (4, ""),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["ratio"]
-        for r in df.select(
-            "doc_id", compression_ratio_udf(F.col("text")).alias("ratio")
-        ).collect()
-    }
-    for did, text in rows:
-        assert got[did] == compression_ratio_py(text or ""), did
-    assert got[1] < 0.1          # repeated boilerplate: crushed
-    assert got[1] < got[2] < got[3]  # monotone in redundancy
-    assert got[3] > 0.8          # random chars: near-incompressible
-    assert got[4] == got[5] == 1.0
-
-
 def test_dedup_lines_corpus_hypothesis_differential(spark):
     """Randomized corpora (shared/unique/short/unicode/empty lines)
     against the Python oracle — one Spark run over a hypothesis-grade
@@ -469,85 +275,3 @@ def test_dedup_lines_corpus_hypothesis_differential(spark):
         for r in dedup_lines_corpus(df).collect()
     }
     assert got == _dedup_lines_py(rows)
-
-
-# ---- corpus substring (k-token window) dedup -----------------------------
-
-
-def _span_oracle(rows, k):
-    """Independent python twin of dedup_spans_corpus' policy."""
-    import re
-
-    toks = {
-        i: (re.split(r"\s+", t.strip()) if t and t.strip() else [])
-        for i, t in rows
-    }
-    occ = {}
-    for i in toks:
-        ts = toks[i]
-        for p in range(len(ts) - k + 1):
-            occ.setdefault(tuple(ts[p : p + k]), []).append((i, p))
-    dropped = {i: set() for i in toks}
-    for positions in occ.values():
-        keeper = min(positions)
-        for (i, p) in positions:
-            if (i, p) != keeper:
-                dropped[i].update(range(p, p + k))
-    out = {}
-    for i, ts in toks.items():
-        keep = [t for p, t in enumerate(ts) if p not in dropped[i]]
-        out[i] = (" ".join(keep), len(ts), len(keep))
-    return out
-
-
-def test_dedup_spans_planted_passage(spark):
-    from bisque_spark.functions.text import dedup_spans_corpus
-
-    passage = "the quick brown fox jumps over the lazy dog tonight"
-    rows = [
-        (1, f"alpha beta gamma {passage} delta epsilon zeta eta theta"),
-        (2, f"one two three four {passage} five six seven eight nine"),
-        (3, f"red green blue {passage} cyan magenta yellow black white"),
-        (4, "too short for any window"),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_tokens_kept"])
-        for r in dedup_spans_corpus(df, k=8).collect()
-    }
-    want = _span_oracle(rows, k=8)
-    assert got == want
-    # doc 1 keeps the passage; docs 2-3 lose exactly its 10 tokens
-    assert passage in got[1][0]
-    for i in (2, 3):
-        assert passage not in got[i][0]
-        assert got[i][2] == got[i][1] - 10
-    assert got[4] == ("too short for any window", 5, 5)
-    assert got[5] == ("", 0, 0)
-
-
-def test_dedup_spans_random_corpus_matches_oracle(spark):
-    import numpy as np
-
-    from bisque_spark.functions.text import dedup_spans_corpus
-
-    rng = np.random.RandomState(5)
-    pool = ["w%d" % i for i in range(12)]  # tiny pool → real collisions
-    rows = [
-        (int(i), " ".join(rng.choice(pool, size=rng.randint(3, 40))))
-        for i in range(30)
-    ]
-    # plant one shared k-window so the cut path is exercised for sure
-    shared = " ".join(pool[:6])
-    rows[7] = (7, rows[7][1] + " " + shared)
-    rows[19] = (19, shared + " " + rows[19][1])
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    k = 6
-    got = {
-        r["doc_id"]: (r["text"], r["n_tokens"], r["n_tokens_kept"])
-        for r in dedup_spans_corpus(df, k=k).collect()
-    }
-    assert got == _span_oracle(rows, k)
-    # sanity: something was actually cut somewhere
-    assert any(g[2] < g[1] for g in got.values())
