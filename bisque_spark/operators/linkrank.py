@@ -77,7 +77,7 @@ def rank_step(
     n: int,
 ) -> DataFrame:
     """One power-iteration step as a SINGLE lazy plan (plan-checked by
-    scripts/explain_plans.py). Dangling mass (rank held by vertices
+    tests/plan_checks.py). Dangling mass (rank held by vertices
     with no out-links) stays IN-PLAN as a broadcast one-row aggregate —
     joined to every row — instead of a per-iteration
     driver collect(): no driver synchronization mid-iteration.

@@ -65,7 +65,7 @@ def run_image_curation(
     counts (a monotone funnel).
 
     ``plan_only=True`` skips every count action and the sink and
-    returns the lazy pre-sink frame — scripts/explain_plans.py checks
+    returns the lazy pre-sink frame — tests/plan_checks.py checks
     the REAL composition's physical plan through this path (one decode
     stage, equi-join-only pair spaces, WindowGroupLimit cap), not a
     hand-built replica that could drift."""

@@ -24,9 +24,6 @@ through it.
 
 from __future__ import annotations
 
-import contextlib
-import io
-import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,15 +63,3 @@ def bucketed_table(
         f"LOCATION '{path}'"
     )
     return spark.table(name)
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the physical plan —
-    0 for a fully co-located join. (ShuffleExchange only;
-    BroadcastExchange is not a shuffle.) Counts the formatted plan's
-    per-node detail headers, ``(3) Exchange``, so each operator counts
-    once, not again for its line in the tree."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return len(re.findall(r"(?m)^\(\d+\) Exchange\b", buf.getvalue()))

@@ -1,120 +1,25 @@
-"""Dump formatted physical plans for the engine's key queries into
-EXPLAIN.md, with pass/fail checks for the plan properties that matter
-at 100 TB: filter/column pushdown to the scan, broadcast joins for dim
-tables, whole-stage codegen coverage, no Python in JVM-expressible
-stages."""
+"""Render EXPLAIN.md: the formatted physical plan of every entry in the
+plan-property check table (tests/plan_checks.py) with each check's
+verdict. The gate (tests/test_plans.py) runs the same checks with the
+same scale factor and session settings.
+
+    python scripts/explain_plans.py
+"""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import re
 import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path[:0] = [REPO, os.path.join(REPO, "tests")]
 
-import pyspark.sql.functions as F
+from plan_checks import CHECKS, SF, check, plan_text
 
-import __spark_entry__ as entrymod
 from bisque_spark.session import get_spark
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-
-# pattern prefixed with "!" asserts ABSENCE
-CHECKS = {
-    "pricing_summary": [
-        ("PushedFilters", "filter reaches parquet scan"),
-        ("HashAggregate", "hash aggregation"),
-        ("partial", "map-side partial aggregation"),
-        ("!EvalPython", "no Python in the agg pipeline"),
-    ],
-    "revenue_by_nation": [
-        ("BroadcastHashJoin", "dim joins broadcast"),
-        ("!EvalPython", "no Python anywhere"),
-    ],
-    "events_politeness_topk": [
-        ("Window", "window rank"),
-        ("WindowGroupLimit", "rank<=k pushed into the window (top-k prune)"),
-        ("!EvalPython", "no Python"),
-    ],
-    "emb_knn_query0": [
-        ("BroadcastNestedLoopJoin", "query vector broadcast"),
-        ("TakeOrderedAndProject", "top-k as ordered-take, not full sort"),
-        ("!EvalPython", "cosine is a JVM expression"),
-    ],
-    "doc_token_stats": [
-        ("!EvalPython", "string metrics are JVM exprs (no Python)"),
-        ("Scan parquet", "direct parquet scan"),
-    ],
-    "minhash_near_dups": [
-        ("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", "LSH equi-join planned"),
-        ("InMemoryTableScan|TableCacheQueryStage", "signatures cached across self-join"),
-        (
-            "FlatMapCoGroupsInPandas",
-            "est verify co-located on the pair grid (r8: signatures "
-            "travel O(n·2g), never per-candidate)",
-        ),
-    ],
-    "crawl_epoch_schedule": [
-        ("BroadcastHashJoin", "robots join broadcast"),
-        ("Window", "politeness rank windows"),
-        ("!EvalPython", "RFC 9309 robots matcher is JVM-only (no Python)"),
-    ],
-    "doc_bpe_tokens": [
-        ("!EvalPython", "BPE-ish token count is a JVM regex expression"),
-        ("Scan parquet", "direct parquet scan"),
-    ],
-    "doc_langid": [
-        ("!EvalPython", "language ID is pure Column exprs (no UDF)"),
-    ],
-    "lsh_embedding_pairs": [
-        (
-            r"hashpartitioning\(tkey",
-            "ONE shuffle on the table-tagged bucket key (never a "
-            "cross join)",
-        ),
-        (
-            "MapInPandas",
-            "bucket-grouped numpy GEMM verify (r8: candidate pairs "
-            "never materialize as join rows; only survivors are "
-            "emitted)",
-        ),
-        ("!BroadcastNestedLoopJoin", "no all-pairs fallback"),
-        (
-            "!SortMergeJoin",
-            "no per-candidate vector-attach joins (r8)",
-        ),
-    ],
-    "emb_ivf_topk": [
-        ("TakeOrderedAndProject", "top-k as ordered-take, not full sort"),
-        (
-            r"cell#\d+ (IN|INSET)",
-            "probe pruning reaches the scan as a cell filter",
-        ),
-    ],
-    "shipping_priority": [
-        ("PushedFilters", "segment/date filters reach the parquet scans"),
-        ("TakeOrderedAndProject", "top-10 as ordered-take"),
-        ("!EvalPython", "pure JVM"),
-    ],
-    "regional_revenue": [
-        ("BroadcastHashJoin", "nation/region broadcast in the 5-way join"),
-        ("!EvalPython", "pure JVM"),
-    ],
-    "events_rollup_incremental": [
-        ("Expand", "delta rollup still one grouping-sets pass"),
-        ("!EvalPython", "pure JVM"),
-    ],
-    "crawl_refresh_schedule": [
-        ("BroadcastHashJoin", "refresh policy dim broadcast"),
-        ("WindowGroupLimit", "per-host cap pushed into the window"),
-        ("!EvalPython", "pure JVM"),
-    ],
-}
-
+from bisque_spark.util import release_caches
 
 # run-to-run noise in a rendered plan: expression ids, plan ids, temp
 # paths and the random suffix of a re-registered bucketed table
@@ -126,13 +31,6 @@ _VOLATILE = [
 ]
 
 
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def rendered(plan: str) -> str:
     """``plan`` with the run-to-run noise replaced, so a rerun with no
     code change writes the same EXPLAIN.md (checks see the raw plan)."""
@@ -141,438 +39,29 @@ def rendered(plan: str) -> str:
     return plan.strip()[:4000]
 
 
-def _seen_inputs(spark):
-    import pyspark.sql.functions as F
-
-    cand = spark.range(1000).select(
-        F.concat(F.lit("http://h"), F.col("id")).alias("url"),
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-    )
-    seen = spark.range(500).select(
-        F.xxhash64((F.col("id") * 2).cast("string")).alias("url_hash")
-    )
-    return cand, seen
-
-
-def filter_unseen_plan(spark):
-    """Plan for the bloom membership stage: the shard blob must ride a
-    COGROUP (one blob per bucket group), never a per-row join column
-    (VERDICT r01 #4 done-criterion)."""
-    from bisque_spark.operators.seen import build_shards, filter_unseen
-
-    cand, seen = _seen_inputs(spark)
-    shards = build_shards(seen)
-    return filter_unseen(cand, shards, seen, dedup_key="url_hash")
-
-
-def filter_unseen_exact_plan(spark):
-    """Plan for the crawl's URL-seen path (shards=None): a
-    dropDuplicates + left_anti join, with no Python worker at all."""
-    from bisque_spark.operators.seen import filter_unseen
-
-    cand, seen = _seen_inputs(spark)
-    return filter_unseen(cand, None, seen, dedup_key="url_hash")
-
-
-def diversity_sample_plan(spark):
-    """Plan for cluster-stratified sampling: the per-cell cap must be a
-    WindowGroupLimit (partitions pruned to k before full sort), no
-    Python in the rank path."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.similarity import diversity_sample
-
-    assigned = spark.range(5000).select(
-        F.col("id").cast("int").alias("vec_id"),
-        (F.col("id") % 16).cast("int").alias("cell"),
-    )
-    return diversity_sample(assigned, k_per_cell=10)
-
-
-def cuckoo_membership_plan(spark):
-    """Plan for the cuckoo maybe-seen stage: same cogroup contract as
-    the bloom shards — the filter blob never rides the row plan."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.seen import (
-        CUCKOO,
-        Cuckoo,
-        build_shards,
-        mark_maybe_seen,
-    )
-
-    cand = spark.range(1000).select(F.xxhash64("id").alias("url_hash"))
-    shards = build_shards(cand, n_buckets=8, kernel=Cuckoo(nb=1 << 9))
-    return mark_maybe_seen(cand, shards, n_buckets=8, kernel=CUCKOO)
-
-
-def linkrank_step_plan(spark):
-    """Plan for one PageRank power-iteration step: the dangling-mass
-    aggregate must ride a broadcast one-row join inside the SAME plan
-    (no per-iteration driver collect — VERDICT r4 #3), and the whole
-    step is Python-free."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.linkrank import rank_step
-
-    e = spark.range(2000).select(
-        (F.col("id") % 97).alias("s"), ((F.col("id") * 7) % 101).alias("d")
-    )
-    verts = (
-        e.select(F.col("s").alias("id"))
-        .unionByName(e.select(F.col("d").alias("id")))
-        .distinct()
-    )
-    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(out_deg, "s")
-    ranks = verts.withColumn("rank", F.lit(1.0 / 101))
-    return rank_step(verts, ed, out_deg, ranks, 0.85, 101)
-
-
-def authority_schedule_plan(spark):
-    """Plan for the authority-weighted politeness schedule: the
-    (url_hash, rank) authority join must not push Python into the
-    frontier path, and the two-phase salted rank must keep its
-    WindowGroupLimit-free row_number windows JVM-side."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.schedule import (
-        politeness_select,
-        with_frontier_columns,
-    )
-
-    raw = spark.range(5000).select(
-        F.concat(
-            F.lit("http://h"), (F.col("id") % 40).cast("string"),
-            F.lit(".test/p"), F.col("id").cast("string"),
-        ).alias("url"),
-        (F.col("id") % 3).cast("int").alias("depth"),
-    )
-    authority = spark.range(500).select(
-        F.xxhash64((F.col("id") * 3).cast("string")).alias("url_hash"),
-        (F.lit(1.0) / (F.col("id") + 1)).alias("rank"),
-    )
-    fr = with_frontier_columns(
-        raw, epoch=0, authority=authority, authority_weight=4.0
-    ).withColumn("crawl_delay", F.lit(1.0))
-    scheduled, _ = politeness_select(fr, budget_base=8)
-    return scheduled
-
-
-def quantize_plan(spark):
-    """Plan for int8 embedding quantization + dequantized search prep:
-    a map-only Column rewrite — no shuffle, no Python."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.similarity import (
-        dequantize_col,
-        quantize_embeddings,
-    )
-
-    emb = spark.range(1000).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.rand(seed=i) for i in range(16)]).alias("embedding"),
-    )
-    return quantize_embeddings(emb).withColumn("d", dequantize_col())
-
-
-def trapguard_plan(spark):
-    """Plan for the spider-trap frontier filter: pure codegen'd Column
-    predicates (parse_url + rlike) — no Python stage, no shuffle, so
-    the guard is free at 10^10-URL frontier scale."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.trapguard import TrapGuard, filter_traps
-
-    frontier = spark.range(5000).select(
-        F.concat(
-            F.lit("http://h"),
-            (F.col("id") % 40).cast("string"),
-            F.lit(".example/p"),
-            F.col("id").cast("string"),
-            F.lit(".html"),
-        ).alias("url")
-    )
-    kept, _rejected = filter_traps(frontier, TrapGuard())
-    return kept
-
-
-def dedup_lines_plan(spark):
-    """Plan for corpus line dedup: the keeper per line must come from
-    a hash-partitioned groupBy MIN (map-side partial aggregation
-    absorbs hot boilerplate lines) — never a window rank partitioned
-    by the line, which would funnel a 10^8-occurrence line through
-    one task."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.functions.text import dedup_lines_corpus
-
-    docs = spark.range(2000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("shared boilerplate line\nbody "),
-            F.col("id").cast("string"),
-        ).alias("text"),
-    )
-    return dedup_lines_corpus(docs)
-
-
-def semantic_dedup_plan(spark):
-    """Plan for SemDeDup: the within-cell pair space must come from a
-    `cell` equi-join (never a cross join), the survivor filter is a
-    left-anti join on ids only, and the whole comparison path is pure
-    JVM Column arithmetic."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.similarity import semantic_dedup
-
-    assigned = spark.range(3000).select(
-        F.col("id").alias("vec_id"),
-        (F.col("id") % 16).cast("int").alias("cell"),
-        F.array(
-            (F.col("id") % 7).cast("double"),
-            (F.col("id") % 13).cast("double"),
-        ).alias("embedding"),
-    )
-    return semantic_dedup(assigned, tau=0.95)
-
-
-def image_curation_plan(spark):
-    """Pre-sink plan of the REAL run_image_curation composition
-    (plan_only=True): the decode is ONE cached Arrow stage consumed by
-    every downstream branch, both dedup pair spaces are equi-joins
-    (band keys / content hashes — pixels never shuffle), the diversity
-    cap is a WindowGroupLimit, and no row-at-a-time Python exists
-    anywhere."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.extract import materialize_images_batches
-    from bisque_spark.plans.curate_images import run_image_curation
-
-    images = spark.range(300).select(
-        F.concat(F.lit("img-x-"), F.col("id")).alias("image_id"),
-        F.lit("a caption").alias("caption"),
-    ).mapInPandas(
-        materialize_images_batches,
-        schema="image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
-    return run_image_curation(spark, images, workdir="", plan_only=True)
-
-
-def sitemap_refresh_plan(spark):
-    """Plan for the sitemap-annotated refresh schedule: hint/boost
-    collapse is a hash groupBy on url_hash (map-side partial MAX —
-    duplicate locs combine locally), the policy dim broadcasts, the
-    per-host cap prunes inside the window, and the whole chain —
-    canonicalize, hash, hint mapping, boost clamp — is JVM Column
-    exprs end to end."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.recrawl import (
-        annotate_seen_from_sitemap,
-        due_for_refresh,
-        policy_table,
-    )
-
-    entries = spark.range(3000).select(
-        F.concat(F.lit("h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test")).alias("host"),
-        F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test/p"), (F.col("id") % 1500).cast("string"))
-        .alias("loc"),
-        F.lit("2026-08-10").alias("lastmod"),
-        F.when(F.col("id") % 3 == 0, F.lit("daily")).alias("changefreq"),
-        F.when(F.col("id") % 2 == 0, (F.col("id") % 11) / 10.0)
-        .alias("priority"),
-    )
-    seen = spark.range(2000).select(
-        F.xxhash64(F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                            F.lit(".test/p"), F.col("id").cast("string")))
-        .alias("url_hash"),
-        F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test/p"), F.col("id").cast("string")).alias("url"),
-        F.concat(F.lit("h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test")).alias("host"),
-        (F.col("id") % 9).cast("int").alias("fetched_epoch"),
-    )
-    ann = annotate_seen_from_sitemap(seen, entries, "2026-08-17")
-    return due_for_refresh(ann, 9, policy_table(spark), limit_per_host=5)
-
-
-def catalog_bucketed_plan(spark):
-    """Zero-exchange equi-join on CATALOG-MANAGED bucketed tables
-    (VERDICT r5 #6): both sides come out of the snapshot catalog via
-    read_bucketed — the bucket distribution survives the manifest
-    layer, so the SortMergeJoin plans without a shuffle on either
-    side."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, tempfile.mkdtemp(prefix="explain_bktcat_"))
-    ddl = "url_hash long, score double"
-    for t in ("ebkt_a", "ebkt_b"):
-        cat.create_table(t, ddl, bucket_by=("url_hash", 8))
-        cat.append(
-            t,
-            spark.range(2000).select(
-                F.col("id").alias("url_hash"),
-                (F.col("id") % 7).cast("double").alias("score"),
-            ),
-        )
-    a = cat.read_bucketed("ebkt_a")
-    b = cat.read_bucketed("ebkt_b").select("url_hash")
-    return a.hint("merge").join(b, "url_hash")
-
-
-EXTRA_CHECKS = {
-    "catalog-bucketed co-located join": (
-        catalog_bucketed_plan,
-        [
-            ("SortMergeJoin", "bucketed join planned as SMJ"),
-            ("!Exchange hashpartitioning", "ZERO shuffle exchanges"),
-            ("!EvalPython", "pure JVM"),
-        ],
-    ),
-    "image curation funnel (pre-sink)": (
-        image_curation_plan,
-        [
-            ("InMemoryTableScan|TableCacheQueryStage",
-             "decode-once: signals cached across every consumer"),
-            ("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
-             "dedup pair spaces are equi-joins (band/content keys)"),
-            ("!CartesianProduct", "no all-pairs pixel comparison"),
-            ("WindowGroupLimit", "diversity cap pruned inside the window"),
-            ("!BatchEvalPython", "no row-at-a-time Python anywhere"),
-        ],
-    ),
-    "sitemap-annotated refresh schedule": (
-        sitemap_refresh_plan,
-        [
-            ("partial_max|HashAggregate", "hint collapse = map-side partial MAX"),
-            ("BroadcastHashJoin", "policy dim broadcast"),
-            ("WindowGroupLimit", "per-host cap pruned inside the window"),
-            ("ArrowEvalPython", "canonicalizer is the one Arrow stage"),
-            ("!BatchEvalPython", "no row-at-a-time Python anywhere"),
-        ],
-    ),
-    "semantic_dedup (SemDeDup)": (
-        semantic_dedup_plan,
-        [
-            ("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
-             "within-cell pairs via cell equi-join"),
-            ("!CartesianProduct", "cross-cell pair space never built"),
-            ("LeftAnti", "survivors = ids-only anti-join"),
-            ("!EvalPython", "cosine path pure JVM"),
-        ],
-    ),
-    "quantize_embeddings (int8 storage)": (
-        quantize_plan,
-        [
-            ("!Exchange", "map-only rewrite, no shuffle"),
-            ("!EvalPython", "pure JVM transform"),
-        ],
-    ),
-    "trap-guard frontier filter": (
-        trapguard_plan,
-        [
-            ("Filter", "guard is a plain pushed filter"),
-            ("!Exchange", "no shuffle added to the frontier path"),
-            ("!EvalPython", "rules are codegen'd (parse_url/rlike), no UDF"),
-        ],
-    ),
-    "dedup_lines_corpus (line keeper)": (
-        dedup_lines_plan,
-        [
-            ("partial_min|HashAggregate", "keeper = map-side partial MIN"),
-            (r"!Window.*__line", "no per-line window rank (skew funnel)"),
-            ("!EvalPython", "pure JVM"),
-        ],
-    ),
-    "authority-weighted schedule": (
-        authority_schedule_plan,
-        [
-            ("BroadcastHashJoin|SortMergeJoin", "authority is a JVM join"),
-            ("RunningWindowFunction|Window", "politeness rank is a window"),
-            ("!EvalPython", "frontier path pure JVM"),
-        ],
-    ),
-    "link_rank step (dangling in-plan)": (
-        linkrank_step_plan,
-        [
-            ("BroadcastNestedLoopJoin|BroadcastExchange",
-             "dangling-mass one-row aggregate broadcast, not collected"),
-            ("!EvalPython", "pure JVM"),
-            ("!CollectLimit", "no driver-side scalar in the step"),
-        ],
-    ),
-    "filter_unseen (bloom cogroup)": (
-        filter_unseen_plan,
-        [
-            ("FlatMapCoGroupsInPandas", "blob ships once per bucket group"),
-            ("!BroadcastHashJoin.*bloom", "no per-row bloom join"),
-            (r"!bloom#\d+\]\s*$", "bloom column never in the output row plan"),
-        ],
-    ),
-    "filter_unseen (exact anti-join, default)": (
-        filter_unseen_exact_plan,
-        [
-            ("LeftAnti", "seen set answered by a left_anti join"),
-            ("!FlatMapCoGroupsInPandas", "no filter cogroup"),
-            ("!(ArrowEvalPython|BatchEvalPython|InPandas|PythonUDF)",
-             "no Python UDF node"),
-        ],
-    ),
-    "diversity_sample (stratified)": (
-        diversity_sample_plan,
-        [
-            ("WindowGroupLimit", "per-cell cap pruned inside the window"),
-            ("!EvalPython", "rank path pure JVM"),
-        ],
-    ),
-    "cuckoo mark_maybe_seen (cogroup)": (
-        cuckoo_membership_plan,
-        [
-            ("FlatMapCoGroupsInPandas", "filter blob ships once per bucket"),
-            (r"!cuckoo#\d+\]\s*$", "cuckoo column never in the row plan"),
-        ],
-    ),
-}
-
-
 def main():
-    spark = get_spark(app_name="explain_plans", master="local[4]")
-    qs = entrymod.queries()
+    spark = get_spark(
+        app_name="explain_plans", master="local[4]", shuffle_partitions=4
+    )
     out = [
         "# EXPLAIN — physical plans of headline queries",
         "",
-        "Generated by scripts/explain_plans.py (sf=%s). Checked plan" % SF_DIR,
-        "properties are the ones that decide 100-TB viability (pushdown,",
-        "broadcast, codegen).",
+        "Generated by scripts/explain_plans.py (sf=%s) from the check" % SF,
+        "table in tests/plan_checks.py, which tests/test_plans.py runs in",
+        "the gate. Checked plan properties are the ones that decide",
+        "100-TB viability (pushdown, broadcast, codegen).",
         "",
     ]
-    for name, checks in CHECKS.items():
-        df = qs[name](spark, SF_DIR)
-        plan = plan_of(df)
+    for name, build, checks in CHECKS:
+        with tempfile.TemporaryDirectory() as tmp:
+            try:
+                plan = plan_text(build(spark, tmp))
+            finally:
+                release_caches()
         out.append(f"## {name}\n")
         for pat, why in checks:
-            if pat.startswith("!"):
-                ok = re.search(pat[1:], plan) is None
-            else:
-                ok = re.search(pat, plan) is not None
-            out.append(f"- {'PASS' if ok else 'MISS'}: {why} (`{pat}`)")
-        out.append("\n```\n" + rendered(plan) + "\n```\n")
-        print(name, "checked")
-    for name, (builder, checks) in EXTRA_CHECKS.items():
-        plan = plan_of(builder(spark))
-        out.append(f"## {name}\n")
-        for pat, why in checks:
-            if pat.startswith("!"):
-                ok = re.search(pat[1:], plan) is None
-            else:
-                ok = re.search(pat, plan) is not None
-            out.append(f"- {'PASS' if ok else 'MISS'}: {why} (`{pat}`)")
+            verdict = "PASS" if check(plan, pat) else "MISS"
+            out.append(f"- {verdict}: {why} (`{pat}`)")
         out.append("\n```\n" + rendered(plan) + "\n```\n")
         print(name, "checked")
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:

@@ -5,11 +5,8 @@ shuffle buys every downstream join/agg on the key a shuffle-free plan
 import pyspark.sql.functions as F
 import pytest
 
-from bisque_spark.sources.bucketed import (
-    bucketed_table,
-    exchange_count,
-    write_bucketed,
-)
+from bisque_spark.sources.bucketed import bucketed_table, write_bucketed
+from plan_checks import exchange_count
 
 
 def _ddl(df):

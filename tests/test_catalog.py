@@ -606,7 +606,7 @@ def test_bucketed_catalog_zero_exchange_join_with_time_travel(spark, cat):
     catalog — a catalog-managed bucketed table joins another
     same-bucketed table with ZERO shuffle exchanges, through append,
     MERGE (CoW rewrite) and time travel alike."""
-    from bisque_spark.sources.bucketed import exchange_count
+    from plan_checks import exchange_count
 
     ddl = "url_hash long, url string, score double"
     cat.create_table("seen_b", ddl, bucket_by=("url_hash", 8))
@@ -646,7 +646,7 @@ def test_bucketed_catalog_zero_exchange_join_with_time_travel(spark, cat):
 
 
 def test_bucketed_catalog_agg_free_and_delete_where(spark, cat):
-    from bisque_spark.sources.bucketed import exchange_count
+    from plan_checks import exchange_count
 
     ddl = "url_hash long, url string, score double"
     cat.create_table("t_b", ddl, bucket_by=("url_hash", 4))
