@@ -20,7 +20,13 @@ extends the engine's own multimodal image-column coverage (graft cell
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
+
+# Declared-size bound (pixels) checked before anything sized from a
+# header field is allocated — the same 64M bound as PNG/TIFF/WebP/JPEG.
+_MAX_PIXELS = 64_000_000
 
 # ---- LZW (GIF variant: LSB-first, variable width 3..12 bits) -------------
 
@@ -184,17 +190,22 @@ def _read_subblocks(data: bytes, pos: int) -> tuple[bytes, int]:
     return b"".join(parts), pos
 
 
-def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
-    """→ (meta, composited full-canvas RGB frames).
+def _check_size(w: int, h: int) -> None:
+    if w * h > _MAX_PIXELS:
+        raise ValueError(f"gif declares {w}x{h} pixels, over the bound")
 
-    meta: {w, h, n_frames, delays_cs (per-frame delay in centiseconds),
-    loop (NETSCAPE iteration count or None), version}.
-    """
+
+def _composite(data: bytes, meta: dict) -> Iterator[tuple[np.ndarray, int]]:
+    """Walk the blocks, yielding (composited full-canvas RGB copy,
+    delay_cs) per image; meta gets w/h/version up front and loop when
+    the NETSCAPE block is read. Lazy, so a caller that wants one frame
+    never walks (or pays for) the rest."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
-    version = data[3:6].decode("ascii")
     sw = int.from_bytes(data[6:8], "little")
     sh = int.from_bytes(data[8:10], "little")
+    _check_size(sw, sh)
+    meta.update(w=sw, h=sh, version=data[3:6].decode("ascii"), loop=None)
     flags = data[10]
     bg_index = data[11]
     pos = 13
@@ -208,10 +219,8 @@ def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
         if gct is not None and bg_index < len(gct)
         else np.zeros(3, dtype=np.uint8)
     )
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).astype(np.uint8).copy()
-    frames: list[np.ndarray] = []
-    delays: list[int] = []
-    loop = None
+    canvas = np.empty((sh, sw, 3), dtype=np.uint8)
+    canvas[...] = bg_rgb
     # pending graphic-control state (applies to the next image)
     disposal, delay_cs, trans_idx = 0, 0, None
     while pos < len(data):
@@ -231,7 +240,7 @@ def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
             elif label == 0xFF:  # application (NETSCAPE loop)
                 block, pos = _read_subblocks(data, pos)
                 if block[:11] == b"NETSCAPE2.0" and len(block) >= 14:
-                    loop = int.from_bytes(block[12:14], "little")
+                    meta["loop"] = int.from_bytes(block[12:14], "little")
             else:  # comment / plain text: skip
                 _, pos = _read_subblocks(data, pos)
         elif b == 0x2C:  # image descriptor
@@ -241,6 +250,7 @@ def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
             ih = int.from_bytes(data[pos + 6 : pos + 8], "little")
             iflags = data[pos + 8]
             pos += 9
+            _check_size(iw, ih)
             pal = gct
             if iflags & 0x80:  # local color table
                 n = 2 << (iflags & 0x07)
@@ -266,8 +276,7 @@ def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
                 region[opaque] = rgb[opaque]
             else:
                 region[...] = rgb
-            frames.append(canvas.copy())
-            delays.append(delay_cs)
+            yield canvas.copy(), delay_cs
             if disposal == 2:
                 canvas[top : top + ih, left : left + iw] = bg_rgb
             elif disposal == 3 and saved is not None:
@@ -275,25 +284,32 @@ def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
             disposal, delay_cs, trans_idx = 0, 0, None
         else:
             raise ValueError(f"unknown GIF block 0x{b:02x}")
-    meta = {
-        "w": sw,
-        "h": sh,
-        "n_frames": len(frames),
-        "delays_cs": delays,
-        "loop": loop,
-        "version": version,
-    }
+
+
+def decode_gif_frames(data: bytes) -> tuple[dict, list[np.ndarray]]:
+    """→ (meta, composited full-canvas RGB frames).
+
+    meta: {w, h, n_frames, delays_cs (per-frame delay in centiseconds),
+    loop (NETSCAPE iteration count or None), version}.
+    """
+    meta: dict = {}
+    frames, delays = [], []
+    for frame, delay_cs in _composite(data, meta):
+        frames.append(frame)
+        delays.append(delay_cs)
+    meta.update(n_frames=len(frames), delays_cs=delays)
     return meta, frames
 
 
 def decode_gif(data: bytes) -> np.ndarray:
     """First composited frame as H×W×3 uint8 RGB (the image-pipeline
     entry — animated GIFs contribute their first frame, like browsers'
-    static rendering)."""
-    meta, frames = decode_gif_frames(data)
-    if not frames:
+    static rendering). The walk stops there: later frames are neither
+    composited nor parsed."""
+    first = next(_composite(data, {}), None)
+    if first is None:
         raise ValueError("gif has no image data")
-    return frames[0]
+    return first[0]
 
 
 # ---- encode --------------------------------------------------------------

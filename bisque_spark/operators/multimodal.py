@@ -1,6 +1,6 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image/audio) column operators.
 
-Images/audio/video are opaque ``binary`` columns + typed metadata
+Images/audio are opaque ``binary`` columns + typed metadata
 (the `images` table shape from BASELINE.json input_hint). Decode /
 resize / feature-extract run as Arrow-batched pandas UDFs over
 ``mapInPandas``; the Spark plumbing (schemas, batch shape,
@@ -36,7 +36,7 @@ THUMB_SCHEMA = "image_id string, w int, h int, thumb binary, error string"
 # PPM (P6) and uncompressed 24-bit BMP are spec-trivial byte layouts:
 # decoding them needs no codec, so they get REAL decoders — the
 # NotImplementedError stub is reserved for formats that genuinely need
-# an absent library (jpeg, webp, video codecs).
+# an absent library.
 
 
 def decode_ppm(data: bytes) -> tuple[np.ndarray, int, int]:
@@ -166,7 +166,6 @@ def _per_row(
     schema: str,
     compute,
     echo: tuple[str, ...],
-    label: str | None = "fmt",
 ) -> DataFrame:
     """The row loop every multimodal stage runs in: ``mapInPandas`` over
     ``cols``, one output frame per Arrow batch.
@@ -176,9 +175,8 @@ def _per_row(
     columns, each kept as soon as it is yielded. A failure keeps what
     was already yielded and fills the ``error`` column (row-level
     containment — hostile bytes never kill the task):
-    NotImplementedError → ``codec_unavailable:<row[label]>`` (the
-    exception text when ``label`` is None), anything else →
-    ``decode_error:<TypeName>``. Output columns nobody set are NULL.
+    NotImplementedError → ``codec_unavailable:<row["fmt"]>``, anything
+    else → ``decode_error:<TypeName>``. Output columns nobody set are NULL.
     """
     out_cols = [field.split()[0] for field in schema.split(",")]
 
@@ -191,10 +189,8 @@ def _per_row(
                 try:
                     for part in compute(row):
                         got.update(part)
-                except NotImplementedError as exc:
-                    got["error"] = (
-                        f"codec_unavailable:{row[label] if label else exc}"
-                    )
+                except NotImplementedError:
+                    got["error"] = f"codec_unavailable:{row['fmt']}"
                 except Exception as exc:  # noqa: BLE001
                     got["error"] = f"decode_error:{type(exc).__name__}"
                 for c in out_cols:
@@ -440,13 +436,13 @@ def image_signals(images: DataFrame, thumb_target: int = 8) -> DataFrame:
     )
 
 
-# ---- audio / video columns ----------------------------------------------
+# ---- audio columns --------------------------------------------------------
 #
-# Same opaque-binary + typed-metadata pattern as images. Audio: raw
-# s16le PCM is decodable in-sandbox (numpy); compressed codecs and all
-# video codecs raise NotImplementedError per row → error column (the
-# Spark plumbing — schema, batching, partitioning — is real; the codec
-# is the stubbed part, per the task brief).
+# Same opaque-binary + typed-metadata pattern as images. Raw s16le PCM
+# and RIFF/WAVE are decodable in-sandbox (numpy); compressed codecs
+# raise NotImplementedError per row → error column (the Spark plumbing
+# — schema, batching, partitioning — is real; the codec is the stubbed
+# part).
 
 AUDIO_FEATURES_SCHEMA = (
     "media_id string, fmt string, sample_rate int, duration_s double, "
@@ -558,173 +554,6 @@ def audio_features(media: DataFrame) -> DataFrame:
     return _per_row(
         media, ("media_id", "bytes", "fmt", "sample_rate"),
         AUDIO_FEATURES_SCHEMA, _audio_row, echo=("media_id", "fmt"),
-    )
-
-
-PDF_TEXT_SCHEMA = "doc_id string, text string, n_pages int, error string"
-
-
-def _pdf_row(row):
-    from bisque_spark.functions.pdf import pdf_text
-
-    got = pdf_text(bytes(row["bytes"]))
-    yield {"text": got["text"], "n_pages": got["n_pages"]}
-
-
-def pdf_text_extract(docs: DataFrame) -> DataFrame:
-    """PDF text extraction over (doc_id, bytes) rows (functions/pdf.py)
-    — the documents-pipeline entry point for the crawl's non-HTML text
-    class. The output text column feeds the existing curation gates
-    (langid, quality, token stats, dedup) unchanged. Per-row honesty:
-    unsupported features (encryption, LZW/DCT content streams,
-    ToUnicode-less Type0 fonts) land in the error column as
-    codec_unavailable:<what>; damage as decode_error — hostile bytes
-    never kill the task."""
-    return _per_row(
-        docs, ("doc_id", "bytes"), PDF_TEXT_SCHEMA, _pdf_row,
-        echo=("doc_id",), label=None,
-    )
-
-
-def synth_pdf(doc_id: str) -> dict:
-    """Deterministic PDF row: 1-3 pages of DetRng word text in a
-    layout drawn from the id (classic/xref-stream × plain/Flate × Tj/
-    TJ-arrays, 1 in 5 with the Identity-H unicode font). The page
-    texts are the ground truth the extractor must recover."""
-    from bisque_spark.functions.pdf import encode_pdf
-    from bisque_spark.synth import DetRng, _words
-
-    rng = DetRng("pdf:" + doc_id)
-    n_pages = rng.randint(1, 3)
-    pages = []
-    for p in range(n_pages):
-        lines = [
-            _words(rng, rng.randint(3, 8)) for _ in range(rng.randint(1, 5))
-        ]
-        pages.append("\n".join(lines))
-    unicode_font = rng.u01() < 0.2
-    if unicode_font:
-        pages = [p + "\ncafé — naïve 日本語" for p in pages]
-    data = encode_pdf(
-        pages,
-        compress=rng.u01() < 0.7,
-        use_tj_arrays=not unicode_font and rng.u01() < 0.4,
-        xref_stream=rng.u01() < 0.5,
-        unicode_font=unicode_font,
-    )
-    return {"bytes": data, "pages": pages, "n_pages": n_pages}
-
-
-def synth_video(media_id: str) -> dict:
-    """Deterministic short clip derived from the id: a moving
-    gradient plus a drifting bright square (nonzero inter-frame
-    motion, so the sampled-frame motion signal is a real measurement).
-    Container alternates AVI / MP4 by seed (r7: real-web video is
-    MP4-dominant); AVI codec alternates MJPG / DIB, MP4 carries
-    'jpeg' (QuickTime Motion-JPEG) samples."""
-    from bisque_spark.functions.avi import encode_avi
-    from bisque_spark.hashing import xxh64
-
-    seed = xxh64(("video:" + media_id).encode()) % (2**32)
-    rng = np.random.RandomState(seed)
-    w = 16 + 2 * int(rng.randint(0, 9))  # 16-32, even
-    h = 16 + 2 * int(rng.randint(0, 9))
-    n_frames = 6 + int(rng.randint(0, 7))  # 6-12
-    fps = float(rng.choice([5.0, 10.0, 15.0, 24.0, 30.0]))
-    container = "mp4" if seed % 4 == 0 else "avi"
-    codec = "MJPG" if seed % 3 else "DIB "
-    yy, xx = np.mgrid[0:h, 0:w]
-    frames = []
-    for t in range(n_frames):
-        r = ((xx * 7 + t * 11) % 256).astype(np.uint8)
-        g = ((yy * 5 + t * 17) % 256).astype(np.uint8)
-        b = ((xx + yy + t * 29) % 256).astype(np.uint8)
-        fr = np.stack([r, g, b], axis=-1)
-        # drifting 4x4 bright square
-        sx = (seed % max(w - 4, 1) + t * 3) % max(w - 4, 1)
-        sy = (seed // 7 % max(h - 4, 1) + t * 2) % max(h - 4, 1)
-        fr[sy : sy + 4, sx : sx + 4] = 255
-        frames.append(fr)
-    if container == "mp4":
-        from bisque_spark.functions.mp4 import encode_mp4
-
-        data = encode_mp4(frames, fps=fps, quality=90)
-    else:
-        data = encode_avi(frames, fps=fps, codec=codec, quality=90)
-    return {
-        "bytes": data,
-        "fmt": container,
-        "n_frames": n_frames,
-        "w": w,
-        "h": h,
-    }
-
-
-VIDEO_FRAMES_SCHEMA = (
-    "media_id string, fmt string, codec string, w int, h int, fps double, "
-    "n_frames int, sampled_idx array<int>, frames array<binary>, "
-    "motion double, error string"
-)
-
-
-def _mp4_frame(meta: dict, i: int) -> np.ndarray:
-    from bisque_spark.functions.avi import ensure_dht
-    from bisque_spark.functions.jpeg import decode_jpeg
-
-    if meta["codec"].lower() not in ("jpeg", "mjpa", "mjpb"):
-        raise NotImplementedError(meta["codec"])
-    return decode_jpeg(ensure_dht(bytes(meta["frames"][i])))
-
-
-def _video_row(every_n: int):
-    def compute(row):
-        from bisque_spark.functions.avi import decode_frame, parse_avi
-        from bisque_spark.functions.mp4 import parse_mp4
-
-        fmt = row["fmt"]
-        if fmt == "avi":
-            meta, frame_of = parse_avi(bytes(row["bytes"])), decode_frame
-        elif fmt == "mp4":
-            meta, frame_of = parse_mp4(bytes(row["bytes"])), _mp4_frame
-        else:
-            raise NotImplementedError(fmt)
-        idx = list(range(0, meta["n_frames"], every_n))
-        decoded = [frame_of(meta, i) for i in idx]
-        yield {k: meta[k] for k in ("codec", "w", "h", "fps", "n_frames")}
-        motion = 0.0
-        if len(decoded) > 1:
-            lumas = [fr.astype(np.float64).mean(axis=-1) for fr in decoded]
-            motion = float(
-                np.mean([np.abs(b - a).mean() for a, b in zip(lumas, lumas[1:])])
-            )
-        yield {
-            "sampled_idx": idx,
-            "frames": [encode_ppm(fr) for fr in decoded],
-            "motion": motion,
-        }
-
-    return compute
-
-
-def video_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling over opaque ``binary`` clips. Decodes ONLY
-    the sampled frame indices (the codec work scales with the sample,
-    not the clip) and emits each sampled frame re-encoded as codec-free
-    PPM so downstream image operators (image_features, phash) consume
-    them directly. ``motion`` = mean absolute luma delta between
-    consecutive sampled frames — the cheap curation signal for
-    static-clip filtering.
-
-    Real decode for AVI containers carrying MJPG (per-frame baseline
-    JPEG, incl. DHT-less camera streams — Annex K.3 defaults injected)
-    or uncompressed DIB frames, and (r7) MP4/ISO-BMFF containers
-    carrying 'jpeg' Motion-JPEG sample entries (functions/mp4.py);
-    compressed codecs (avc1/hvc1/...) stay honest per-row
-    ``codec_unavailable:<codec>`` errors with every computed column
-    NULL."""
-    return _per_row(
-        media, ("media_id", "bytes", "fmt"), VIDEO_FRAMES_SCHEMA,
-        _video_row(every_n), echo=("media_id", "fmt"), label=None,
     )
 
 

@@ -1,6 +1,9 @@
 """GIF codec — LZW round trips (incl. dictionary overflow), interlace,
 animation compositing (disposal 0/1/2/3 + transparency) against a
-hand-computed numpy twin, and the Spark image-pipeline path."""
+hand-computed numpy twin, declared-size bounds and the first-frame-only
+decode, and the Spark image-pipeline path."""
+
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -181,6 +184,67 @@ def test_garbage_and_too_many_colors_rejected():
     img = rng.randint(0, 256, size=(64, 64, 3), dtype=np.uint8)
     with pytest.raises(ValueError):
         encode_gif(img)  # ~4096 unique colors: exact encoder refuses
+
+
+def _peak_alloc(fn):
+    """(result or raised exception, peak traced bytes) of fn()."""
+    tracemalloc.start()
+    try:
+        try:
+            got = fn()
+        except ValueError as exc:
+            got = exc
+        return got, tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def _header(w, h, pal):
+    """GIF89a header + 2-entry global color table, bg index 0."""
+    return (
+        b"GIF89a" + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        + bytes([0x80, 0, 0]) + np.asarray(pal, dtype=np.uint8).tobytes()
+    )
+
+
+@pytest.mark.parametrize("field", ["screen", "frame"])
+def test_dimension_bomb_rejected_before_allocation(field):
+    """A declared size over 64M pixels (8192×8192 here, ~201 MB of RGB)
+    in the logical screen or an image descriptor is refused before the
+    canvas or the LZW output is allocated."""
+    pal = [[0, 0, 0], [255, 255, 255]]
+    if field == "screen":
+        data = _header(8192, 8192, pal) + _img_desc(0, 0, 1, 1, [[1]])
+    else:
+        data = _header(1, 1, pal) + _img_desc(0, 0, 8192, 8192, [[1]])
+    got, peak = _peak_alloc(lambda: decode_gif(data + b"\x3b"))
+    assert isinstance(got, ValueError) and "over the bound" in str(got)
+    assert peak < 1 << 20
+
+
+def test_decode_gif_stops_at_first_frame():
+    """An animation's later frames are neither composited nor kept:
+    a 1024×1024 canvas with 200 1×1 frames decodes in a few canvases
+    of memory (a full-canvas copy per frame would be ~600 MB)."""
+    pal = [[0, 0, 0], [255, 255, 255]]
+    data = _header(1024, 1024, pal)
+    for i in range(200):
+        data += _gce(1) + _img_desc(i, i, 1, 1, [[1]])
+    got, peak = _peak_alloc(lambda: decode_gif(data + b"\x3b"))
+    expect = np.zeros((1024, 1024, 3), dtype=np.uint8)
+    expect[0, 0] = 255
+    assert (got == expect).all()
+    assert peak < 4 * expect.nbytes
+
+
+def test_decode_gif_ignores_damage_after_first_frame():
+    """Damage after the first image does not reach decode_gif; the
+    full animation walk still refuses it."""
+    pal = [[0, 0, 0], [255, 255, 255]]
+    data = _header(4, 4, pal) + _img_desc(0, 0, 4, 4, np.ones((4, 4))) + b"\x99"
+    assert (decode_gif(data) == 255).all()
+    with pytest.raises(ValueError, match="unknown GIF block"):
+        decode_gif_frames(data)
 
 
 def test_gif_flows_through_image_features(spark):

@@ -83,17 +83,6 @@ def test_audio_features(spark):
     assert out["aud-bad"]["error"] == "codec_unavailable:mp3"
 
 
-def test_video_stub_contained(spark):
-    from bisque_spark.operators.multimodal import video_frame_sample
-
-    df = spark.createDataFrame(
-        [("v1", b"\x00", "h264")], "media_id string, bytes binary, fmt string"
-    )
-    r = video_frame_sample(df).first()
-    assert r["error"] == "codec_unavailable:h264"
-    assert r["frames"] is None
-
-
 def test_phash_pairs_identical_images(spark, images):
     # duplicate one image id → identical phash → hamming 0 pair
     dup = images.limit(1).withColumn("image_id", F.lit("img-t-0-copy"))
@@ -458,13 +447,6 @@ _IMG_ERR = {"unk": "codec_unavailable:avif", "bad": "decode_error:ValueError"}
 _IMG_FMT = {"unk": "avif", "bad": "png"}
 
 
-def _encrypted_pdf() -> bytes:
-    from bisque_spark.functions.pdf import encode_pdf
-
-    data = encode_pdf(["locked"], compress=False)
-    return data.replace(b"/Root 1 0 R >>", b"/Root 1 0 R /Encrypt 1 0 R >>")
-
-
 def _image_case(op, computed, echo=True):
     """echo: the stage passes the row's w/h/fmt through on error."""
 
@@ -530,45 +512,6 @@ def _containment_cases():
                 )
             },
         ),
-        "pdf_text_extract": (
-            mm.pdf_text_extract,
-            "doc_id string, bytes binary",
-            [
-                ("enc", bytearray(_encrypted_pdf())),
-                ("bad", bytearray(b"%PDF-1.4 garbage")),
-            ],
-            "doc_id",
-            {
-                did: {"doc_id": did, "text": None, "n_pages": None, "error": err}
-                for did, err in (
-                    ("enc", "codec_unavailable:encrypted PDF"),
-                    ("bad", "decode_error:ValueError"),
-                )
-            },
-        ),
-        "video_frame_sample": (
-            mm.video_frame_sample,
-            "media_id string, bytes binary, fmt string",
-            [
-                ("unk", bytearray(b"\x00"), "h264"),
-                ("bad", bytearray(b"RIFF junk"), "avi"),
-                ("badm", bytearray(b"\x00\x00\x00\x08ftyp"), "mp4"),
-            ],
-            "media_id",
-            {
-                mid: {
-                    "media_id": mid, "fmt": fmt, "codec": None, "w": None,
-                    "h": None, "fps": None, "n_frames": None,
-                    "sampled_idx": None, "frames": None, "motion": None,
-                    "error": err,
-                }
-                for mid, fmt, err in (
-                    ("unk", "h264", "codec_unavailable:h264"),
-                    ("bad", "avi", "decode_error:ValueError"),
-                    ("badm", "mp4", "decode_error:ValueError"),
-                )
-            },
-        ),
     }
 
 
@@ -577,13 +520,13 @@ def _containment_cases():
     [
         "image_features", "image_features_orient", "image_thumbnails",
         "image_pipeline", "image_quality", "image_signals", "image_exif",
-        "audio_features", "pdf_text_extract", "video_frame_sample",
+        "audio_features",
     ],
 )
 def test_stage_contains_bad_rows(spark, stage):
     """Unknown-format and garbage-bytes rows never fail the task: each
-    stage emits them with its exact error label (fmt for image/audio,
-    the exception text for pdf/video) and pass-through columns."""
+    stage emits them with its exact error label (codec_unavailable:<fmt>
+    or decode_error:<TypeName>) and pass-through columns."""
     op, schema, rows, key, expected = _containment_cases()[stage]
     got = {r[key]: r.asDict() for r in op(spark.createDataFrame(rows, schema)).collect()}
     assert got == expected
