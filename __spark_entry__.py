@@ -482,6 +482,7 @@ def _q_crawl_epoch(spark, sf_dir):
     variant of this chain stays pinned by tests/test_crawl.py's
     single-process oracle crawler."""
     from bisque_spark.functions.robots import parse_robots_txt
+    from bisque_spark.functions.urlnorm import url_hash_col
     from bisque_spark.operators.schedule import apply_robots, politeness_select
 
     ev = _load(spark, sf_dir, "events")
@@ -498,7 +499,7 @@ def _q_crawl_epoch(spark, sf_dir):
         ).alias("host"),
         # +1 keeps event_id=0 away from the -0.0/0.0 formatting seam
         (-(F.col("event_id") + 1).cast("double")).alias("priority"),
-    ).withColumn("url_hash", F.xxhash64("url"))
+    ).withColumn("url_hash", url_hash_col())
     hosts = frontier.select("host").distinct()
     hnum = F.substring("host", 2, 3).cast("int")
     [p1] = parse_robots_txt("User-agent: *\nDisallow: /p1\n")["rules"]

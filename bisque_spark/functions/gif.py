@@ -269,8 +269,11 @@ def _composite(data: bytes, meta: dict) -> Iterator[tuple[np.ndarray, int]]:
             if idx.max(initial=0) >= len(pal):
                 raise ValueError("palette index out of range")
             saved = canvas.copy() if disposal == 3 else None
-            rgb = pal[idx]
             region = canvas[top : top + ih, left : left + iw]
+            # a frame reaching past the logical screen is clipped to
+            # it, as viewers do
+            idx = idx[: region.shape[0], : region.shape[1]]
+            rgb = pal[idx]
             if trans_idx is not None:
                 opaque = idx != trans_idx
                 region[opaque] = rgb[opaque]

@@ -6,8 +6,9 @@ Frontier seeding from sitemaps: a host's /sitemap.xml is either a
 <urlset> of page entries or a <sitemapindex> naming child sitemaps
 (depth 1 here — the layout the spec's 50k-URL cap forces on big
 sites). Entries carry <loc> (required, XML-entity-escaped, may be
-whitespace-padded) and optional <lastmod> (W3C datetime — feeds
-recrawl scheduling).
+whitespace-padded) and optional <lastmod> (W3C datetime),
+<changefreq> and <priority>, carried through as columns; the crawl
+seeds its frontier from <loc> alone.
 
 Design split (the functions/robots.py pattern):
 

@@ -26,7 +26,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from bisque_spark.functions.text import simhash_udf, tokens_col
+from bisque_spark.functions.text import hamming64_col, simhash_udf, tokens_col
 
 _MERSENNE61 = (1 << 61) - 1
 
@@ -486,7 +486,7 @@ def simhash_pairs_from_sigs(
         left.join(right, on=["band", "band_key"])
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
+        .withColumn("hamming", hamming64_col(F.col("sim_a"), F.col("sim_b")))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

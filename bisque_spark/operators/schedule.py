@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from bisque_spark.functions.urlnorm import host_col
+from bisque_spark.functions.urlnorm import host_col, url_hash_col
 
 N_HOST_SALTS = 8
 
@@ -40,11 +40,11 @@ N_HOST_SALTS = 8
 def with_frontier_columns(
     df: DataFrame,
     epoch: int,
-    depth_col: str = "depth",
     authority: DataFrame | None = None,
     authority_weight: float = 1.0,
 ) -> DataFrame:
-    """url (canonical) → + url_hash, host, priority, epoch columns.
+    """url (canonical), depth → + url_hash, host, priority, epoch
+    columns.
 
     ``authority`` (url_hash, rank — e.g. linkrank.authority_from_crawl)
     turns the BFS priority into the authority-weighted crawl ordering
@@ -58,9 +58,9 @@ def with_frontier_columns(
     shuffle join, not a broadcast.
     """
     out = (
-        df.withColumn("url_hash", F.xxhash64("url"))
+        df.withColumn("url_hash", url_hash_col())
         .withColumn("host", host_col("url"))
-        .withColumn("priority", -F.col(depth_col).cast("double"))
+        .withColumn("priority", -F.col("depth").cast("double"))
         .withColumn("epoch", F.lit(epoch))
     )
     if authority is not None:
@@ -122,7 +122,6 @@ def apply_robots(
 def politeness_select(
     frontier: DataFrame,
     budget_base: int,
-    n_salts: int = N_HOST_SALTS,
     two_phase: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Split an epoch's frontier into (scheduled, deferred).
@@ -152,14 +151,14 @@ def politeness_select(
         )
         return scheduled.drop("budget"), deferred.drop("budget")
     df = frontier.withColumn("budget", budget).withColumn(
-        "salt", F.pmod(F.col("url_hash"), F.lit(n_salts))
+        "salt", F.pmod(F.col("url_hash"), F.lit(N_HOST_SALTS))
     )
     # phase 1: parallel pre-rank within (host, salt); safe over-approx
     w1 = Window.partitionBy("host", "salt").orderBy(*order)
     pre = df.withColumn("salt_rank", F.row_number().over(w1))
     survivors = pre.where(F.col("salt_rank") <= F.col("budget")).drop("salt_rank")
     spilled = pre.where(F.col("salt_rank") > F.col("budget")).drop("salt_rank")
-    # phase 2: exact per-host rank over the ≤ n_salts·budget survivors
+    # phase 2: exact per-host rank over the ≤ N_HOST_SALTS·budget survivors
     ranked = survivors.withColumn("host_rank", F.row_number().over(w2))
     scheduled = ranked.where(F.col("host_rank") <= F.col("budget"))
     deferred_extra = ranked.where(F.col("host_rank") > F.col("budget")).drop(

@@ -61,11 +61,11 @@ class TrapGuard:
         return r"(/[^/?#]+)\1{%d,}" % self.max_segment_repeat
 
 
-def trap_reason_col(guard: TrapGuard, url_col: str = "url") -> Column:
+def trap_reason_col(guard: TrapGuard) -> Column:
     """String reason the URL is a trap, or NULL if clean — pure
     Column exprs (codegen; no UDF). First matching rule wins, in the
     same order as the Python twin ``trap_reason``."""
-    url = F.col(url_col)
+    url = F.col("url")
     path = F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit(""))
     query = F.coalesce(F.parse_url(url, F.lit("QUERY")), F.lit(""))
     # '/'-count of the path == segment count (canonical paths start
@@ -88,14 +88,14 @@ def trap_reason_col(guard: TrapGuard, url_col: str = "url") -> Column:
 
 
 def filter_traps(
-    df: DataFrame, guard: TrapGuard, url_col: str = "url"
+    df: DataFrame, guard: TrapGuard
 ) -> tuple[DataFrame, DataFrame]:
     """(kept, rejected) split of ``df`` by the trap rules. ``kept``
     keeps the input schema untouched; ``rejected`` carries a
     ``trap_reason`` column for lineage/diagnostics. Both are lazy
     filters over the same scan — Catalyst pushes them down; neither
     shuffles."""
-    reason = trap_reason_col(guard, url_col)
+    reason = trap_reason_col(guard)
     with_reason = df.withColumn("trap_reason", reason)
     kept = with_reason.where(F.col("trap_reason").isNull()).drop("trap_reason")
     rejected = with_reason.where(F.col("trap_reason").isNotNull())

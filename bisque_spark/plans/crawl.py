@@ -34,6 +34,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from bisque_spark.functions.urlnorm import url_hash_col
 from bisque_spark.operators.extract import (
     EXTRACT_SCHEMA,
     IMAGES_SCHEMA,
@@ -420,10 +421,10 @@ def run_crawl(
         # robots/dedup), which is what link-authority ranking consumes
         edges = (
             extracted.select(
-                F.xxhash64("url").alias("url_hash"),
+                url_hash_col().alias("url_hash"),
                 F.explode("links").alias("__dst"),
             )
-            .withColumn("dst_hash", F.xxhash64("__dst"))
+            .withColumn("dst_hash", url_hash_col("__dst"))
             .select("url_hash", "dst_hash")
         )
         slices = [

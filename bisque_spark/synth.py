@@ -397,37 +397,13 @@ def page_status(world: World, url: str) -> int:
     return 503
 
 
-def page_change_period(world: World, url: str) -> int:
-    """Deterministic per-URL change cadence class (expected change
-    rate 1/period per epoch): 1 = volatile … 8 = near-static."""
-    return (1, 2, 4, 8)[xxh64(("chgp:" + url).encode()) % 4]
-
-
-def page_version(world: World, url: str, epoch: int) -> int:
-    """Content version of ``url`` at ``epoch``: the number of change
-    events in epochs [1..epoch]. A change happens at epoch e iff
-    xxh64("chg:url:e") % period == 0 — a per-epoch Bernoulli(1/period)
-    draw, fully deterministic (crawl contract: no wall clock, no
-    rand). Version 0 == the original page, so every pre-versioning
-    test/fixture/oracle byte stays valid."""
-    if epoch <= 0:
-        return 0
-    p = page_change_period(world, url)
-    return sum(
-        1 for e in range(1, epoch + 1)
-        if xxh64(f"chg:{url}:{e}".encode()) % p == 0
-    )
-
-
-def page_html(world: World, url: str, version: int = 0) -> str:
-    """Deterministic page body (text, pre-encoding) for a 200 URL.
-    ``version`` (page_version) re-rolls the content stream; version 0
-    is byte-identical to the pre-versioning world."""
+def page_html(world: World, url: str) -> str:
+    """Deterministic page body (text, pre-encoding) for a 200 URL."""
     idx = page_index(url)
     assert idx is not None
     host, page_no = idx
     host_idx = int(host[1:5])
-    rng = DetRng("page:" + url + (f":v{version}" if version else ""))
+    rng = DetRng("page:" + url)
     parts = [
         "<!DOCTYPE html>\n<html><head>",
         f"<title>{_words(rng, 3)}</title>",
@@ -514,17 +490,12 @@ def page_html(world: World, url: str, version: int = 0) -> str:
     return "\n".join(parts)
 
 
-def page_bytes(
-    world: World, url: str, version: int = 0
-) -> tuple[int, bytes | None]:
-    """Fetch simulation: canonical URL → (status, content bytes).
-    ``version`` selects the page's content version (page_version);
-    status and encoding variant stay keyed by URL alone — a page that
-    changes content doesn't change its HTTP behavior."""
+def page_bytes(world: World, url: str) -> tuple[int, bytes | None]:
+    """Fetch simulation: canonical URL → (status, content bytes)."""
     status = page_status(world, url)
     if status != 200:
         return status, None
-    html = page_html(world, url, version)
+    html = page_html(world, url)
     enc = xxh64(("enc:" + url).encode()) % 4
     if enc == 0:
         head = '<meta charset="utf-8">'

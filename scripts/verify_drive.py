@@ -48,16 +48,9 @@ except Exception as ex:
 # ---- full Cho loop (VERDICT r5 #4): crawl A's committed link graph →
 # authority; crawl B re-ordered with the FULL stack on (authority +
 # sitemap seeding + trap guard), matched against the single-process
-# oracle crawler; then a sitemap-annotated refresh schedule off B.
+# oracle crawler.
 sys.path.insert(0, os.path.join(REPO, "tests"))
-import pyspark.sql.functions as F  # noqa: E402
-
 from bisque_spark.operators.linkrank import authority_from_crawl  # noqa: E402
-from bisque_spark.operators.recrawl import (  # noqa: E402
-    annotate_seen_from_sitemap,
-    due_for_refresh,
-    policy_table,
-)
 from bisque_spark.operators.trapguard import TrapGuard  # noqa: E402
 from bisque_spark.util import release_caches  # noqa: E402
 from oracle_crawler import crawl_oracle  # noqa: E402
@@ -93,26 +86,6 @@ seq_b = sorted((e, h, rk, uh) for (e, h, rk, p, uh, u) in got_b)
 print("PROBE authority reorders fetches:",
       "OK" if seq_a != seq_b else "VACUOUS")
 
-seen_t = (
-    read_order(spark, res_b)
-    .select("url_hash", "url", "host",
-            F.col("epoch").cast("int").alias("fetched_epoch"))
-    .dropDuplicates(["url_hash"])
-)
-from bisque_spark.functions.robots import fetch_robots  # noqa: E402
-from bisque_spark.functions.sitemap import sitemap_seed_locs  # noqa: E402
-
-hosts_df = spark.createDataFrame(
-    [(world.host(i),) for i in range(world.n_hosts)], "host string"
-)
-entries = sitemap_seed_locs(fetch_robots(hosts_df, world), world)
-ann = annotate_seen_from_sitemap(seen_t, entries, "2026-08-17")
-due1 = sorted(map(tuple, due_for_refresh(
-    ann, 9, policy_table(spark), limit_per_host=3).collect()))
-due2 = sorted(map(tuple, due_for_refresh(
-    ann, 9, policy_table(spark), limit_per_host=3).collect()))
-print("PROBE sitemap-annotated refresh schedule:",
-      len(due1), "rows,", "deterministic" if due1 == due2 else "UNSTABLE")
 release_caches()
 
 wd4 = tempfile.mkdtemp(prefix="verify_garbage_")

@@ -172,23 +172,6 @@ def authority_schedule_plan(spark, tmp):
     return scheduled
 
 
-def quantize_plan(spark, tmp):
-    """Plan for int8 embedding quantization + dequantized search prep:
-    a map-only Column rewrite — no shuffle, no Python."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.similarity import (
-        dequantize_col,
-        quantize_embeddings,
-    )
-
-    emb = spark.range(1000).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.rand(seed=i) for i in range(16)]).alias("embedding"),
-    )
-    return quantize_embeddings(emb).withColumn("d", dequantize_col())
-
-
 def trapguard_plan(spark, tmp):
     """Plan for the spider-trap frontier filter: pure codegen'd Column
     predicates (parse_url + rlike) — no Python stage, no shuffle, so
@@ -271,46 +254,6 @@ def image_curation_plan(spark, tmp):
         "caption string, phash long",
     )
     return run_image_curation(spark, images, workdir="", plan_only=True)
-
-
-def sitemap_refresh_plan(spark, tmp):
-    """Plan for the sitemap-annotated refresh schedule: hint/boost
-    collapse is a hash groupBy on url_hash (map-side partial MAX —
-    duplicate locs combine locally), the policy dim broadcasts, the
-    per-host cap prunes inside the window, and the whole chain —
-    canonicalize, hash, hint mapping, boost clamp — is JVM Column
-    exprs end to end."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.recrawl import (
-        annotate_seen_from_sitemap,
-        due_for_refresh,
-        policy_table,
-    )
-
-    entries = spark.range(3000).select(
-        F.concat(F.lit("h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test")).alias("host"),
-        F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test/p"), (F.col("id") % 1500).cast("string"))
-        .alias("loc"),
-        F.lit("2026-08-10").alias("lastmod"),
-        F.when(F.col("id") % 3 == 0, F.lit("daily")).alias("changefreq"),
-        F.when(F.col("id") % 2 == 0, (F.col("id") % 11) / 10.0)
-        .alias("priority"),
-    )
-    seen = spark.range(2000).select(
-        F.xxhash64(F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                            F.lit(".test/p"), F.col("id").cast("string")))
-        .alias("url_hash"),
-        F.concat(F.lit("http://h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test/p"), F.col("id").cast("string")).alias("url"),
-        F.concat(F.lit("h"), (F.col("id") % 40).cast("string"),
-                 F.lit(".test")).alias("host"),
-        (F.col("id") % 9).cast("int").alias("fetched_epoch"),
-    )
-    ann = annotate_seen_from_sitemap(seen, entries, "2026-08-17")
-    return due_for_refresh(ann, 9, policy_table(spark), limit_per_host=5)
 
 
 def catalog_bucketed_plan(spark, tmp):
@@ -445,23 +388,12 @@ CHECKS = [
         ("WindowGroupLimit", "diversity cap pruned inside the window"),
         ("!BatchEvalPython", "no row-at-a-time Python anywhere"),
     ]),
-    ("sitemap_refresh_schedule", sitemap_refresh_plan, [
-        ("partial_max|HashAggregate", "hint collapse = map-side partial MAX"),
-        ("BroadcastHashJoin", "policy dim broadcast"),
-        ("WindowGroupLimit", "per-host cap pruned inside the window"),
-        ("ArrowEvalPython", "canonicalizer is the one Arrow stage"),
-        ("!BatchEvalPython", "no row-at-a-time Python anywhere"),
-    ]),
     ("semantic_dedup", semantic_dedup_plan, [
         ("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "within-cell pairs via cell equi-join"),
         ("!CartesianProduct", "cross-cell pair space never built"),
         ("LeftAnti", "survivors = ids-only anti-join"),
         ("!EvalPython", "cosine path pure JVM"),
-    ]),
-    ("quantize_embeddings", quantize_plan, [
-        ("!Exchange", "map-only rewrite, no shuffle"),
-        ("!EvalPython", "pure JVM transform"),
     ]),
     ("trap_guard_filter", trapguard_plan, [
         ("Filter", "guard is a plain pushed filter"),

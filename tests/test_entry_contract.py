@@ -126,3 +126,177 @@ def test_every_engine_module_reached_from_graded_roots():
     assert sorted(unreached - set(_UNREACHED_OK)) == []
     # an allowlisted module that a root now reaches leaves the list
     assert sorted(set(_UNREACHED_OK) - unreached) == []
+
+
+# Engine defs ("module.qualname" under bisque_spark/) that no graded
+# root reaches, grouped under the one reason each group is kept.
+_UNREACHED_DEFS_OK = {
+    "oracle twins and fixture writers": {
+        "functions.gif.decode_gif_frames",
+        "functions.jpeg.cmyk_to_rgb",
+        "functions.jpeg.encode_jpeg_cmyk",
+        "functions.jpeg.psnr",
+        "functions.robots.robots_allowed_py",
+        "functions.sitemap._numref_py",
+        "functions.sitemap._unescape_py",
+        "functions.sitemap.parse_sitemap",
+        "functions.text.fingerprint_py",
+        "functions.text.langid_py",
+        "functions.urlnorm.url_host",
+        "operators.multimodal.encode_bmp",
+        "operators.multimodal.encode_ppm",
+        "operators.multimodal.encode_wav",
+        "operators.similarity.cosine_topk",
+    },
+    "bisque reference parity, diffed against the reference": {
+        "functions.css.closest",
+        "functions.css.compile_selector",
+        "functions.css.escape_ident",
+        "functions.css.filter_children",
+        "functions.css.iselect",
+        "functions.css.select_one",
+        "functions.encoding.candidate_encodings",
+        "functions.encoding.detwingle",
+        "functions.substitution.substitute_xml_containing_entities",
+        "operators.nodes.callable_strainer",
+        "operators.nodes.children_of",
+        "operators.nodes.descendants_of",
+        "operators.nodes.find_first",
+        "operators.nodes.get_text_of",
+        "operators.nodes.next_elements_of",
+        "operators.nodes.next_siblings_of",
+        "operators.nodes.parents_of",
+        "operators.nodes.previous_elements_of",
+        "parse._rewrite_meta_charset",
+        "parse.encode_nodes",
+        "parse.prettify_nodes",
+        "parse.serialize_contents",
+    },
+    "the north_rule's Bloom/cuckoo filter (deletion and shard upkeep)": {
+        "operators.recrawl.reopen_for_refetch",
+        "operators.seen._delete_many",
+        "operators.seen.bits_for",
+        "operators.seen.compact_shards",
+        "operators.seen.delete_from_shards",
+        "operators.seen.merge_shards",
+        "operators.seen.nb_for",
+    },
+    "the crawl's output readers": {
+        "plans.crawl.read_images",
+        "plans.crawl.read_links",
+        "plans.crawl.read_order",
+        "plans.crawl.read_seen",
+    },
+    "the Iceberg sink's maintenance ops": {
+        "sources.catalog.ParquetCatalog.add_column",
+        "sources.catalog.ParquetCatalog.compact",
+        "sources.catalog.ParquetCatalog.delete_where",
+        "sources.catalog.ParquetCatalog.drop_column",
+        "sources.catalog.ParquetCatalog.expire_snapshots",
+        "sources.catalog.ParquetCatalog.read_bucketed",
+    },
+    "per-stage compositions the multimodal differentials compare against": {
+        "operators.multimodal._exif_row",
+        "operators.multimodal.image_exif",
+        "operators.multimodal.image_quality",
+        "operators.multimodal.image_thumbnails",
+    },
+    "HTMLParser callbacks, called by the base class": {
+        "parse._NodeCollector.handle_charref",
+        "parse._NodeCollector.handle_comment",
+        "parse._NodeCollector.handle_data",
+        "parse._NodeCollector.handle_decl",
+        "parse._NodeCollector.handle_endtag",
+        "parse._NodeCollector.handle_entityref",
+        "parse._NodeCollector.handle_pi",
+        "parse._NodeCollector.handle_startendtag",
+        "parse._NodeCollector.handle_starttag",
+        "parse._NodeCollector.unknown_decl",
+    },
+}
+
+
+def _referenced_names(nodes):
+    """Every name the nodes mention: identifiers, attributes, imported
+    names, and string constants that are identifiers (query keys and
+    column names dispatch by name, so the scan counts them)."""
+    import ast
+
+    out = set()
+    for node in nodes:
+        for x in ast.walk(node):
+            if isinstance(x, ast.Name):
+                out.add(x.id)
+            elif isinstance(x, ast.Attribute):
+                out.add(x.attr)
+            elif isinstance(x, ast.alias):
+                out.add(x.name.rsplit(".", 1)[-1])
+            elif isinstance(x, ast.Constant) and isinstance(x.value, str):
+                if x.value.isidentifier():
+                    out.add(x.value)
+    return out
+
+
+def test_every_engine_def_reached_from_graded_roots():
+    """Name-based def-level scan: a def under bisque_spark/ is reached
+    when a reached body names it. Roots are the driver entry, the
+    bench, the perfbench runner (its tests excluded) and module-level
+    code under bisque_spark/. A class body's own statements count as
+    the class; dunder methods are reached implicitly. Defs of a module
+    that _UNREACHED_OK lists are covered by that entry. Any other
+    unreached def is deleted or listed in _UNREACHED_DEFS_OK; a listed
+    name that is now reached or no longer defined leaves the list."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(entrymod.__file__).resolve().parent
+    pkg = root / "bisque_spark"
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    defs, module_code, allowlisted = {}, [], set()
+
+    def collect(body, prefix):
+        for st in body:
+            if isinstance(st, kinds):
+                defs[f"{prefix}.{st.name}"] = st
+                if isinstance(st, ast.ClassDef):
+                    collect(st.body, f"{prefix}.{st.name}")
+
+    for p in sorted(pkg.rglob("*.py")):
+        mod = ".".join(p.relative_to(pkg).with_suffix("").parts)
+        tree = ast.parse(p.read_text())
+        collect(tree.body, mod)
+        module_code += [st for st in tree.body if not isinstance(st, kinds)]
+        if str(p.relative_to(root)) in _UNREACHED_OK:
+            allowlisted.add(mod)
+
+    def own_code(d):
+        # a class's methods are defs of their own; the rest is the class
+        if isinstance(d, ast.ClassDef):
+            body = [st for st in d.body if not isinstance(st, kinds)]
+            return body + d.bases + d.keywords + d.decorator_list
+        return [d]
+
+    roots = [root / "__spark_entry__.py", root / "bench.py"] + sorted(
+        p for p in (root / "perfbench").glob("*.py")
+        if not p.name.startswith("test_")
+    )
+    names = _referenced_names([ast.parse(p.read_text()) for p in roots])
+    names |= _referenced_names(module_code)
+    reached, grew = set(), True
+    while grew:
+        grew = False
+        for q, d in defs.items():
+            dunder = d.name.startswith("__") and d.name.endswith("__")
+            if q not in reached and (d.name in names or dunder):
+                reached.add(q)
+                names |= _referenced_names(own_code(d))
+                grew = True
+
+    unreached = {
+        q for q in set(defs) - reached
+        if not any(q.startswith(m + ".") for m in allowlisted)
+    }
+    listed = set().union(*_UNREACHED_DEFS_OK.values())
+    assert sorted(unreached - listed) == []
+    # a listed def that is now reached, or gone, leaves the list
+    assert sorted(listed - unreached) == []

@@ -117,9 +117,10 @@ def _img_desc(left, top, w, h, idx, mcs=2):
 
 def test_subrect_disposal_compositing_matches_twin():
     """Hand-built animation with sub-rectangle frames exercising
-    disposal 1 (leave), 2 (restore background), 3 (restore previous)
-    and transparency — expected canvases computed independently in
-    numpy, the way the GIF89a spec describes a viewer."""
+    disposal 1 (leave), 2 (restore background), 3 (restore previous),
+    transparency, and frames reaching past the logical screen (clipped,
+    opaque and transparent) — expected canvases computed independently
+    in numpy, the way the GIF89a spec describes a viewer."""
     BLACK, RED, GREEN, BLUE = range(4)
     pal = np.array(
         [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8
@@ -138,10 +139,16 @@ def test_subrect_disposal_compositing_matches_twin():
     data += _gce(3, trans_idx=BLACK) + _img_desc(0, 0, 4, 4, f3)
     # F4: single blue pixel at (7,7) — proves F3's paint was undone
     data += _gce(1) + _img_desc(7, 7, 1, 1, np.full((1, 1), BLUE))
+    # F5: opaque 4x4 at (6,5) — overhangs the right and bottom edges
+    f5 = np.arange(16).reshape(4, 4) % 4
+    data += _gce(1) + _img_desc(6, 5, 4, 4, f5)
+    # F6: 5x3 at (5,6) with a transparent index, also overhanging
+    f6 = np.arange(15).reshape(3, 5) % 4
+    data += _gce(1, trans_idx=BLACK) + _img_desc(5, 6, 5, 3, f6)
     data += b"\x3b"
 
     meta, dec = decode_gif_frames(bytes(data))
-    assert meta["n_frames"] == 4
+    assert meta["n_frames"] == 6
 
     c1 = np.zeros((8, 8, 3), dtype=np.uint8)
     c1[...] = pal[RED]
@@ -160,6 +167,15 @@ def test_subrect_disposal_compositing_matches_twin():
     c4 = after2.copy()  # disposal 3 restored the pre-F3 canvas
     c4[7, 7] = pal[BLUE]
     assert (dec[3] == c4).all()
+
+    c5 = c4.copy()  # only the on-screen 3x2 corner of F5 is painted
+    c5[5:8, 6:8] = pal[f5[:3, :2]]
+    assert (dec[4] == c5).all()
+
+    c6 = c5.copy()
+    on = f6[:2, :3]  # on-screen 2x3 corner; BLACK keeps what is under it
+    c6[6:8, 5:8][on != BLACK] = pal[on[on != BLACK]]
+    assert (dec[5] == c6).all()
 
 
 def test_local_color_table_overrides_global():

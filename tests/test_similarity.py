@@ -6,7 +6,8 @@ import pytest
 
 from bisque_spark.operators.similarity import (
     cosine_topk,
-    knn_join_bruteforce,
+    ivf_build,
+    ivf_query,
     lsh_near_pairs,
 )
 
@@ -31,29 +32,14 @@ def test_cosine_topk_matches_numpy(spark, vecs):
     assert got == want
 
 
-def test_knn_join(spark, vecs):
-    df, mat = vecs
-    queries = spark.createDataFrame(
-        [(0, [float(x) for x in mat[0]]), (1, [float(x) for x in mat[1]])],
-        "query_id long, qvec array<float>",
-    )
-    out = knn_join_bruteforce(df, queries, k=3)
-    per_q = {}
-    for r in out.collect():
-        per_q.setdefault(r["query_id"], []).append(r["vec_id"])
-    assert len(per_q[0]) == 3 and len(per_q[1]) == 3
-    assert 0 in per_q[0]  # self is its own nearest neighbor
-
-
 def test_ivf_topk_high_recall(spark, vecs):
-    from bisque_spark.operators.similarity import ivf_topk
-
     df, mat = vecs
     q = list(mat[0])
     exact = [r["vec_id"] for r in cosine_topk(df, "embedding", q, k=5).collect()]
+    assigned, centroids = ivf_build(df, n_cells=8)
     approx = [
         r["vec_id"]
-        for r in ivf_topk(df, q, k=5, n_cells=8, n_probe=4).collect()
+        for r in ivf_query(assigned, centroids, q, k=5, n_probe=4).collect()
     ]
     # the query vector itself must be found; recall@5 ≥ 3/5 with 4/8 probes
     assert 0 in approx
@@ -166,26 +152,6 @@ def test_lsh_auto_tuned_params_scale_and_hold_recall(spark):
     assert len(got & want) / len(want) >= 0.9
 
 
-def test_ivf_build_query_split(spark, vecs):
-    """One build, many queries: ivf_query runs on the prebuilt index
-    (no quantizer jobs on the query path) and matches the convenience
-    ivf_topk wrapper exactly — same quantizer seed, same results."""
-    from bisque_spark.operators.similarity import ivf_build, ivf_query, ivf_topk
-
-    df, mat = vecs
-    assigned, centroids = ivf_build(df, n_cells=8)
-    for qi in (0, 1):
-        q = [float(x) for x in mat[qi]]
-        via_split = [
-            r["vec_id"] for r in ivf_query(assigned, centroids, q, k=5, n_probe=4).collect()
-        ]
-        via_topk = [
-            r["vec_id"] for r in ivf_topk(df, q, k=5, n_cells=8, n_probe=4).collect()
-        ]
-        assert via_split == via_topk
-        assert qi in via_split  # self found
-
-
 def test_ivf_build_writes_partitioned_index(spark, vecs, tmp_path):
     """index_path variant: the assignment lands partitioned by cell so
     probe pruning is parquet partition pruning at scale."""
@@ -238,10 +204,6 @@ def test_ivf_clustered_recall_beats_lowest_id_quantizer(spark):
     round 1's lowest-id centroids collapse there (cluster members
     scatter across near-identical centroids; probing misses most of
     them). The sampled+Lloyd quantizer must reach recall@10 >= 0.9."""
-    import numpy as np
-
-    from bisque_spark.operators.similarity import cosine_topk, ivf_topk
-
     rng = np.random.RandomState(11)
     n_clusters, per, dim = 10, 60, 16
     centers = rng.normal(size=(n_clusters, dim))
@@ -257,9 +219,10 @@ def test_ivf_clustered_recall_beats_lowest_id_quantizer(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = [float(x) for x in centers[7]]
     exact = [r["vec_id"] for r in cosine_topk(df, "embedding", q, k=10).collect()]
+    assigned, centroids = ivf_build(df, n_cells=10)
     approx = [
         r["vec_id"]
-        for r in ivf_topk(df, q, k=10, n_cells=10, n_probe=3).collect()
+        for r in ivf_query(assigned, centroids, q, k=10, n_probe=3).collect()
     ]
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.9, (recall, exact, approx)
@@ -334,87 +297,6 @@ def test_diversity_sample_stratified_and_deterministic(spark):
         """).fetchall()
     }
     assert set(rows) == want
-
-
-# ---- int8 quantization (embedding storage path) --------------------------
-
-
-def test_quantize_matches_numpy_twin_and_error_bound(spark):
-    import numpy as np
-
-    from bisque_spark.operators.similarity import (
-        dequantize_col,
-        quantize_embeddings,
-    )
-
-    rng = np.random.RandomState(9)
-    vecs = [rng.randn(16).astype(np.float32) * (i % 5 + 0.1) for i in range(40)]
-    vecs.append(np.full(16, 2.5, dtype=np.float32))  # constant vector
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = quantize_embeddings(df)
-    got = {r["vec_id"]: r for r in out.collect()}
-    for i, v in enumerate(vecs):
-        v = v.astype(np.float64)
-        lo, hi = v.min(), v.max()
-        scale = (hi - lo) / 255.0
-        safe = scale if scale > 0 else 1.0
-        q = (np.floor((v - lo) / safe + 0.5).astype(int) - 128).astype(np.int8)
-        r = got[i]
-        assert list(r["q"]) == q.tolist(), i  # bit-identical to the twin
-        assert abs(r["lo"] - lo) < 1e-12 and abs(r["scale"] - scale) < 1e-15
-        recon = lo + (q.astype(np.float64) + 128.0) * scale
-        assert np.abs(recon - v).max() <= scale / 2 + 1e-12  # error bound
-    # constant vector reconstructs exactly
-    r = got[len(vecs) - 1]
-    assert r["scale"] == 0.0 and set(r["q"]) == {-128}
-
-    deq = {
-        r["vec_id"]: r["d"]
-        for r in out.select(
-            "vec_id", dequantize_col().alias("d")
-        ).collect()
-    }
-    for i, v in enumerate(vecs):
-        v = v.astype(np.float64)
-        scale = (v.max() - v.min()) / 255.0
-        assert np.abs(np.array(deq[i]) - v).max() <= scale / 2 + 1e-12
-
-
-def test_knn_over_quantized_embeddings_recall(spark):
-    """Search over the dequantized int8 table: top-10 recall vs exact
-    float search stays >= 0.9 on the real embeddings table."""
-    import pyspark.sql.functions as F
-
-    from bisque_spark.operators.similarity import (
-        cosine_col,
-        dequantize_col,
-        quantize_embeddings,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == 3).first()["embedding"]
-    ]
-    qlit = F.array(*[F.lit(x) for x in q])
-
-    def topk(df, vec):
-        return [
-            r["vec_id"]
-            for r in df.select(
-                "vec_id", cosine_col(vec, qlit).alias("c")
-            )
-            .where(F.col("vec_id") != 3)
-            .orderBy(F.desc("c"), "vec_id")
-            .limit(10)
-            .collect()
-        ]
-
-    exact = topk(emb, F.transform("embedding", lambda x: x.cast("double")))
-    quant = quantize_embeddings(emb).withColumn("d", dequantize_col())
-    approx = topk(quant, F.col("d"))
-    assert len(set(exact) & set(approx)) >= 9
 
 
 # ---- SemDeDup (embedding-cluster semantic dedup) -------------------------

@@ -305,24 +305,3 @@ def test_discovery_via_robots_rejects_cross_host(spark):
     release_caches()
     assert got == {(h, loc) for h in adverts for loc in sitemap_locs(WORLD, h)}
 
-
-def test_change_hint_from_lastmod(spark):
-    from bisque_spark.operators.recrawl import change_hint_from_lastmod
-
-    rows = [
-        ("2026-08-15",),            # 2 days old  → 3
-        ("2026-08-01",),            # 16 days     → 2
-        ("2026-03-01",),            # ~5 months   → 1
-        ("2024-01-01",),            # years       → 0
-        (None,),                    # absent      → 0
-        ("2026-08-15T10:00:00+00:00",),  # full W3C → 3
-        ("garbage",),               # malformed   → 0
-    ]
-    df = spark.createDataFrame(rows, "lastmod string")
-    got = [
-        r["h"]
-        for r in df.select(
-            change_hint_from_lastmod("lastmod", "2026-08-17").alias("h")
-        ).collect()
-    ]
-    assert got == [3, 2, 1, 0, 0, 3, 0]
