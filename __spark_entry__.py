@@ -239,9 +239,8 @@ def _q_simhash_near_dups(spark, sf_dir):
 def _q_ngram_jaccard_pairs(spark, sf_dir):
     """Exact all-pairs n-gram Jaccard at oracle scale (DuckDB
     list_intersect/list_union hash-verified; VERDICT r02 Next-round
-    #2b). At 100 TB the LSH-pruned ngram_jaccard_pairs replaces the
-    triangular join — its candidate machinery is the minhash band join
-    verified by tests/test_dedup.py."""
+    #2b). The triangular join is quadratic; at corpus scale
+    minhash_dedup_pairs's band join is the pruned near-dup path."""
     from bisque_spark.operators.dedup import ngram_jaccard_pairs_exact
 
     pairs = ngram_jaccard_pairs_exact(

@@ -842,8 +842,6 @@ def escape_ident(ident: str) -> str:
 def select_stage(
     pages,
     selector: str,
-    url_col: str = "url",
-    html_col: str = "html",
     namespaces: dict[str, str] | None = None,
 ):
     """DataFrame stage: (url, html) rows → matched node rows per
@@ -859,7 +857,7 @@ def select_stage(
         compiled = CompiledSelector(selector, namespaces=namespaces)
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _FIELDS}
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if html is None:
                     continue
                 nodes = parse_nodes(html)
@@ -873,5 +871,5 @@ def select_stage(
             if out["url"]:
                 yield pd.DataFrame(out)
 
-    src = spread(pages.select(url_col, html_col))
+    src = spread(pages.select("url", "html"))
     return src.mapInPandas(run, schema=NODES_SCHEMA)

@@ -42,6 +42,8 @@ import zlib
 import numpy as np
 
 _SIG = b"\x89PNG\r\n\x1a\n"
+# declared-size bound (pixels), checked before IDAT is inflated
+_MAX_PIXELS = 64_000_000
 
 # spec table 11.1: legal bit depths per color type
 _LEGAL_DEPTHS = {
@@ -247,13 +249,13 @@ def _pass_dims(w: int, h: int) -> list[tuple[int, int, int, int, int, int]]:
 # ---- decode ---------------------------------------------------------------
 
 
-def decode_png(data: bytes, *, max_pixels: int = 64_000_000) -> np.ndarray:
+def decode_png(data: bytes) -> np.ndarray:
     """PNG bytes → H×W×3 uint8 RGB (alpha composited over white).
 
     Raises ValueError on structural damage (bad signature, CRC
     mismatch, truncation, illegal header combos, palette overrun) —
     the multimodal operators route that to the per-row error column.
-    ``max_pixels`` bounds decompression-bomb exposure: the pixel
+    _MAX_PIXELS bounds decompression-bomb exposure: the pixel
     budget is checked BEFORE inflating IDAT.
     """
     if data[:8] != _SIG:
@@ -288,7 +290,7 @@ def decode_png(data: bytes, *, max_pixels: int = 64_000_000) -> np.ndarray:
                 raise ValueError(
                     f"illegal color type {ctype} / bit depth {depth}"
                 )
-            if w == 0 or h == 0 or w * h > max_pixels:
+            if w == 0 or h == 0 or w * h > _MAX_PIXELS:
                 raise ValueError(f"image dimensions {w}x{h} out of bounds")
             ihdr = (w, h, depth, ctype, interlace)
         elif typ == b"PLTE":

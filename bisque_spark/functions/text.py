@@ -74,12 +74,12 @@ def punct_count_col(text: str | Column) -> Column:
     return F.length(c) - F.length(F.regexp_replace(c, "[.,;:!?]", ""))
 
 
-def stopword_count_col(text: str | Column, lang: str = "en") -> Column:
-    words = sorted(STOPWORDS[lang])
+def stopword_count_col(text: str | Column) -> Column:
+    """English stopword tokens in the text (JVM-side)."""
     return F.size(
         F.filter(
             tokens_col(text),
-            lambda w: F.lower(w).isin(*words),
+            lambda w: F.lower(w).isin(*_EN_STOP),
         )
     )
 
@@ -150,9 +150,10 @@ def langid_col(text: str | Column) -> Column:
 # ---- fingerprint / simhash (Arrow-batched) -----------------------------------
 
 
-def fingerprint_py(text: str, window: int = 8) -> int:
+def fingerprint_py(text: str) -> int:
     """Winnowing-style document fingerprint: min rolling-window hash of
     the whitespace-normalized text → signed 64-bit."""
+    window = 8
     norm = " ".join(text.split()).lower()
     if len(norm) < window:
         h = xxh64(norm.encode("utf-8"))
@@ -287,12 +288,11 @@ def hamming64_col(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def dedup_lines_corpus(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 6,
-):
+# dedup_lines_corpus never deduplicates lines shorter than this
+_MIN_LINE_CHARS = 6
+
+
+def dedup_lines_corpus(docs):
     """Corpus-level line deduplication (the CCNet preprocessing step:
     drop lines duplicated ACROSS documents, keeping the first
     occurrence in (id, line-index) order — boilerplate navigation/
@@ -303,21 +303,21 @@ def dedup_lines_corpus(
     map-side partial aggregation absorbs hot lines (an "accept
     cookies" line with 10^8 occurrences combines locally; a window
     rank over partitionBy(line) would funnel it through one task).
-    Lines shorter than ``min_chars`` (blank lines, list bullets) are
+    Lines shorter than _MIN_LINE_CHARS (blank lines, list bullets) are
     never deduplicated. Reassembly preserves each document's original
     line order via array_sort over (idx, line) structs.
 
-    → (id_col, text, n_lines, n_lines_kept); text is the surviving
-    lines joined by "\\n" ("" when every line was a duplicate).
-    Deterministic: pure function of the input, ties impossible
+    (doc_id, text) → (doc_id, text, n_lines, n_lines_kept); text is
+    the surviving lines joined by "\\n" ("" when every line was a
+    duplicate). Deterministic: pure function of the input, ties impossible
     ((id, idx) is unique).
     """
     lines = docs.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"))
+        F.col("doc_id").alias("__id"),
+        F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"))
         .alias("__idx", "__line"),
     )
-    long_lines = lines.where(F.length("__line") >= min_chars)
+    long_lines = lines.where(F.length("__line") >= _MIN_LINE_CHARS)
     keepers = long_lines.groupBy("__line").agg(
         F.min(F.struct("__id", "__idx")).alias("__k")
     ).select(
@@ -326,7 +326,7 @@ def dedup_lines_corpus(
         "__line",
     )
     kept = keepers.unionByName(
-        lines.where(F.length("__line") < min_chars)
+        lines.where(F.length("__line") < _MIN_LINE_CHARS)
     )
     rebuilt = kept.groupBy("__id").agg(
         F.array_join(
@@ -342,7 +342,7 @@ def dedup_lines_corpus(
     return (
         totals.join(rebuilt, "__id", "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             F.coalesce("text", F.lit("")).alias("text"),
             "n_lines",
             F.coalesce("n_lines_kept", F.lit(0)).alias("n_lines_kept"),

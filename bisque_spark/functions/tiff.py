@@ -36,6 +36,9 @@ import zlib
 
 import numpy as np
 
+# declared-size bound (pixels), checked before strips are decoded
+_MAX_PIXELS = 64_000_000
+
 # IFD type sizes (TIFF 6.0 table in section 2)
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8}
 
@@ -241,7 +244,7 @@ def lzw_encode(data: bytes) -> bytes:
 # ---- decode ---------------------------------------------------------------
 
 
-def decode_tiff(data: bytes, *, max_pixels: int = 64_000_000) -> np.ndarray:
+def decode_tiff(data: bytes) -> np.ndarray:
     """TIFF bytes → H×W×3 uint8 RGB (alpha composited over white)."""
     if data[:4] == b"II*\x00":
         endian = "<"
@@ -252,7 +255,7 @@ def decode_tiff(data: bytes, *, max_pixels: int = 64_000_000) -> np.ndarray:
     ifd = _read_ifd(data, endian)
     (w,) = _tag(ifd, 256) or (0,)
     (h,) = _tag(ifd, 257) or (0,)
-    if w == 0 or h == 0 or w * h > max_pixels:
+    if w == 0 or h == 0 or w * h > _MAX_PIXELS:
         raise ValueError(f"image dimensions {w}x{h} out of bounds")
     spp = _tag(ifd, 277, (1,))[0]
     bps = _tag(ifd, 258, (1,) * spp)

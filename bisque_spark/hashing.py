@@ -39,8 +39,10 @@ def _merge_round(acc: int, val: int) -> int:
     return (acc * PRIME64_1 + PRIME64_4) & MASK64
 
 
-def xxh64(data: bytes, seed: int = SPARK_SEED) -> int:
-    """Standard XXH64 over ``data`` → unsigned 64-bit int."""
+def xxh64(data: bytes) -> int:
+    """Standard XXH64 over ``data`` with Spark's seed → unsigned 64-bit
+    int."""
+    seed = SPARK_SEED
     n = len(data)
     idx = 0
     if n >= 32:
@@ -89,14 +91,14 @@ def to_i64(u: int) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def xxhash64_str(s: str, seed: int = SPARK_SEED) -> int:
+def xxhash64_str(s: str) -> int:
     """Signed-64 XXH64 of a string's UTF-8 bytes — matches
     ``F.xxhash64(lit(s))`` in Spark (parity-pinned in tests)."""
-    return to_i64(xxh64(s.encode("utf-8"), seed))
+    return to_i64(xxh64(s.encode("utf-8")))
 
 
-def xxhash64_bytes(b: bytes, seed: int = SPARK_SEED) -> int:
-    return to_i64(xxh64(b, seed))
+def xxhash64_bytes(b: bytes) -> int:
+    return to_i64(xxh64(b))
 
 
 def xxh64_vec(data, seed: int = SPARK_SEED):

@@ -31,10 +31,9 @@ def asof_join(
     on: str = "ts",
     by: str = "user_id",
     value_cols: list[str] | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """Backward-inclusive as-of join; right value columns arrive as
-    ``<col><suffix>`` (None where no right row precedes)."""
+    ``<col>_right`` (None where no right row precedes)."""
     value_cols = value_cols or [
         c for c in right.columns if c not in (on, by)
     ]
@@ -72,10 +71,10 @@ def asof_join(
     filled = unioned.withColumn("__r", F.last("__r", ignorenulls=True).over(w))
     out = (
         filled.where(F.col("__side") == 1)
-        .withColumn(f"{on}{suffix}", F.col("__r").getField("__ts"))
+        .withColumn(f"{on}_right", F.col("__r").getField("__ts"))
     )
     for c in value_cols:
-        out = out.withColumn(f"{c}{suffix}", F.col("__r").getField(c))
+        out = out.withColumn(f"{c}_right", F.col("__r").getField(c))
     out = out.drop("__side", "__r")
     for c in value_cols:
         if f"__l_{c}" in out.columns:

@@ -25,12 +25,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# PageRank teleport: a step follows a link with this probability
+_DAMPING = 0.85
+
 
 def link_rank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    damping: float = 0.85,
     iters: int = 10,
 ) -> DataFrame:
     """(src, dst) edge table → (id, rank): PageRank with uniform
@@ -62,7 +64,7 @@ def link_rank(
         # contrib join and the dangling aggregate, so un-checkpointed
         # lineage would double per step (2^iters plan leaves). One eager
         # checkpoint == the iteration's single action.
-        ranks = rank_step(verts, ed, out_deg, ranks, damping, n).localCheckpoint(
+        ranks = rank_step(verts, ed, out_deg, ranks, _DAMPING, n).localCheckpoint(
             eager=True
         )
     return ranks
@@ -110,7 +112,6 @@ def rank_step(
 def authority_from_crawl(
     spark,
     result: dict,
-    damping: float = 0.85,
     iters: int = 10,
 ) -> DataFrame:
     """A finished crawl's committed link graph → (url_hash, rank):
@@ -122,5 +123,5 @@ def authority_from_crawl(
 
     edges = read_links(spark, result)
     return link_rank(
-        edges, src="url_hash", dst="dst_hash", damping=damping, iters=iters
+        edges, src="url_hash", dst="dst_hash", iters=iters
     ).select(F.col("id").alias("url_hash"), "rank")

@@ -450,8 +450,9 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def synth_audio(media_id: str, sample_rate: int = 8000) -> dict:
-    """Deterministic s16le PCM clip derived from the id."""
+def synth_audio(media_id: str) -> dict:
+    """Deterministic 8 kHz s16le PCM clip derived from the id."""
+    sample_rate = 8000
     import numpy as np
 
     from bisque_spark.hashing import xxh64

@@ -67,11 +67,11 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             yield pd.DataFrame(out)
 
 
-def explode_nodes(pages: DataFrame, url_col: str = "url", html_col: str = "text") -> DataFrame:
+def explode_nodes(pages: DataFrame, html_col: str = "text") -> DataFrame:
     """(url, html-text) rows → node table (one Arrow parse pass)."""
     from bisque_spark.util import spread
 
-    src = spread(pages.select(F.col(url_col).alias("url"), F.col(html_col).alias("text")))
+    src = spread(pages.select(F.col("url"), F.col(html_col).alias("text")))
     return src.mapInPandas(_parse_batches, schema=NODES_SCHEMA)
 
 

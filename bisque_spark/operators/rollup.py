@@ -23,14 +23,11 @@ GRANULARITIES = {
 
 def time_rollup(
     df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
     grans: tuple[str, ...] = ("hour", "day"),
-    extra_keys: tuple[str, ...] = (),
     rounded: bool = True,
 ) -> DataFrame:
-    """→ (gran, bucket, *extra_keys, n, sum_v, min_v, max_v) for every
-    granularity at once (single scan + single grouping-sets aggregate).
+    """(ts, value) facts → (gran, bucket, n, sum_v, min_v, max_v) for
+    every granularity at once (single scan + single grouping-sets aggregate).
     Bucket rendered as a string so every granularity shares one column.
     ``rounded=False`` keeps raw partials — required when the output is a
     MATERIALIZATION that time_rollup_increment will merge later
@@ -44,18 +41,16 @@ def time_rollup(
     for g in grans:
         with_buckets = with_buckets.withColumn(
             f"__b_{g}",
-            F.date_format(F.date_trunc(g, F.col(ts_col)), GRANULARITIES[g]),
+            F.date_format(F.date_trunc(g, F.col("ts")), GRANULARITIES[g]),
         )
-    sets = [[f"__b_{g}", *extra_keys] for g in grans]
-    # dict, not set: the grouping columns keep one order in every run
-    # (a set's order follows the per-process string hash seed)
+    keys = [f"__b_{g}" for g in grans]
     agg = with_buckets.groupingSets(
-        sets, *[F.col(c) for c in dict.fromkeys(c for s in sets for c in s)]
+        [[k] for k in keys], *[F.col(k) for k in keys]
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        rnd(F.sum(value_col)).alias("sum_v"),
-        rnd(F.min(value_col)).alias("min_v"),
-        rnd(F.max(value_col)).alias("max_v"),
+        rnd(F.sum("value")).alias("sum_v"),
+        rnd(F.min("value")).alias("min_v"),
+        rnd(F.max("value")).alias("max_v"),
     )
     # each output row belongs to exactly one grouping set: the non-null
     # bucket column identifies its granularity
@@ -69,7 +64,6 @@ def time_rollup(
     return agg.select(
         gran_col.alias("gran"),
         bucket_col.alias("bucket"),
-        *extra_keys,
         "n",
         "sum_v",
         "min_v",
@@ -80,14 +74,11 @@ def time_rollup(
 def time_rollup_increment(
     base: DataFrame,
     delta: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
     grans: tuple[str, ...] = ("hour", "day"),
-    extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Incremental continuous-aggregate maintenance (the TimescaleDB
     refresh shape): roll up ONLY the delta facts and merge partials
-    with the materialized ``base`` rollup by (gran, bucket, keys). The
+    with the materialized ``base`` rollup by (gran, bucket). The
     base FACT table is never rescanned — at 100 TB the refresh cost is
     O(delta), not O(history).
 
@@ -98,12 +89,10 @@ def time_rollup_increment(
     tests/test_rollup.py::test_incremental_merge_equals_recompute and
     the DuckDB oracle on events_rollup_incremental.
     """
-    d = time_rollup(
-        delta, ts_col, value_col, grans, extra_keys, rounded=False
-    )
+    d = time_rollup(delta, grans, rounded=False)
     merged = (
         base.unionByName(d)
-        .groupBy("gran", "bucket", *extra_keys)
+        .groupBy("gran", "bucket")
         .agg(
             F.sum("n").alias("n"),
             F.round(F.sum("sum_v"), 4).alias("sum_v"),
@@ -111,6 +100,4 @@ def time_rollup_increment(
             F.round(F.max("max_v"), 4).alias("max_v"),
         )
     )
-    return merged.select(
-        "gran", "bucket", *extra_keys, "n", "sum_v", "min_v", "max_v"
-    )
+    return merged.select("gran", "bucket", "n", "sum_v", "min_v", "max_v")

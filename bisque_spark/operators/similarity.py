@@ -17,6 +17,17 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# the embeddings table's column names
+_VEC_COL = "embedding"
+_ID_COL = "vec_id"
+# Lloyd passes that refine the IVF seed centroids
+_KMEANS_ITERS = 1
+# tune_lsh_params: recall at min_cosine, expected bucket occupancy and
+# the table cap
+_LSH_TARGET_RECALL = 0.9
+_LSH_TARGET_BUCKET = 200
+_LSH_MAX_TABLES = 24
+
 
 def _vec_as_double(col: str | F.Column) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -48,7 +59,6 @@ def cosine_topk(
     vec_col: str,
     query: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Brute-force top-k by cosine vs a literal query vector.
 
@@ -56,10 +66,10 @@ def cosine_topk(
     """
     q = F.array(*[F.lit(float(v)) for v in query])
     scored = df.select(
-        F.col(id_col),
+        F.col(_ID_COL),
         cosine_col(_vec_as_double(vec_col), q).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc(_ID_COL)).limit(k)
 
 
 def _make_assign_udf(cmat):
@@ -76,10 +86,8 @@ def _make_assign_udf(cmat):
 
 def ivf_assign(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    id_col: str = _ID_COL,
     n_cells: int = 16,
-    kmeans_iters: int = 1,
 ) -> tuple[DataFrame, list[list[float]]]:
     """IVF coarse quantizer; returns (df + cell column, centroids).
 
@@ -87,7 +95,7 @@ def ivf_assign(
     n_cells rows with the smallest ``xxhash64(id)`` — reproducible,
     and unlike round 1's lowest-id rows it draws proportionally from
     every cluster of a clustered corpus; VERDICT r01 'What's wrong'
-    #7), refined by ``kmeans_iters`` Lloyd passes (assign = one numpy
+    #7), refined by _KMEANS_ITERS Lloyd passes (assign = one numpy
     matmul per Arrow batch; update = per-(cell,pos) avg — one shuffle
     of n_cells x dim rows, collected to the driver: tiny). Means are
     rounded to 9dp so the refined centroids are stable across
@@ -97,13 +105,13 @@ def ivf_assign(
     from bisque_spark.util import spread
 
     cent_rows = (
-        df.select(id_col, vec_col)
+        df.select(id_col, _VEC_COL)
         .orderBy(F.xxhash64(F.col(id_col).cast("string")), F.col(id_col))
         .limit(n_cells)
         .collect()
     )
     cmat = np.array(
-        [list(map(float, r[vec_col])) for r in cent_rows], dtype=np.float64
+        [list(map(float, r[_VEC_COL])) for r in cent_rows], dtype=np.float64
     )
     cmat = cmat / np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
 
@@ -112,12 +120,12 @@ def ivf_assign(
     # util.release_caches — the caller-owns-cache contract in util.py)
     from bisque_spark.util import pin
 
-    src = pin(spread(df)) if kmeans_iters > 0 else spread(df)
-    for _ in range(kmeans_iters):
-        assigned = src.withColumn("cell", _make_assign_udf(cmat)(F.col(vec_col)))
+    src = pin(spread(df))
+    for _ in range(_KMEANS_ITERS):
+        assigned = src.withColumn("cell", _make_assign_udf(cmat)(F.col(_VEC_COL)))
         means = (
             assigned.select(
-                "cell", F.posexplode(_vec_as_double(F.col(vec_col))).alias("pos", "v")
+                "cell", F.posexplode(_vec_as_double(F.col(_VEC_COL))).alias("pos", "v")
             )
             .groupBy("cell", "pos")
             .agg(F.round(F.avg("v"), 9).alias("m"))
@@ -129,16 +137,14 @@ def ivf_assign(
         norms = np.maximum(np.linalg.norm(new_cmat, axis=1, keepdims=True), 1e-12)
         cmat = new_cmat / norms
     centroids = [list(map(float, row)) for row in cmat]
-    out = src.withColumn("cell", _make_assign_udf(cmat)(F.col(vec_col)))
+    out = src.withColumn("cell", _make_assign_udf(cmat)(F.col(_VEC_COL)))
     return out, centroids
 
 
 def ivf_build(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    id_col: str = _ID_COL,
     n_cells: int = 16,
-    kmeans_iters: int = 1,
     index_path: str | None = None,
     pin_index: bool = True,
 ) -> tuple[DataFrame, list[list[float]]]:
@@ -153,8 +159,8 @@ def ivf_build(
     pruning — and read back; without it the assignment is persisted
     in-memory (the sandbox shape; callers own the cache lifetime).
     """
-    assigned, centroids = ivf_assign(df, vec_col, id_col, n_cells, kmeans_iters)
-    assigned = assigned.select(id_col, vec_col, "cell")
+    assigned, centroids = ivf_assign(df, id_col, n_cells)
+    assigned = assigned.select(id_col, _VEC_COL, "cell")
     if index_path is not None:
         assigned.write.mode("overwrite").partitionBy("cell").parquet(index_path)
         spark = df.sparkSession
@@ -184,8 +190,6 @@ def ivf_query(
     centroids: list[list[float]],
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_probe: int = 4,
 ) -> DataFrame:
     """IVF approximate top-k over a built index: search only the
@@ -208,29 +212,24 @@ def ivf_query(
     probe_cells = [int(c) for c in (cmat @ q).argsort()[::-1][:n_probe]]
     qcol = F.array(*[F.lit(float(v)) for v in query])
     scored = assigned.where(F.col("cell").isin(probe_cells)).select(
-        F.col(id_col),
-        cosine_col(_vec_as_double(vec_col), qcol).alias("cosine"),
+        F.col(_ID_COL),
+        cosine_col(_vec_as_double(_VEC_COL), qcol).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc(_ID_COL)).limit(k)
 
 
-def tune_lsh_params(
-    n_rows: int,
-    min_cosine: float,
-    target_recall: float = 0.9,
-    target_bucket: int = 200,
-    max_tables: int = 24,
-) -> tuple[int, int]:
+def tune_lsh_params(n_rows: int, min_cosine: float) -> tuple[int, int]:
     """(n_bits, n_tables) sized for ``n_rows`` at the operating point.
 
     FIXED bits do not scale: candidate work is Θ(n²/2^bits · tables),
     so a bit-width chosen at one corpus size is quadratic at 10× it
     (the r6 sf-sweep measured 19× time at 10× rows for bits=3). The
     scale rule is the standard hyperplane-LSH sizing: grow bits with
-    log2(n/target_bucket) — expected bucket occupancy stays constant —
-    then choose the smallest table count whose OR-amplified recall
-    1 − (1 − p^bits)^tables clears ``target_recall`` at the threshold
-    angle (p = 1 − θ/π). Work becomes Θ(n · bucket · tables(n)) with
+    log2(n/_LSH_TARGET_BUCKET) — expected bucket occupancy stays
+    constant — then choose the smallest table count (at most
+    _LSH_MAX_TABLES) whose OR-amplified recall 1 − (1 − p^bits)^tables
+    clears _LSH_TARGET_RECALL at the threshold angle (p = 1 − θ/π).
+    Work becomes Θ(n · bucket · tables(n)) with
     tables ∝ n^(log2(1/p)) — the known sub-quadratic LSH exponent; for
     min_cosine 0.8 that is ~n^1.33. For strictly-linear embedding
     dedup at 100 TB the engine's alternative is the IVF/SemDeDup
@@ -238,31 +237,28 @@ def tune_lsh_params(
     import math
 
     p = 1.0 - math.acos(max(-1.0, min(1.0, min_cosine))) / math.pi
-    n_bits = max(3, math.ceil(math.log2(max(2, n_rows) / target_bucket)))
+    n_bits = max(3, math.ceil(math.log2(max(2, n_rows) / _LSH_TARGET_BUCKET)))
     while True:
         pr = p**n_bits
         if pr >= 1.0:
             return n_bits, 1
-        t = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pr))
-        if t <= max_tables or n_bits <= 3:
-            return n_bits, max(1, min(t, max_tables))
+        t = math.ceil(math.log(1.0 - _LSH_TARGET_RECALL) / math.log(1.0 - pr))
+        if t <= _LSH_MAX_TABLES or n_bits <= 3:
+            return n_bits, max(1, min(t, _LSH_MAX_TABLES))
         n_bits -= 1  # recall infeasible at this width: trade bucket size
 
 
 def lsh_near_pairs(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
     n_bits: int | None = 6,
     min_cosine: float = 0.8,
     n_tables: int | None = 12,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs via OR-amplified multi-table hyperplane
     LSH: ``n_tables`` independent tables of ``n_bits`` hyperplanes each;
     a pair is a candidate if it shares a bucket in ANY table; exact
-    cosine verifies candidates.
+    cosine verifies candidates. The hyperplanes are seed-42 normal
+    draws sized from the embedding width of the batch itself.
 
     Recall contract: a pair at angle θ shares one table's bucket with
     probability p^r (p = 1 − θ/π, r = n_bits), so recall over b tables
@@ -293,19 +289,19 @@ def lsh_near_pairs(
     """
     from bisque_spark.util import spread
 
-    src = df.select(id_col, vec_col)
+    src = df.select(_ID_COL, _VEC_COL)
     if n_bits is None or n_tables is None:
         # auto-size for the corpus (tune_lsh_params): one count job —
         # cheap parquet-metadata count, same class as the IVF build
         auto_bits, auto_tables = tune_lsh_params(src.count(), min_cosine)
         n_bits = n_bits if n_bits is not None else auto_bits
         n_tables = n_tables if n_tables is not None else auto_tables
-    planes = np.random.RandomState(seed).normal(size=(dim, n_tables * n_bits))
+    planes_by_dim: dict[int, np.ndarray] = {}
     weights = 1 << np.arange(n_bits, dtype=np.int64)
     # key = t << n_bits | bucket: table t's buckets never collide with
     # table u's, so one group-by over one long column covers all tables
     table_tag = np.arange(n_tables, dtype=np.int64) << n_bits
-    id_type = src.schema[id_col].dataType.simpleString()
+    id_type = src.schema[_ID_COL].dataType.simpleString()
     thresh = float(min_cosine)
     nt = int(n_tables)
 
@@ -318,6 +314,12 @@ def lsh_near_pairs(
             if not len(pdf):
                 continue
             raw = np.stack(pdf.iloc[:, 1].to_numpy())
+            dim = raw.shape[1]
+            if dim not in planes_by_dim:
+                planes_by_dim[dim] = np.random.RandomState(42).normal(
+                    size=(dim, nt * n_bits)
+                )
+            planes = planes_by_dim[dim]
             bits = (raw @ planes > 0).reshape(len(raw), nt, n_bits)
             keys = (bits @ weights) | table_tag[None, :]
             matd = raw.astype(np.float64, copy=False)
@@ -412,8 +414,7 @@ def diversity_sample(
 def semantic_dup_ids(
     assigned: DataFrame,
     tau: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    id_col: str = _ID_COL,
 ) -> DataFrame:
     """Ids dropped by semantic (embedding-space) deduplication over an
     IVF assignment — the SemDeDup construction (Abbas et al. 2023,
@@ -437,12 +438,12 @@ def semantic_dup_ids(
     a = assigned.select(
         "cell",
         F.col(id_col).alias("__id_a"),
-        F.col(vec_col).alias("__va"),
+        F.col(_VEC_COL).alias("__va"),
     )
     b = assigned.select(
         "cell",
         F.col(id_col).alias("__id_b"),
-        F.col(vec_col).alias("__vb"),
+        F.col(_VEC_COL).alias("__vb"),
     )
     return (
         a.join(b, "cell")
@@ -461,12 +462,11 @@ def semantic_dup_ids(
 def semantic_dedup(
     assigned: DataFrame,
     tau: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    id_col: str = _ID_COL,
 ) -> DataFrame:
     """SemDeDup: the rows of ``assigned`` (an ivf_build/ivf_assign
     output) that survive within-cell semantic deduplication at cosine
     threshold ``tau`` — see :func:`semantic_dup_ids` for the policy
     and the at-scale join shape. Same schema as the input."""
-    dropped = semantic_dup_ids(assigned, tau, vec_col, id_col)
+    dropped = semantic_dup_ids(assigned, tau, id_col)
     return assigned.join(dropped, id_col, "left_anti")

@@ -430,18 +430,17 @@ class ParquetCatalog:
     def compact(
         self,
         name: str,
-        target_files_per_partition: int = 1,
         partition_values: dict | None = None,
     ) -> int:
         """Bin-pack small data files (Iceberg rewriteDataFiles): read
         the current snapshot (optionally one partition), rewrite it as
-        ``target_files_per_partition`` files per partition directory,
-        and commit a new snapshot — content-identical, fewer files.
-        Untouched partitions carry by reference; prior snapshots keep
-        reading their original files (time travel unaffected). The
-        crawl's per-epoch appends leave one small file per epoch per
-        partition; compaction folds an epoch's long tail back into
-        scan-efficient files. Returns the new version."""
+        one file per partition directory, and commit a new snapshot —
+        content-identical, fewer files. Untouched partitions carry by
+        reference; prior snapshots keep reading their original files
+        (time travel unaffected). The crawl's per-epoch appends leave
+        one small file per epoch per partition; compaction folds an
+        epoch's long tail back into scan-efficient files. Returns the
+        new version."""
         with self._commit_lock(name):
             m = self._read_manifest(name)
             prev = m["snapshots"][str(m["version"])]
@@ -467,11 +466,10 @@ class ParquetCatalog:
             if parts:
                 # hash-repartition on the partition columns: each
                 # partition value lands in exactly one task → ONE file
-                # per partition directory (full compaction; the
-                # per-partition target applies to unpartitioned tables)
+                # per partition directory (full compaction)
                 current = current.repartition(*[F.col(p) for p in parts])
             else:
-                current = current.coalesce(target_files_per_partition)
+                current = current.coalesce(1)
             new_files = self._stage_files(
                 name, current, parts, m.get("bucket_by")
             )

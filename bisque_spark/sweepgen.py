@@ -143,7 +143,8 @@ def gen_documents(spark: SparkSession, n: int, parts: int) -> DataFrame:
     )
 
 
-def gen_embeddings(spark: SparkSession, n: int, parts: int, dim: int = 64) -> DataFrame:
+def gen_embeddings(spark: SparkSession, n: int, parts: int) -> DataFrame:
+    dim = 64
     idc = F.col("id")
     is_dup = F.pmod(idc, F.lit(10)) == 1
     g = F.when(is_dup, idc - 1).otherwise(idc)

@@ -35,18 +35,13 @@ def release_caches() -> None:
             pass  # owning session already stopped; nothing to release
 
 
-def spread(df: DataFrame, min_factor: float = 1.0) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure a CPU-bound (UDF) stage has at least one partition per
     core. Local small-file reads arrive as 1 partition, serializing
     Arrow UDF work; at cluster scale inputs already have thousands of
     partitions and this is a no-op (guarded, not an unconditional
     repartition — no shuffle unless needed)."""
-    if df.isStreaming:
-        # partitioning of a stream is the source's concern; .rdd is
-        # also unavailable on streaming DataFrames
-        return df
-    spark = df.sparkSession
-    target = int(spark.sparkContext.defaultParallelism * min_factor)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -143,6 +143,8 @@ _UNREACHED_DEFS_OK = {
         "functions.text.fingerprint_py",
         "functions.text.langid_py",
         "functions.urlnorm.url_host",
+        "operators.trapguard._split_url",
+        "operators.trapguard.trap_reason",
         "operators.multimodal.encode_bmp",
         "operators.multimodal.encode_ppm",
         "operators.multimodal.encode_wav",
@@ -194,10 +196,12 @@ _UNREACHED_DEFS_OK = {
         "sources.catalog.ParquetCatalog.drop_column",
         "sources.catalog.ParquetCatalog.expire_snapshots",
         "sources.catalog.ParquetCatalog.read_bucketed",
+        "sources.catalog.ParquetCatalog.snapshots",
     },
     "per-stage compositions the multimodal differentials compare against": {
         "operators.multimodal._exif_row",
         "operators.multimodal.image_exif",
+        "operators.multimodal.image_features",
         "operators.multimodal.image_quality",
         "operators.multimodal.image_thumbnails",
     },
@@ -217,9 +221,9 @@ _UNREACHED_DEFS_OK = {
 
 
 def _referenced_names(nodes):
-    """Every name the nodes mention: identifiers, attributes, imported
-    names, and string constants that are identifiers (query keys and
-    column names dispatch by name, so the scan counts them)."""
+    """Every name the nodes mention: identifiers, attributes and
+    imported names. String constants do not count: a query key or a
+    column name that spells a def's name does not call it."""
     import ast
 
     out = set()
@@ -231,9 +235,6 @@ def _referenced_names(nodes):
                 out.add(x.attr)
             elif isinstance(x, ast.alias):
                 out.add(x.name.rsplit(".", 1)[-1])
-            elif isinstance(x, ast.Constant) and isinstance(x.value, str):
-                if x.value.isidentifier():
-                    out.add(x.value)
     return out
 
 
@@ -300,3 +301,125 @@ def test_every_engine_def_reached_from_graded_roots():
     assert sorted(unreached - listed) == []
     # a listed def that is now reached, or gone, leaves the list
     assert sorted(listed - unreached) == []
+
+
+# Defaulted parameters ("module.qualname(param)") of engine defs that
+# no call in the repo passes, grouped under the one reason each group
+# is kept.
+_UNPASSED_OPTIONS_OK = {
+    "bisque reference parity: the signature mirrors bisque's API": {
+        "functions.css.closest(namespaces)",
+        "functions.css.compile_selector(namespaces)",
+        "functions.css.filter_children(namespaces)",
+        "functions.css.iselect(namespaces)",
+        "functions.css.iselect(root_pos)",
+        "functions.css.match(namespaces)",
+        "functions.css.select_one(namespaces)",
+        "functions.encoding.candidate_encodings(exclude)",
+        "functions.encoding.candidate_encodings(is_html)",
+        "functions.encoding.candidate_encodings(known_definite)",
+        "functions.encoding.candidate_encodings(user)",
+        "operators.nodes.find_first(string)",
+        "parse.encode_nodes(formatter)",
+        "parse.prettify_nodes(indent)",
+        "parse.serialize_contents(formatter)",
+    },
+}
+
+
+def _engine_options(pkg):
+    """Every defaulted parameter of a def under ``pkg``:
+    "module.qualname(param)" → (callee name, param, position or None
+    for keyword-only, kind). kind is "function", "method" or "class":
+    a class's __init__ is called by the class name."""
+    import ast
+
+    out = {}
+
+    def collect(body, prefix, in_class):
+        for st in body:
+            if isinstance(st, ast.ClassDef):
+                collect(st.body, f"{prefix}.{st.name}", True)
+            elif isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = st.args
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in st.decorator_list
+                )
+                callee, kind = st.name, "function"
+                if st.name == "__init__":
+                    callee, kind = prefix.rsplit(".", 1)[-1], "class"
+                elif in_class and not static:
+                    kind = "method"
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                params = [(x.arg, i) for i, x in enumerate(pos) if i >= first]
+                params += [
+                    (x.arg, None)
+                    for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ]
+                for name, i in params:
+                    out[f"{prefix}.{st.name}({name})"] = (callee, name, i, kind)
+                collect(st.body, f"{prefix}.{st.name}", False)
+
+    for p in sorted(pkg.rglob("*.py")):
+        mod = ".".join(p.relative_to(pkg).with_suffix("").parts)
+        collect(ast.parse(p.read_text()).body, mod, False)
+    return out
+
+
+def test_every_engine_option_is_passed_by_a_caller():
+    """Name-based scan: every defaulted parameter of a def under
+    bisque_spark/ is passed by at least one call in the repo's Python
+    (engine, `__spark_entry__.py`, bench, perfbench, scripts and tests) — by
+    keyword, by position, or through ``*``/``**``. A method called
+    through an attribute, or a class called for its __init__, shifts
+    positions by one for ``self``. An option that nothing passes has
+    one value in use and becomes a constant, or is listed in
+    _UNPASSED_OPTIONS_OK; a listed option that is now passed, or no
+    longer defined, leaves the list."""
+    import ast
+    import math
+    import pathlib
+
+    root = pathlib.Path(entrymod.__file__).resolve().parent
+    options = _engine_options(root / "bisque_spark")
+    files = sorted(root.glob("*.py")) + sorted(
+        p
+        for d in ("bisque_spark", "perfbench", "scripts", "tests")
+        for p in (root / d).rglob("*.py")
+    )
+    # callee name → [(called through an attribute, positional args
+    # given, keywords given)]; a * spreads over every position and a
+    # ** (keyword None) over every keyword
+    calls = {}
+    for f in files:
+        for c in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(c, ast.Call):
+                continue
+            if isinstance(c.func, ast.Name):
+                name, attr = c.func.id, False
+            elif isinstance(c.func, ast.Attribute):
+                name, attr = c.func.attr, True
+            else:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in c.args)
+            n_pos = math.inf if starred else len(c.args)
+            kws = {k.arg for k in c.keywords}
+            calls.setdefault(name, []).append((attr, n_pos, kws))
+
+    def passed(callee, name, i, kind):
+        for attr, n_pos, kws in calls.get(callee, ()):
+            if name in kws or None in kws:
+                return True
+            shift = kind == "class" or (kind == "method" and attr)
+            if i is not None and i - shift < n_pos:
+                return True
+        return False
+
+    unpassed = {q for q, o in options.items() if not passed(*o)}
+    listed = set().union(*_UNPASSED_OPTIONS_OK.values())
+    assert sorted(unpassed - listed) == []
+    # a listed option that is now passed, or gone, leaves the list
+    assert sorted(listed - unpassed) == []

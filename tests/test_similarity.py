@@ -58,7 +58,7 @@ def test_ivf_probe_prunes(spark, vecs):
 
 def test_lsh_finds_identical_vectors(spark, vecs):
     df, _ = vecs
-    pairs = lsh_near_pairs(df, dim=16, n_bits=8, min_cosine=0.99)
+    pairs = lsh_near_pairs(df, n_bits=8, min_cosine=0.99)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (3, 10) in got  # identical vectors share every bucket
 
@@ -96,7 +96,7 @@ def test_lsh_multitable_recall(spark):
     assert len(want) >= 50  # the corpus actually has qualifying pairs
     got = {
         (r["id_a"], r["id_b"])
-        for r in lsh_near_pairs(df, dim=16, min_cosine=0.8).collect()
+        for r in lsh_near_pairs(df, min_cosine=0.8).collect()
     }
     assert not got - want  # cosine verify ⇒ no false positives
     recall = len(got & want) / len(want)
@@ -145,7 +145,7 @@ def test_lsh_auto_tuned_params_scale_and_hold_recall(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in lsh_near_pairs(
-            df, dim=16, min_cosine=0.8, n_bits=None, n_tables=None
+            df, min_cosine=0.8, n_bits=None, n_tables=None
         ).collect()
     }
     assert not got - want
@@ -186,7 +186,7 @@ def test_cache_hygiene_release_caches(spark, vecs):
     release_caches()  # clear pins from earlier tests in the session
     before = persistent_ids()
     df, _ = vecs
-    lsh_near_pairs(df, dim=16, min_cosine=0.8).collect()
+    lsh_near_pairs(df, min_cosine=0.8).collect()
     docs = spark.createDataFrame(
         [(i, f"w{i} common text body shared tokens {i % 3}") for i in range(40)],
         "doc_id long, text string",
@@ -414,7 +414,7 @@ def test_lsh_grouped_verify_equals_candidate_mask_twin(spark):
     got = {
         (r["id_a"], r["id_b"]): round(r["cosine"], 4)
         for r in lsh_near_pairs(
-            df, dim=dim, n_bits=n_bits, n_tables=n_tables, min_cosine=thr
+            df, n_bits=n_bits, n_tables=n_tables, min_cosine=thr
         ).collect()
     }
     assert got == want
